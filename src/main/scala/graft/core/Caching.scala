@@ -95,11 +95,7 @@ object Caching {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     dirs.foreach { key =>
       val dir = liveSpills.remove(key)
-      if (dir != null) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        try p.getFileSystem(conf).delete(p, true)
-        catch { case _: Throwable => () }
-      }
+      if (dir != null) deleteDir(new org.apache.hadoop.fs.Path(dir), conf)
     }
   }
 
@@ -112,9 +108,7 @@ object Caching {
     while (it.hasNext) {
       val dir = it.next().getValue
       it.remove()
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try p.getFileSystem(conf).delete(p, true)
-      catch { case _: Throwable => () }
+      deleteDir(new org.apache.hadoop.fs.Path(dir), conf)
     }
   }
 
@@ -144,8 +138,7 @@ object Caching {
     * checkpoint). The spill pays the plan exactly once (the parquet
     * write IS the materializing action), the files live under the
     * same shutdown-reaped scratch directory, and the source schema is
-    * re-applied on read so empty results skip inference (the
-    * [[reapScoped]] pattern, promoted).
+    * re-applied on read so empty results skip inference.
     *
     * The returned frame is UNORDERED: the multi-file parquet read-back
     * repacks splits, so any sort baked into `result`'s plan is paid by
@@ -153,16 +146,18 @@ object Caching {
     * the read-back frame, if order is part of the contract.
     *
     * Scratch lifetime: the spill dir lives until [[release]] /
-    * [[releaseAll]] or JVM exit (shutdown hook), whichever first.
-    * Operators that loop reaps use [[reapReplacing]] so scratch stays
-    * O(1) dirs per live frame, not O(iterations). */
+    * [[releaseAll]] or JVM exit (shutdown hook), whichever first; a
+    * write that fails removes its partial dir before rethrowing.
+    * Operators that loop reaps use [[iterate]] or [[reapReplacing]] so
+    * scratch stays O(1) dirs per live frame, not O(iterations). */
   def reap(result: DataFrame, intermediates: DataFrame*): DataFrame = {
     val spark = result.sparkSession
     val sc = spark.sparkContext
     ensureCheckpointDir(sc)
     val dir = new org.apache.hadoop.fs.Path(
       sc.getCheckpointDir.get, s"reap-${java.util.UUID.randomUUID()}")
-    result.write.mode("overwrite").parquet(dir.toString)
+    try result.write.mode("overwrite").parquet(dir.toString)
+    catch { case e: Throwable => deleteDir(dir, sc.hadoopConfiguration); throw e }
     intermediates.foreach(_.unpersist(blocking = false))
     val out = spark.read.schema(result.schema).parquet(dir.toString)
     liveSpills.put(canon(dir), dir.toString)
@@ -185,6 +180,11 @@ object Caching {
       case _ => ()
     }
 
+  private def deleteDir(p: org.apache.hadoop.fs.Path,
+                        conf: org.apache.hadoop.conf.Configuration): Unit =
+    try p.getFileSystem(conf).delete(p, true)
+    catch { case _: Throwable => () }
+
   private def ensureCheckpointDir(sc: org.apache.spark.SparkContext): Unit =
     if (sc.getCheckpointDir.isEmpty) {
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-")
@@ -193,30 +193,38 @@ object Caching {
     }
 
   /** Scoped variant of [[reap]] for check-then-commit operators: the
-    * pin lives exactly as long as `body`. [[reap]]'s checkpoint files
-    * are reclaimed only at JVM shutdown, so a long-lived ingest
-    * session committing thousands of batches would accumulate one
-    * batch-sized scratch directory per commit with no reclamation
-    * until exit; here the scratch is deleted as soon as `body`
-    * returns. Implemented as a parquet spill under the checkpoint
-    * root — the files are OURS to name and delete deterministically
-    * (an RDD checkpoint's path is buried in Spark internals) — with
-    * the source schema re-applied on read so an all-empty batch still
-    * reads back as an empty frame instead of failing inference. Same
-    * once-evaluation guarantee as [[reap]]: every read inside `body`
-    * comes from the spilled files, never the source plan. */
+    * spill lives exactly as long as `body` and is [[release]]d when it
+    * returns or throws, so a long-lived ingest session committing
+    * thousands of batches keeps no batch-sized scratch per commit.
+    * Same once-evaluation guarantee as [[reap]]: every read inside
+    * `body` comes from the spilled files, never the source plan. */
   def reapScoped[T](result: DataFrame)(body: DataFrame => T): T = {
-    val spark = result.sparkSession
-    val sc = spark.sparkContext
-    ensureCheckpointDir(sc)
-    val dir = new org.apache.hadoop.fs.Path(
-      sc.getCheckpointDir.get, s"pin-${java.util.UUID.randomUUID()}")
-    val fs = dir.getFileSystem(sc.hadoopConfiguration)
-    try {
-      result.write.mode("overwrite").parquet(dir.toString)
-      body(spark.read.schema(result.schema).parquet(dir.toString))
-    } finally {
-      try fs.delete(dir, true) catch { case _: Throwable => () }
-    }
+    val pinned = reap(result)
+    try body(pinned) finally release(pinned)
   }
+
+  /** The round lifecycle of a fixed-count iterative loop: `rounds`
+    * applications of `step(prev, round)` (rounds numbered from 1),
+    * starting from `init`.
+    *
+    * Every round is cut from its predecessor's lineage, since the plan
+    * otherwise doubles per round (or worse: a step that reads `prev`
+    * k times grows k^rounds). Rounds 1..n-1 are `localCheckpoint`ed:
+    * storage blocks, no parquet encode/decode, a constant-depth plan.
+    * Round n is [[reap]]ed to files, so the returned frame owns no
+    * storage blocks (the r3 leak rule) and the caller frees it with
+    * [[release]]. Round r-1's blocks are released as soon as round r
+    * lands, so scratch stays O(1) frames, not O(rounds); they go
+    * through [[releaseCheckpoint]] because `Dataset.unpersist` misses
+    * checkpoint blocks. `init` is never released: it belongs to the
+    * caller, and its plan may reach a caller's own checkpointed
+    * frame. With `rounds` = 0 the result is `init` itself. */
+  def iterate(init: DataFrame, rounds: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (prev, r) =>
+      val next = step(prev, r)
+      val landed = if (r == rounds) reap(next) else next.localCheckpoint()
+      if (r > 1) releaseCheckpoint(prev)
+      landed
+    }
 }

@@ -90,12 +90,12 @@ object GraftSession {
     * independent of data volume, so state parallelism must be sized
     * to the STREAM's volume, not inherited from the batch session
     * default (the streaming analog of sizing Kafka partitions or
-    * Flink operator parallelism). Measured (ProfileStreamJoin,
-    * sf0.1 ≈ 100k events): the stream-stream interval join runs
-    * 14.2 s with 32 state partitions vs 4.2 s with 8 — the join work
-    * itself is negligible; 32×4 state stores × per-batch commits was
-    * the entire difference. A high-volume production stream sizes UP
-    * the same knob.
+    * Flink operator parallelism). Measured (a since-deleted dev main,
+    * see git history; sf0.1 ≈ 100k events): the stream-stream
+    * interval join runs 14.2 s with 32 state partitions vs 4.2 s with
+    * 8 — the join work itself is negligible; 32×4 state stores ×
+    * per-batch commits was the entire difference. A high-volume
+    * production stream sizes UP the same knob.
     *
     * `f` receives an ISOLATED session (same SparkContext and cache,
     * own SQLConf/catalog via `newSession()`) with the partition count

@@ -58,25 +58,27 @@ object Hits {
       // raw power iteration, sparse frames (absent node = score 0)
       var hub = nodes.select(col("node"), lit(1.0).as("hub"))
       var auth: DataFrame = null
-      for (_ <- 1 to iters) {
+      for (i <- 1 to iters) {
         // cut lineage per round — the plan doubles otherwise. Each
         // half-step local-checkpoints (storage blocks; before r17 the
         // V-row score frame round-tripped through parquet files once
         // per half-step) and the previous half-step's blocks are
         // released as soon as the new one lands — scratch stays O(1)
-        // frames. hub reads the already-materialized new auth.
+        // frames. hub reads the already-materialized new auth. The
+        // initial hub is never released: its plan reaches the
+        // caller's edge frame, whose blocks are the caller's.
         val prevAuth = auth
         auth = e.join(hub, e("src") === hub("node"))
           .groupBy(col("dst").as("node"))
           .agg(sum("hub").as("authority"))
           .localCheckpoint()
-        if (prevAuth != null) graft.core.Caching.releaseCheckpoint(prevAuth)
+        if (i > 1) graft.core.Caching.releaseCheckpoint(prevAuth)
         val prevHub = hub
         hub = e.join(auth, e("dst") === auth("node"))
           .groupBy(col("src").as("node"))
           .agg(sum("authority").as("hub"))
           .localCheckpoint()
-        graft.core.Caching.releaseCheckpoint(prevHub)
+        if (i > 1) graft.core.Caching.releaseCheckpoint(prevHub)
       }
       // one final L1 normalize each + the zero-fill onto the node set
       val totals = auth.agg(sum("authority").as("__ta"))

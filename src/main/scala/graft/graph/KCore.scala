@@ -34,18 +34,7 @@ object KCore {
     * anyway), so the strategy choice is data-adaptive, not a local-mode
     * constant: a 100 TB crawl graph whose survivor set no longer fits
     * simply takes the shuffle path. */
-  val BroadcastNodeCap: Long =
-    sys.env.get("SPARK_GRAFT_KCORE_BCAST_CAP") match {
-      case None => 4000000L
-      case Some(v) => scala.util.Try(v.trim.toLong).getOrElse(
-        // a malformed value at object init would otherwise surface as
-        // an opaque ExceptionInInitializerError on every KCore touch
-        // (r16 ADVICE); fall back loudly instead.
-        { System.err.println(
-            s"[graft] SPARK_GRAFT_KCORE_BCAST_CAP='$v' is not a long; " +
-              "using default 4000000")
-          4000000L })
-    }
+  val BroadcastNodeCap: Long = 4000000L
 
   /** Per-round survival statistics for `rounds` peels at threshold
     * `k` over an edge list given as (a, b) pairs (direction/dups

@@ -38,32 +38,18 @@ object LabelProp {
     val e = edges.select("src", "dst", "w")
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val byNode = Window.partitionBy("node")
+      .orderBy(col("tw").desc, col("label"))
     try {
-      var labels = e.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-      val byNode = Window.partitionBy("node")
-        .orderBy(col("tw").desc, col("label"))
-      for (i <- 1 to iters) {
-        val prev = labels
-        val tallied = e.join(labels, e("src") === labels("node"))
+      graft.core.Caching.iterate(e.select(col("src").as("node")).distinct()
+          .withColumn("label", col("node")), iters) { (labels, _) =>
+        e.join(labels, e("src") === labels("node"))
           .groupBy(e("dst").as("node"), col("label"))
           .agg(sum("w").as("tw"))
-        val next = tallied
           .withColumn("rn", row_number().over(byNode))
           .where(col("rn") === 1)
           .select(col("node"), col("label"))
-        // cut lineage per round. Intermediate rounds local-checkpoint
-        // (storage blocks — the V-row label map round-tripped through
-        // parquet files once per round before r17); the FINAL round
-        // reaps to files so the returned frame owns no storage blocks
-        // (the r3 leak rule). Round r-1's blocks are released as soon
-        // as round r lands — scratch stays O(1) frames, not O(iters).
-        labels =
-          if (i == iters) graft.core.Caching.reap(next)
-          else next.localCheckpoint()
-        graft.core.Caching.releaseCheckpoint(prev)
       }
-      labels
     } finally e.unpersist(blocking = false)
   }
 }

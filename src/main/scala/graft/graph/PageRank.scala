@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank by power iteration — the web-graph centrality
@@ -30,53 +30,8 @@ object PageRank {
     * the union of srcs and dsts; a node with no in-edges keeps the
     * reset mass. Output: (node, rank). */
   def run(edges: DataFrame, iters: Int,
-          damping: Double = 0.85, reset: Double = 0.15): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val outw = edges.groupBy("src").agg(sum("w").as("tw"))
-    // persisted PRE-PARTITIONED on src: the per-iteration join's
-    // requirement is hash(src), but the build join leaves the frame
-    // partitioned however the upstream groupBy keyed it — without the
-    // repartition, EVERY round re-exchanges the E-row side (measured
-    // 2.4M-row re-shuffle × iters at sf0.1; with it, only the V-row
-    // rank table moves per round and the E-row exchange is paid once)
-    val trans = edges.join(outw, "src")
-      .select(col("src"), col("dst"), (col("w") / col("tw")).as("p"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-      for (i <- 1 to iters) {
-        val prev = ranks
-        val contrib = trans.join(ranks, trans("src") === ranks("node"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") * col("p")).as("inflow"))
-        val next = nodes
-          .join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (lit(reset) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-              .as("rank"))
-        // cut the lineage each round: the plan doubles per round
-        // without a checkpointed frontier (Clusters learned the same).
-        // Intermediate rounds local-checkpoint (storage blocks, no
-        // parquet encode/decode — r17, the V-row frame round-trips
-        // through files iters times otherwise); the FINAL round reaps
-        // to files so the returned frame owns no storage blocks (the
-        // r3 leak rule). Round r-1's blocks are released as soon as
-        // round r lands — scratch stays O(1) frames, not O(iters).
-        ranks =
-          if (i == iters) graft.core.Caching.reap(next)
-          else next.localCheckpoint()
-        graft.core.Caching.releaseCheckpoint(prev)
-      }
-      ranks
-    } finally {
-      trans.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
-  }
+          damping: Double = 0.85, reset: Double = 0.15): DataFrame =
+    powerIterate(edges, nodesOf(edges), lit(1.0), lit(reset), iters, damping)
 
   /** Personalized PageRank: teleport mass returns only to the SEED
     * set (r' = reset·1{seed} + damping·Σ_in r·p, r₀ = 1{seed}) — the
@@ -89,37 +44,49 @@ object PageRank {
   def runPersonalized(edges: DataFrame, seeds: DataFrame, iters: Int,
                       damping: Double = 0.85, reset: Double = 0.15)
       : DataFrame = {
+    val nodes = nodesOf(edges)
+      .join(broadcast(seeds.select(col("node"), lit(1.0).as("is_seed"))),
+        Seq("node"), "left")
+      .na.fill(0.0, Seq("is_seed"))
+    powerIterate(edges, nodes, col("is_seed"), lit(reset) * col("is_seed"),
+      iters, damping)
+  }
+
+  private def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst"))).distinct()
+
+  /** The power iteration both entry points share: ranks start at
+    * `rank0` and each round sets r' = teleport + damping · Σ_in r·p,
+    * both evaluated against the `nodes` table. */
+  private def powerIterate(edges: DataFrame, nodes: DataFrame, rank0: Column,
+                           teleport: Column, iters: Int, damping: Double)
+      : DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val outw = edges.groupBy("src").agg(sum("w").as("tw"))
+    // persisted PRE-PARTITIONED on src: the per-iteration join's
+    // requirement is hash(src), but the build join leaves the frame
+    // partitioned however the upstream groupBy keyed it — without the
+    // repartition, EVERY round re-exchanges the E-row side (measured
+    // 2.4M-row re-shuffle × iters at sf0.1; with it, only the V-row
+    // rank table moves per round and the E-row exchange is paid once)
     val trans = edges.join(outw, "src")
       .select(col("src"), col("dst"), (col("w") / col("tw")).as("p"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst"))).distinct()
-      .join(broadcast(seeds.select(col("node"), lit(1.0).as("is_seed"))),
-        Seq("node"), "left")
-      .na.fill(0.0, Seq("is_seed"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    nodes.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var ranks = nodes.select(col("node"), col("is_seed").as("rank"))
-      for (i <- 1 to iters) {
-        val prev = ranks
+      graft.core.Caching.iterate(
+          nodes.select(col("node"), rank0.as("rank")), iters) { (ranks, _) =>
         val contrib = trans.join(ranks, trans("src") === ranks("node"))
           .groupBy(col("dst").as("node"))
           .agg(sum(col("rank") * col("p")).as("inflow"))
-        val next = nodes
+        nodes
           .join(contrib, Seq("node"), "left")
           .select(col("node"),
-            (lit(reset) * col("is_seed") +
-              lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        // checkpoint/release discipline: see run
-        ranks =
-          if (i == iters) graft.core.Caching.reap(next)
-          else next.localCheckpoint()
-        graft.core.Caching.releaseCheckpoint(prev)
+            (teleport + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+              .as("rank"))
       }
-      ranks
     } finally {
       trans.unpersist(blocking = false)
       nodes.unpersist(blocking = false)

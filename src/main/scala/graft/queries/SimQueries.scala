@@ -361,12 +361,16 @@ object SimQueries extends graft.QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val byQ = Window.partitionBy("query_id")
       .orderBy(col("mmr").desc, col("neighbor_id"))
-    var sel = cand
+    val first = cand
       .withColumn("mmr", lit(0.7) * col("cos"))
       .withColumn("rn", row_number().over(byQ)).where(col("rn") === 1)
       .select(col("query_id"), col("neighbor_id"), col("nv"), col("mmr"),
         lit(1).as("mmr_rank"))
-    for (r <- 2 to 5) {
+    // each round reads the previous selection three times (anti-join,
+    // penalty join, union), so without the per-round cut of
+    // Caching.iterate the plan grows ~3⁴-fold by round 5 (measured
+    // 36 s of planning + re-execution at sf0.1 vs ~2 s with it)
+    val chosen = graft.core.Caching.iterate(first, 4) { (sel, i) =>
       val rest = cand.join(sel.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_anti")
       val pen = rest
@@ -378,22 +382,10 @@ object SimQueries extends graft.QueryModule {
         .withColumn("mmr", lit(0.7) * col("cos") - lit(0.3) * col("pen"))
         .withColumn("rn", row_number().over(byQ)).where(col("rn") === 1)
         .select(col("query_id"), col("neighbor_id"), col("nv"), col("mmr"),
-          lit(r).as("mmr_rank"))
-      // cut the lineage each round: sel(r) otherwise embeds THREE
-      // copies of sel(r−1) (anti-join, penalty join, union) — ~3⁴
-      // copies of round 1 by round 5, exponential plan growth that
-      // measured 36 s of planning+re-execution at sf0.1 vs ~2 s with
-      // the checkpoint (the PageRank/LabelProp idiom; the frame is
-      // ≤ 5·queries rows). Intermediate rounds local-checkpoint
-      // (storage blocks, no parquet round-trip — r17); the FINAL
-      // round reaps to files so the returned frame owns no blocks.
-      val prev = sel
-      sel =
-        if (r == 5) graft.core.Caching.reap(sel.unionByName(pick))
-        else sel.unionByName(pick).localCheckpoint()
-      graft.core.Caching.releaseCheckpoint(prev)
+          lit(i + 1).as("mmr_rank"))
+      sel.unionByName(pick)
     }
-    sel.select(col("query_id"), col("mmr_rank"), col("neighbor_id"),
+    chosen.select(col("query_id"), col("mmr_rank"), col("neighbor_id"),
         graft.functions.ScoreFns.scoreRound(col("mmr"), 5).as("mmr"))
       .orderBy("query_id", "mmr_rank")
   }

@@ -121,7 +121,7 @@ class CacheHygieneSpec extends SparkSpecBase {
     val (count0, disk0) = (graft.core.Caching.liveSpillCount, scratchEntries)
     val pr = graft.graph.PageRank.run(edges, iters = 5)
     pr.count()
-    // 5 iterations must NOT leave 5 spills — reapReplacing reclaims
+    // 5 iterations must NOT leave 5 spills — Caching.iterate reclaims
     // each round's predecessor; only the returned frame's spill lives
     assert(graft.core.Caching.liveSpillCount == count0 + 1,
       s"expected baseline+1 live spills, got " +
@@ -130,5 +130,24 @@ class CacheHygieneSpec extends SparkSpecBase {
     graft.core.Caching.release(pr)
     assert(graft.core.Caching.liveSpillCount == count0)
     assert(scratchEntries == disk0)
+  }
+
+  test("reapScoped reclaims its spill when the body or the write throws") {
+    graft.core.Caching.release(graft.core.Caching.reap(docs.limit(1)))
+    val (count0, disk0) = (graft.core.Caching.liveSpillCount, scratchEntries)
+    assert(graft.core.Caching.reapScoped(docs.limit(3))(_.count()) == 3L)
+    intercept[IllegalStateException] {
+      graft.core.Caching.reapScoped(docs.limit(3)) { _ =>
+        assert(scratchEntries == disk0 + 1)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    intercept[Exception] {
+      graft.core.Caching.reapScoped(
+        docs.select(expr("raise_error('write failed')").as("x")))(_.count())
+    }
+    assert(graft.core.Caching.liveSpillCount == count0)
+    assert(scratchEntries == disk0,
+      s"checkpoint root holds $scratchEntries entries, baseline $disk0")
   }
 }

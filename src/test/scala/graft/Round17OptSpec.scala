@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Behavioral pins for the round-17 optimizations: cost-aware payload
-  * widening, ExactDedup's shared winners exchange, and the
-  * lineage-truncated iterative loops (KCore / connected components).
+  * widening and ExactDedup's shared winners exchange (the iterative
+  * loops' pins live in LoopLifecycleSpec).
   */
 class Round17OptSpec extends SparkSpecBase {
   import spark.implicits._
@@ -72,58 +72,5 @@ class Round17OptSpec extends SparkSpecBase {
     val expBest = rows.groupBy(_._2).values
       .map(g => g.maxBy(r => (r._3, -r._1))._1).toSet
     assert(best == expBest, "keep-best winner set drifted")
-  }
-
-  /** The eager per-round checkpoints must not change what the peel /
-    * propagation computes, and must leave no cached blocks behind. */
-  test("kcore and connected components leave no cached blocks") {
-    // other suites share this JVM's SparkContext and may hold their own
-    // persists — assert on NEW entries only (the DedupSpec idiom)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (9L, 8L))
-      .toDF("a", "b")
-    val stats = graft.graph.KCore.peelRounds(pairs, k = 2, rounds = 2)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    // triangle {1,2,3} survives k=2 both rounds; 4 and the 8-9 pair drop
-    assert(stats.toSeq == Seq((1, 3L, 3L), (2, 3L, 3L)), stats.toSeq)
-    val comp = graft.dedup.Clusters.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      8L -> 8L, 9L -> 8L))
-    // localCheckpoint blocks are released per round and at the end;
-    // only the reap FILES back the returned CC frame
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"cached RDDs leaked: $leaked")
-  }
-
-  /** Same discipline for the other iterative graph loops converted to
-    * per-round local checkpoints (label propagation, HITS — BFS keeps
-    * the per-round file reap: its frontiers are tiny, and the A/B read
-    * flat-to-negative for the block form): results unchanged and no
-    * storage blocks survive any of the calls. */
-  test("label prop, HITS and BFS leave no cached blocks") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val sym = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (4L, 5L, 3.0))
-    val edges = (sym ++ sym.map { case (a, b, w) => (b, a, w) })
-      .toDF("src", "dst", "w")
-    // synchronous LPA oscillates on a path/pair: round 2 re-reads the
-    // round-1 labels, so 2 takes back its own label and 4/5 swap back
-    val labels = graft.graph.LabelProp.run(edges, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 4L, 5L -> 5L),
-      labels.toString)
-    val hits = graft.graph.Hits.run(
-        Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"), iters = 2)
-      .collect()
-    assert(hits.length == 3 &&
-      math.abs(hits.map(_.getDouble(1)).sum - 1.0) < 1e-12)
-    val seeds = Seq(1L).toDF("node")
-    val hops = graft.graph.Bfs.levels(
-        Seq((1L, 2L), (2L, 3L), (9L, 9L)).toDF("src", "dst"),
-        seeds, maxHops = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hops == Map(1L -> 0L, 2L -> 1L, 3L -> 2L), hops.toString)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"cached RDDs leaked: $leaked")
   }
 }
