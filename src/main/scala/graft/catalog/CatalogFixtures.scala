@@ -155,6 +155,24 @@ object CatalogFixtures {
     y.unionByName(m)
   }
 
+  /** The relational fixtures of one sf dir, each built on first use,
+    * so a gate reads only the tables behind the entities it touches. */
+  class Bundle(spark: SparkSession, sfDir: String) {
+    lazy val dbs: DataFrame = CatalogFixtures.dbs(spark, sfDir)
+    lazy val dbParams: DataFrame = CatalogFixtures.dbParams(spark, sfDir)
+    lazy val tbls: DataFrame = CatalogFixtures.tbls(spark, sfDir)
+    lazy val tblParams: DataFrame = CatalogFixtures.tblParams(spark, sfDir)
+    lazy val sds: DataFrame = CatalogFixtures.sds(spark, sfDir)
+    lazy val serdes: DataFrame = CatalogFixtures.serdes(spark, sfDir)
+    lazy val columnsV2: DataFrame = CatalogFixtures.columnsV2(spark, sfDir)
+    lazy val skewed: DataFrame = CatalogFixtures.skewedColNames(spark, sfDir)
+    lazy val skewedVals: DataFrame = CatalogFixtures.skewedStringListValues(spark, sfDir)
+    lazy val skewedLocMap: DataFrame = CatalogFixtures.skewedColValueLocMap(spark, sfDir)
+    lazy val partitionsRel: DataFrame = CatalogFixtures.partitions(spark, sfDir)
+    lazy val partKeyVals: DataFrame = CatalogFixtures.partitionKeyVals(spark, sfDir)
+    lazy val partKeys: DataFrame = CatalogFixtures.partitionKeys(spark, sfDir)
+  }
+
   /** The equivalent DuckDB CTE block, kept in lock-step with the Scala
     * derivations above; prepend to catalog oracle queries. */
   val duckCtes: String =

@@ -64,9 +64,24 @@ object GraftSession {
   def confScoped(spark: SparkSession, confs: (String, String)*)
                 (f: SparkSession => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val s2 = tune(spark.newSession())
+    val s2 = child(spark)
     confs.foreach { case (k, v) => s2.conf.set(k, v) }
     f(s2)
+  }
+
+  /** A child session with its parent's runtime confs and the engine
+    * tuning. `newSession`'s SQLConf starts from the SparkContext conf,
+    * not the parent's `conf.set` values, so those are copied over: the
+    * child then differs from its parent only by its caller's overrides,
+    * which also lets it share the parent's `Tables` schema memo (keyed
+    * on the session confs). */
+  private def child(spark: SparkSession): SparkSession = {
+    val s2 = spark.newSession()
+    val own = s2.conf.getAll
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!own.get(k).contains(v)) s2.conf.set(k, v)
+    }
+    tune(s2)
   }
 
   def build(appName: String = "graft", master: String = "local[*]"): SparkSession = {
@@ -107,9 +122,7 @@ object GraftSession {
     * per-query property. ConcurrentStreamsSpec pins two concurrent
     * streams at different widths. */
   def stateScoped[T](spark: SparkSession, n: Int)(f: SparkSession => T): T = {
-    // newSession's SQLConf starts from the SparkContext conf, not the
-    // parent's runtime conf.set values — re-apply the engine tuning.
-    val scoped = tune(spark.newSession())
+    val scoped = child(spark)
     scoped.conf.set("spark.sql.shuffle.partitions", n.toString)
     f(scoped)
   }

@@ -69,15 +69,21 @@ object Promote {
     }
   }
 
-  /** Full job: raw CSV → typed, partitioned analytics parquet. */
+  /** Full job: raw CSV → typed, partitioned analytics parquet. Returns
+    * the written schema as a read of `analyticsPath` lays it out (data
+    * columns, then the partition column), so the caller reads its
+    * output back with `spark.read.schema(s)` instead of an inference
+    * job, as [[graft.core.Caching.reap]] does. */
   def run(spark: SparkSession, conf: Config, rawPath: String,
-          analyticsPath: String): Unit = {
+          analyticsPath: String): StructType = {
     val df = transform(readRaw(spark, conf, rawPath), conf)
     conf.partitionFrom match {
       case Some((_, dst, _)) =>
         Sinks.writeOneFilePerPartition(df, dst, analyticsPath, conf.filesPerPartition)
+        Sinks.partitionedReadSchema(df.schema, dst)
       case None =>
         Sinks.parquetOverwrite(df, analyticsPath)
+        df.schema
     }
   }
 }

@@ -12,19 +12,10 @@ import graft.ops.AggOps
   * hash-matches field-for-field. */
 object CatalogQueries extends graft.QueryModule {
 
-  private def fx(spark: SparkSession, sfDir: String) = new {
-    val dbs = CatalogFixtures.dbs(spark, sfDir)
-    val dbParams = CatalogFixtures.dbParams(spark, sfDir)
-    val tbls = CatalogFixtures.tbls(spark, sfDir)
-    val tblParams = CatalogFixtures.tblParams(spark, sfDir)
-    val sds = CatalogFixtures.sds(spark, sfDir)
-    val serdes = CatalogFixtures.serdes(spark, sfDir)
-    val columnsV2 = CatalogFixtures.columnsV2(spark, sfDir)
-    val skewed = CatalogFixtures.skewedColNames(spark, sfDir)
-    val partitionsRel = CatalogFixtures.partitions(spark, sfDir)
-    val partKeyVals = CatalogFixtures.partitionKeyVals(spark, sfDir)
-    val partKeys = CatalogFixtures.partitionKeys(spark, sfDir)
-
+  /** The forward entities over the lazily built fixtures: a gate
+    * builds only the entities it reads and the fixtures behind them. */
+  private final class Fx(spark: SparkSession, sfDir: String)
+      extends CatalogFixtures.Bundle(spark, sfDir) {
     lazy val databasesT = MetastoreTransformer.databases(dbs, dbParams)
     lazy val sdsT = MetastoreTransformer.storageDescriptors(sds, serdes, columnsV2, skewed)
     lazy val tablesT = MetastoreTransformer.tables(databasesT, tbls, tblParams, sdsT, partKeys)
@@ -34,7 +25,7 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Forward assembly of table entities, canonicalized. */
   def catTablesAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     f.tablesT.select(
       col("name"), col("database"), col("owner"), col("createTime"),
       col("storageDescriptor.location").as("location"),
@@ -77,7 +68,7 @@ object CatalogQueries extends graft.QueryModule {
   /** Forward assembly of database entities (params map, fills, s3
     * normalization). */
   def catDatabasesAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     f.databasesT.select(
       col("name"), col("description"), col("locationUri"),
       AggOps.mapToCanonicalString(col("parameters")).as("params_csv"))
@@ -95,7 +86,7 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Forward assembly of partition entities with F12 partition names. */
   def catPartitionsAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     f.partitionsT.select(
       col("PART_ID").as("part_id"), col("database"), col("table"),
       array_join(col("values"), ",").as("vals_csv"),
@@ -124,7 +115,7 @@ object CatalogQueries extends graft.QueryModule {
     * direct assembly, proving empty-array/empty-map/nested-struct
     * roundtrip fidelity. */
   def catEntitiesJsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     val dir = graft.core.GraftSession.scratch("cat-json")
     val entities = f.tablesT
     graft.sources.Sinks.jsonOverwrite(entities, dir)
@@ -145,7 +136,7 @@ object CatalogQueries extends graft.QueryModule {
   /** Reverse: decompose assembled tables back into COLUMNS_V2 rows —
     * must reproduce the relational source exactly. */
   def catDecomposeColumns(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     DataCatalogTransformer.columnsFromTables(f.tablesT)
       .orderBy("TBL_ID", "INTEGER_IDX")
   }
@@ -158,7 +149,7 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Reverse: decompose parameters maps back into param rows. */
   def catDecomposeParams(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     DataCatalogTransformer.paramsFromEntities(f.tablesT, "TBL_ID")
       .orderBy("TBL_ID", "PARAM_KEY")
   }
@@ -168,7 +159,7 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Reverse: partition values back to idx'd rows (posexplode ~ F11). */
   def catDecomposeKeyVals(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     DataCatalogTransformer.partitionKeyVals(f.partitionsT)
       .orderBy("PART_ID", "INTEGER_IDX")
   }

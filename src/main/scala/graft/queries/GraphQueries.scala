@@ -34,24 +34,26 @@ object GraphQueries extends graft.QueryModule {
     * because order size is bounded (≤7 lines); an unbounded-group
     * co-occurrence would need a basket-size cap first (the SemDedup
     * bucket-guard lesson). */
-  private val edgePaths = scala.collection.mutable.Map.empty[String, String]
+  private val edgePaths = scala.collection.mutable.Map.empty[
+    String, (String, org.apache.spark.sql.types.StructType)]
   private def coEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = synchronized {
+    val (path, schema) = synchronized {
       edgePaths.getOrElseUpdate(sfDir, {
         val p = graft.core.GraftSession.scratch("graph_edges")
         val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey")
-        li.groupBy("l_orderkey")
+        val edges = li.groupBy("l_orderkey")
           .agg(collect_list("l_partkey").as("ps"))
           .select(explode(col("ps")).as("src"), col("ps"))
           .select(col("src"), explode(col("ps")).as("dst"))
           .where(col("src") =!= col("dst"))
           .groupBy("src", "dst")
           .agg(count(lit(1)).cast("double").as("w"))
-          .write.mode("overwrite").parquet(p)
-        p
+        edges.write.mode("overwrite").parquet(p)
+        (p, edges.schema)
       })
     }
-    spark.read.parquet(path)
+    // the writer's schema, as Caching.reap reads back: no inference job
+    spark.read.schema(schema).parquet(path)
   }
 
   /** SHARED closed-triangle fixture: the (u, x, y, du, dx, dy) stream

@@ -22,21 +22,10 @@ import graft.ops.AggOps
   */
 object ReverseQueries extends graft.QueryModule {
 
-  private def fx(spark: SparkSession, sfDir: String) = new {
-    val dbs = CatalogFixtures.dbs(spark, sfDir)
-    val dbParams = CatalogFixtures.dbParams(spark, sfDir)
-    val tbls = CatalogFixtures.tbls(spark, sfDir)
-    val tblParams = CatalogFixtures.tblParams(spark, sfDir)
-    val sds = CatalogFixtures.sds(spark, sfDir)
-    val serdes = CatalogFixtures.serdes(spark, sfDir)
-    val columnsV2 = CatalogFixtures.columnsV2(spark, sfDir)
-    val skewed = CatalogFixtures.skewedColNames(spark, sfDir)
-    val skewedVals = CatalogFixtures.skewedStringListValues(spark, sfDir)
-    val skewedLocMap = CatalogFixtures.skewedColValueLocMap(spark, sfDir)
-    val partitionsRel = CatalogFixtures.partitions(spark, sfDir)
-    val partKeyVals = CatalogFixtures.partitionKeyVals(spark, sfDir)
-    val partKeys = CatalogFixtures.partitionKeys(spark, sfDir)
-
+  /** The forward entities, skew-aware, over the lazily built
+    * fixtures: a gate builds only what it reads. */
+  private final class Fx(spark: SparkSession, sfDir: String)
+      extends CatalogFixtures.Bundle(spark, sfDir) {
     lazy val sdsT = MetastoreTransformer.storageDescriptorsWithSkew(
       sds, serdes, columnsV2, skewed, skewedVals, skewedLocMap)
     lazy val databasesT = MetastoreTransformer.databases(dbs, dbParams)
@@ -50,7 +39,7 @@ object ReverseQueries extends graft.QueryModule {
     * entry, with the names CSV, the STRING_LIST_ID-ordered flattened
     * values CSV, and the codec-encoded map key. */
   def catSdSkewedAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     f.sdsT
       .where(size(col("skewedInfo.skewedColumnNames")) > 0)
       .select(col("SD_ID"),
@@ -87,7 +76,7 @@ object ReverseQueries extends graft.QueryModule {
     * attributes reachable through its FKs (table, db, its own SD +
     * serde, the owning table's skew family, column counts, key vals). */
   def catReverseE2e(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = fx(spark, sfDir)
+    val f = new Fx(spark, sfDir)
     // The forward assembly is consumed through SEVERAL downstream
     // lineages: sdsT feeds tablesT AND partitionsT directly, tablesT
     // feeds partitionsT again, and transform() evaluates each entity

@@ -342,8 +342,8 @@ object SourceQueries extends graft.QueryModule {
       partitionFrom = Some(("date_time", "dt",
         (c: org.apache.spark.sql.Column) => c.cast("date"))),
       filesPerPartition = 8)
-    Promote.run(spark, conf, rawDir, analyticsDir)
-    spark.read.parquet(analyticsDir)
+    val written = Promote.run(spark, conf, rawDir, analyticsDir)
+    spark.read.schema(written).parquet(analyticsDir)
       .groupBy("dt")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"),
         countDistinct("user_id").as("n_users"))
@@ -408,8 +408,8 @@ object SourceQueries extends graft.QueryModule {
       partitionFrom = Some(("open_date", "year",
         (c: org.apache.spark.sql.Column) => year(c))),
       filesPerPartition = 4)
-    Promote.run(spark, conf, rawDir, analyticsDir)
-    spark.read.parquet(analyticsDir)
+    val written = Promote.run(spark, conf, rawDir, analyticsDir)
+    spark.read.schema(written).parquet(analyticsDir)
       .groupBy("year")
       .agg(count(lit(1)).as("n"),
         countDistinct("persid").as("n_persids"),

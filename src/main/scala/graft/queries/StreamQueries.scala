@@ -14,13 +14,6 @@ import graft.streaming.IngestionPipeline.RouteSpec
   * state. */
 object StreamQueries extends graft.QueryModule {
 
-  /** File-stream source over the events table; schema probed from the
-    * batch reader and ts normalized to session-UTC TimestampType so
-    * watermarks and oracles agree on instants regardless of the
-    * snapshot's physical ts encoding (see [[Tables.eventsStream]]). */
-  private def eventsStream(s: SparkSession, sfDir: String): DataFrame =
-    Tables.eventsStream(s, sfDir)
-
   /** SHARED immutable feed bases (guide §1.4, the vt_* lifecycle-
     * fixture discipline, r16 verdict item 4): several t-gates start by
     * writing the SAME deterministic batch-1 feed derived from the
@@ -111,10 +104,10 @@ object StreamQueries extends graft.QueryModule {
       routes = Seq(
         RouteSpec("route_a", "/raw/route_a/[^/]+\\.csv$"),
         RouteSpec("route_b", "/raw/route_b/[^/]+\\.csv$")))
-    IngestionPipeline.runAvailable(spark, conf, s"$base/raw/*",
+    val staged = IngestionPipeline.runAvailable(spark, conf, s"$base/raw/*",
       s"$base/stage", s"$base/control", s"$base/index", s"$base/ck")
 
-    spark.read.parquet(s"$base/stage")
+    spark.read.schema(staged).parquet(s"$base/stage")
       .groupBy("route")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"),
         countDistinct("user_id").as("n_users"))
@@ -136,7 +129,7 @@ object StreamQueries extends graft.QueryModule {
     // query's isolated session (see GraftSession.stateScoped)
     GraftSession.stateScoped(spark, 8) { s =>
       // file stream source needs a directory base path: glob the one file
-      val stream = eventsStream(s, sfDir)
+      val stream = Tables.eventsStream(s, sfDir)
       val agg = stream
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
@@ -173,7 +166,7 @@ object StreamQueries extends graft.QueryModule {
   def t14StreamKmv(spark: SparkSession, sfDir: String): DataFrame = {
     val name = synchronized { kmvCtr += 1; s"graft_stream_kmv_$kmvCtr" }
     GraftSession.stateScoped(spark, 8) { s =>
-      val stream = eventsStream(s, sfDir)
+      val stream = Tables.eventsStream(s, sfDir)
       val agg = stream
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"))
@@ -224,7 +217,7 @@ object StreamQueries extends graft.QueryModule {
     // state parallelism sized to the drain's volume, scoped to this
     // query's isolated session (see GraftSession.stateScoped)
     GraftSession.stateScoped(spark, 8) { s =>
-      val stream = eventsStream(s, sfDir)
+      val stream = Tables.eventsStream(s, sfDir)
       val atLeastOnce = stream.union(stream)
       val deduped = graft.streaming.StreamDedup.dedupWithinWatermark(
         atLeastOnce, Seq("event_id"), "ts", "30 days")
@@ -260,7 +253,7 @@ object StreamQueries extends graft.QueryModule {
     // GraftSession.stateScoped)
     GraftSession.stateScoped(spark, 8) { s =>
       def side(tpe: String, idAs: String, tsAs: String, valueAs: String) =
-        eventsStream(s, sfDir)
+        Tables.eventsStream(s, sfDir)
           .where(col("event_type") === tpe)
           .select(col("user_id"), col("event_id").as(idAs),
             col("ts").as(tsAs), col("value").as(valueAs))
@@ -649,7 +642,7 @@ object StreamQueries extends graft.QueryModule {
       val ev = Tables.events(s, sfDir)
       VersionedTable.init(s, root,
         partial(ev.where(col("event_id") % 2 === 0)))        // delta 1
-      val q = eventsStream(s, sfDir)
+      val q = Tables.eventsStream(s, sfDir)
         .where(col("event_id") % 2 === 1)                    // delta 2
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[

@@ -67,6 +67,12 @@ object Sinks {
     df.repartition(parallelism, col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 
+  /** The schema a read of a `partitionBy(partitionCol)` write of a
+    * frame with `schema` infers: the data columns, then the partition
+    * column. A read-back imposing it skips the inference job. */
+  def partitionedReadSchema(schema: StructType, partitionCol: String): StructType =
+    StructType(schema.filterNot(_.name == partitionCol) :+ schema(partitionCol))
+
   /** R2 (`glue/spark_repartition.py:53-55`): small-file compaction. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetPartitions: Int): Unit =

@@ -85,10 +85,13 @@ object IngestionPipeline {
     *  - `controlDir`: append-only control rows
     *    (object_key, route, n_rows, batch_id, status),
     *  - `indexDir`: per-file JSON index documents (T4 fan-out).
+    * Returns the staged schema as a read of `stageDir` lays it out
+    * (data columns, then `route`), so the caller reads the stage back
+    * with `spark.read.schema(s)` instead of an inference job.
     */
   def runAvailable(spark: SparkSession, conf: Config, rawDir: String,
                    stageDir: String, controlDir: String, indexDir: String,
-                   checkpointDir: String): Unit = {
+                   checkpointDir: String): StructType = {
     val reader = spark.readStream
       .schema(conf.schema)
       .option("sep", conf.sep).option("header", conf.header.toString)
@@ -135,5 +138,6 @@ object IngestionPipeline {
       }
       .start()
     query.awaitTermination()
+    graft.sources.Sinks.partitionedReadSchema(stream.drop("src_file").schema, "route")
   }
 }

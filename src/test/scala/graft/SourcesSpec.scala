@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.core.{GraftSession, Tables}
+import graft.etl.Promote
 import graft.sources.{CsvSource, Sinks}
 
 class SourcesSpec extends SparkSpecBase {
@@ -70,5 +71,30 @@ class SourcesSpec extends SparkSpecBase {
     Files.writeString(Paths.get(dir, "ignore.txt"), "z")
     val got = CsvSource.listDataFiles(spark, dir)
     assert(got.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("a.csv", "b.csv"))
+  }
+
+  test("Promote.run returns the schema a read-back of its output infers") {
+    import org.apache.spark.sql.types._
+    GraftSession.tune(spark)
+    val raw = GraftSession.scratch("spec-promote-raw")
+    CsvSource.writeTab(Tables.events(spark, sfDir).select(
+      date_format(col("ts"), "dd.MM.yyyy HH:mm:ss.SSSSSS").as("date_time"),
+      col("user_id"), col("event_type"), col("value")), raw)
+    // a date partition (etl_promote_e2e) and an int one (etl_promote_wide)
+    Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+        "dt" -> (_.cast("date")), "yr" -> (year(_))).foreach { case (dst, fn) =>
+      val out = GraftSession.scratch("spec-promote-out")
+      val conf = Promote.Config(
+        delimiter = Promote.Tab,
+        schema = StructType(Seq(
+          StructField("date_time", StringType), StructField("user_id", LongType),
+          StructField("event_type", StringType), StructField("value", DoubleType))),
+        parses = Seq(Promote.ParseSpec("date_time", "ts_micros")),
+        partitionFrom = Some(("date_time", dst, fn)),
+        filesPerPartition = 2)
+      val written = Promote.run(spark, conf, raw, out)
+      assert(spark.read.schema(written).parquet(out).schema ==
+        spark.read.parquet(out).schema, dst)
+    }
   }
 }

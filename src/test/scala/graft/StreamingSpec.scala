@@ -51,6 +51,14 @@ class StreamingSpec extends SparkSpecBase {
     assert(before == after)
   }
 
+  test("runAvailable returns the schema a read-back of the stage infers") {
+    val (base, conf) = setup()
+    val staged = IngestionPipeline.runAvailable(spark, conf, s"$base/raw/*",
+      s"$base/stage", s"$base/control", s"$base/index", s"$base/ck")
+    assert(spark.read.schema(staged).parquet(s"$base/stage").schema ==
+      spark.read.parquet(s"$base/stage").schema)
+  }
+
   test("watermark-scoped dedup drops duplicates arriving in LATER micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
