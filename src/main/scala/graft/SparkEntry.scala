@@ -7,12 +7,12 @@ import graft.core.{GraftSession, Tables}
   *
   * `queries` holds one entry per implemented operator from SURVEY.md §2
   * (names prefixed by the operator id); `oracleSql` the DuckDB-equivalent
-  * SQL for each (omitted only where the op is not SQL-expressible, which
-  * the driver downgrades to a rows-only check).
+  * SQL for each. Both are derived from the modules' `Gate` lists, and
+  * every gate carries its oracle.
   */
 object SparkEntry {
 
-  private def registry: Seq[QueryModule] = Seq(
+  private[graft] def registry: Seq[QueryModule] = Seq(
     graft.queries.Relational,
     graft.queries.OpsQueries,
     graft.queries.FunctionQueries,
@@ -43,53 +43,46 @@ object SparkEntry {
     graft.queries.Relational.q1(spark, "/root/testdata/sf0.001")
   }
 
+  private def gates: Seq[Gate] = registry.flatMap(_.gates)
+
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.flatMap(_.defs).toMap.map { case (name, fn) =>
-      name -> { (spark: SparkSession, sfDir: String) =>
+    gates.map { g =>
+      g.name -> { (spark: SparkSession, sfDir: String) =>
         GraftSession.tune(spark)
-        fn(spark, sfDir)
+        g.run(spark, sfDir)
       }
-    }
-
-  /** Oracles emitted with DuckDB `AS MATERIALIZED` CTE hints. DuckDB
-    * INLINES CTEs by default, so an oracle that unrolls an iteration
-    * (BPE merge rounds, label-prop rounds, k-means steps, PQ
-    * codebooks) re-evaluates each round's whole prefix chain once per
-    * consumer — O(rounds²) work that was the bulk of the driver's
-    * replay window (text_bpe_train alone: 592 s → 0.9 s at sf0.001
-    * with the hint, byte-identical result; the r14 correctness
-    * artifact landed empty because the contract outgrew the window).
-    * MATERIALIZED is an evaluation hint, not semantics: every name
-    * here was swept plain-vs-hinted at sf0.01 with frame-identical
-    * results (tools note in README). Oracles whose SQL carries WINDOW
-    * clauses (`w AS (...)`) must stay un-hinted — the rewrite would
-    * touch the window alias — and are simply not listed. */
-  private val materializedOracles: Set[String] = Set(
-    "text_bpe_train", "text_bpe_apply",
-    "asof_join", "curate_cluster_split", "curate_pack",
-    "dedup_clusters", "dedup_semantic", "dedup_soft_weights",
-    "graph_adamic_adar", "graph_clustering_coeff", "graph_edge_jaccard",
-    "graph_hits", "graph_kcore", "graph_louvain_multilevel",
-    "graph_pagerank", "graph_ppr_seeds",
-    "graph_triangles", "sim_ann_append", "sim_ivf_pq",
-    "sim_matryoshka_ivf",
-    "sim_mmr_diversify", "sim_opq_recall", "sim_pq_adc",
-    "sim_quantized_recall", "sim_two_stage_rerank", "x_markov_stationary")
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    registry.flatMap(_.oracles).toMap.map { case (k, v) =>
-      k -> (if (materializedOracles(k))
-        v.replaceAll("""\b(\w+) AS \(""", "$1 AS MATERIALIZED (")
-      else v)
-    }
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }
+
+/** One registry gate: a named operator run over an sf directory, and
+  * the DuckDB SQL that must reproduce its output. */
+final case class Gate(
+    name: String, run: (SparkSession, String) => DataFrame, oracle: String)
 
 /** Implemented by each query group (relational, functions, sources,
   * catalog, dedup, text, similarity, streaming). */
 trait QueryModule {
-  def defs: Map[String, (SparkSession, String) => DataFrame]
-  def oracles: Map[String, String]
+  def gates: Seq[Gate]
+
+  /** Emits `sql`'s CTEs with DuckDB `AS MATERIALIZED` hints. DuckDB
+    * INLINES CTEs by default, so an oracle that unrolls an iteration
+    * (BPE merge rounds, label-prop rounds, k-means steps, PQ
+    * codebooks) re-evaluates each round's whole prefix chain once per
+    * consumer — O(rounds²) work that was the bulk of the oracle
+    * replay's time (text_bpe_train alone: 592 s → 0.9 s at sf0.001
+    * with the hint, byte-identical result). A chain whose CTEs each
+    * read several earlier ones grows exponentially instead
+    * (sim_pca_project ran out of file descriptors at 3 rounds).
+    * MATERIALIZED is an evaluation hint, not semantics: the other
+    * oracles wrapped in it were swept plain-vs-hinted at sf0.01 with
+    * frame-identical results (tools note in README). Oracles whose SQL
+    * carries WINDOW clauses (`w AS (...)`) must stay un-hinted — the
+    * rewrite would touch the window alias (RegistrySpec checks). */
+  protected def materialized(sql: String): String =
+    sql.replaceAll("""\b(\w+) AS \(""", "$1 AS MATERIALIZED (")
 }

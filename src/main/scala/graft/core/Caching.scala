@@ -25,23 +25,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Caching {
 
-  /** Temp checkpoint dirs this JVM created (one per SparkContext; the
-    * r3 shape created a fresh dir lazily and never removed it, so a
-    * long session accumulated unbounded checkpoint data in tmpdir). A
-    * single shutdown hook recursively deletes them all. */
-  private val ownedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val hookInstalled: Unit =
-    sys.addShutdownHook {
-      ownedDirs.forEach { dir =>
-        try {
-          java.nio.file.Files.walk(dir)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      }
-    }
-
   /** Live [[reap]] spill directories, keyed by a scheme-normalized
     * form of the dir URI (a local checkpoint root registers without a
     * scheme while `DataFrame.inputFiles` reports `file:` URIs — the
@@ -185,12 +168,11 @@ object Caching {
     try p.getFileSystem(conf).delete(p, true)
     catch { case _: Throwable => () }
 
+  /** The checkpoint root is a [[GraftSession.scratch]] dir, so the
+    * session's one shutdown hook reaps it with every spill under it. */
   private def ensureCheckpointDir(sc: org.apache.spark.SparkContext): Unit =
-    if (sc.getCheckpointDir.isEmpty) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-      ownedDirs.add(dir); hookInstalled
-      sc.setCheckpointDir(dir.toString)
-    }
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(GraftSession.scratch("ckpt"))
 
   /** Scoped variant of [[reap]] for check-then-commit operators: the
     * spill lives exactly as long as `body` and is [[release]]d when it

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 
 /** Round-10 analytics surface: the event-history operators a warehouse
@@ -2304,99 +2305,53 @@ object AnalyticsQueries extends graft.QueryModule {
       |      * (1.0 / n0 + 1.0 / n1)), 6) + 0.0 AS z
       |FROM o""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_two_proportion_z" -> (xTwoProportionZ _),
-    "ts_page_hinkley" -> (tsPageHinkley _),
-    "x_logrank" -> (xLogrank _),
-    "x_shapley_attribution" -> (xShapleyAttribution _),
-    "x_mann_whitney" -> (xMannWhitney _),
-    "x_cuped" -> (xCuped _),
-    "x_bootstrap_ci" -> (xBootstrapCi _),
-    "x_attribution_linear" -> (xAttributionLinear _),
-    "x_range_join_binned" -> (xRangeJoinBinned _),
-    "x_attribution_last_touch" -> (xAttributionLastTouch _),
-    "x_chisq_dow" -> (xChisqDow _),
-    "x_gini_spend" -> (xGiniSpend _),
-    "x_survival_km" -> (xSurvivalKm _),
-    "ts_mad_outliers" -> (tsMadOutliers _),
-    "x_per_group_regression" -> (xPerGroupRegression _),
-    "x_longest_streak" -> (xLongestStreak _),
-    "ts_merge_intervals" -> (tsMergeIntervals _),
-    "ts_ewma" -> (tsEwma _),
-    "x_hhi_concentration" -> (xHhiConcentration _),
-    "x_category_entropy" -> (xCategoryEntropy _),
-    "x_cramers_v" -> (xCramersV _),
-    "x_auc_roc" -> (xAucRoc _),
-    "x_rfm_segments" -> (xRfmSegments _),
-    "x_market_basket" -> (xMarketBasket _),
-    "x_next_event_markov" -> (xNextEventMarkov _),
-    "scd2_build" -> (scd2Build _),
-    "scd2_point_in_time" -> (scd2PointInTime _),
-    "ts_acf" -> (tsAcf _),
-    "x_welch_ttest" -> (xWelchTtest _),
-    "x_benford" -> (xBenford _),
-    "x_time_to_convert" -> (xTimeToConvert _),
-    "ts_cross_correlation" -> (tsCrossCorrelation _),
-    "x_cohort_ltv" -> (xCohortLtv _),
-    "x_basket_size_dist" -> (xBasketSizeDist _),
-    "ts_seasonal_index" -> (tsSeasonalIndex _),
-    "x_new_vs_returning" -> (xNewVsReturning _),
-    "x_ks_binned" -> (xKsBinned _),
-    "x_gap_islands" -> (xGapIslands _),
-    "x_stickiness" -> (xStickiness _),
-    "x_pareto_curve" -> (xParetoCurve _),
-    "x_discount_sensitivity" -> (xDiscountSensitivity _),
-    "x_runs_test" -> (xRunsTest _),
-    "ts_backtest_naive" -> (tsBacktestNaive _),
-    "ts_changepoint" -> (tsChangepoint _),
-    "x_churn_rate" -> (xChurnRate _),
-    "x_repeat_purchase_interval" -> (xRepeatPurchaseInterval _))
-
-  def oracles: Map[String, String] = Map(
-    "x_two_proportion_z" -> twoProportionZSql,
-    "x_mann_whitney" -> mannWhitneySql,
-    "x_cuped" -> cupedSql,
-    "x_bootstrap_ci" -> bootstrapCiSql,
-    "x_attribution_linear" -> attributionLinearSql,
-    "x_range_join_binned" -> rangeJoinBinnedSql,
-    "x_attribution_last_touch" -> attributionSql,
-    "x_chisq_dow" -> chisqDowSql,
-    "x_gini_spend" -> giniSql,
-    "x_survival_km" -> survivalKmSql,
-    "ts_mad_outliers" -> madOutliersSql,
-    "x_per_group_regression" -> perGroupRegressionSql,
-    "x_longest_streak" -> longestStreakSql,
-    "ts_merge_intervals" -> mergeIntervalsSql,
-    "ts_ewma" -> ewmaSql,
-    "ts_page_hinkley" -> pageHinkleySql,
-    "x_logrank" -> logrankSql,
-    "x_shapley_attribution" -> shapleySql,
-    "x_hhi_concentration" -> hhiSql,
-    "x_category_entropy" -> categoryEntropySql,
-    "x_cramers_v" -> cramersVSql,
-    "x_auc_roc" -> aucRocSql,
-    "x_rfm_segments" -> rfmSql,
-    "x_market_basket" -> marketBasketSql,
-    "x_next_event_markov" -> nextEventMarkovSql,
-    "scd2_build" -> scd2Sql,
-    "scd2_point_in_time" -> scd2PitSql,
-    "ts_acf" -> acfSql,
-    "x_welch_ttest" -> welchSql,
-    "x_benford" -> benfordSql,
-    "x_time_to_convert" -> timeToConvertSql,
-    "ts_cross_correlation" -> crossCorrSql,
-    "x_cohort_ltv" -> cohortLtvSql,
-    "x_basket_size_dist" -> basketSizeSql,
-    "ts_seasonal_index" -> seasonalIndexSql,
-    "x_new_vs_returning" -> newVsReturningSql,
-    "x_ks_binned" -> ksBinnedSql,
-    "x_gap_islands" -> gapIslandsSql,
-    "x_stickiness" -> stickinessSql,
-    "x_pareto_curve" -> paretoSql,
-    "x_discount_sensitivity" -> discountSensitivitySql,
-    "x_runs_test" -> runsTestSql,
-    "ts_backtest_naive" -> backtestNaiveSql,
-    "ts_changepoint" -> changepointSql,
-    "x_churn_rate" -> churnRateSql,
-    "x_repeat_purchase_interval" -> repeatPurchaseSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("x_two_proportion_z", xTwoProportionZ, twoProportionZSql),
+    Gate("ts_page_hinkley", tsPageHinkley, pageHinkleySql),
+    Gate("x_logrank", xLogrank, logrankSql),
+    Gate("x_shapley_attribution", xShapleyAttribution, shapleySql),
+    Gate("x_mann_whitney", xMannWhitney, mannWhitneySql),
+    Gate("x_cuped", xCuped, cupedSql),
+    Gate("x_bootstrap_ci", xBootstrapCi, bootstrapCiSql),
+    Gate("x_attribution_linear", xAttributionLinear, attributionLinearSql),
+    Gate("x_range_join_binned", xRangeJoinBinned, rangeJoinBinnedSql),
+    Gate("x_attribution_last_touch", xAttributionLastTouch, attributionSql),
+    Gate("x_chisq_dow", xChisqDow, chisqDowSql),
+    Gate("x_gini_spend", xGiniSpend, giniSql),
+    Gate("x_survival_km", xSurvivalKm, survivalKmSql),
+    Gate("ts_mad_outliers", tsMadOutliers, madOutliersSql),
+    Gate("x_per_group_regression", xPerGroupRegression, perGroupRegressionSql),
+    Gate("x_longest_streak", xLongestStreak, longestStreakSql),
+    Gate("ts_merge_intervals", tsMergeIntervals, mergeIntervalsSql),
+    Gate("ts_ewma", tsEwma, ewmaSql),
+    Gate("x_hhi_concentration", xHhiConcentration, hhiSql),
+    Gate("x_category_entropy", xCategoryEntropy, categoryEntropySql),
+    Gate("x_cramers_v", xCramersV, cramersVSql),
+    Gate("x_auc_roc", xAucRoc, aucRocSql),
+    Gate("x_rfm_segments", xRfmSegments, rfmSql),
+    Gate("x_market_basket", xMarketBasket, marketBasketSql),
+    Gate("x_next_event_markov", xNextEventMarkov, nextEventMarkovSql),
+    Gate("scd2_build", scd2Build, scd2Sql),
+    Gate("scd2_point_in_time", scd2PointInTime, scd2PitSql),
+    Gate("ts_acf", tsAcf, acfSql),
+    Gate("x_welch_ttest", xWelchTtest, welchSql),
+    Gate("x_benford", xBenford, benfordSql),
+    Gate("x_time_to_convert", xTimeToConvert, timeToConvertSql),
+    Gate("ts_cross_correlation", tsCrossCorrelation, crossCorrSql),
+    Gate("x_cohort_ltv", xCohortLtv, cohortLtvSql),
+    Gate("x_basket_size_dist", xBasketSizeDist, basketSizeSql),
+    Gate("ts_seasonal_index", tsSeasonalIndex, seasonalIndexSql),
+    Gate("x_new_vs_returning", xNewVsReturning, newVsReturningSql),
+    Gate("x_ks_binned", xKsBinned, ksBinnedSql),
+    Gate("x_gap_islands", xGapIslands, gapIslandsSql),
+    Gate("x_stickiness", xStickiness, stickinessSql),
+    Gate("x_pareto_curve", xParetoCurve, paretoSql),
+    Gate("x_discount_sensitivity", xDiscountSensitivity,
+      discountSensitivitySql),
+    Gate("x_runs_test", xRunsTest, runsTestSql),
+    Gate("ts_backtest_naive", tsBacktestNaive, backtestNaiveSql),
+    Gate("ts_changepoint", tsChangepoint, changepointSql),
+    Gate("x_churn_rate", xChurnRate, churnRateSql),
+    Gate("x_repeat_purchase_interval", xRepeatPurchaseInterval,
+      repeatPurchaseSql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 
 /** Bonus relational surface beyond the reference's inventory (SURVEY
@@ -583,47 +584,25 @@ object BonusQueries extends graft.QueryModule {
       |  ORDER BY o_totalprice, o_orderkey)
       |ORDER BY o_orderstatus, o_orderkey""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_resample_ffill" -> (tsResampleFfill _),
-    "ts_interpolate" -> (tsInterpolate _),
-    "x_window_ranks" -> (xWindowRanks _),
-    "x_anomaly_zscore" -> (xAnomalyZscore _),
-    "x_funnel" -> (xFunnel _),
-    "x_cohort_retention" -> (xCohortRetention _),
-    "x_bag_ops" -> (xBagOps _),
-    "x_null_safe_join" -> (xNullSafeJoin _),
-    "x_topk_per_group" -> (xTopkPerGroup _),
-    "x_rollup" -> (xRollup _),
-    "x_window_funcs" -> (xWindowFuncs _),
-    "x_rolling_range" -> (xRollingRange _),
-    "x_exists_subquery" -> (xExistsSubquery _),
-    "x_pivot" -> (xPivot _),
-    "x_unpivot" -> (xUnpivot _),
-    "x_semi_anti" -> (xSemiAnti _),
-    "x_distinct_agg" -> (xDistinctAgg _),
-    "x_cube" -> (xCube _),
-    "x_intersect_except" -> (xIntersectExcept _),
-    "x_grouping_sets" -> (xGroupingSets _))
-
-  def oracles: Map[String, String] = Map(
-    "ts_resample_ffill" -> tsResampleSql,
-    "ts_interpolate" -> tsInterpolateSql,
-    "x_window_ranks" -> windowRanksSql,
-    "x_anomaly_zscore" -> anomalySql,
-    "x_funnel" -> funnelSql,
-    "x_cohort_retention" -> cohortSql,
-    "x_bag_ops" -> bagOpsSql,
-    "x_null_safe_join" -> nullSafeJoinSql,
-    "x_topk_per_group" -> topkSql,
-    "x_rollup" -> rollupSql,
-    "x_window_funcs" -> windowFuncsSql,
-    "x_rolling_range" -> rollingRangeSql,
-    "x_exists_subquery" -> existsSql,
-    "x_pivot" -> pivotSql,
-    "x_unpivot" -> unpivotSql,
-    "x_semi_anti" -> semiAntiSql,
-    "x_distinct_agg" -> distinctSql,
-    "x_cube" -> cubeSql,
-    "x_intersect_except" -> intersectExceptSql,
-    "x_grouping_sets" -> groupingSetsSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("ts_resample_ffill", tsResampleFfill, tsResampleSql),
+    Gate("ts_interpolate", tsInterpolate, tsInterpolateSql),
+    Gate("x_window_ranks", xWindowRanks, windowRanksSql),
+    Gate("x_anomaly_zscore", xAnomalyZscore, anomalySql),
+    Gate("x_funnel", xFunnel, funnelSql),
+    Gate("x_cohort_retention", xCohortRetention, cohortSql),
+    Gate("x_bag_ops", xBagOps, bagOpsSql),
+    Gate("x_null_safe_join", xNullSafeJoin, nullSafeJoinSql),
+    Gate("x_topk_per_group", xTopkPerGroup, topkSql),
+    Gate("x_rollup", xRollup, rollupSql),
+    Gate("x_window_funcs", xWindowFuncs, windowFuncsSql),
+    Gate("x_rolling_range", xRollingRange, rollingRangeSql),
+    Gate("x_exists_subquery", xExistsSubquery, existsSql),
+    Gate("x_pivot", xPivot, pivotSql),
+    Gate("x_unpivot", xUnpivot, unpivotSql),
+    Gate("x_semi_anti", xSemiAnti, semiAntiSql),
+    Gate("x_distinct_agg", xDistinctAgg, distinctSql),
+    Gate("x_cube", xCube, cubeSql),
+    Gate("x_intersect_except", xIntersectExcept, intersectExceptSql),
+    Gate("x_grouping_sets", xGroupingSets, groupingSetsSql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.catalog._
 import graft.ops.AggOps
 
@@ -168,21 +169,13 @@ object CatalogQueries extends graft.QueryModule {
       |  part_key_val AS PART_KEY_VAL
       |FROM partition_key_vals ORDER BY 1, 2""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cat_databases_assemble" -> (catDatabasesAssemble _),
-    "cat_tables_assemble" -> (catTablesAssemble _),
-    "cat_entities_json_roundtrip" -> (catEntitiesJsonRoundtrip _),
-    "cat_partitions_assemble" -> (catPartitionsAssemble _),
-    "cat_decompose_columns" -> (catDecomposeColumns _),
-    "cat_decompose_params" -> (catDecomposeParams _),
-    "cat_decompose_keyvals" -> (catDecomposeKeyVals _))
-
-  def oracles: Map[String, String] = Map(
-    "cat_databases_assemble" -> catDatabasesSql,
-    "cat_tables_assemble" -> catTablesSql,
-    "cat_entities_json_roundtrip" -> catTablesSql, // same canonical form
-    "cat_partitions_assemble" -> catPartitionsSql,
-    "cat_decompose_columns" -> catDecomposeColumnsSql,
-    "cat_decompose_params" -> catDecomposeParamsSql,
-    "cat_decompose_keyvals" -> catDecomposeKeyValsSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("cat_databases_assemble", catDatabasesAssemble, catDatabasesSql),
+    Gate("cat_tables_assemble", catTablesAssemble, catTablesSql),
+    Gate("cat_entities_json_roundtrip", catEntitiesJsonRoundtrip,
+      catTablesSql), // same canonical form
+    Gate("cat_partitions_assemble", catPartitionsAssemble, catPartitionsSql),
+    Gate("cat_decompose_columns", catDecomposeColumns, catDecomposeColumnsSql),
+    Gate("cat_decompose_params", catDecomposeParams, catDecomposeParamsSql),
+    Gate("cat_decompose_keyvals", catDecomposeKeyVals, catDecomposeKeyValsSql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.{GraftSession, Tables}
 import graft.sources.{CsvSource, JdbcIO, Sinks}
 
@@ -10,11 +11,6 @@ import graft.sources.{CsvSource, JdbcIO, Sinks}
   * (reverse name-equality join), W3 (partitioned external table), S10
   * (JDBC → delimited text export, the Sqoop-import analog). */
 object CoverageQueries extends graft.QueryModule {
-
-  private var ctr = 0
-  private def scratch(tag: String): String = synchronized {
-    ctr += 1; GraftSession.scratch(s"$tag-$ctr")
-  }
 
   /** P1+P3+F18: struct packing then `item.*`-style flatten. */
   def p1p3StructProjection(spark: SparkSession, sfDir: String): DataFrame = {
@@ -53,7 +49,7 @@ object CoverageQueries extends graft.QueryModule {
     * back through the catalog. */
   private var tblCtr = 0
   def w3SaveAsTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("w3")
+    val dir = GraftSession.scratch("w3")
     val name = synchronized { tblCtr += 1; s"graft_w3_events_$tblCtr" }
     val ev = Tables.events(spark, sfDir)
       .withColumn("dt", col("ts").cast("date"))
@@ -82,7 +78,7 @@ object CoverageQueries extends graft.QueryModule {
       "p_partkey", 0, 2000, 4)
       // sqoop --hive-delims-replacement: strip row/field delims from text
       .withColumn("p_name", regexp_replace(col("p_name"), "[\n\r]", " "))
-    val dir = scratch("s10")
+    val dir = GraftSession.scratch("s10")
     CsvSource.writeSep1(fromDb, dir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("p_partkey",
@@ -189,7 +185,7 @@ object CoverageQueries extends graft.QueryModule {
     * reaches the scan. Parallelism-safe while bytesPerCore ≥ the
     * split size, i.e. up to 83 cores at this file size. */
   def r3SplitPinning(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("r3split")
+    val dir = GraftSession.scratch("r3split")
     val file = new java.io.File(dir, "data.csv")
     val w = new java.io.BufferedWriter(new java.io.FileWriter(file), 1 << 20)
     try {
@@ -236,23 +232,13 @@ object CoverageQueries extends graft.QueryModule {
     """SELECT 7 AS parts_repart, 3 AS parts_coalesce, 5 AS parts_keyed,
       |  count(*) AS n_rows FROM orders""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r4_num_partitions" -> (r4NumPartitions _),
-    "p1p3_struct_projection" -> (p1p3StructProjection _),
-    "j9_join_by_name" -> (j9JoinByName _),
-    "w3_save_as_table" -> (w3SaveAsTable _),
-    "profile_constraints" -> (profileConstraints _),
-    "o4_show_capture" -> (o4ShowCapture _),
-    "r3_split_pinning" -> (r3SplitPinning _),
-    "s10_jdbc_export" -> (s10JdbcExport _))
-
-  def oracles: Map[String, String] = Map(
-    "r4_num_partitions" -> r4Sql,
-    "p1p3_struct_projection" -> p1p3Sql,
-    "j9_join_by_name" -> j9Sql,
-    "w3_save_as_table" -> w3Sql,
-    "profile_constraints" -> constraintsSql,
-    "o4_show_capture" -> o4Sql,
-    "r3_split_pinning" -> r3Sql,
-    "s10_jdbc_export" -> s10Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("r4_num_partitions", r4NumPartitions, r4Sql),
+    Gate("p1p3_struct_projection", p1p3StructProjection, p1p3Sql),
+    Gate("j9_join_by_name", j9JoinByName, j9Sql),
+    Gate("w3_save_as_table", w3SaveAsTable, w3Sql),
+    Gate("profile_constraints", profileConstraints, constraintsSql),
+    Gate("o4_show_capture", o4ShowCapture, o4Sql),
+    Gate("r3_split_pinning", r3SplitPinning, r3Sql),
+    Gate("s10_jdbc_export", s10JdbcExport, s10Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.curate.{Decontam, Packing, Sampling}
 
@@ -771,49 +772,28 @@ object CurateQueries extends graft.QueryModule {
       |  doc_id, weight, key
       |FROM k ORDER BY key, doc_id LIMIT 100""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "curate_weighted_sample" -> (curateWeightedSample _),
-    "curate_shuffle_shards" -> (curateShuffleShards _),
-    "curate_temperature_mix" -> (curateTemperatureMix _),
-    "curate_winsorize" -> (curateWinsorize _),
-    "curate_split_leakage" -> (curateSplitLeakage _),
-    "export_jsonl_shards" -> (exportJsonlShards _),
-    "curate_decontam_embedding" -> (curateDecontamEmbedding _),
-    "curate_cluster_split" -> (curateClusterSplit _),
-    "curate_mix" -> (curateMix _),
-    "curate_pipeline" -> (curatePipeline _),
-    "curate_split" -> (curateSplit _),
-    "curate_curriculum" -> (curateCurriculum _),
-    "curate_dsir" -> (curateDsir _),
-    "curate_dsir_resample" -> (curateDsirResample _),
-    "curate_quota" -> (curateQuota _),
-    "curate_class_balance" -> (curateClassBalance _),
-    "curate_oversample" -> (curateOversample _),
-    "curate_filter_funnel" -> (curateFilterFunnel _),
-    "curate_token_budget" -> (curateTokenBudget _),
-    "curate_decontam" -> (curateDecontam _),
-    "curate_pack" -> (curatePack _))
-
-  def oracles: Map[String, String] = Map(
-    "curate_weighted_sample" -> weightedSampleSql,
-    "curate_shuffle_shards" -> shuffleShardsSql,
-    "curate_temperature_mix" -> temperatureMixSql,
-    "curate_winsorize" -> winsorizeSql,
-    "curate_split_leakage" -> splitLeakageSql,
-    "export_jsonl_shards" -> exportJsonlSql,
-    "curate_decontam_embedding" -> decontamEmbeddingSql,
-    "curate_cluster_split" -> clusterSplitSql,
-    "curate_mix" -> mixSql,
-    "curate_pipeline" -> pipelineSql,
-    "curate_split" -> splitSql,
-    "curate_curriculum" -> curriculumSql,
-    "curate_dsir" -> dsirSql,
-    "curate_dsir_resample" -> dsirResampleSql,
-    "curate_quota" -> quotaSql,
-    "curate_class_balance" -> classBalanceSql,
-    "curate_oversample" -> oversampleSql,
-    "curate_filter_funnel" -> filterFunnelSql,
-    "curate_token_budget" -> tokenBudgetSql,
-    "curate_decontam" -> decontamSql,
-    "curate_pack" -> packSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("curate_weighted_sample", curateWeightedSample, weightedSampleSql),
+    Gate("curate_shuffle_shards", curateShuffleShards, shuffleShardsSql),
+    Gate("curate_temperature_mix", curateTemperatureMix, temperatureMixSql),
+    Gate("curate_winsorize", curateWinsorize, winsorizeSql),
+    Gate("curate_split_leakage", curateSplitLeakage, splitLeakageSql),
+    Gate("export_jsonl_shards", exportJsonlShards, exportJsonlSql),
+    Gate("curate_decontam_embedding", curateDecontamEmbedding,
+      decontamEmbeddingSql),
+    Gate("curate_cluster_split", curateClusterSplit,
+      materialized(clusterSplitSql)),
+    Gate("curate_mix", curateMix, mixSql),
+    Gate("curate_pipeline", curatePipeline, pipelineSql),
+    Gate("curate_split", curateSplit, splitSql),
+    Gate("curate_curriculum", curateCurriculum, curriculumSql),
+    Gate("curate_dsir", curateDsir, dsirSql),
+    Gate("curate_dsir_resample", curateDsirResample, dsirResampleSql),
+    Gate("curate_quota", curateQuota, quotaSql),
+    Gate("curate_class_balance", curateClassBalance, classBalanceSql),
+    Gate("curate_oversample", curateOversample, oversampleSql),
+    Gate("curate_filter_funnel", curateFilterFunnel, filterFunnelSql),
+    Gate("curate_token_budget", curateTokenBudget, tokenBudgetSql),
+    Gate("curate_decontam", curateDecontam, decontamSql),
+    Gate("curate_pack", curatePack, materialized(packSql)))
 }

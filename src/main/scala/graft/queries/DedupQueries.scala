@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.dedup.{ExactDedup, LineDedup, MinHashLSH, Shingles, SimHash}
 
@@ -1021,55 +1022,32 @@ object DedupQueries extends graft.QueryModule {
       |WHERE a.p_partkey % 7 = 0
       |ORDER BY k""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er_jaro_winkler" -> (erJaroWinkler _),
-    "dedup_url" -> (dedupUrl _),
-    "dedup_incremental_minhash" -> (dedupIncrementalMinhash _),
-    "dedup_spans" -> (dedupSpans _),
-    "dedup_substring" -> (dedupSubstring _),
-    "dedup_substring_excise" -> (dedupSubstringExcise _),
-    "dedup_span_pairs" -> (dedupSpanPairs _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_soft_weights" -> (dedupSoftWeights _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "dedup_minhash_lsh" -> (dedupMinhashLsh _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_embedding" -> (dedupEmbedding _),
-    "dedup_embedding_prod" -> (dedupEmbeddingProd _),
-    "dedup_lines" -> (dedupLines _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_incremental_bloom" -> (dedupIncrementalBloom _),
-    "dedup_containment" -> (dedupContainment _),
-    "er_fuzzy_match" -> (erFuzzyMatch _),
-    "er_cluster_entities" -> (erClusterEntities _),
-    "er_golden_record" -> (erGoldenRecord _),
-    "er_blocking_recall" -> (erBlockingRecall _))
-
-  def oracles: Map[String, String] = Map(
-    "er_jaro_winkler" -> erJaroWinklerSql,
-    "dedup_url" -> dedupUrlSql,
-    "dedup_incremental_minhash" -> dedupIncMinhashSql,
-    "dedup_spans" -> dedupSpansSql,
-    "dedup_substring" -> dedupSubstringSql,
-    "dedup_substring_excise" -> dedupSubstringExciseSql,
-    "dedup_span_pairs" -> dedupSpanPairsSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_keep_best" -> dedupKeepBestSql,
-    "dedup_minhash_lsh" -> exactPairsSql,
-    "dedup_ngram_jaccard" -> sampledExactPairsSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_soft_weights" -> dedupSoftWeightsSql,
-    "dedup_embedding" -> dedupEmbeddingSql,
-    "dedup_embedding_prod" -> dedupEmbeddingProdSql,
-    "dedup_lines" -> dedupLinesSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_incremental_bloom" -> dedupIncrementalSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "er_fuzzy_match" -> erFuzzyMatchSql,
-    "er_cluster_entities" -> erClusterEntitiesSql,
-    "er_golden_record" -> erGoldenRecordSql,
-    "er_blocking_recall" -> erBlockingRecallSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("er_jaro_winkler", erJaroWinkler, erJaroWinklerSql),
+    Gate("dedup_url", dedupUrl, dedupUrlSql),
+    Gate("dedup_incremental_minhash", dedupIncrementalMinhash,
+      dedupIncMinhashSql),
+    Gate("dedup_spans", dedupSpans, dedupSpansSql),
+    Gate("dedup_substring", dedupSubstring, dedupSubstringSql),
+    Gate("dedup_substring_excise", dedupSubstringExcise,
+      dedupSubstringExciseSql),
+    Gate("dedup_span_pairs", dedupSpanPairs, dedupSpanPairsSql),
+    Gate("dedup_clusters", dedupClusters, materialized(dedupClustersSql)),
+    Gate("dedup_soft_weights", dedupSoftWeights,
+      materialized(dedupSoftWeightsSql)),
+    Gate("dedup_exact", dedupExact, dedupExactSql),
+    Gate("dedup_keep_best", dedupKeepBest, dedupKeepBestSql),
+    Gate("dedup_minhash_lsh", dedupMinhashLsh, exactPairsSql),
+    Gate("dedup_ngram_jaccard", dedupNgramJaccard, sampledExactPairsSql),
+    Gate("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    Gate("dedup_embedding", dedupEmbedding, dedupEmbeddingSql),
+    Gate("dedup_embedding_prod", dedupEmbeddingProd, dedupEmbeddingProdSql),
+    Gate("dedup_lines", dedupLines, dedupLinesSql),
+    Gate("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    Gate("dedup_incremental_bloom", dedupIncrementalBloom, dedupIncrementalSql),
+    Gate("dedup_containment", dedupContainment, dedupContainmentSql),
+    Gate("er_fuzzy_match", erFuzzyMatch, erFuzzyMatchSql),
+    Gate("er_cluster_entities", erClusterEntities, erClusterEntitiesSql),
+    Gate("er_golden_record", erGoldenRecord, erGoldenRecordSql),
+    Gate("er_blocking_recall", erBlockingRecall, erBlockingRecallSql))
 }

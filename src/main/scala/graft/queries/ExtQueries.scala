@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.{GraftSession, Tables}
 import graft.catalog.{CatalogFixtures, CatalogIndex, MetastoreTransformer}
 import graft.ops.Upsert
@@ -1408,71 +1409,37 @@ object ExtQueries extends graft.QueryModule {
       |SELECT 3, count(*), round(sum(value), 2) FROM v2rows
       |ORDER BY version""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "vt_time_travel" -> (vtTimeTravel _),
-    "vt_change_feed" -> (vtChangeFeed _),
-    "vt_schema_evolution" -> (vtSchemaEvolution _),
-    "vt_history" -> (vtHistory _),
-    "vt_data_skipping" -> (vtDataSkipping _),
-    "vt_point_lookup" -> (vtPointLookup _),
-    "vt_compact_zorder" -> (vtCompactZorder _),
-    "vt_change_feed_images" -> (vtChangeFeedImages _),
-    "vt_restore" -> (vtRestore _),
-    "vt_expire_vacuum" -> (vtExpireVacuum _),
-    "vt_purge_key" -> (vtPurgeKey _),
-    "wap_gated_ingest" -> (wapGatedIngest _),
-    "vt_clone_shallow" -> (vtCloneShallow _),
-    "vt_clone_deep" -> (vtCloneDeep _),
-    "vt_tags" -> (vtTags _),
-    "vt_stats_view" -> (vtStatsView _),
-    "vt_auto_compact" -> (vtAutoCompact _),
-    "vt_replace_where" -> (vtReplaceWhere _),
-    "vt_merge_full_sync" -> (vtMergeFullSync _),
-    "vt_constraints" -> (vtConstraints _),
-    "vt_merge_conditional" -> (vtMergeConditional _),
-    "vt_scd2_merge" -> (vtScd2Merge _),
-    "vt_projected_read" -> (vtProjectedRead _),
-    "etl_incremental_mv" -> (etlIncrementalMv _),
-    "range_join" -> (rangeJoin _),
-    "pipeline_training_data" -> (pipelineTrainingData _),
-    "asof_join" -> (asofJoin _),
-    "asof_nearest" -> (asofNearestJoin _),
-    "cat_index_docs" -> (catIndexDocs _),
-    "upsert_merge" -> (upsertMerge _),
-    "o5_sessionize" -> (o5Sessionize _),
-    "o6_session_window" -> (o6SessionWindow _))
-
-  def oracles: Map[String, String] = Map(
-    "vt_time_travel" -> vtSql,
-    "vt_change_feed" -> vtChangeFeedSql,
-    "vt_schema_evolution" -> vtSchemaEvolutionSql,
-    "vt_history" -> vtHistorySql,
-    "vt_data_skipping" -> vtDataSkippingSql,
-    "vt_point_lookup" -> vtPointLookupSql,
-    "vt_compact_zorder" -> vtCompactZorderSql,
-    "vt_change_feed_images" -> vtChangeFeedImagesSql,
-    "vt_restore" -> vtRestoreSql,
-    "vt_expire_vacuum" -> vtExpireVacuumSql,
-    "vt_purge_key" -> vtPurgeKeySql,
-    "wap_gated_ingest" -> wapGatedIngestSql,
-    "vt_clone_shallow" -> vtCloneShallowSql,
-    "vt_clone_deep" -> vtCloneDeepSql,
-    "vt_tags" -> vtTagsSql,
-    "vt_stats_view" -> vtStatsViewSql,
-    "vt_auto_compact" -> vtAutoCompactSql,
-    "vt_replace_where" -> vtReplaceWhereSql,
-    "vt_merge_full_sync" -> vtMergeFullSyncSql,
-    "vt_constraints" -> vtConstraintsSql,
-    "vt_merge_conditional" -> vtMergeConditionalSql,
-    "vt_scd2_merge" -> vtScd2Sql,
-    "vt_projected_read" -> vtProjectedReadSql,
-    "etl_incremental_mv" -> etlIncrementalMvSql,
-    "range_join" -> rangeJoinSql,
-    "pipeline_training_data" -> pipelineSql,
-    "asof_join" -> asofSql,
-    "asof_nearest" -> asofNearestSql,
-    "cat_index_docs" -> catIndexSql,
-    "upsert_merge" -> upsertSql,
-    "o5_sessionize" -> sessionizeSql,
-    "o6_session_window" -> o6Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("vt_time_travel", vtTimeTravel, vtSql),
+    Gate("vt_change_feed", vtChangeFeed, vtChangeFeedSql),
+    Gate("vt_schema_evolution", vtSchemaEvolution, vtSchemaEvolutionSql),
+    Gate("vt_history", vtHistory, vtHistorySql),
+    Gate("vt_data_skipping", vtDataSkipping, vtDataSkippingSql),
+    Gate("vt_point_lookup", vtPointLookup, vtPointLookupSql),
+    Gate("vt_compact_zorder", vtCompactZorder, vtCompactZorderSql),
+    Gate("vt_change_feed_images", vtChangeFeedImages, vtChangeFeedImagesSql),
+    Gate("vt_restore", vtRestore, vtRestoreSql),
+    Gate("vt_expire_vacuum", vtExpireVacuum, vtExpireVacuumSql),
+    Gate("vt_purge_key", vtPurgeKey, vtPurgeKeySql),
+    Gate("wap_gated_ingest", wapGatedIngest, wapGatedIngestSql),
+    Gate("vt_clone_shallow", vtCloneShallow, vtCloneShallowSql),
+    Gate("vt_clone_deep", vtCloneDeep, vtCloneDeepSql),
+    Gate("vt_tags", vtTags, vtTagsSql),
+    Gate("vt_stats_view", vtStatsView, vtStatsViewSql),
+    Gate("vt_auto_compact", vtAutoCompact, vtAutoCompactSql),
+    Gate("vt_replace_where", vtReplaceWhere, vtReplaceWhereSql),
+    Gate("vt_merge_full_sync", vtMergeFullSync, vtMergeFullSyncSql),
+    Gate("vt_constraints", vtConstraints, vtConstraintsSql),
+    Gate("vt_merge_conditional", vtMergeConditional, vtMergeConditionalSql),
+    Gate("vt_scd2_merge", vtScd2Merge, vtScd2Sql),
+    Gate("vt_projected_read", vtProjectedRead, vtProjectedReadSql),
+    Gate("etl_incremental_mv", etlIncrementalMv, etlIncrementalMvSql),
+    Gate("range_join", rangeJoin, rangeJoinSql),
+    Gate("pipeline_training_data", pipelineTrainingData, pipelineSql),
+    Gate("asof_join", asofJoin, materialized(asofSql)),
+    Gate("asof_nearest", asofNearestJoin, asofNearestSql),
+    Gate("cat_index_docs", catIndexDocs, catIndexSql),
+    Gate("upsert_merge", upsertMerge, upsertSql),
+    Gate("o5_sessionize", o5Sessionize, sessionizeSql),
+    Gate("o6_session_window", o6SessionWindow, o6Sql))
 }

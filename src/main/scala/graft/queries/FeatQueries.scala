@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.ml.Featurize
 import graft.functions.ScoreFns.scoreRound
@@ -167,15 +168,9 @@ object FeatQueries extends graft.QueryModule {
       |SELECT bin, n, n_bad, n_good, woe, iv_term, iv
       |FROM woe CROSS JOIN iv ORDER BY bin""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "feat_woe" -> (featWoe _),
-    "feat_hashing_trick" -> (featHashingTrick _),
-    "feat_target_encode" -> (featTargetEncode _),
-    "feat_phonetic_blocking" -> (featPhoneticBlocking _))
-
-  def oracles: Map[String, String] = Map(
-    "feat_woe" -> woeSql,
-    "feat_hashing_trick" -> hashingTrickSql,
-    "feat_target_encode" -> targetEncodeSql,
-    "feat_phonetic_blocking" -> phoneticBlockingSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("feat_woe", featWoe, woeSql),
+    Gate("feat_hashing_trick", featHashingTrick, hashingTrickSql),
+    Gate("feat_target_encode", featTargetEncode, targetEncodeSql),
+    Gate("feat_phonetic_blocking", featPhoneticBlocking, phoneticBlockingSql))
 }

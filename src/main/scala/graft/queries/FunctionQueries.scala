@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.functions._
 
@@ -281,37 +282,20 @@ object FunctionQueries extends graft.QueryModule {
       |    || '}' AS rebuilt
       |FROM events ORDER BY event_id""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f1_parse_dates" -> (f1ParseDates _),
-    "f2f3_year_dt" -> (f2f3YearDt _),
-    "f4_escape_chars" -> (f4EscapeChars _),
-    "f5f6_codec" -> (f5f6Codec _),
-    "f7_s3_normalize" -> (f7S3Normalize _),
-    "f8_prefix_key_tags" -> (f8PrefixKeyTags _),
-    "f9_iso8601" -> (f9Iso8601 _),
-    "f10_ms_to_seconds" -> (f10MsToSeconds _),
-    "f11_posexplode" -> (f11Posexplode _),
-    "f12_partition_name" -> (f12PartitionName _),
-    "f21_ddb_decode" -> (f21DdbDecode _),
-    "f22_sanitize" -> (f22Sanitize _),
-    "f23_md5" -> (f23Md5 _),
-    "f25_json_props" -> (f25JsonProps _),
-    "f27_hof_suite" -> (f27HofSuite _))
-
-  def oracles: Map[String, String] = Map(
-    "f1_parse_dates" -> f1Sql,
-    "f2f3_year_dt" -> f2f3Sql,
-    "f4_escape_chars" -> f4Sql,
-    "f5f6_codec" -> f5f6Sql,
-    "f7_s3_normalize" -> f7Sql,
-    "f8_prefix_key_tags" -> f8Sql,
-    "f9_iso8601" -> f9Sql,
-    "f10_ms_to_seconds" -> f10Sql,
-    "f11_posexplode" -> f11Sql,
-    "f12_partition_name" -> f12Sql,
-    "f21_ddb_decode" -> f21Sql,
-    "f22_sanitize" -> f22Sql,
-    "f23_md5" -> f23Sql,
-    "f25_json_props" -> f25Sql,
-    "f27_hof_suite" -> f27Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("f1_parse_dates", f1ParseDates, f1Sql),
+    Gate("f2f3_year_dt", f2f3YearDt, f2f3Sql),
+    Gate("f4_escape_chars", f4EscapeChars, f4Sql),
+    Gate("f5f6_codec", f5f6Codec, f5f6Sql),
+    Gate("f7_s3_normalize", f7S3Normalize, f7Sql),
+    Gate("f8_prefix_key_tags", f8PrefixKeyTags, f8Sql),
+    Gate("f9_iso8601", f9Iso8601, f9Sql),
+    Gate("f10_ms_to_seconds", f10MsToSeconds, f10Sql),
+    Gate("f11_posexplode", f11Posexplode, f11Sql),
+    Gate("f12_partition_name", f12PartitionName, f12Sql),
+    Gate("f21_ddb_decode", f21DdbDecode, f21Sql),
+    Gate("f22_sanitize", f22Sanitize, f22Sql),
+    Gate("f23_md5", f23Md5, f23Sql),
+    Gate("f25_json_props", f25JsonProps, f25Sql),
+    Gate("f27_hof_suite", f27HofSuite, f27Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.geo.Geo
 import graft.functions.ScoreFns.scoreRound
@@ -266,15 +267,9 @@ object GeoQueries extends graft.QueryModule {
        |CROSS JOIN mom
        |ORDER BY gi_star DESC, f.cell_y, f.cell_x LIMIT $HotspotK""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_hotspots" -> (geoHotspots _),
-    "geo_radius_join" -> (geoRadiusJoin _),
-    "geo_knn_cells" -> (geoKnnCells _),
-    "geo_cell_stats" -> (geoCellStats _))
-
-  def oracles: Map[String, String] = Map(
-    "geo_hotspots" -> hotspotsSql,
-    "geo_radius_join" -> radiusJoinSql,
-    "geo_knn_cells" -> knnCellsSql,
-    "geo_cell_stats" -> cellStatsSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("geo_hotspots", geoHotspots, hotspotsSql),
+    Gate("geo_radius_join", geoRadiusJoin, radiusJoinSql),
+    Gate("geo_knn_cells", geoKnnCells, knnCellsSql),
+    Gate("geo_cell_stats", geoCellStats, cellStatsSql))
 }

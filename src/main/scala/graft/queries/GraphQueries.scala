@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.graph.PageRank
 
@@ -70,9 +71,10 @@ object GraphQueries extends graft.QueryModule {
     * 1/ln(deg)); the others just project it down. At 100 TB the same
     * move applies: the triangle stream is the expensive derived
     * dataset you materialize once and serve many audits from. */
-  private val triPaths = scala.collection.mutable.Map.empty[String, String]
+  private val triPaths = scala.collection.mutable.Map.empty[
+    String, (String, org.apache.spark.sql.types.StructType)]
   private def triStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = synchronized {
+    val (path, schema) = synchronized {
       triPaths.getOrElseUpdate(sfDir, {
         val p = graft.core.GraftSession.scratch("graph_tri")
         val und = coEdges(spark, sfDir)
@@ -99,17 +101,17 @@ object GraphQueries extends graft.QueryModule {
         // narrow BEFORE the closure join: the wedge stream is the big
         // intermediate; only the columns any consumer needs ride the
         // (x, y) exchange
-        o1.join(o2, "u")
+        val tri = o1.join(o2, "u")
           .where(col("dx") < col("dy") ||
             (col("dx") === col("dy") && col("x") < col("y")))
           .select("u", "du", "x", "dx", "y", "dy")
           .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
           .select("u", "x", "y", "du", "dx", "dy")
-          .write.mode("overwrite").parquet(p)
-        p
+        tri.write.mode("overwrite").parquet(p)
+        (p, tri.schema)
       })
     }
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Plain degrees of the undirected co-purchase graph (id, d) —
@@ -1010,35 +1012,23 @@ object GraphQueries extends graft.QueryModule {
       |    round(sum(q_term), 6) + 0.0 AS modularity FROM t2)
       |SELECT * FROM l1 UNION ALL SELECT * FROM l2 ORDER BY level""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_louvain" -> (graphLouvain _),
-    "graph_louvain_multilevel" -> (graphLouvainMultilevel _),
-    "graph_bfs_levels" -> (graphBfsLevels _),
-    "graph_adamic_adar" -> (graphAdamicAdar _),
-    "graph_assortativity" -> (graphAssortativity _),
-    "graph_clustering_coeff" -> (graphClusteringCoeff _),
-    "graph_hits" -> (graphHits _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_ppr_seeds" -> (graphPprSeeds _),
-    "graph_degree_stats" -> (graphDegreeStats _),
-    "graph_kcore" -> (graphKcore _),
-    "graph_label_prop" -> (graphLabelProp _),
-    "graph_edge_jaccard" -> (graphEdgeJaccard _),
-    "graph_triangles" -> (graphTriangles _))
-
-  def oracles: Map[String, String] = Map(
-    "graph_louvain" -> graphLouvainSql,
-    "graph_louvain_multilevel" -> graphLouvainMultilevelSql,
-    "graph_bfs_levels" -> graphBfsLevelsSql,
-    "graph_adamic_adar" -> graphAdamicAdarSql,
-    "graph_assortativity" -> graphAssortativitySql,
-    "graph_clustering_coeff" -> graphClusteringCoeffSql,
-    "graph_hits" -> graphHitsSql,
-    "graph_pagerank" -> graphPagerankSql,
-    "graph_ppr_seeds" -> graphPprSql,
-    "graph_degree_stats" -> graphDegreeStatsSql,
-    "graph_kcore" -> graphKcoreSql,
-    "graph_label_prop" -> graphLabelPropSql,
-    "graph_edge_jaccard" -> graphEdgeJaccardSql,
-    "graph_triangles" -> graphTrianglesSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("graph_louvain", graphLouvain, graphLouvainSql),
+    Gate("graph_louvain_multilevel", graphLouvainMultilevel,
+      materialized(graphLouvainMultilevelSql)),
+    Gate("graph_bfs_levels", graphBfsLevels, graphBfsLevelsSql),
+    Gate("graph_adamic_adar", graphAdamicAdar,
+      materialized(graphAdamicAdarSql)),
+    Gate("graph_assortativity", graphAssortativity, graphAssortativitySql),
+    Gate("graph_clustering_coeff", graphClusteringCoeff,
+      materialized(graphClusteringCoeffSql)),
+    Gate("graph_hits", graphHits, materialized(graphHitsSql)),
+    Gate("graph_pagerank", graphPagerank, materialized(graphPagerankSql)),
+    Gate("graph_ppr_seeds", graphPprSeeds, materialized(graphPprSql)),
+    Gate("graph_degree_stats", graphDegreeStats, graphDegreeStatsSql),
+    Gate("graph_kcore", graphKcore, materialized(graphKcoreSql)),
+    Gate("graph_label_prop", graphLabelProp, graphLabelPropSql),
+    Gate("graph_edge_jaccard", graphEdgeJaccard,
+      materialized(graphEdgeJaccardSql)),
+    Gate("graph_triangles", graphTriangles, materialized(graphTrianglesSql)))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.ops._
 
@@ -323,47 +324,25 @@ object OpsQueries extends graft.QueryModule {
     """SELECT user_id, event_type, count(*) AS cnt FROM events
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_kv_to_map" -> (a1KvToMap _),
-    "a3_collect_sorted_idx" -> (a3CollectSorted _),
-    "a5_collect_values" -> (a5CollectValues _),
-    "a6_batch_within_partitions" -> (a6BatchTotals _),
-    "a6_batch_perturbed" -> (a6BatchPerturbed _),
-    "a8_consecutive_ids" -> (a8ConsecutiveIds _),
-    "j2_left_outer_agg" -> (j2LeftOuter _),
-    "j3_struct_join" -> (j3StructJoin _),
-    "j5_full_outer" -> (j5FullOuter _),
-    "j10_compound_join" -> (j10CompoundJoin _),
-    "j11_drop_dup_key" -> (j11DropDupKey _),
-    "p2_selectexpr" -> (p2SelectExpr _),
-    "p4p5_drop_rename" -> (p4p5DropRename _),
-    "p6_where_string" -> (p6WhereString _),
-    "p8_na_drop" -> (p8NaDrop _),
-    "p9_regex_route" -> (p9RegexRoute _),
-    "o1_limit_probe" -> (o1LimitProbe _),
-    "u2_union" -> (u2Union _),
-    "u3_union_missing" -> (u3UnionMissing _),
-    "f20_map_to_rows" -> (f20MapToRows _))
-
-  def oracles: Map[String, String] = Map(
-    "a1_kv_to_map" -> a1Sql,
-    "a3_collect_sorted_idx" -> a3Sql,
-    "a5_collect_values" -> a5Sql,
-    "a6_batch_within_partitions" -> a6Sql,
-    "a6_batch_perturbed" -> a6PerturbedSql,
-    "a8_consecutive_ids" -> a8Sql,
-    "j2_left_outer_agg" -> j2Sql,
-    "j3_struct_join" -> j3Sql,
-    "j5_full_outer" -> j5Sql,
-    "j10_compound_join" -> j10Sql,
-    "j11_drop_dup_key" -> j11Sql,
-    "p2_selectexpr" -> p2Sql,
-    "p4p5_drop_rename" -> p4p5Sql,
-    "p6_where_string" -> p6Sql,
-    "p8_na_drop" -> p8Sql,
-    "p9_regex_route" -> p9Sql,
-    "o1_limit_probe" -> o1Sql,
-    "u2_union" -> u2Sql,
-    "u3_union_missing" -> u3Sql,
-    "f20_map_to_rows" -> f20Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("a1_kv_to_map", a1KvToMap, a1Sql),
+    Gate("a3_collect_sorted_idx", a3CollectSorted, a3Sql),
+    Gate("a5_collect_values", a5CollectValues, a5Sql),
+    Gate("a6_batch_within_partitions", a6BatchTotals, a6Sql),
+    Gate("a6_batch_perturbed", a6BatchPerturbed, a6PerturbedSql),
+    Gate("a8_consecutive_ids", a8ConsecutiveIds, a8Sql),
+    Gate("j2_left_outer_agg", j2LeftOuter, j2Sql),
+    Gate("j3_struct_join", j3StructJoin, j3Sql),
+    Gate("j5_full_outer", j5FullOuter, j5Sql),
+    Gate("j10_compound_join", j10CompoundJoin, j10Sql),
+    Gate("j11_drop_dup_key", j11DropDupKey, j11Sql),
+    Gate("p2_selectexpr", p2SelectExpr, p2Sql),
+    Gate("p4p5_drop_rename", p4p5DropRename, p4p5Sql),
+    Gate("p6_where_string", p6WhereString, p6Sql),
+    Gate("p8_na_drop", p8NaDrop, p8Sql),
+    Gate("p9_regex_route", p9RegexRoute, p9Sql),
+    Gate("o1_limit_probe", o1LimitProbe, o1Sql),
+    Gate("u2_union", u2Union, u2Sql),
+    Gate("u3_union_missing", u3UnionMissing, u3Sql),
+    Gate("f20_map_to_rows", f20MapToRows, f20Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.{GraftSession, Tables}
 import graft.perf.Layout
 
@@ -136,15 +137,9 @@ object PerfQueries extends graft.QueryModule {
       |  count(DISTINCT dt) AS n_days
       |FROM ev WHERE dayofweek(dt) = 1""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "perf_dpp_join" -> (perfDppJoin _),
-    "perf_bucketed_join" -> (perfBucketedJoin _),
-    "perf_salted_join" -> (perfSaltedJoin _),
-    "perf_zorder" -> (perfZorder _))
-
-  def oracles: Map[String, String] = Map(
-    "perf_dpp_join" -> dppSql,
-    "perf_bucketed_join" -> bucketedSql,
-    "perf_salted_join" -> saltedSql,
-    "perf_zorder" -> zorderSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("perf_dpp_join", perfDppJoin, dppSql),
+    Gate("perf_bucketed_join", perfBucketedJoin, bucketedSql),
+    Gate("perf_salted_join", perfSaltedJoin, saltedSql),
+    Gate("perf_zorder", perfZorder, zorderSql))
 }

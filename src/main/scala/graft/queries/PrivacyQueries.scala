@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.functions.ScoreFns.scoreRound
 
@@ -500,21 +501,12 @@ object PrivacyQueries extends graft.QueryModule {
        |    AS rows_at_risk
        |FROM per""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "priv_t_closeness" -> (privTCloseness _),
-    "priv_k_anonymity" -> (privKAnonymity _),
-    "priv_dp_counts" -> ((s, d) => privDpCounts(s, d)),
-    "priv_dp_sum" -> ((s, d) => privDpSum(s, d)),
-    "priv_k_release" -> ((s, d) => privKRelease(s, d)),
-    "priv_l_diversity" -> (privLDiversity _),
-    "priv_budget_audit" -> (privBudgetAudit _))
-
-  def oracles: Map[String, String] = Map(
-    "priv_t_closeness" -> tClosenessSql,
-    "priv_k_anonymity" -> kAnonymitySql,
-    "priv_dp_counts" -> dpCountsSql,
-    "priv_dp_sum" -> dpSumSql,
-    "priv_k_release" -> kReleaseSql,
-    "priv_l_diversity" -> lDiversitySql,
-    "priv_budget_audit" -> budgetAuditSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("priv_t_closeness", privTCloseness, tClosenessSql),
+    Gate("priv_k_anonymity", privKAnonymity, kAnonymitySql),
+    Gate("priv_dp_counts", privDpCounts(_, _), dpCountsSql),
+    Gate("priv_dp_sum", privDpSum(_, _), dpSumSql),
+    Gate("priv_k_release", privKRelease(_, _), kReleaseSql),
+    Gate("priv_l_diversity", privLDiversity, lDiversitySql),
+    Gate("priv_budget_audit", privBudgetAudit, budgetAuditSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Gate
 import graft.core.Tables
 
 /** Core relational workload: aggregation, joins, windowed top-k, unions.
@@ -191,19 +192,11 @@ object Relational extends graft.QueryModule {
       |        CAST(o_orderdate AS TIMESTAMP) + INTERVAL 90 DAY)
       |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (q1 _),
-    "q3_revenue_by_nation" -> (q3RevenueByNation _),
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers _),
-    "o3_latest_per_group" -> (o3LatestEventPerUser _),
-    "u1_union_fold" -> (u1UnionFold _),
-    "a7_max_ids" -> (a7MaxIds _))
-
-  def oracles: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1Sql,
-    "q3_revenue_by_nation" -> q3Sql,
-    "q21_waiting_suppliers" -> q21Sql,
-    "o3_latest_per_group" -> o3Sql,
-    "u1_union_fold" -> u1Sql,
-    "a7_max_ids" -> a7Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("q1_pricing_summary", q1, q1Sql),
+    Gate("q3_revenue_by_nation", q3RevenueByNation, q3Sql),
+    Gate("q21_waiting_suppliers", q21WaitingSuppliers, q21Sql),
+    Gate("o3_latest_per_group", o3LatestEventPerUser, o3Sql),
+    Gate("u1_union_fold", u1UnionFold, u1Sql),
+    Gate("a7_max_ids", a7MaxIds, a7Sql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.catalog._
 import graft.ops.AggOps
 
@@ -281,11 +282,7 @@ object ReverseQueries extends graft.QueryModule {
       |LEFT JOIN skv tskv ON tskv.sd_id = np.tbl_old_sd_id
       |ORDER BY part_id""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cat_sd_skewed_assemble" -> (catSdSkewedAssemble _),
-    "cat_reverse_e2e" -> (catReverseE2e _))
-
-  def oracles: Map[String, String] = Map(
-    "cat_sd_skewed_assemble" -> sdSkewedSql,
-    "cat_reverse_e2e" -> reverseE2eSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("cat_sd_skewed_assemble", catSdSkewedAssemble, sdSkewedSql),
+    Gate("cat_reverse_e2e", catReverseE2e, reverseE2eSql))
 }

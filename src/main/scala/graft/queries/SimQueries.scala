@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.Gate
 import graft.core.Tables
 import graft.sim.Similarity
 
@@ -22,25 +24,27 @@ object SimQueries extends graft.QueryModule {
     * BpeTrainer.trainArtifacts lesson). Gates whose training INPUT
     * differs (the ANN lifecycle builds on corpus slices) keep their
     * own builds. */
-  private val artPaths =
-    scala.collection.mutable.Map.empty[String, (String, String)]
+  private val artPaths = scala.collection.mutable.Map.empty[String,
+    ((String, StructType), (String, StructType))]
   private def trainedArtifacts(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {
-    val (cp, pp) = synchronized {
+    val ((cp, cs), (pp, ps)) = synchronized {
       artPaths.getOrElseUpdate(sfDir, {
         val cpath = graft.core.GraftSession.scratch("sim_cents")
         val ppath = graft.core.GraftSession.scratch("sim_pq_cb")
         val emb = Tables.embeddings(spark, sfDir)
-        graft.sim.KMeans.train(emb, "vec_id", "embedding",
+        val cents = graft.sim.KMeans.train(emb, "vec_id", "embedding",
           k = 16, iterations = 2)
-          .write.mode("overwrite").parquet(cpath)
-        graft.sim.Pq.train(emb, "vec_id", "embedding",
+        cents.write.mode("overwrite").parquet(cpath)
+        val cb = graft.sim.Pq.train(emb, "vec_id", "embedding",
           m = 4, subDim = 16, k = 16, iterations = 2)
-          .write.mode("overwrite").parquet(ppath)
-        (cpath, ppath)
+        cb.write.mode("overwrite").parquet(ppath)
+        ((cpath, cents.schema), (ppath, cb.schema))
       })
     }
-    (spark.read.parquet(cp), spark.read.parquet(pp))
+    // the writers' schemas, as GraphQueries.coEdges reads back: no
+    // inference job
+    (spark.read.schema(cs).parquet(cp), spark.read.schema(ps).parquet(pp))
   }
 
   /** Shared DuckDB prelude: float→double arrays + norms. */
@@ -1789,12 +1793,7 @@ object SimQueries extends graft.QueryModule {
          |    - (SELECT bc FROM ctr WHERE cc = 1), 4) + 0.0 AS p1
          |FROM e CROSS JOIN bb$iters b
          |GROUP BY e.vec_id ORDER BY e.vec_id""".stripMargin
-    // Every CTE materialized: DuckDB's default CTE INLINING re-expands
-    // each reference, and the iteration chain references earlier CTEs
-    // multiply — inlined, the parquet scan count grows exponentially
-    // with T (observed: fd exhaustion at T=3). Materialization makes
-    // the replay cost linear in the CTE count, like Spark's plan.
-    sb.toString.replace("AS (", "AS MATERIALIZED (")
+    sb.toString
   }
 
   /** Matryoshka prefix-dimension retrieval (Kusupati et al.,
@@ -2023,67 +2022,37 @@ object SimQueries extends graft.QueryModule {
        |FROM ms LEFT JOIN hits ON hits.shortlist = ms.m CROSS JOIN tot
        |ORDER BY 1""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_matryoshka_rerank" -> (simMatryoshkaRerank _),
-    "sim_matryoshka_ivf" -> (simMatryoshkaIvf _),
-    "sim_pca_project" -> (simPcaProject _),
-    "sim_gram_matrix" -> (simGramMatrix _),
-    "sim_pq_adc" -> (simPqAdc _),
-    "sim_opq_recall" -> (simOpqRecall _),
-    "sim_maxsim_multivector" -> (simMaxsimMultivector _),
-    "sim_ndcg_eval" -> (simNdcgEval _),
-    "sim_sparse_cosine" -> (simSparseCosine _),
-    "sim_bruteforce_topk" -> (simBruteForceTopk _),
-    "sim_ivf_pq" -> (simIvfPq _),
-    "sim_centroid_quality" -> (simCentroidQuality _),
-    "sim_two_stage_rerank" -> (simTwoStageRerank _),
-    "sim_knn_classify" -> (simKnnClassify _),
-    "sim_radius_search" -> (simRadiusSearch _),
-    "sim_ivf_topk" -> (simIvfTopk _),
-    "sim_kmeans_ivf" -> (simKmeansIvf _),
-    "sim_ann_persisted" -> (simAnnPersisted _),
-    "sim_ann_append" -> (simAnnAppend _),
-    "sim_ann_filtered" -> (simAnnFiltered _),
-    "sim_ann_delete" -> (simAnnDelete _),
-    "sim_mmr_diversify" -> (simMmrDiversify _),
-    "sim_hybrid_rrf" -> (simHybridRrf _),
-    "sim_hard_negatives" -> (simHardNegatives _),
-    "sim_quantized_topk" -> (simQuantizedTopk _),
-    "sim_ivf_recall" -> (simIvfRecall _),
-    "sim_quantized_recall" -> (simQuantizedRecall _),
-    "sim_rhp_pairs" -> (simRhpPairs _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "dedup_semantic_capped" -> (dedupSemanticCapped _))
-
-  def oracles: Map[String, String] = Map(
-    "sim_pca_project" -> pcaProjectSql,
-    "sim_gram_matrix" -> gramSql,
-    "sim_pq_adc" -> pqAdcSql,
-    "sim_opq_recall" -> opqRecallSql,
-    "sim_maxsim_multivector" -> maxsimSql,
-    "sim_ndcg_eval" -> ndcgSql,
-    "sim_sparse_cosine" -> sparseCosineSql,
-    "sim_bruteforce_topk" -> bruteSql,
-    "sim_ivf_pq" -> ivfPqSql,
-    "sim_centroid_quality" -> centroidQualitySql,
-    "sim_two_stage_rerank" -> twoStageSql,
-    "sim_knn_classify" -> knnClassifySql,
-    "sim_radius_search" -> radiusSql,
-    "sim_ivf_topk" -> ivfSql,
-    "sim_kmeans_ivf" -> kmeansIvfSql,
-    "sim_ann_persisted" -> kmeansIvfSql,
-    "sim_ann_append" -> annAppendSql,
-    "sim_ann_filtered" -> annFilteredSql,
-    "sim_ann_delete" -> annDeleteSql,
-    "sim_mmr_diversify" -> mmrDiversifySql,
-    "sim_hybrid_rrf" -> hybridRrfSql,
-    "sim_hard_negatives" -> hardNegativesSql,
-    "sim_quantized_topk" -> quantizedSql,
-    "sim_ivf_recall" -> ivfRecallSql,
-    "sim_matryoshka_rerank" -> matryoshkaSql,
-    "sim_matryoshka_ivf" -> matryoshkaIvfSql,
-    "sim_quantized_recall" -> quantizedRecallSql,
-    "sim_rhp_pairs" -> rhpSql,
-    "dedup_semantic" -> semanticSql,
-    "dedup_semantic_capped" -> semanticCappedSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("sim_matryoshka_rerank", simMatryoshkaRerank, matryoshkaSql),
+    Gate("sim_matryoshka_ivf", simMatryoshkaIvf,
+      materialized(matryoshkaIvfSql)),
+    Gate("sim_pca_project", simPcaProject, materialized(pcaProjectSql)),
+    Gate("sim_gram_matrix", simGramMatrix, gramSql),
+    Gate("sim_pq_adc", simPqAdc, materialized(pqAdcSql)),
+    Gate("sim_opq_recall", simOpqRecall, materialized(opqRecallSql)),
+    Gate("sim_maxsim_multivector", simMaxsimMultivector, maxsimSql),
+    Gate("sim_ndcg_eval", simNdcgEval, ndcgSql),
+    Gate("sim_sparse_cosine", simSparseCosine, sparseCosineSql),
+    Gate("sim_bruteforce_topk", simBruteForceTopk, bruteSql),
+    Gate("sim_ivf_pq", simIvfPq, materialized(ivfPqSql)),
+    Gate("sim_centroid_quality", simCentroidQuality, centroidQualitySql),
+    Gate("sim_two_stage_rerank", simTwoStageRerank, materialized(twoStageSql)),
+    Gate("sim_knn_classify", simKnnClassify, knnClassifySql),
+    Gate("sim_radius_search", simRadiusSearch, radiusSql),
+    Gate("sim_ivf_topk", simIvfTopk, ivfSql),
+    Gate("sim_kmeans_ivf", simKmeansIvf, kmeansIvfSql),
+    Gate("sim_ann_persisted", simAnnPersisted, kmeansIvfSql),
+    Gate("sim_ann_append", simAnnAppend, materialized(annAppendSql)),
+    Gate("sim_ann_filtered", simAnnFiltered, annFilteredSql),
+    Gate("sim_ann_delete", simAnnDelete, annDeleteSql),
+    Gate("sim_mmr_diversify", simMmrDiversify, materialized(mmrDiversifySql)),
+    Gate("sim_hybrid_rrf", simHybridRrf, hybridRrfSql),
+    Gate("sim_hard_negatives", simHardNegatives, hardNegativesSql),
+    Gate("sim_quantized_topk", simQuantizedTopk, quantizedSql),
+    Gate("sim_ivf_recall", simIvfRecall, ivfRecallSql),
+    Gate("sim_quantized_recall", simQuantizedRecall,
+      materialized(quantizedRecallSql)),
+    Gate("sim_rhp_pairs", simRhpPairs, rhpSql),
+    Gate("dedup_semantic", dedupSemantic, materialized(semanticSql)),
+    Gate("dedup_semantic_capped", dedupSemanticCapped, semanticCappedSql))
 }

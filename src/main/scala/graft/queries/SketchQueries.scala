@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QueryModule
+import graft.{Gate, QueryModule}
 import graft.core.Tables
 import graft.sketch.Sketches
 
@@ -322,21 +322,12 @@ object SketchQueries extends QueryModule {
       |FROM est JOIN x USING (g) ORDER BY source""".stripMargin
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_hll_groups" -> (hllGroups _),
-    "sketch_hll_distinct" -> (hllDistinct _),
-    "sketch_kmv_distinct" -> (kmvDistinct _),
-    "sketch_corpus_overlap" -> (corpusOverlap _),
-    "sketch_countmin_probe" -> (countminProbe _),
-    "sketch_sampled_hitters" -> (sampledHitters _),
-    "sketch_sampled_quantiles" -> (sampledQuantiles _))
-
-  def oracles: Map[String, String] = Map(
-    "sketch_hll_groups" -> hllGroupsSql,
-    "sketch_hll_distinct" -> hllSql,
-    "sketch_kmv_distinct" -> kmvSql,
-    "sketch_corpus_overlap" -> corpusOverlapSql,
-    "sketch_countmin_probe" -> countminSql,
-    "sketch_sampled_hitters" -> sampledSql,
-    "sketch_sampled_quantiles" -> sampledQuantilesSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("sketch_hll_groups", hllGroups, hllGroupsSql),
+    Gate("sketch_hll_distinct", hllDistinct, hllSql),
+    Gate("sketch_kmv_distinct", kmvDistinct, kmvSql),
+    Gate("sketch_corpus_overlap", corpusOverlap, corpusOverlapSql),
+    Gate("sketch_countmin_probe", countminProbe, countminSql),
+    Gate("sketch_sampled_hitters", sampledHitters, sampledSql),
+    Gate("sketch_sampled_quantiles", sampledQuantiles, sampledQuantilesSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Gate
 import graft.core.{GraftSession, Tables}
 import graft.sources.{CsvSource, JdbcIO, Sinks}
 import graft.etl.Promote
@@ -14,14 +15,9 @@ import graft.etl.Promote
   * original parquet, so any roundtrip corruption hash-mismatches. */
 object SourceQueries extends graft.QueryModule {
 
-  private var ctr = 0
-  private def scratch(tag: String): String = synchronized {
-    ctr += 1; GraftSession.scratch(s"$tag-$ctr")
-  }
-
   /** S1: ``-separated headerless CSV with "null" literals. */
   def s1CsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s1")
+    val dir = GraftSession.scratch("s1")
     val src = Tables.lineitem(spark, sfDir)
       .where(col("l_orderkey") % 5 === 0)
       .select(col("l_orderkey"), col("l_quantity"), col("l_discount"),
@@ -46,7 +42,7 @@ object SourceQueries extends graft.QueryModule {
 
   /** S2: `;`-separated CSV with header. */
   def s2CsvSemicolon(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s2")
+    val dir = GraftSession.scratch("s2")
     CsvSource.writeSemicolon(Tables.customer(spark, sfDir), dir)
     val schema = StructType(Seq(
       StructField("c_custkey", LongType), StructField("c_name", StringType),
@@ -63,7 +59,7 @@ object SourceQueries extends graft.QueryModule {
 
   /** S3: tab-separated CSV read via an explicit Hadoop-FS file list. */
   def s3CsvTabFileList(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s3")
+    val dir = GraftSession.scratch("s3")
     CsvSource.writeTab(Tables.supplier(spark, sfDir).repartition(3), dir)
     val files = CsvSource.listDataFiles(spark, dir)
     require(files.nonEmpty, "file listing returned no csv parts")
@@ -81,7 +77,7 @@ object SourceQueries extends graft.QueryModule {
 
   /** S4: headerless quoted CSV, inferred schema, positional rename. */
   def s4CsvInferQuote(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s4")
+    val dir = GraftSession.scratch("s4")
     CsvSource.writeQuote(
       Tables.events(spark, sfDir).select("event_id", "event_type", "value", "props"), dir)
     CsvSource.readInferredQuote(spark, dir)
@@ -135,7 +131,7 @@ object SourceQueries extends graft.QueryModule {
   /** S7+W4: JSON write, schema-imposed JSON read, plus the reference's
     * toJSON→read.json re-parse round trip. */
   def s7JsonSchema(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s7")
+    val dir = GraftSession.scratch("s7")
     val src = Tables.orders(spark, sfDir).where(col("o_orderkey") % 7 === 0)
     Sinks.jsonOverwrite(src, dir)
     val schema = StructType(Seq(
@@ -159,7 +155,7 @@ object SourceQueries extends graft.QueryModule {
 
   /** W1+S9: parquet overwrite → parquet scan (filter pushed down). */
   def w1ParquetRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("w1")
+    val dir = GraftSession.scratch("w1")
     Sinks.parquetOverwrite(
       Tables.lineitem(spark, sfDir).where(col("l_quantity") > 25), dir)
     spark.read.parquet(dir)
@@ -181,7 +177,7 @@ object SourceQueries extends graft.QueryModule {
     * id parsed from its filename, and proves content integrity by
     * md5 + byte length against the oracle's view of the same text. */
   def s13BinaryFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s13")
+    val dir = GraftSession.scratch("s13")
     new java.io.File(dir).mkdirs()
     Tables.documents(spark, sfDir).where(col("doc_id") < 20)
       .select("doc_id", "text").collect()
@@ -213,7 +209,7 @@ object SourceQueries extends graft.QueryModule {
     * pattern is a table-format schema log, `vt_schema_evolution`;
     * this is the raw-file fallback.) */
   def s14SchemaMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s14")
+    val dir = GraftSession.scratch("s14")
     val o = Tables.orders(spark, sfDir)
     o.where(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")
@@ -240,7 +236,7 @@ object SourceQueries extends graft.QueryModule {
     * prove the typed roundtrip by aggregating against the parquet
     * original. */
   def s15XmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s15")
+    val dir = GraftSession.scratch("s15")
     Tables.orders(spark, sfDir).where(col("o_orderkey") % 5 === 0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .write.mode("overwrite").format("xml").option("rowTag", "order")
@@ -269,7 +265,7 @@ object SourceQueries extends graft.QueryModule {
 
   /** W2: dynamic-partition overwrite — rewrite ONE day, keep the rest. */
   def w2DynamicPartition(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("w2")
+    val dir = GraftSession.scratch("w2")
     val ev = Tables.events(spark, sfDir)
       .withColumn("dt", col("ts").cast("date"))
       .select("event_id", "value", "dt")
@@ -293,7 +289,7 @@ object SourceQueries extends graft.QueryModule {
   /** R1: one output file per partition value, without collapsing to a
     * single task. */
   def r1OneFilePerPartition(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("r1")
+    val dir = GraftSession.scratch("r1")
     val o = Tables.orders(spark, sfDir)
       .withColumn("yr", year(col("o_orderdate")))
     Sinks.writeOneFilePerPartition(o, "yr", dir, parallelism = 8)
@@ -310,8 +306,8 @@ object SourceQueries extends graft.QueryModule {
   /** R2: small-file compaction (the reference's Glue repartition job)
     * — 16 input files coalesced to 2, values intact. */
   def r2Compact(spark: SparkSession, sfDir: String): DataFrame = {
-    val in = scratch("r2-in")
-    val out = scratch("r2-out")
+    val in = GraftSession.scratch("r2-in")
+    val out = GraftSession.scratch("r2-out")
     Tables.supplier(spark, sfDir).repartition(16)
       .write.mode("overwrite").parquet(in)
     Sinks.compact(spark, in, out, targetPartitions = 2)
@@ -327,8 +323,8 @@ object SourceQueries extends graft.QueryModule {
   /** End-to-end promotion job (§7.2): tab raw zone → parse F1b → derive
     * dt (F3) → one file per partition (R1) → analytics scan. */
   def etlPromoteE2e(spark: SparkSession, sfDir: String): DataFrame = {
-    val rawDir = scratch("raw")
-    val analyticsDir = scratch("analytics")
+    val rawDir = GraftSession.scratch("raw")
+    val analyticsDir = GraftSession.scratch("analytics")
     val raw = Tables.events(spark, sfDir).select(
       date_format(col("ts"), "dd.MM.yyyy HH:mm:ss.SSSSSS").as("date_time"),
       col("user_id"), col("event_type"), col("value"))
@@ -367,8 +363,8 @@ object SourceQueries extends graft.QueryModule {
     * of the row so a width-handling bug anywhere in the parse cannot
     * hash-hide. */
   def etlPromoteWide(spark: SparkSession, sfDir: String): DataFrame = {
-    val rawDir = scratch("wideraw")
-    val analyticsDir = scratch("widean")
+    val rawDir = GraftSession.scratch("wideraw")
+    val analyticsDir = GraftSession.scratch("widean")
     val ev = Tables.events(spark, sfDir)
     // open_date spread over ~3 years so the year partition is real
     // (×13 scatters the small user_id range across the 1100-day span)
@@ -443,7 +439,7 @@ object SourceQueries extends graft.QueryModule {
     * value fidelity (timestamps included) and the read-side filter
     * reaches the ORC scan as a pushed predicate, same as parquet. */
   def s11OrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = scratch("s11")
+    val dir = GraftSession.scratch("s11")
     Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag",
         "l_shipdate")
@@ -515,45 +511,24 @@ object SourceQueries extends graft.QueryModule {
     """SELECT count(*) AS n, round(sum(value), 2) AS total
       |FROM events WHERE event_id < 1000""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s12_corrupt_tolerant" -> (s12CorruptTolerant _),
-    "r5_partition_pruned_read" -> (r5PartitionPrunedRead _),
-    "s1_csv_roundtrip" -> (s1CsvRoundtrip _),
-    "s2_csv_semicolon" -> (s2CsvSemicolon _),
-    "s3_csv_tab_filelist" -> (s3CsvTabFileList _),
-    "s4_csv_infer_quote" -> (s4CsvInferQuote _),
-    "s5_table_scan" -> (s5TableScan _),
-    "s6_jdbc_roundtrip" -> (s6JdbcRoundtrip _),
-    "s7_json_schema" -> (s7JsonSchema _),
-    "s11_orc_roundtrip" -> (s11OrcRoundtrip _),
-    "s13_binary_files" -> (s13BinaryFiles _),
-    "s14_schema_merge" -> (s14SchemaMerge _),
-    "s15_xml_roundtrip" -> (s15XmlRoundtrip _),
-    "w1_parquet_roundtrip" -> (w1ParquetRoundtrip _),
-    "w2_dynamic_partition" -> (w2DynamicPartition _),
-    "r1_one_file_per_partition" -> (r1OneFilePerPartition _),
-    "r2_compact" -> (r2Compact _),
-    "etl_promote_e2e" -> (etlPromoteE2e _),
-    "etl_promote_wide" -> (etlPromoteWide _))
-
-  def oracles: Map[String, String] = Map(
-    "s12_corrupt_tolerant" -> s12Sql,
-    "r5_partition_pruned_read" -> r5Sql,
-    "s1_csv_roundtrip" -> s1Sql,
-    "s2_csv_semicolon" -> s2Sql,
-    "s3_csv_tab_filelist" -> s3Sql,
-    "s4_csv_infer_quote" -> s4Sql,
-    "s5_table_scan" -> s5Sql,
-    "s6_jdbc_roundtrip" -> s6Sql,
-    "s7_json_schema" -> s7Sql,
-    "s11_orc_roundtrip" -> s11Sql,
-    "s13_binary_files" -> s13Sql,
-    "s14_schema_merge" -> s14Sql,
-    "s15_xml_roundtrip" -> s15Sql,
-    "w1_parquet_roundtrip" -> w1Sql,
-    "w2_dynamic_partition" -> w2Sql,
-    "r1_one_file_per_partition" -> r1Sql,
-    "r2_compact" -> r2Sql,
-    "etl_promote_e2e" -> etlSql,
-    "etl_promote_wide" -> etlWideSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("s12_corrupt_tolerant", s12CorruptTolerant, s12Sql),
+    Gate("r5_partition_pruned_read", r5PartitionPrunedRead, r5Sql),
+    Gate("s1_csv_roundtrip", s1CsvRoundtrip, s1Sql),
+    Gate("s2_csv_semicolon", s2CsvSemicolon, s2Sql),
+    Gate("s3_csv_tab_filelist", s3CsvTabFileList, s3Sql),
+    Gate("s4_csv_infer_quote", s4CsvInferQuote, s4Sql),
+    Gate("s5_table_scan", s5TableScan, s5Sql),
+    Gate("s6_jdbc_roundtrip", s6JdbcRoundtrip, s6Sql),
+    Gate("s7_json_schema", s7JsonSchema, s7Sql),
+    Gate("s11_orc_roundtrip", s11OrcRoundtrip, s11Sql),
+    Gate("s13_binary_files", s13BinaryFiles, s13Sql),
+    Gate("s14_schema_merge", s14SchemaMerge, s14Sql),
+    Gate("s15_xml_roundtrip", s15XmlRoundtrip, s15Sql),
+    Gate("w1_parquet_roundtrip", w1ParquetRoundtrip, w1Sql),
+    Gate("w2_dynamic_partition", w2DynamicPartition, w2Sql),
+    Gate("r1_one_file_per_partition", r1OneFilePerPartition, r1Sql),
+    Gate("r2_compact", r2Compact, r2Sql),
+    Gate("etl_promote_e2e", etlPromoteE2e, etlSql),
+    Gate("etl_promote_wide", etlPromoteWide, etlWideSql))
 }

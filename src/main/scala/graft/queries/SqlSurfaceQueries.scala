@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.QueryModule
+import graft.{Gate, QueryModule}
 import graft.core.Tables
 import graft.ext.GraftExtensions
 
@@ -288,25 +288,14 @@ object SqlSurfaceQueries extends QueryModule {
       |FROM orders
       |GROUP BY 1, 2, 3, 4, 5 ORDER BY 1, 5""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_datetime_fns" -> (sqlDatetimeFns _),
-    "sql_null_ordering" -> (sqlNullOrdering _),
-    "sql_min_k_distinct" -> (sqlMinK _),
-    "sql_dot_product" -> (sqlDot _),
-    "sql_normalize" -> (sqlNormalize _),
-    "sql_simhash_sig" -> (sqlSimhash _),
-    "sql_bounded_top_k" -> (sqlTopK _),
-    "sql_recursive_cte" -> (sqlRecursiveCte _),
-    "sql_lateral_topk" -> (sqlLateralTopk _))
-
-  def oracles: Map[String, String] = Map(
-    "sql_datetime_fns" -> sqlDatetimeFnsSql,
-    "sql_null_ordering" -> sqlNullOrderingSql,
-    "sql_min_k_distinct" -> sqlMinKSql,
-    "sql_dot_product" -> sqlDotSql,
-    "sql_normalize" -> sqlNormalizeSql,
-    "sql_simhash_sig" -> sqlSimhashSql,
-    "sql_bounded_top_k" -> sqlTopKSql,
-    "sql_recursive_cte" -> sqlRecursiveCteSql,
-    "sql_lateral_topk" -> sqlLateralTopkSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("sql_datetime_fns", sqlDatetimeFns, sqlDatetimeFnsSql),
+    Gate("sql_null_ordering", sqlNullOrdering, sqlNullOrderingSql),
+    Gate("sql_min_k_distinct", sqlMinK, sqlMinKSql),
+    Gate("sql_dot_product", sqlDot, sqlDotSql),
+    Gate("sql_normalize", sqlNormalize, sqlNormalizeSql),
+    Gate("sql_simhash_sig", sqlSimhash, sqlSimhashSql),
+    Gate("sql_bounded_top_k", sqlTopK, sqlTopKSql),
+    Gate("sql_recursive_cte", sqlRecursiveCte, sqlRecursiveCteSql),
+    Gate("sql_lateral_topk", sqlLateralTopk, sqlLateralTopkSql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.functions.ScoreFns.scoreRound
 
@@ -1833,65 +1834,35 @@ object StatsQueries extends graft.QueryModule {
        |SELECT d, x, rem AS removed_round FROM r3 ORDER BY d""".stripMargin
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_qte" -> (xQte _),
-    "x_esd_anomalies" -> (xEsdAnomalies _),
-    "x_power_analysis" -> (xPowerAnalysis _),
-    "x_overdispersion" -> (xOverdispersion _),
-    "x_cmh_test" -> (xCmhTest _),
-    "x_huber_mean" -> (xHuberMean _),
-    "x_conformal_interval" -> (xConformalInterval _),
-    "x_msprt" -> (xMsprt _),
-    "x_mann_kendall" -> (xMannKendall _),
-    "x_isotonic" -> (xIsotonic _),
-    "x_theil_sen" -> (xTheilSen _),
-    "x_anova_f" -> (xAnovaF _),
-    "x_mutual_info" -> (xMutualInfo _),
-    "x_fdr_bh" -> (xFdrBh _),
-    "x_kendall_tau" -> (xKendallTau _),
-    "x_spearman_binned" -> (xSpearmanBinned _),
-    "x_psi" -> (xPsi _),
-    "x_calibration_bins" -> (xCalibrationBins _),
-    "x_markov_stationary" -> (xMarkovStationary _),
-    "x_decile_lift" -> (xDecileLift _),
-    "x_diff_in_diff" -> (xDiffInDiff _),
-    "x_eb_shrinkage" -> (xEbShrinkage _),
-    "x_srm_check" -> (xSrmCheck _),
-    "x_skyline" -> (xSkyline _),
-    "x_cusum" -> (xCusum _),
-    "ts_forecast_eval" -> (tsForecastEval _),
-    "ts_holt" -> (tsHolt _),
-    "ts_decompose" -> (tsDecompose _),
-    "ts_sax" -> (tsSax _))
-
-  def oracles: Map[String, String] = Map(
-    "x_qte" -> qteSql,
-    "x_esd_anomalies" -> esdSql,
-    "x_power_analysis" -> powerAnalysisSql,
-    "x_overdispersion" -> overdispersionSql,
-    "x_cmh_test" -> cmhSql,
-    "x_huber_mean" -> huberMeanSql,
-    "x_conformal_interval" -> conformalSql,
-    "x_msprt" -> msprtSql,
-    "x_mann_kendall" -> mannKendallSql,
-    "x_isotonic" -> isotonicSql,
-    "x_theil_sen" -> theilSenSql,
-    "x_anova_f" -> anovaSql,
-    "x_mutual_info" -> mutualInfoSql,
-    "x_fdr_bh" -> fdrBhSql,
-    "x_kendall_tau" -> kendallSql,
-    "x_spearman_binned" -> spearmanSql,
-    "x_psi" -> psiSql,
-    "x_calibration_bins" -> calibrationSql,
-    "x_markov_stationary" -> markovStationarySql,
-    "x_decile_lift" -> decileLiftSql,
-    "x_diff_in_diff" -> diffInDiffSql,
-    "x_eb_shrinkage" -> ebShrinkageSql,
-    "x_srm_check" -> srmCheckSql,
-    "x_skyline" -> skylineSql,
-    "x_cusum" -> cusumSql,
-    "ts_forecast_eval" -> forecastEvalSql,
-    "ts_holt" -> holtSql,
-    "ts_decompose" -> decomposeSql,
-    "ts_sax" -> saxSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("x_qte", xQte, qteSql),
+    Gate("x_esd_anomalies", xEsdAnomalies, esdSql),
+    Gate("x_power_analysis", xPowerAnalysis, powerAnalysisSql),
+    Gate("x_overdispersion", xOverdispersion, overdispersionSql),
+    Gate("x_cmh_test", xCmhTest, cmhSql),
+    Gate("x_huber_mean", xHuberMean, huberMeanSql),
+    Gate("x_conformal_interval", xConformalInterval, conformalSql),
+    Gate("x_msprt", xMsprt, msprtSql),
+    Gate("x_mann_kendall", xMannKendall, mannKendallSql),
+    Gate("x_isotonic", xIsotonic, isotonicSql),
+    Gate("x_theil_sen", xTheilSen, theilSenSql),
+    Gate("x_anova_f", xAnovaF, anovaSql),
+    Gate("x_mutual_info", xMutualInfo, mutualInfoSql),
+    Gate("x_fdr_bh", xFdrBh, fdrBhSql),
+    Gate("x_kendall_tau", xKendallTau, kendallSql),
+    Gate("x_spearman_binned", xSpearmanBinned, spearmanSql),
+    Gate("x_psi", xPsi, psiSql),
+    Gate("x_calibration_bins", xCalibrationBins, calibrationSql),
+    Gate("x_markov_stationary", xMarkovStationary,
+      materialized(markovStationarySql)),
+    Gate("x_decile_lift", xDecileLift, decileLiftSql),
+    Gate("x_diff_in_diff", xDiffInDiff, diffInDiffSql),
+    Gate("x_eb_shrinkage", xEbShrinkage, ebShrinkageSql),
+    Gate("x_srm_check", xSrmCheck, srmCheckSql),
+    Gate("x_skyline", xSkyline, skylineSql),
+    Gate("x_cusum", xCusum, cusumSql),
+    Gate("ts_forecast_eval", tsForecastEval, forecastEvalSql),
+    Gate("ts_holt", tsHolt, holtSql),
+    Gate("ts_decompose", tsDecompose, decomposeSql),
+    Gate("ts_sax", tsSax, saxSql))
 }

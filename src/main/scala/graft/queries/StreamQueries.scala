@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Gate
 import graft.core.{GraftSession, Tables}
 import graft.sources.CsvSource
 import graft.streaming.IngestionPipeline
@@ -668,31 +669,17 @@ object StreamQueries extends graft.QueryModule {
       |  FROM events GROUP BY 1)
       |ORDER BY total_value DESC, user_id LIMIT 10""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t13_stream_sessions" -> (t13StreamSessions _),
-    "t14_stream_kmv" -> (t14StreamKmv _),
-    "t15_stream_topk" -> (t15StreamTopk _),
-    "t11_stream_static_join" -> (t11StreamStaticJoin _),
-    "t12_stream_mv" -> (t12StreamMv _),
-    "t10_quarantine_replay" -> (t10QuarantineReplay _),
-    "t9_stream_audited" -> (t9StreamAudited _),
-    "t1_stream_ingest" -> (t1StreamIngest _),
-    "t5_stream_window" -> (t5StreamWindow _),
-    "t3_stream_dedup" -> (t3StreamDedup _),
-    "t7_stream_join" -> (t7StreamJoin _),
-    "t8_cdc_pipeline" -> (t8CdcPipeline _))
-
-  def oracles: Map[String, String] = Map(
-    "t13_stream_sessions" -> t13Sql,
-    "t14_stream_kmv" -> t14Sql,
-    "t15_stream_topk" -> t15Sql,
-    "t11_stream_static_join" -> t11Sql,
-    "t12_stream_mv" -> t12Sql,
-    "t10_quarantine_replay" -> t10Sql,
-    "t9_stream_audited" -> t9Sql,
-    "t1_stream_ingest" -> t1Sql,
-    "t5_stream_window" -> t5Sql,
-    "t3_stream_dedup" -> t3Sql,
-    "t7_stream_join" -> t7Sql,
-    "t8_cdc_pipeline" -> t8Sql)
+  def gates: Seq[Gate] = Seq(
+    Gate("t13_stream_sessions", t13StreamSessions, t13Sql),
+    Gate("t14_stream_kmv", t14StreamKmv, t14Sql),
+    Gate("t15_stream_topk", t15StreamTopk, t15Sql),
+    Gate("t11_stream_static_join", t11StreamStaticJoin, t11Sql),
+    Gate("t12_stream_mv", t12StreamMv, t12Sql),
+    Gate("t10_quarantine_replay", t10QuarantineReplay, t10Sql),
+    Gate("t9_stream_audited", t9StreamAudited, t9Sql),
+    Gate("t1_stream_ingest", t1StreamIngest, t1Sql),
+    Gate("t5_stream_window", t5StreamWindow, t5Sql),
+    Gate("t3_stream_dedup", t3StreamDedup, t3Sql),
+    Gate("t7_stream_join", t7StreamJoin, t7Sql),
+    Gate("t8_cdc_pipeline", t8CdcPipeline, t8Sql))
 }

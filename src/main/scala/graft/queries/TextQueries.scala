@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gate
 import graft.core.Tables
 import graft.text.TextAnalysis
 import graft.multimodal.BinaryPipeline
@@ -1749,113 +1750,58 @@ object TextQueries extends graft.QueryModule {
       |  count(*) * cluster_size AS n_docs
       |FROM s GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_prefix_clusters" -> (textPrefixClusters _),
-    "text_code_detect" -> (textCodeDetect _),
-    "text_hapax_ratio" -> (textHapaxRatio _),
-    "text_readability" -> (textReadability _),
-    "text_quality_classifier" -> (textQualityClassifier _),
-    "text_lm_score" -> (textLmScore _),
-    "text_bigram_lm" -> (textBigramLm _),
-    "text_kneser_ney" -> (textKneserNey _),
-    "text_burstiness" -> (textBurstiness _),
-    "text_rake" -> (textRake _),
-    "text_ngram_novelty" -> (textNgramNovelty _),
-    "text_entropy" -> (textEntropy _),
-    "text_jsd_drift" -> (textJsdDrift _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_apply" -> (textBpeApply _),
-    "text_textrank" -> (textTextrank _),
-    "text_mattr" -> (textMattr _),
-    "text_zipf_fit" -> (textZipfFit _),
-    "text_repetition" -> (textRepetition _),
-    "text_redact" -> (textRedact _),
-    "text_normalize" -> (textNormalize _),
-    "text_html_extract" -> (textHtmlExtract _),
-    "text_bm25" -> (textBm25 _),
-    "text_token_counts" -> (textTokenCounts _),
-    "text_chunk_sliding" -> (textChunkSliding _),
-    "text_chunk_pack" -> (textChunkPack _),
-    "text_lang_id" -> (textLangId _),
-    "text_quality" -> (textQuality _),
-    "text_fingerprint" -> (textFingerprint _),
-    "mm_decode_stub" -> (mmDecodeStub _),
-    "mm_decode" -> (mmDecode _),
-    "mm_audio_decode" -> (mmAudioDecode _),
-    "mm_video_decode" -> (mmVideoDecode _),
-    "mm_video_frames" -> (mmVideoFrames _),
-    "mm_video_mjpg" -> (mmVideoMjpg _),
-    "mm_decode_resize" -> (mmDecodeResize _),
-    "mm_phash_decoded" -> (mmPhashDecoded _),
-    "mm_resize" -> (mmResize _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_phash_neardup" -> (mmPhashNeardup _),
-    "text_bpe_pairs" -> (textBpePairs _),
-    "text_pmi" -> (textPmi _),
-    "text_collocations_llr" -> (textCollocationsLlr _),
-    "text_gopher_rules" -> (textGopherRules _),
-    "profile_stats" -> (profileStats _),
-    "profile_moments" -> (profileMoments _),
-    "text_inverted_index" -> (textInvertedIndex _),
-    "text_search_and" -> (textSearchAnd _),
-    "text_keyness" -> (textKeyness _),
-    "text_lang_confusion" -> (textLangConfusion _),
-    "text_boilerplate" -> (textBoilerplateRatio _),
-    "text_vocab" -> (textVocab _),
-    "text_tfidf" -> (textTfidf _))
-
-  def oracles: Map[String, String] = Map(
-    "text_quality_classifier" -> classifierSql,
-    "text_lm_score" -> lmScoreSql,
-    "text_bigram_lm" -> bigramLmSql,
-    "text_kneser_ney" -> kneserNeySql,
-    "text_burstiness" -> burstinessSql,
-    "text_rake" -> rakeSql,
-    "text_ngram_novelty" -> ngramNoveltySql,
-    "text_entropy" -> entropySql,
-    "text_jsd_drift" -> jsdDriftSql,
-    "text_bpe_train" -> bpeTrainSql,
-    "text_bpe_apply" -> bpeApplySql,
-    "text_textrank" -> textrankSql,
-    "text_code_detect" -> codeDetectSql,
-    "text_prefix_clusters" -> prefixClustersSql,
-    "text_hapax_ratio" -> hapaxRatioSql,
-    "text_readability" -> readabilitySql,
-    "text_mattr" -> mattrSql,
-    "text_zipf_fit" -> zipfFitSql,
-    "text_repetition" -> repetitionSql,
-    "text_redact" -> redactSql,
-    "text_normalize" -> normalizeSql,
-    "text_html_extract" -> htmlExtractSql,
-    "text_bm25" -> bm25Sql,
-    "text_token_counts" -> tokenSql,
-    "text_chunk_sliding" -> chunkSlidingSql,
-    "text_chunk_pack" -> chunkPackSql,
-    "text_lang_id" -> langSql,
-    "text_quality" -> qualitySql,
-    "text_fingerprint" -> fingerprintSql,
-    "mm_decode_stub" -> mmSql,
-    "mm_decode" -> mmDecodeSql,
-    "mm_audio_decode" -> mmAudioDecodeSql,
-    "mm_video_decode" -> mmVideoDecodeSql,
-    "mm_video_frames" -> mmVideoFramesSql,
-    "mm_video_mjpg" -> mmVideoMjpgSql,
-    "mm_decode_resize" -> mmDecodeResizeSql,
-    "mm_phash_decoded" -> mmPhashDecodedSql,
-    "mm_resize" -> mmResizeSql,
-    "mm_frame_sample" -> mmFrameSql,
-    "mm_phash_neardup" -> mmPhashSql,
-    "text_bpe_pairs" -> bpePairsSql,
-    "text_pmi" -> textPmiSql,
-    "text_collocations_llr" -> textCollocationsLlrSql,
-    "text_gopher_rules" -> gopherSql,
-    "profile_stats" -> profileSql,
-    "profile_moments" -> profileMomentsSql,
-    "text_inverted_index" -> invertedIndexSql,
-    "text_search_and" -> searchAndSql,
-    "text_keyness" -> keynessSql,
-    "text_lang_confusion" -> langConfusionSql,
-    "text_boilerplate" -> boilerplateSql,
-    "text_vocab" -> vocabSql,
-    "text_tfidf" -> tfidfSql)
+  def gates: Seq[Gate] = Seq(
+    Gate("text_prefix_clusters", textPrefixClusters, prefixClustersSql),
+    Gate("text_code_detect", textCodeDetect, codeDetectSql),
+    Gate("text_hapax_ratio", textHapaxRatio, hapaxRatioSql),
+    Gate("text_readability", textReadability, readabilitySql),
+    Gate("text_quality_classifier", textQualityClassifier, classifierSql),
+    Gate("text_lm_score", textLmScore, lmScoreSql),
+    Gate("text_bigram_lm", textBigramLm, bigramLmSql),
+    Gate("text_kneser_ney", textKneserNey, kneserNeySql),
+    Gate("text_burstiness", textBurstiness, burstinessSql),
+    Gate("text_rake", textRake, rakeSql),
+    Gate("text_ngram_novelty", textNgramNovelty, ngramNoveltySql),
+    Gate("text_entropy", textEntropy, entropySql),
+    Gate("text_jsd_drift", textJsdDrift, jsdDriftSql),
+    Gate("text_bpe_train", textBpeTrain, materialized(bpeTrainSql)),
+    Gate("text_bpe_apply", textBpeApply, materialized(bpeApplySql)),
+    Gate("text_textrank", textTextrank, textrankSql),
+    Gate("text_mattr", textMattr, mattrSql),
+    Gate("text_zipf_fit", textZipfFit, zipfFitSql),
+    Gate("text_repetition", textRepetition, repetitionSql),
+    Gate("text_redact", textRedact, redactSql),
+    Gate("text_normalize", textNormalize, normalizeSql),
+    Gate("text_html_extract", textHtmlExtract, htmlExtractSql),
+    Gate("text_bm25", textBm25, bm25Sql),
+    Gate("text_token_counts", textTokenCounts, tokenSql),
+    Gate("text_chunk_sliding", textChunkSliding, chunkSlidingSql),
+    Gate("text_chunk_pack", textChunkPack, chunkPackSql),
+    Gate("text_lang_id", textLangId, langSql),
+    Gate("text_quality", textQuality, qualitySql),
+    Gate("text_fingerprint", textFingerprint, fingerprintSql),
+    Gate("mm_decode_stub", mmDecodeStub, mmSql),
+    Gate("mm_decode", mmDecode, mmDecodeSql),
+    Gate("mm_audio_decode", mmAudioDecode, mmAudioDecodeSql),
+    Gate("mm_video_decode", mmVideoDecode, mmVideoDecodeSql),
+    Gate("mm_video_frames", mmVideoFrames, mmVideoFramesSql),
+    Gate("mm_video_mjpg", mmVideoMjpg, mmVideoMjpgSql),
+    Gate("mm_decode_resize", mmDecodeResize, mmDecodeResizeSql),
+    Gate("mm_phash_decoded", mmPhashDecoded, mmPhashDecodedSql),
+    Gate("mm_resize", mmResize, mmResizeSql),
+    Gate("mm_frame_sample", mmFrameSample, mmFrameSql),
+    Gate("mm_phash_neardup", mmPhashNeardup, mmPhashSql),
+    Gate("text_bpe_pairs", textBpePairs, bpePairsSql),
+    Gate("text_pmi", textPmi, textPmiSql),
+    Gate("text_collocations_llr", textCollocationsLlr, textCollocationsLlrSql),
+    Gate("text_gopher_rules", textGopherRules, gopherSql),
+    Gate("profile_stats", profileStats, profileSql),
+    Gate("profile_moments", profileMoments, profileMomentsSql),
+    Gate("text_inverted_index", textInvertedIndex, invertedIndexSql),
+    Gate("text_search_and", textSearchAnd, searchAndSql),
+    Gate("text_keyness", textKeyness, keynessSql),
+    Gate("text_lang_confusion", textLangConfusion, langConfusionSql),
+    Gate("text_boilerplate", textBoilerplateRatio, boilerplateSql),
+    Gate("text_vocab", textVocab, vocabSql),
+    Gate("text_tfidf", textTfidf, tfidfSql))
 }

@@ -104,20 +104,11 @@ object IngestionPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        def lap(name: String): Unit =
-          if (sys.env.contains("GRAFT_PROFILE"))
-            println(f"[profile]   $name at ${(System.nanoTime() - t0) / 1e9}%.2f s")
         val routed = batch.where(col("route") =!= "skip").cache()
         try {
-          if (sys.env.contains("GRAFT_PROFILE")) {
-            val n = routed.count()
-            lap(s"count=$n parts=${routed.rdd.getNumPartitions}")
-          }
           // stage zone (T1)
           routed.drop("src_file")
             .write.mode("append").partitionBy("route").parquet(stageDir)
-          lap("staged")
           // control rows (T2): idempotent on (object_key, batch_id)
           val ctl = routed.groupBy("src_file", "route")
             .agg(count(lit(1)).as("n_rows"))
@@ -125,15 +116,11 @@ object IngestionPipeline {
               col("n_rows"), lit(batchId).as("batch_id"),
               lit(Status.Loaded).as("status"))
           ctl.write.mode("append").parquet(controlDir)
-          lap("control")
           // index fan-out (T4)
           ctl.select(md5(col("object_key")).as("doc_id"), col("object_key"),
               col("route"), col("n_rows"))
             .write.mode("append").json(indexDir)
-          lap("index")
         } finally routed.unpersist()
-        if (sys.env.contains("GRAFT_PROFILE"))
-          println(f"[profile] batch $batchId: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         ()
       }
       .start()

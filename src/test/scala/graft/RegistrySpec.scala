@@ -5,34 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Contract sanity for the driver-facing registry — no Spark needed. */
 class RegistrySpec extends AnyFunSuite {
 
-  private val modules: Seq[(String, QueryModule)] = Seq(
-    "Relational" -> queries.Relational,
-    "OpsQueries" -> queries.OpsQueries,
-    "FunctionQueries" -> queries.FunctionQueries,
-    "SourceQueries" -> queries.SourceQueries,
-    "CatalogQueries" -> queries.CatalogQueries,
-    "ReverseQueries" -> queries.ReverseQueries,
-    "TextQueries" -> queries.TextQueries,
-    "DedupQueries" -> queries.DedupQueries,
-    "SimQueries" -> queries.SimQueries,
-    "StreamQueries" -> queries.StreamQueries,
-    "CoverageQueries" -> queries.CoverageQueries,
-    "ExtQueries" -> queries.ExtQueries,
-    "BonusQueries" -> queries.BonusQueries,
-    "PerfQueries" -> queries.PerfQueries,
-    "CurateQueries" -> queries.CurateQueries,
-    "SketchQueries" -> queries.SketchQueries,
-    "SqlSurfaceQueries" -> queries.SqlSurfaceQueries,
-    "GraphQueries" -> queries.GraphQueries,
-    "AnalyticsQueries" -> queries.AnalyticsQueries,
-    "StatsQueries" -> queries.StatsQueries,
-    "FeatQueries" -> queries.FeatQueries,
-    "GeoQueries" -> queries.GeoQueries,
-    "PrivacyQueries" -> queries.PrivacyQueries)
-
   test("query names are globally unique (no silent map overwrite)") {
-    val all = modules.flatMap { case (m, q) => q.defs.keys.map(_ -> m) }
-    val dups = all.groupBy(_._1).filter(_._2.size > 1)
+    val all = SparkEntry.registry.flatMap(_.gates).map(_.name)
+    val dups = all.groupBy(identity).filter(_._2.size > 1).keySet
     assert(dups.isEmpty, s"duplicate query names: $dups")
     assert(SparkEntry.queries.size == all.size)
   }
@@ -48,6 +23,14 @@ class RegistrySpec extends AnyFunSuite {
       assert(sql.trim.toUpperCase.startsWith("SELECT") ||
         sql.trim.toUpperCase.startsWith("WITH"), s"$name is not a query")
     }
+  }
+
+  test("MATERIALIZED-hinted oracles carry no WINDOW clause") {
+    val hinted = SparkEntry.oracleSql.filter(_._2.contains("AS MATERIALIZED"))
+    val windowClause = """(?i)\bWINDOW\s+\w+\s+AS\b""".r
+    val windowed = hinted.keys.filter(k => windowClause.findFirstIn(hinted(k)).nonEmpty)
+    assert(windowed.isEmpty, s"hint rewrite would touch a window alias: $windowed")
+    assert(hinted.size == 27, s"got ${hinted.size} hinted oracles")
   }
 
   test("headline bench queries all exist") {

@@ -11,18 +11,18 @@ package graft
 class StreamFixtureSpec extends SparkSpecBase {
 
   test("t9/t10 rerun identically on cloned feeds (no cross-gate state)") {
-    val a1 = graft.queries.StreamQueries.defs("t9_stream_audited")(spark, sfDir)
+    val a1 = SparkEntry.queries("t9_stream_audited")(spark, sfDir)
       .collect().toSeq
-    val a2 = graft.queries.StreamQueries.defs("t9_stream_audited")(spark, sfDir)
+    val a2 = SparkEntry.queries("t9_stream_audited")(spark, sfDir)
       .collect().toSeq
     assert(a1 == a2, s"t9 drifted across reruns: $a1 vs $a2")
     // version/quarantine contract intact on the shared base
     val r = a1.head
     assert(r.getLong(r.fieldIndex("n_versions")) == 2L)
     assert(r.getLong(r.fieldIndex("n_quarantined")) == 50L)
-    val b1 = graft.queries.StreamQueries.defs("t10_quarantine_replay")(spark, sfDir)
+    val b1 = SparkEntry.queries("t10_quarantine_replay")(spark, sfDir)
       .collect().toSeq
-    val b2 = graft.queries.StreamQueries.defs("t10_quarantine_replay")(spark, sfDir)
+    val b2 = SparkEntry.queries("t10_quarantine_replay")(spark, sfDir)
       .collect().toSeq
     assert(b1 == b2, s"t10 drifted across reruns: $b1 vs $b2")
     val q = b1.head
@@ -31,7 +31,7 @@ class StreamFixtureSpec extends SparkSpecBase {
   }
 
   test("t12's two drains see exactly the two halves (epochs unchanged)") {
-    val out = graft.queries.StreamQueries.defs("t12_stream_mv")(spark, sfDir)
+    val out = SparkEntry.queries("t12_stream_mv")(spark, sfDir)
     val total = out.collect().map(_.getLong(1)).sum
     val expected = graft.core.Tables.events(spark, sfDir).count()
     assert(total == expected,
