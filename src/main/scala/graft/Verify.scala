@@ -16,9 +16,11 @@ import scala.concurrent.duration.Duration
   * because (a) every gate writes to its own `outDir/<name>` directory,
   * (b) each worker task gets its own `spark.newSession()` so temp views
   * and `conf.set` calls cannot cross gates (the same isolation
-  * GraftSession.scoped uses), and (c) the shared scratch-fixture
-  * builders (triangle stream, trained IVF/PQ paths) are already
-  * `synchronized`. Each task runs in its own FAIR-scheduler pool so a
+  * GraftSession.stateScoped uses), and (c) the shared scratch
+  * fixtures (triangle stream, trained IVF/PQ artifacts, feed bases)
+  * are built once per key by `GraftSession.shared`, so gates that need
+  * one fixture wait for its single build while gates on other
+  * fixtures run on. Each task runs in its own FAIR-scheduler pool so a
   * long gate cannot convoy the short ones behind it.
   */
 object Verify {

@@ -153,7 +153,7 @@ object MetastoreTransformer {
     * skewedInfo through without a signature change. */
   private def sdStruct(sdsTransformed: DataFrame): DataFrame =
     sdsTransformed.select(col("SD_ID").as("__sd_id"),
-      struct(sdsTransformed.columns.filter(_ != "SD_ID").map(col): _*)
+      struct(sdsTransformed.columns.toSeq.filter(_ != "SD_ID").map(col): _*)
         .as("storageDescriptor"))
 
   /** Partitions: idx-sorted values (A3), SD struct (J3), db/table names

@@ -95,19 +95,6 @@ object Caching {
     }
   }
 
-  /** Iterative-loop idiom: spill `result` (whose plan reads the
-    * previous iteration's spill `old`), then delete `old` — the write
-    * is the action that makes `old` fully consumed, so the previous
-    * round's scratch is reclaimed as soon as the new round lands
-    * instead of one dir per iteration piling up until JVM exit.
-    * `old` may be null or a non-reaped frame (iteration 1). */
-  def reapReplacing(result: DataFrame, old: DataFrame,
-                    intermediates: DataFrame*): DataFrame = {
-    val out = reap(result, intermediates: _*)
-    if (old != null) release(old)
-    out
-  }
-
   /** Materialize `result` to reliable files, then release the
     * persisted `intermediates` that fed it. Returns a frame whose
     * lineage references the spilled files only.
@@ -131,8 +118,9 @@ object Caching {
     * Scratch lifetime: the spill dir lives until [[release]] /
     * [[releaseAll]] or JVM exit (shutdown hook), whichever first; a
     * write that fails removes its partial dir before rethrowing.
-    * Operators that loop reaps use [[iterate]] or [[reapReplacing]] so
-    * scratch stays O(1) dirs per live frame, not O(iterations). */
+    * Operators that loop reaps use [[iterate]], or release each
+    * round's spill once its successor lands, so scratch stays O(1)
+    * dirs per live frame, not O(iterations). */
   def reap(result: DataFrame, intermediates: DataFrame*): DataFrame = {
     val spark = result.sparkSession
     val sc = spark.sparkContext
@@ -179,7 +167,11 @@ object Caching {
     * returns or throws, so a long-lived ingest session committing
     * thousands of batches keeps no batch-sized scratch per commit.
     * Same once-evaluation guarantee as [[reap]]: every read inside
-    * `body` comes from the spilled files, never the source plan. */
+    * `body` comes from the spilled files, never the source plan.
+    * persist() would only narrow the double-evaluation race: caching
+    * is best-effort, and an evicted or lost block recomputes from
+    * lineage, so a non-deterministic source could pass the check yet
+    * commit different rows under executor loss. */
   def reapScoped[T](result: DataFrame)(body: DataFrame => T): T = {
     val pinned = reap(result)
     try body(pinned) finally release(pinned)

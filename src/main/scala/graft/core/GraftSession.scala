@@ -139,17 +139,15 @@ object GraftSession {
     * blockmgr/spark-* dirs). */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private def rmTree(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(rmTree)
+    f.delete(): Unit
+  }
   private lazy val scratchHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       scratchDirs.forEach { p =>
-        try {
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach(rm)
-            f.delete(): Unit
-          }
-          rm(p.toFile)
-        } catch { case _: Throwable => () }
+        try rmTree(p.toFile) catch { case _: Throwable => () }
       }
     }))
   def scratch(tag: String): String = {
@@ -158,4 +156,37 @@ object GraftSession {
     scratchDirs.add(d)
     d.toString
   }
+
+  /** Build-once scratch fixtures: `build` runs once per `key` per JVM,
+    * in a fresh [[scratch]] dir that it owns, and every later caller of
+    * that key gets its memoized result. Callers of one key wait for
+    * that key's single build; callers of different keys never wait on
+    * each other, and a build may call `shared` on another key (the
+    * triangle stream is built from the co-edge fixture). A build that
+    * throws deletes its dir, memoizes nothing and is retried by the
+    * next caller. The key fixes `T`: every caller of a key must ask for
+    * the same type. */
+  def shared[T](key: String)(build: String => T): T = {
+    val f = fixtures.computeIfAbsent(key, _ => new Fixture)
+    f.synchronized {
+      if (f.value.isEmpty) {
+        val dir = scratch("shared")
+        try f.value = Some(build(dir))
+        catch { case e: Throwable => rmTree(new java.io.File(dir)); throw e }
+      }
+      f.value.get.asInstanceOf[T]
+    }
+  }
+  // one holder per key, locked on its own: a build inside
+  // ConcurrentHashMap.computeIfAbsent would hold a bin lock for the
+  // whole build (stalling other keys in that bin), and the nested
+  // triangle → co-edge call can fail there as a recursive update
+  private final class Fixture { var value: Option[Any] = None }
+  private val fixtures =
+    new java.util.concurrent.ConcurrentHashMap[String, Fixture]()
+
+  /** `prefix_<n>`, unique within this JVM: names for session-global
+    * objects (catalog tables) that concurrent gates must not share. */
+  def uniqueName(prefix: String): String = s"${prefix}_${names.incrementAndGet()}"
+  private val names = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Caching
 import graft.ops.Upsert
 import scala.jdk.CollectionConverters._
 
@@ -774,21 +775,6 @@ object VersionedTable {
       .groupBy(col("c.constraint_name").as("constraint_name"))
       .agg(count(lit(1)).as("n_rows"), sum(col("c.v")).as("n_violations"))
 
-  /** Materialize a batch EXACTLY ONCE before a check-then-commit pair
-    * reads it twice. persist() only narrows the double-evaluation
-    * race: Spark caching is best-effort, and an evicted or lost block
-    * recomputes from lineage — so a non-deterministic source could
-    * still pass the check yet commit different rows under executor
-    * loss. A file pin is the hard guarantee: every read inside `body`
-    * comes from the pinned files, never the source plan. Cost is one
-    * batch-sized scratch write per commit — the same price triStream
-    * pays for the same reason — and the scratch lives exactly as long
-    * as `body`: it is deleted when the commit completes, so a
-    * long-lived ingest session committing many batches never
-    * accumulates per-commit checkpoint directories. */
-  private def withPinned[T](df: DataFrame)(body: DataFrame => T): T =
-    graft.core.Caching.reapScoped(df)(body)
-
   /** CHECK-constrained upsert (the Delta-style table invariant):
     * the batch commits only if EVERY constraint holds on EVERY row —
     * enforcement is atomic, a single violation rejects the whole batch
@@ -802,8 +788,8 @@ object VersionedTable {
     // evaluation of the batch: without it a non-deterministic or
     // concurrently-changing source could pass the check yet commit
     // different rows — the double-evaluation race commitUpsertIfNewer/
-    // commitScd2 also close (see withPinned()).
-    withPinned(updates) { batch =>
+    // commitScd2 also close (see Caching.reapScoped).
+    Caching.reapScoped(updates) { batch =>
       val report = constraintViolations(batch, constraints)
         .orderBy("constraint_name").collect()
       if (report.exists(_.getAs[Long]("n_violations") > 0L)) Left(report)
@@ -834,8 +820,8 @@ object VersionedTable {
     // the emptiness probe and the commit re-run the join against the LIVE
     // state, and a concurrent writer landing between the two evaluations
     // would make the committed set differ from the checked set
-    // (withPinned()).
-    withPinned(updates.join(live, keyCols, "left_outer")
+    // (Caching.reapScoped).
+    Caching.reapScoped(updates.join(live, keyCols, "left_outer")
       .where(col("__live_ord").isNull || col(ordCol) > col("__live_ord"))
       .drop("__live_ord")) { survivors =>
       if (survivors.isEmpty) versions(spark, root).last
@@ -887,8 +873,8 @@ object VersionedTable {
         :+ col(ordCol).as("valid_to")
         :+ lit(false).as("is_current"): _*)
     // Pinned: the emptiness probe and the commit must see ONE
-    // evaluation of the delta (see withPinned()).
-    withPinned(opens.unionByName(closes)) { delta =>
+    // evaluation of the delta (see Caching.reapScoped).
+    Caching.reapScoped(opens.unionByName(closes)) { delta =>
       if (delta.isEmpty) versions(spark, root).last
       else commitUpsert(spark, root, delta)
     }
@@ -903,7 +889,7 @@ object VersionedTable {
     val tomb = schema.fields.foldLeft(keys) { (df, f) =>
       if (keys.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
-    }.select(schema.fieldNames.map(col): _*).withColumn(Deleted, lit(true))
+    }.select(schema.fieldNames.toSeq.map(col): _*).withColumn(Deleted, lit(true))
     write(spark, root, tomb, snapshot = false)
   }
 
@@ -922,15 +908,15 @@ object VersionedTable {
     // evaluation of the source: a key present in the first evaluation
     // but absent from the second would be neither tombstoned nor
     // written — leaving a stale live row that violates the "state
-    // equals source" contract (see withPinned()).
-    withPinned(source) { src =>
+    // equals source" contract (see Caching.reapScoped).
+    Caching.reapScoped(source) { src =>
       val gone = readLatest(spark, root, keyCols)
         .select(keyCols.map(col): _*)
         .join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
       val tomb = src.schema.fields.foldLeft(gone) { (df, f) =>
           if (keyCols.contains(f.name)) df
           else df.withColumn(f.name, lit(null).cast(f.dataType))
-        }.select(src.schema.fieldNames.map(col): _*)
+        }.select(src.schema.fieldNames.toSeq.map(col): _*)
         .withColumn(Deleted, lit(true))
       write(spark, root,
         src.withColumn(Deleted, lit(false)).unionByName(tomb),
@@ -959,8 +945,8 @@ object VersionedTable {
     // Pinned so the range guard, the tombstone anti-join, and
     // the write see ONE evaluation of the replacement — separate
     // evaluations of a non-deterministic batch could pass the guard
-    // yet commit rows outside the range (see withPinned()).
-    withPinned(replacement) { repl =>
+    // yet commit rows outside the range (see Caching.reapScoped).
+    Caching.reapScoped(replacement) { repl =>
       // NULL range values must be REJECTED, not smuggled: a NULL fails
       // both `between` and its negation, so the naive `!between` guard
       // would pass rows that the range contract can never expose to
@@ -977,7 +963,7 @@ object VersionedTable {
       val tomb = repl.schema.fields.foldLeft(gone) { (df, f) =>
           if (keyCols.contains(f.name)) df
           else df.withColumn(f.name, lit(null).cast(f.dataType))
-        }.select(repl.schema.fieldNames.map(col): _*)
+        }.select(repl.schema.fieldNames.toSeq.map(col): _*)
         .withColumn(Deleted, lit(true))
       write(spark, root,
         repl.withColumn(Deleted, lit(false)).unionByName(tomb),
@@ -1413,7 +1399,7 @@ object VersionedTable {
               else applied(prior, delta))
           img
         }.reduce(_.unionByName(_, allowMissingColumns = true))
-        graft.core.Caching.reap(images, priors.toSeq: _*)
+        Caching.reap(images, priors.toSeq: _*)
     }
   }
 

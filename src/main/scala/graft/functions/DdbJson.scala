@@ -21,7 +21,7 @@ object DdbJson {
   private val nf = JsonNodeFactory.instance
 
   private def decodeAttr(node: JsonNode): JsonNode = {
-    val field = node.fields().asScala.toSeq.headOption
+    val field = node.properties().asScala.headOption
     field match {
       case Some(e) => e.getKey match {
         case "S" => e.getValue
@@ -54,7 +54,7 @@ object DdbJson {
 
   private def decodeMap(node: JsonNode): ObjectNode = {
     val out = nf.objectNode()
-    node.fields().asScala.foreach(e => out.set[JsonNode](e.getKey, decodeAttr(e.getValue)))
+    node.properties().asScala.foreach(e => out.set[JsonNode](e.getKey, decodeAttr(e.getValue)))
     out
   }
 

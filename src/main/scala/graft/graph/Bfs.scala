@@ -47,9 +47,10 @@ object Bfs {
         if (prevFrontier ne visited) graft.core.Caching.release(prevFrontier)
         if (frontier.isEmpty) exhausted = true
         else {
+          // the write consumes the old spill: reclaim it as the new lands
           val prevVisited = visited
-          visited = graft.core.Caching.reapReplacing(
-            visited.unionByName(frontier), prevVisited)
+          visited = graft.core.Caching.reap(visited.unionByName(frontier))
+          graft.core.Caching.release(prevVisited)
         }
         h += 1
       }

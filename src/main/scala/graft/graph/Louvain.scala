@@ -130,9 +130,10 @@ object Louvain {
     * the original node set. Each level contracts the ORIGINAL edge
     * list by the current composed assignment (associativity of the
     * weight sum makes this identical to contracting the contracted
-    * graph) so scratch stays O(1) spill dirs via the reapReplacing
-    * doctrine: the returned frame owns the only live spill; the
-    * caller releases it via `Caching.release` when done. */
+    * graph) so scratch stays O(1) spill dirs (each level's spill is
+    * released once the next lands): the returned frame owns the only
+    * live spill; the caller releases it via `Caching.release` when
+    * done. */
   /** One additional Louvain level on top of an existing REAPED
     * assignment: contract the original edges by `assign`, sweep the
     * contracted graph, compose, and return the reaped composed

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** REAL audio decode for WAV payloads: `javax.sound.sampled` (the
-  * JRE's built-in RIFF/PCM codec), in the same batched mapPartitions
+  * JRE's built-in RIFF/PCM codec), in the same mapPartitions
   * shape as [[BinaryPipeline.decodeImages]]. This retires the stub
   * for audio — of the stubbed media families only video remains
   * JRE-undecodable.
@@ -23,9 +23,8 @@ import org.apache.spark.sql.types._
   * for a known test signal ([[SyntheticAudio]]), and a content
   * fingerprint for downstream near-dup ops.
   *
-  * Scale: decode is a narrow map-only pass (no shuffle); `batchSize`
-  * bounds peak payload memory per task exactly like Arrow batch size
-  * does for Pandas UDFs.
+  * Scale: decode is a narrow map-only pass (no shuffle) that holds one
+  * payload at a time per task.
   */
 object AudioPipeline {
 
@@ -44,16 +43,14 @@ object AudioPipeline {
     StructField("n_samples", LongType, nullable = false),
     StructField("checksum", LongType, nullable = false)))
 
-  /** Batched per-partition WAV decode. */
-  def decodeAudio(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  /** Per-partition WAV decode. */
+  def decodeAudio(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[DecodedAudio] = payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map {
-        case (id, bytes) => decodeWav(id, bytes)
-      }))
+      .mapPartitions(_.map { case (id, bytes) => decodeWav(id, bytes) })
     ds.toDF()
   }
 

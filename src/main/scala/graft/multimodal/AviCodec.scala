@@ -19,7 +19,7 @@ package graft.multimodal
   *    not a bit-exact checksum.
   * Other compressed fourccs (XVID, H264, …) return None — a
   * production pipeline plugs an FFI codec into the same
-  * [[VideoPipeline]] batch shape.
+  * [[VideoPipeline]] mapPartitions shape.
   *
   * Decoded frames are exposed in DIB wire layout regardless of source
   * codec: bottom-up BGR24 with rows padded to 4 bytes; the reader

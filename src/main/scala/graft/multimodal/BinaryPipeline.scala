@@ -5,30 +5,30 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: opaque `binary` payloads + typed
-  * metadata, batched per-partition decode.
+  * metadata, per-partition decode.
   *
   * The Spark-side shape is the real deliverable: schema (binary payload
-  * + metadata struct), partition-parallel batched decoding via
-  * mapPartitions (the Scala analog of mapInPandas batches), and typed
+  * + metadata struct), partition-parallel decoding via
+  * mapPartitions (the Scala analog of mapInPandas), and typed
   * decoded output. Two decoders share the shape:
   *  - [[decodeImages]] — REAL: javax.imageio (PNG/BMP/GIF/JPEG ship
   *    with the JRE), magic-byte sniffing, pixel checksums, total over
   *    corrupt payloads. Oracle-gated against actual pixel output
   *    (`mm_decode`).
   *  - [[AudioPipeline.decodeAudio]] — REAL: javax.sound.sampled
-  *    (WAV/PCM ships with the JRE), sample checksums, same batch
+  *    (WAV/PCM ships with the JRE), sample checksums, same
   *    shape. Oracle-gated against actual sample output
   *    (`mm_audio_decode`).
   *  - [[VideoPipeline.decodeVideo]] — REAL: direct RIFF/AVI container
   *    parse with uncompressed-DIB frames (AviCodec), per-frame pixel
-  *    checksums, same batch shape. Oracle-gated (`mm_video_decode`,
+  *    checksums, same shape. Oracle-gated (`mm_video_decode`,
   *    `mm_video_frames`).
   *  - [[decode]] — STUB kept as the generic plumbing contract for
   *    COMPRESSED codecs no JVM API covers (H.264 & co.): swap
   *    `stubDecode` for a JNI/FFI codec without touching the pipeline.
   *
-  * Scale: decode is a narrow map-only pass; `batchSize` bounds peak
-  * memory per task exactly like Arrow batch size does for Pandas UDFs.
+  * Scale: decode is a narrow map-only pass that holds one payload at a
+  * time per task.
   */
 object BinaryPipeline {
 
@@ -49,18 +49,17 @@ object BinaryPipeline {
     StructField("checksum", LongType, nullable = false)))
 
   /** STUB decoder: deterministic features from the payload. Replace
-    * with a real codec; signature (batch of payloads → batch of
-    * features) is the contract. */
-  def stubDecode(batch: Seq[(Long, String, Array[Byte])]): Seq[DecodedMedia] =
-    batch.map { case (id, mediaType, bytes) =>
-      val n = bytes.length.toLong
-      // cheap order-sensitive checksum of the first 64 payload bytes
-      val checksum = bytes.iterator.take(64).zipWithIndex
-        .map { case (b, i) => (b & 0xFFL) * (i + 1) }.sum
-      DecodedMedia(id, mediaType,
-        n, ((n * 7) % 640).toInt, ((n * 13) % 480).toInt, (n % 30).toInt,
-        checksum)
-    }
+    * with a real codec; signature (one payload → its features) is the
+    * contract. */
+  def stubDecode(id: Long, mediaType: String, bytes: Array[Byte]): DecodedMedia = {
+    val n = bytes.length.toLong
+    // cheap order-sensitive checksum of the first 64 payload bytes
+    val checksum = bytes.iterator.take(64).zipWithIndex
+      .map { case (b, i) => (b & 0xFFL) * (i + 1) }.sum
+    DecodedMedia(id, mediaType,
+      n, ((n * 7) % 640).toInt, ((n * 13) % 480).toInt, (n % 30).toInt,
+      checksum)
+  }
 
   /** Attach a binary payload column + metadata struct to a corpus
     * (testdata carries no real media, so payload = utf-8 bytes of the
@@ -110,7 +109,7 @@ object BinaryPipeline {
     * index (0, everyN, 2·everyN, … < n_frames), with a deterministic
     * per-frame stub checksum. The explode is a narrow generator — frame
     * rows never shuffle; a real pipeline would decode each sampled
-    * frame in the same `mapPartitions` batch shape as [[decode]]. */
+    * frame in the same `mapPartitions` shape as [[decode]]. */
   def sampleFrames(decoded: DataFrame, everyN: Int, fps: Int = 30): DataFrame =
     decoded
       .filter(col("media_type") === "video" && col("n_frames") > 0)
@@ -121,16 +120,14 @@ object BinaryPipeline {
         round(col("col").cast("double") / fps, 6).as("frame_ts"),
         (col("checksum") * 31 + col("col")).as("frame_checksum"))
 
-  /** Batched per-partition decode: the mapInPandas-equivalent shape. */
-  def decode(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  /** Per-partition decode: the mapInPandas-equivalent shape. */
+  def decode(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[DecodedMedia] = payloads
       .select(col("doc_id"), col("meta.media_type"), col("payload"))
       .as[(Long, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(batch => stubDecode(batch))
-      }
+      .mapPartitions(_.map { case (id, mt, bytes) => stubDecode(id, mt, bytes) })
     ds.toDF()
   }
 
@@ -151,7 +148,7 @@ object BinaryPipeline {
   }
 
   /** REAL image decode: javax.imageio (PNG/BMP/GIF/JPEG readers ship
-    * with every JRE — no external codec needed), in the same batched
+    * with every JRE — no external codec needed), in the same
     * mapPartitions shape as the stub. Total over garbage: null, empty,
     * or undecodable payloads yield a zero-dimension row rather than
     * killing the pass — at 100 TB some fraction of any crawl's media
@@ -161,7 +158,7 @@ object BinaryPipeline {
     * 0 — an order-sensitive pixel digest that an oracle can replay in
     * closed form for a known test pattern (SyntheticImages), and that
     * downstream near-dup ops can treat as a content fingerprint. */
-  def decodeImages(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  def decodeImages(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[DecodedMedia] = payloads
@@ -169,9 +166,7 @@ object BinaryPipeline {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         System.setProperty("java.awt.headless", "true")
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          decodeImage(id, bytes)
-        })
+        it.map { case (id, bytes) => decodeImage(id, bytes) }
       }
     ds.toDF()
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Swap [[ofBytes]] for a DCT-based kernel when a real decoder exists;
   * the banding, verification, and plan shape stay as they are.
   *
-  * Scale shape: signatures are a narrow batched map (the
+  * Scale shape: signatures are a narrow per-row map (the
   * mapInPandas-equivalent BinaryPipeline.decode shape); candidate
   * generation is the SimHash 4×16-band bucket join (pairs ∝ true
   * collisions, never all-pairs); verification is one bit_count(xor)
@@ -85,10 +85,10 @@ object Phash {
   }
 
   /** (doc_id, phash) from REAL image payloads: javax.imageio decode +
-    * grid hash fused in one batched pass (decode→featurize never
+    * grid hash fused in one pass (decode→featurize never
     * materializes rasters between stages). Null/undecodable payloads
     * hash to 0L — total like [[signatures]]. */
-  def signaturesFromImages(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  def signaturesFromImages(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[(Long, Long)] = payloads
@@ -96,31 +96,29 @@ object Phash {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         System.setProperty("java.awt.headless", "true")
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
+        it.map { case (id, bytes) =>
           val sig =
             if (bytes == null || bytes.isEmpty) 0L
             else try SyntheticImages.readImage(bytes).map(ofImage).getOrElse(0L)
             catch { case _: Exception => 0L }
           (id, sig)
-        })
+        }
       }
     ds.toDF("doc_id", "phash")
   }
 
-  /** (doc_id, phash) via the batched per-partition decode shape. Total
+  /** (doc_id, phash) via the per-partition decode shape. Total
     * over null payloads: a null decodes like an empty one (signature
     * 0L) — corrupt/absent media must not kill a 100 TB pass. */
-  def signatures(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  def signatures(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[(Long, Long)] = payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-          (id, if (bytes == null) 0L else ofBytes(bytes))
-        })
-      }
+      .mapPartitions(_.map { case (id, bytes) =>
+        (id, if (bytes == null) 0L else ofBytes(bytes))
+      })
     ds.toDF("doc_id", "phash")
   }
 

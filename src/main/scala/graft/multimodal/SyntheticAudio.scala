@@ -64,19 +64,19 @@ object SyntheticAudio {
   }
 
   /** (doc_id, payload) frame of real WAV bytes, generated partition-
-    * parallel in the same batched shape the decoder consumes.
+    * parallel in the same mapPartitions shape the decoder consumes.
     *
     * NOT widened (r16 verdict item 1): the PCM pack is a cheap
     * sample-loop byte write, and the added round-robin exchange
     * regressed the gate 2× (r16 full draws: mm_audio_decode
     * 0.287→0.582 s). Cost-aware per-call-site rule — see
     * BinaryPipeline.withPayload doc. */
-  def withWavPayload(ids: DataFrame, batchSize: Int = 64): DataFrame = {
+  def withWavPayload(ids: DataFrame): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
     ids.select(col("doc_id").cast("long"))
       .as[Long]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map(id => (id, wavBytes(id)))))
+      .mapPartitions(_.map(id => (id, wavBytes(id))))
       .toDF("doc_id", "payload")
   }
 }

@@ -50,8 +50,8 @@ object SyntheticImages {
   }
 
   /** (doc_id, payload) frame of real PNG bytes, generated partition-
-    * parallel in the same batched shape the decoder consumes. */
-  def withPngPayload(ids: DataFrame, batchSize: Int = 64): DataFrame = {
+    * parallel in the same mapPartitions shape the decoder consumes. */
+  def withPngPayload(ids: DataFrame): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
     // widen before the encode map: the testdata corpus is one parquet
@@ -61,7 +61,7 @@ object SyntheticImages {
     // widen's static-size guard keeps the shuffle conditional.
     graft.core.Parallelism.widen(ids.select(col("doc_id").cast("long")))
       .as[Long]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map(id => (id, pngBytes(id)))))
+      .mapPartitions(_.map(id => (id, pngBytes(id))))
       .toDF("doc_id", "payload")
   }
 

@@ -51,7 +51,7 @@ object SyntheticVideo {
   }
 
   /** (doc_id, payload) frame of real AVI bytes, generated partition-
-    * parallel in the same batched shape the decoder consumes.
+    * parallel in the same mapPartitions shape the decoder consumes.
     *
     * NOT widened (r16 verdict item 1): the uncompressed-DIB pack is a
     * straight pixel-array copy — cheap enough that the widen's
@@ -60,12 +60,12 @@ object SyntheticVideo {
     * mm_video_frames 0.333→0.631 s WITH the widen). The expensive
     * JPEG encode in [[withMjpgPayload]] keeps it — the cost-aware
     * per-call-site rule (see BinaryPipeline.withPayload doc). */
-  def withAviPayload(ids: DataFrame, batchSize: Int = 64): DataFrame = {
+  def withAviPayload(ids: DataFrame): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
     ids.select(col("doc_id").cast("long"))
       .as[Long]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map(id => (id, aviBytes(id)))))
+      .mapPartitions(_.map(id => (id, aviBytes(id))))
       .toDF("doc_id", "payload")
   }
 
@@ -130,12 +130,12 @@ object SyntheticVideo {
     * 1-core it ran 4.40 s at sf0.1, widened 1.09 s (r16 full draws).
     * The cheap DIB/WAV/utf-8 payload sites deliberately do NOT widen
     * (see BinaryPipeline.withPayload doc). */
-  def withMjpgPayload(ids: DataFrame, batchSize: Int = 64): DataFrame = {
+  def withMjpgPayload(ids: DataFrame): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
     graft.core.Parallelism.widen(ids.select(col("doc_id").cast("long")))
       .as[Long]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map(id => (id, mjpgBytes(id)))))
+      .mapPartitions(_.map(id => (id, mjpgBytes(id))))
       .toDF("doc_id", "payload")
   }
 }

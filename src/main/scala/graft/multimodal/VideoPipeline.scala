@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** REAL video decode for uncompressed-DIB AVI payloads via
-  * [[AviCodec]], in the same batched mapPartitions shape as the image
+  * [[AviCodec]], in the same mapPartitions shape as the image
   * and audio decoders. With this, every media family has a real
   * decoder for at least one lossless format (PNG/BMP/GIF/JPEG images,
   * PCM WAV audio, DIB AVI video); compressed video codecs plug into
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * channel0(x, y) · (y·w + x + 1) — order-sensitive across pixels AND
   * frames, closed-form replayable for [[SyntheticVideo]] patterns.
   *
-  * Scale: narrow map-only pass, no shuffle; `batchSize` bounds peak
-  * payload memory per task. Frame explode ([[decodeFrames]]) is a
+  * Scale: narrow map-only pass, no shuffle, one payload held at a time
+  * per task. Frame explode ([[decodeFrames]]) is a
   * generator, not a join — frame rows never shuffle.
   */
 object VideoPipeline {
@@ -42,14 +42,14 @@ object VideoPipeline {
     cs
   }
 
-  /** Batched per-partition AVI decode: one summary row per video. */
-  def decodeVideo(payloads: DataFrame, batchSize: Int = 64): DataFrame = {
+  /** Per-partition AVI decode: one summary row per video. */
+  def decodeVideo(payloads: DataFrame): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[DecodedVideo] = payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
+      .mapPartitions(_.map { case (id, bytes) =>
         val mt = BinaryPipeline.sniffMediaType(bytes)
         val n = if (bytes == null) 0L else bytes.length.toLong
         AviCodec.read(bytes) match {
@@ -60,7 +60,7 @@ object VideoPipeline {
               v.frames.size, cs)
           case None => DecodedVideo(id, mt, n, 0, 0, 0, 0, 0L)
         }
-      }))
+      })
     ds.toDF()
   }
 
@@ -75,15 +75,15 @@ object VideoPipeline {
     * lossy ones can only promise a bound, and this makes the bound a
     * measured, gateable number instead of a claim. Undecodable
     * payloads report max_err = -1 (distinct from 0 = bit-exact).
-    * Same narrow batched map-only shape as the decoders. */
-  def decodeFidelity(payloads: DataFrame, ref: (Long, Int, Int, Int) => Int,
-                     batchSize: Int = 64): DataFrame = {
+    * Same narrow map-only shape as the decoders. */
+  def decodeFidelity(payloads: DataFrame,
+                     ref: (Long, Int, Int, Int) => Int): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[VideoFidelity] = payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
+      .mapPartitions(_.map { case (id, bytes) =>
         val mt = BinaryPipeline.sniffMediaType(bytes)
         AviCodec.read(bytes) match {
           case Some(v) =>
@@ -103,22 +103,21 @@ object VideoPipeline {
             VideoFidelity(id, mt, v.width, v.height, v.fps, v.frames.size, err)
           case None => VideoFidelity(id, mt, 0, 0, 0, 0, -1)
         }
-      }))
+      })
     ds.toDF()
   }
 
-  /** Batched per-partition frame extraction: one row per SAMPLED frame
+  /** Per-partition frame extraction: one row per SAMPLED frame
     * (indexes 0, everyN, 2·everyN, …) with its own checksum and
     * timestamp — the real-decode version of the stub
     * [[BinaryPipeline.sampleFrames]]. */
-  def decodeFrames(payloads: DataFrame, everyN: Int = 1,
-                   batchSize: Int = 64): DataFrame = {
+  def decodeFrames(payloads: DataFrame, everyN: Int = 1): DataFrame = {
     val spark = payloads.sparkSession
     import spark.implicits._
     val ds: Dataset[DecodedFrame] = payloads
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.flatMap {
+      .mapPartitions(_.flatMap {
         case (id, bytes) =>
           AviCodec.read(bytes) match {
             case Some(v) =>
@@ -129,7 +128,7 @@ object VideoPipeline {
               }
             case None => Nil
           }
-      }))
+      })
     ds.toDF()
   }
 }

@@ -28,7 +28,7 @@ object AsOfJoin {
     val r = right.select(col(keyCol), col(tsCol),
         col(payloadCol).as("__payload"))
       .withColumn("__side", lit(0))
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val unioned = l.select(
       (leftCols.map(col) :+ col("__side") :+ col("__payload")): _*)
       .unionByName(r.select(
@@ -66,7 +66,7 @@ object AsOfJoin {
     val r = right.select(col(keyCol), col(tsCol),
         col(payloadCol).as("__payload"))
       .withColumn("__side", lit(0))
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val unioned = l.select(
       (leftCols.map(col) :+ col("__side") :+ col("__payload")): _*)
       .unionByName(r.select(

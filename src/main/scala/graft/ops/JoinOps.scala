@@ -20,7 +20,7 @@ object JoinOps {
     * `broadcast(other)` before the call. */
   def joinOtherToSingleColumn(df: DataFrame, other: DataFrame, on: String,
                               how: String, structName: String): DataFrame = {
-    val payloadCols = other.columns.filter(_ != on).map(col)
+    val payloadCols = other.columns.toSeq.filter(_ != on).map(col)
     val packed = other.select(col(on), struct(payloadCols: _*).as(structName))
     df.join(packed, Seq(on), how)
   }

@@ -47,10 +47,9 @@ object CoverageQueries extends graft.QueryModule {
 
   /** W3: partitioned EXTERNAL table via saveAsTable(path=...), read
     * back through the catalog. */
-  private var tblCtr = 0
   def w3SaveAsTable(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = GraftSession.scratch("w3")
-    val name = synchronized { tblCtr += 1; s"graft_w3_events_$tblCtr" }
+    val name = GraftSession.uniqueName("graft_w3_events")
     val ev = Tables.events(spark, sfDir)
       .withColumn("dt", col("ts").cast("date"))
       .select("event_id", "event_type", "value", "dt")

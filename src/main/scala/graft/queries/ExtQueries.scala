@@ -50,7 +50,7 @@ object ExtQueries extends graft.QueryModule {
       .withColumn("version", lit(0L))
     Upsert.mergeIntoParquet(spark, path, ev,
       keyCols = Seq("event_id"), versionCol = "version", partitionCol = "dt")
-    val minDt = ev.agg(min("dt")).head.getDate(0)
+    val minDt = ev.agg(min("dt")).head().getDate(0)
     val changed = ev.where(col("dt") === lit(minDt))
       .withColumn("value", col("value") * 10).withColumn("version", lit(1L))
     val fresh = ev.where(col("event_id") < 100)
@@ -1195,11 +1195,10 @@ object ExtQueries extends graft.QueryModule {
     }
   }
 
-  /** SHARED immutable lifecycle base per sf dir (the coEdges /
-    * triangle-stream scratch-fixture pattern, r16 optimization): 13
+  /** SHARED immutable lifecycle base, built once per sf dir: 13
     * gates previously each rebuilt the identical v0–v2 history — three
     * events-sized Spark commits per gate, ~2 s × 13 at sf0.1 of pure
-    * fixture duplication in every bench draw. The base is built once;
+    * fixture duplication in every bench draw.
     * [[vtLifecycle]] hands each gate a SHALLOW CLONE (driver-side
     * manifest copy, data dirs borrowed) so gates that append, tag,
     * restore, compact, expire or vacuum mutate their own clone while
@@ -1208,14 +1207,10 @@ object ExtQueries extends graft.QueryModule {
     * lists the clone's own data root. The one gate that PHYSICALLY
     * deletes its source (vt_clone_deep) keeps a private build via
     * [[vtLifecyclePrivate]]. */
-  private val lifecycleBases = scala.collection.mutable.Map.empty[String, String]
   private def vtLifecycleBase(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      lifecycleBases.getOrElseUpdate(sfDir, {
-        val root = GraftSession.scratch("vtbase") + "/tbl"
-        buildLifecycle(spark, sfDir, root)
-        root
-      })
+    GraftSession.shared(s"vt_lifecycle#$sfDir") { d =>
+      buildLifecycle(spark, sfDir, s"$d/tbl")
+      s"$d/tbl"
     }
 
   private def vtLifecycle(spark: SparkSession, sfDir: String,

@@ -11,17 +11,13 @@ import graft.perf.Layout
   * (no exchange under bucketed join) are asserted in PerfSpec. */
 object PerfQueries extends graft.QueryModule {
 
-  private var ctr = 0
-  private def next(): Int = synchronized { ctr += 1; ctr }
-
   /** Bucketed co-located join: lineitem ⋈ orders both bucketed on the
     * order key; broadcast disabled so the bucketed sort-merge path is
     * what actually runs. */
   def perfBucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = next()
-    val dir = GraftSession.scratch(s"bucketed-$n")
-    val liT = s"graft_bl_$n"
-    val oT = s"graft_bo_$n"
+    val dir = GraftSession.scratch("bucketed")
+    val liT = GraftSession.uniqueName("graft_bl")
+    val oT = GraftSession.uniqueName("graft_bo")
     spark.sql(s"DROP TABLE IF EXISTS $liT")
     spark.sql(s"DROP TABLE IF EXISTS $oT")
     Layout.saveBucketed(Tables.lineitem(spark, sfDir)
@@ -80,8 +76,7 @@ object PerfQueries extends graft.QueryModule {
     * property — every output file covers a compact rectangle in both
     * dimensions — is asserted in PerfSpec. */
   def perfZorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = next()
-    val dir = GraftSession.scratch(s"zorder-$n")
+    val dir = GraftSession.scratch("zorder")
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"),
         floor(col("value")).cast("long").as("vi"))
@@ -117,8 +112,7 @@ object PerfQueries extends graft.QueryModule {
     * that decides whether a 100 TB date-partitioned fact table reads
     * 100 TB or 14 TB on a filtered dim join. */
   def perfDppJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = next()
-    val dir = GraftSession.scratch(s"dpp-$n")
+    val dir = GraftSession.scratch("dpp")
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("value"), col("ts").cast("date").as("dt"))
     ev.write.mode("overwrite").partitionBy("dt").parquet(dir)

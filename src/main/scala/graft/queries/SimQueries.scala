@@ -2,9 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.Gate
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.sim.Similarity
 
 /** Oracle-checked queries for similarity search over the embeddings
@@ -24,24 +23,19 @@ object SimQueries extends graft.QueryModule {
     * BpeTrainer.trainArtifacts lesson). Gates whose training INPUT
     * differs (the ANN lifecycle builds on corpus slices) keep their
     * own builds. */
-  private val artPaths = scala.collection.mutable.Map.empty[String,
-    ((String, StructType), (String, StructType))]
   private def trainedArtifacts(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {
-    val ((cp, cs), (pp, ps)) = synchronized {
-      artPaths.getOrElseUpdate(sfDir, {
-        val cpath = graft.core.GraftSession.scratch("sim_cents")
-        val ppath = graft.core.GraftSession.scratch("sim_pq_cb")
+    val ((cp, cs), (pp, ps)) =
+      GraftSession.shared(s"sim_artifacts#$sfDir") { d =>
         val emb = Tables.embeddings(spark, sfDir)
         val cents = graft.sim.KMeans.train(emb, "vec_id", "embedding",
           k = 16, iterations = 2)
-        cents.write.mode("overwrite").parquet(cpath)
+        cents.write.mode("overwrite").parquet(s"$d/cents")
         val cb = graft.sim.Pq.train(emb, "vec_id", "embedding",
           m = 4, subDim = 16, k = 16, iterations = 2)
-        cb.write.mode("overwrite").parquet(ppath)
-        ((cpath, cents.schema), (ppath, cb.schema))
-      })
-    }
+        cb.write.mode("overwrite").parquet(s"$d/pq_cb")
+        ((s"$d/cents", cents.schema), (s"$d/pq_cb", cb.schema))
+      }
     // the writers' schemas, as GraphQueries.coEdges reads back: no
     // inference job
     (spark.read.schema(cs).parquet(cp), spark.read.schema(ps).parquet(pp))
@@ -145,7 +139,7 @@ object SimQueries extends graft.QueryModule {
     * freshly built index. */
   def simAnnPersisted(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val path = graft.core.GraftSession.scratch("annidx")
+    val path = GraftSession.scratch("annidx")
     graft.sim.AnnIndex.build(emb, "vec_id", "embedding",
       k = 16, iterations = 2, path)
     graft.sim.AnnIndex.search(spark, path,
@@ -229,7 +223,7 @@ object SimQueries extends graft.QueryModule {
     * accidentally re-trains all surface as value mismatches. */
   def simAnnAppend(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val path = graft.core.GraftSession.scratch("annappend")
+    val path = GraftSession.scratch("annappend")
     graft.sim.AnnIndex.build(emb.where(col("vec_id") % 2 === 0),
       "vec_id", "embedding", k = 16, iterations = 2, path)
     graft.sim.AnnIndex.append(spark, path,
@@ -290,7 +284,7 @@ object SimQueries extends graft.QueryModule {
     * selection is unfiltered — centroid geometry is label-blind). */
   def simAnnFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val path = graft.core.GraftSession.scratch("annfilt")
+    val path = GraftSession.scratch("annfilt")
     graft.sim.AnnIndex.build(emb, "vec_id", "embedding",
       k = 16, iterations = 2, path, payloadCols = Seq("label"))
     graft.sim.AnnIndex.searchFiltered(spark, path,
@@ -452,7 +446,7 @@ object SimQueries extends graft.QueryModule {
     * row). */
   def simAnnDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val path = graft.core.GraftSession.scratch("anndel")
+    val path = GraftSession.scratch("anndel")
     graft.sim.AnnIndex.build(emb, "vec_id", "embedding",
       k = 16, iterations = 2, path)
     graft.sim.AnnIndex.delete(spark, path,

@@ -471,7 +471,7 @@ object SourceQueries extends graft.QueryModule {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("value"), col("ts").cast("date").as("dt"))
     ev.write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(path)
-    val minDt = ev.agg(min("dt")).head.getDate(0)
+    val minDt = ev.agg(min("dt")).head().getDate(0)
     val read = spark.read.parquet(path).where(col("dt") === lit(minDt))
     val plan = read.queryExecution.executedPlan.toString
     require(plan.contains("PartitionFilters: [isnotnull(dt"),

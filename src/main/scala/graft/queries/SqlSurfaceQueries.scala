@@ -151,10 +151,12 @@ object SqlSurfaceQueries extends QueryModule {
   def sqlNormalize(spark: SparkSession, sfDir: String): DataFrame = {
     GraftExtensions.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("g_docs_n")
-    spark.sql("""
+    // decomposed "e" + U+0301, then precomposed U+00C5 and U+00F6
+    val accented = "Cafe\u0301 \u00C5ngstr\u00F6m "
+    spark.sql(s"""
       SELECT doc_id,
-        length(nfc_normalize(concat('Cafe\u0301 \u00C5ngstr\u00F6m ', text))) AS len_nfc,
-        substring(strip_accents(concat('Cafe\u0301 \u00C5ngstr\u00F6m ', text)), 1, 24) AS plain_head
+        length(nfc_normalize(concat('$accented', text))) AS len_nfc,
+        substring(strip_accents(concat('$accented', text)), 1, 24) AS plain_head
       FROM g_docs_n ORDER BY doc_id""")
   }
   val sqlNormalizeSql: String =

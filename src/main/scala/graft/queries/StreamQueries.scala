@@ -28,15 +28,12 @@ object StreamQueries extends graft.QueryModule {
     * identical feed CONTENT through its own private stream — the
     * drains, state machines and version/quarantine protocols are
     * untouched (epoch counts pinned by StreamFixtureSpec). */
-  private val feedBases = scala.collection.mutable.Map.empty[String, String]
   private def feedBase(sfDir: String, variant: String)
-                      (build: String => Unit): String = synchronized {
-    feedBases.getOrElseUpdate(s"$sfDir#$variant", {
-      val p = GraftSession.scratch(s"feedbase_$variant") + "/base"
-      build(p)
-      p
-    })
-  }
+                      (build: String => Unit): String =
+    GraftSession.shared(s"feedbase_$variant#$sfDir") { d =>
+      build(s"$d/base")
+      s"$d/base"
+    }
 
   /** Hardlink-clone the file tree at `src` into `dst` (copy fallback
     * for filesystems without link support; colliding names — e.g.
@@ -65,6 +62,18 @@ object StreamQueries extends graft.QueryModule {
       Tables.events(spark, sfDir).select(col("event_id"), col("value"))
         .write.parquet(p)
     }
+
+  /** Drain the stream `df` to completion (Trigger.AvailableNow) into a
+    * memory sink and return the sink's table, which the sink registers
+    * in the session `df` was built from (the gate's isolated
+    * [[GraftSession.stateScoped]] session). */
+  private def drainToMemory(df: DataFrame, mode: String): DataFrame = {
+    val name = GraftSession.uniqueName("graft_stream")
+    df.writeStream.outputMode(mode).format("memory").queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    df.sparkSession.table(name)
+  }
 
   /** T1+T2: route-dispatched file ingestion raw→stage with control
     * rows; output = staged zone totals per route. */
@@ -123,9 +132,7 @@ object StreamQueries extends graft.QueryModule {
 
   /** T6-adjacent: watermarked tumbling-window aggregation over the
     * events stream, drained to a memory sink in complete mode. */
-  private var windowCtr = 0
   def t5StreamWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = synchronized { windowCtr += 1; s"graft_stream_window_$windowCtr" }
     // state parallelism sized to the drain's volume, scoped to this
     // query's isolated session (see GraftSession.stateScoped)
     GraftSession.stateScoped(spark, 8) { s =>
@@ -135,13 +142,7 @@ object StreamQueries extends graft.QueryModule {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the memory sink registers its table in the scoped session
-      s.table(name)
+      drainToMemory(agg, "complete")
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("total"))
         .orderBy("win_start", "event_type")
@@ -163,9 +164,7 @@ object StreamQueries extends graft.QueryModule {
     * hash, the k-min set and the floor estimate per window over the
     * batch table — exact-below-k windows check the small-cardinality
     * path, the rest the estimator. */
-  private var kmvCtr = 0
   def t14StreamKmv(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = synchronized { kmvCtr += 1; s"graft_stream_kmv_$kmvCtr" }
     GraftSession.stateScoped(spark, 8) { s =>
       val stream = Tables.eventsStream(s, sfDir)
       val agg = stream
@@ -177,12 +176,7 @@ object StreamQueries extends graft.QueryModule {
         .select(col("window"), col("n_events"),
           graft.sketch.Sketches.kmvEstimate(col("__st"), 16)
             .as("kmv_users"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(agg, "complete")
         .select(col("window.start").as("win_start"), col("n_events"),
           col("kmv_users"))
         .orderBy("win_start")
@@ -212,9 +206,7 @@ object StreamQueries extends graft.QueryModule {
     * twice via a self-union) collapsed to exactly-once by
     * watermark-scoped streaming dedup; output = per-type totals, which
     * must equal the plain single-delivery aggregate. */
-  private var dedupCtr = 0
   def t3StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = synchronized { dedupCtr += 1; s"graft_stream_dedup_$dedupCtr" }
     // state parallelism sized to the drain's volume, scoped to this
     // query's isolated session (see GraftSession.stateScoped)
     GraftSession.stateScoped(spark, 8) { s =>
@@ -222,12 +214,7 @@ object StreamQueries extends graft.QueryModule {
       val atLeastOnce = stream.union(stream)
       val deduped = graft.streaming.StreamDedup.dedupWithinWatermark(
         atLeastOnce, Seq("event_id"), "ts", "30 days")
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(deduped, "append")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"),
           countDistinct("user_id").as("n_users"))
@@ -244,9 +231,7 @@ object StreamQueries extends graft.QueryModule {
     * state-bounding contract — without watermarks a stream-stream join
     * buffers forever). Aggregated per user-decile for a deterministic
     * scalar gate; oracle = the equivalent batch interval join. */
-  private var joinCtr = 0
   def t7StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = synchronized { joinCtr += 1; s"graft_stream_join_$joinCtr" }
     // 8 state partitions: a stream-stream join keeps FOUR state stores
     // per partition, so the default 32 meant 128 instances paying
     // per-batch commit overhead for a 100k-event drain — measured
@@ -267,12 +252,7 @@ object StreamQueries extends graft.QueryModule {
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
         .select(clicks("user_id"), col("click_id"), col("purchase_id"),
           col("purchase_value"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(joined, "append")
         .groupBy((col("user_id") % 10).as("user_decile"))
         .agg(count(lit(1)).as("n_attributed"),
           countDistinct(col("click_id")).as("n_clicks"),
@@ -305,12 +285,10 @@ object StreamQueries extends graft.QueryModule {
     * deletes (every 5th key) as separate commits (v1, v2). The gate
     * reads the final merge-on-read state plus the commit count; the
     * oracle recomputes the surviving rows directly. */
-  private var cdcCtr = 0
   def t8CdcPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.etl.VersionedTable
     import graft.streaming.CdcIngest
-    val tag = synchronized { cdcCtr += 1; s"cdcp$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("cdcp")
     val feed = s"$base/feed"; val root = s"$base/tbl"; val ck = s"$base/ck"
     val ev = Tables.events(spark, sfDir).select(col("event_id"), col("value"))
     val schema = StructType(Seq(
@@ -359,8 +337,7 @@ object StreamQueries extends graft.QueryModule {
   def t9StreamAudited(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.etl.{Quality, VersionedTable}
     import graft.streaming.AuditedIngest
-    val tag = synchronized { cdcCtr += 1; s"audited$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("audited")
     val feed = s"$base/feed"; val root = s"$base/tbl"; val ck = s"$base/ck"
     val ev = Tables.events(spark, sfDir).select(col("event_id"), col("value"))
     val schema = StructType(Seq(
@@ -408,8 +385,7 @@ object StreamQueries extends graft.QueryModule {
     * customer must SURVIVE with a sentinel segment (left join, not
     * inner — dropping unknown users is the classic enrichment bug). */
   def t11StreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = synchronized { cdcCtr += 1; s"enrich$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("enrich")
     val feed = s"$base/feed"; val out = s"$base/enriched"
     val ck = s"$base/ck"
     val schema = StructType(Seq(
@@ -456,8 +432,7 @@ object StreamQueries extends graft.QueryModule {
     * etl_incremental_mv's CDF algebra. Two drains over a growing
     * feed; final MV must equal the direct batch aggregate. */
   def t12StreamMv(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = synchronized { cdcCtr += 1; s"smv$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("smv")
     val feed = s"$base/feed"; val mv = s"$base/mv"; val ck = s"$base/ck"
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("value", DoubleType)))
@@ -505,8 +480,7 @@ object StreamQueries extends graft.QueryModule {
   def t10QuarantineReplay(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.etl.{Quality, VersionedTable}
     import graft.streaming.AuditedIngest
-    val tag = synchronized { cdcCtr += 1; s"replay$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("replay")
     val feed = s"$base/feed"; val root = s"$base/tbl"; val ck = s"$base/ck"
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("value", DoubleType)))
@@ -555,8 +529,7 @@ object StreamQueries extends graft.QueryModule {
     * tail). */
   def t13StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.streaming.Sessionize
-    val tag = synchronized { cdcCtr += 1; s"ssess$cdcCtr" }
-    val base = GraftSession.scratch(tag)
+    val base = GraftSession.scratch("ssess")
     val feed = s"$base/feed"; val out = s"$base/out"; val ck = s"$base/ck"
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
@@ -623,11 +596,9 @@ object StreamQueries extends graft.QueryModule {
     * computes). Per-batch work is batch-sized + state-sized keyed
     * aggregation; the top-k extraction ranks the ROUNDED total (both
     * engines order the identical 2dp value, user-id tie-break). */
-  private var topkCtr = 0
   def t15StreamTopk(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.etl.VersionedTable
-    val root = GraftSession.scratch(
-      synchronized { topkCtr += 1; s"stream_topk_$topkCtr" }) + "/state"
+    val root = GraftSession.scratch("stream_topk") + "/state"
     def partial(df: DataFrame): DataFrame =
       df.groupBy("user_id")
         .agg(sum("value").as("v"), count(lit(1)).as("n_events"))
@@ -652,7 +623,7 @@ object StreamQueries extends graft.QueryModule {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation",
-          GraftSession.scratch(s"stream_topk_ckpt_$topkCtr"))
+          GraftSession.scratch("stream_topk_ckpt"))
         .start()
       q.awaitTermination()
       VersionedTable.readLatest(s, root, Seq("user_id"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.text.TextAnalysis
 import graft.multimodal.BinaryPipeline
 
@@ -223,7 +223,7 @@ object TextQueries extends graft.QueryModule {
   def mmDecodeStub(spark: SparkSession, sfDir: String): DataFrame = {
     val payloads = BinaryPipeline.withPayload(
       Tables.documents(spark, sfDir), "doc_id", "text")
-    BinaryPipeline.decode(payloads, batchSize = 64)
+    BinaryPipeline.decode(payloads)
       .orderBy("doc_id")
   }
   val mmSql: String =
@@ -244,7 +244,7 @@ object TextQueries extends graft.QueryModule {
     val payloads = BinaryPipeline.withPayload(
       Tables.documents(spark, sfDir), "doc_id", "text")
     BinaryPipeline.resizePlan(
-      BinaryPipeline.decode(payloads, batchSize = 64), maxW = 256, maxH = 144)
+      BinaryPipeline.decode(payloads), maxW = 256, maxH = 144)
       .orderBy("doc_id")
   }
   val mmResizeSql: String =
@@ -270,7 +270,7 @@ object TextQueries extends graft.QueryModule {
   def mmDecode(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = Tables.documents(spark, sfDir).select("doc_id")
     val payloads = graft.multimodal.SyntheticImages.withPngPayload(ids)
-    BinaryPipeline.decodeImages(payloads, batchSize = 64)
+    BinaryPipeline.decodeImages(payloads)
       .select(col("doc_id"), col("media_type"), col("width"), col("height"),
         col("n_frames"), col("checksum"))
       .orderBy("doc_id")
@@ -296,7 +296,7 @@ object TextQueries extends graft.QueryModule {
   def mmAudioDecode(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = Tables.documents(spark, sfDir).select("doc_id")
     val payloads = graft.multimodal.SyntheticAudio.withWavPayload(ids)
-    graft.multimodal.AudioPipeline.decodeAudio(payloads, batchSize = 64)
+    graft.multimodal.AudioPipeline.decodeAudio(payloads)
       .select(col("doc_id"), col("media_type"), col("sample_rate"),
         col("channels"), col("bits"), col("n_samples"), col("checksum"))
       .orderBy("doc_id")
@@ -322,7 +322,7 @@ object TextQueries extends graft.QueryModule {
   def mmVideoDecode(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = Tables.documents(spark, sfDir).select("doc_id")
     val payloads = graft.multimodal.SyntheticVideo.withAviPayload(ids)
-    graft.multimodal.VideoPipeline.decodeVideo(payloads, batchSize = 64)
+    graft.multimodal.VideoPipeline.decodeVideo(payloads)
       .select(col("doc_id"), col("media_type"), col("width"), col("height"),
         col("fps"), col("n_frames"), col("checksum"))
       .orderBy("doc_id")
@@ -399,7 +399,7 @@ object TextQueries extends graft.QueryModule {
     val ids = Tables.documents(spark, sfDir).select("doc_id")
     val payloads = graft.multimodal.SyntheticImages.withPngPayload(ids)
     BinaryPipeline.resizePlan(
-        BinaryPipeline.decodeImages(payloads, batchSize = 64),
+        BinaryPipeline.decodeImages(payloads),
         maxW = 20, maxH = 10)
       .orderBy("doc_id")
   }
@@ -419,7 +419,7 @@ object TextQueries extends graft.QueryModule {
   def mmPhashDecoded(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = Tables.documents(spark, sfDir).select("doc_id")
     val payloads = graft.multimodal.SyntheticImages.withPngPayload(ids)
-    graft.multimodal.Phash.signaturesFromImages(payloads, batchSize = 64)
+    graft.multimodal.Phash.signaturesFromImages(payloads)
       .orderBy("doc_id")
   }
   val mmPhashDecodedSql: String =
@@ -722,7 +722,7 @@ object TextQueries extends graft.QueryModule {
     val payloads = BinaryPipeline.withPayload(
       Tables.documents(spark, sfDir), "doc_id", "text")
     BinaryPipeline.sampleFrames(
-      BinaryPipeline.decode(payloads, batchSize = 64), everyN = 5)
+      BinaryPipeline.decode(payloads), everyN = 5)
       .orderBy("doc_id", "frame_idx")
   }
   val mmFrameSql: String =
@@ -1176,6 +1176,22 @@ object TextQueries extends graft.QueryModule {
       |  round(regr_slope(ln(f), ln(r)), 6) + 0.0 AS zipf_slope
       |FROM ranked""".stripMargin
 
+  /** Shared BPE artifact fixture: one 10-round training per sf dir,
+    * read by BOTH bpe gates (the graph-edge-fixture pattern — train
+    * once, segment from the saved artifact, which is also the
+    * production tokenizer lifecycle). Read back with the writer's
+    * schemas: a fixture hit runs no Spark job. */
+  private def bpeArtifacts(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
+    val ((mp, ms), (vp, vs)) = GraftSession.shared(s"bpe#$sfDir") { d =>
+      val (m, v) = graft.text.BpeTrainer.trainArtifacts(
+        Tables.documents(spark, sfDir), "text", rounds = 10,
+        s"$d/merges", s"$d/symbols")
+      ((s"$d/merges", m), (s"$d/symbols", v))
+    }
+    (spark.read.schema(ms).parquet(mp), spark.read.schema(vs).parquet(vp))
+  }
+
   /** BPE tokenizer TRAINING in-engine (text.BpeTrainer): the first 10
     * learned merge rules with their pair counts. The oracle unrolls
     * the identical relational program per round — pair lead-window,
@@ -1183,25 +1199,8 @@ object TextQueries extends graft.QueryModule {
     * gaps-and-islands odd-offset rule for self-pair runs, consumed-row
     * lag filter, renumber — so any drift in the merge algebra breaks
     * a value, not just a count. */
-  /** Shared BPE artifact fixture: one 10-round training per sf dir,
-    * materialized to scratch parquet and read by BOTH bpe gates (the
-    * graph-edge-fixture pattern — train once, segment from the saved
-    * artifact, which is also the production tokenizer lifecycle). */
-  private val bpePaths =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-  private def bpeArtifacts(spark: SparkSession,
-                           sfDir: String): (String, String) =
-    synchronized {
-      bpePaths.getOrElseUpdate(sfDir, {
-        val mp = graft.core.GraftSession.scratch("bpe_merges")
-        val vp = graft.core.GraftSession.scratch("bpe_symbols")
-        graft.text.BpeTrainer.trainArtifacts(
-          Tables.documents(spark, sfDir), "text", rounds = 10, mp, vp)
-        (mp, vp)
-      })
-    }
   def textBpeTrain(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(bpeArtifacts(spark, sfDir)._1).orderBy("round")
+    bpeArtifacts(spark, sfDir)._1.orderBy("round")
   private def bpeRound(k: Int): String =
     s"""p$k AS (
        |  SELECT v.*, lead(tok) OVER (PARTITION BY w ORDER BY pos) AS nxt
@@ -1256,7 +1255,7 @@ object TextQueries extends graft.QueryModule {
     * oracle reuses the identical unrolled chain and aggregates the
     * final symbol table; all-integer output. */
   def textBpeApply(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(bpeArtifacts(spark, sfDir)._2)
+    bpeArtifacts(spark, sfDir)._2
       .agg(countDistinct(col("tok")).as("vocab_units"),
         sum(col("f")).as("total_subwords"),
         countDistinct(col("w")).as("n_word_types"))

@@ -179,7 +179,7 @@ object Pca {
               mean: Array[Double], basis: Array[Array[Double]],
               roundTo: Int = 4): DataFrame = {
     val d = mean.length
-    val cols = basis.zipWithIndex.map { case (q, cc) =>
+    val cols = basis.toSeq.zipWithIndex.map { case (q, cc) =>
       val bc = r((0 until d).map(i => mean(i) * q(i)).sum, 6)
       graft.functions.ScoreFns.scoreRound(
         graft.plans.DotProduct(col(vecCol), typedLit(q.toSeq)) - lit(bc),

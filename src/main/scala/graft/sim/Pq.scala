@@ -95,7 +95,7 @@ object Pq {
     * float element type (the KMeans/encode pipeline contract). */
   def rotate(df: DataFrame, idCol: String, vecCol: String,
              basis: Array[Array[Double]]): DataFrame =
-    df.select(col(idCol), array(basis.map(q =>
+    df.select(col(idCol), array(basis.toSeq.map(q =>
       graft.plans.DotProduct(col(vecCol), typedLit(q.toSeq))
         .cast("float")): _*)
       .as(vecCol))
@@ -138,7 +138,7 @@ object Pq {
     * application of [[varianceAllocation]]'s rotation): one narrow
     * array constructor of element_at lookups, codegen-friendly. */
   def permuted(vecCol: Column, perm: Array[Int]): Column =
-    array(perm.map(d => element_at(vecCol, d + 1)): _*)
+    array(perm.toSeq.map(d => element_at(vecCol, d + 1)): _*)
 
   /** ADC top-k: approximate cosine between each query and every
     * encoded vector, reconstructed ENTIRELY from the code table and a

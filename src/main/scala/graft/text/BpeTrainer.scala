@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
@@ -53,32 +54,16 @@ object BpeTrainer {
     * materialized artifacts the way the graph gates share their edge
     * fixture halves that (training a tokenizer and then segmenting
     * with it IS one pipeline — the artifact handoff is the production
-    * shape too). */
+    * shape too). Returns the two written schemas, so a reader needs no
+    * inference job. */
   def trainArtifacts(docs: DataFrame, textCol: String, rounds: Int,
-                     mergesPath: String, vPath: String): Unit = {
+                     mergesPath: String, vPath: String)
+      : (StructType, StructType) = {
     val (merges, finalV, cached) = run(docs, textCol, rounds)
     merges.write.mode("overwrite").parquet(mergesPath)
     finalV.write.mode("overwrite").parquet(vPath)
     cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Post-training segmentation statistics: the corpus re-expressed in
-    * the learned symbol vocabulary after `rounds` merges. All-integer
-    * output (no float drift): distinct symbol count, corpus-weighted
-    * total subword count, and the word-type count. Collected as ONE
-    * row (k-bounded) so every cached round frame is released before
-    * returning — the KCore discipline. */
-  def applyStats(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    val (_, finalV, cached) = run(docs, textCol, rounds)
-    val spark = docs.sparkSession
-    val agg = finalV.agg(
-      countDistinct(col("tok")).as("vocab_units"),
-      sum(col("f")).as("total_subwords"),
-      countDistinct(col("w")).as("n_word_types"))
-    val rows = agg.collect().toIndexedSeq
-    cached.foreach(_.unpersist(blocking = false))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, agg.schema)
+    (merges.schema, finalV.schema)
   }
 
   private def run(docs: DataFrame, textCol: String,

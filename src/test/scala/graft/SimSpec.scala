@@ -85,8 +85,8 @@ class SimSpec extends SparkSpecBase {
   test("multimodal stub decode: batch plumbing preserves rows and is deterministic") {
     val docs = Tables.documents(spark, sfDir)
     val payloads = graft.multimodal.BinaryPipeline.withPayload(docs, "doc_id", "text")
-    val a = graft.multimodal.BinaryPipeline.decode(payloads, batchSize = 7).collect()
-    val b = graft.multimodal.BinaryPipeline.decode(payloads, batchSize = 64).collect()
+    val a = graft.multimodal.BinaryPipeline.decode(payloads).collect()
+    val b = graft.multimodal.BinaryPipeline.decode(payloads).collect()
     assert(a.length == docs.count())
     assert(a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{BinaryType, StringType}
@@ -12,28 +11,6 @@ import graft.core.{GraftSession, Tables}
   * exactly as a bare `spark.read.parquet` would. */
 class TablesSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** Spark jobs started while `body` runs. Listener delivery is async
-    * but ordered, so a marked barrier job after `body` bounds the count
-    * exactly: every job `body` started is seen before the barrier. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(
-        if (Option(e.properties).exists(_.getProperty("tables.spec.barrier") != null)) "barrier"
-        else "job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("tables.spec.barrier", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("tables.spec.barrier", null)
-      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map(j => { assert(j != null, "barrier job never reached the listener"); j })
-        .takeWhile(_ == "job").size
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def inferred(path: String): DataFrame = spark.read.parquet(path)
 
