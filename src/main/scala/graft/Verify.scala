@@ -22,6 +22,11 @@ import scala.concurrent.duration.Duration
   * one fixture wait for its single build while gates on other
   * fixtures run on. Each task runs in its own FAIR-scheduler pool so a
   * long gate cannot convoy the short ones behind it.
+  *
+  * A gate that throws is stated, not skipped: once every output and
+  * oracle_sql.json are written, `failures.json` lists each failed
+  * gate's exception class, message and top stack frames, and the run
+  * exits 1.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -47,6 +52,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    Files.deleteIfExists(Paths.get(s"$outDir/failures.json"))
 
     val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -54,6 +60,7 @@ object Verify {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val t0 = System.nanoTime()
     val timings = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[(String, Throwable)]()
     val futures = selected.map { case (name, fn) =>
       Future {
         // distinct on-demand pool per gate (FAIR across pools); session
@@ -68,17 +75,11 @@ object Verify {
           timings.add(name -> dt)
           System.err.println(f"[verify] $name ok $dt%.2fs")
         } catch { case e: Throwable =>
+          failures.add(name -> e)
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           // a failed query must not leave the PREVIOUS run's output in
           // place — a stale dir would compare as a false PASS
-          val stale = new java.io.File(s"$outDir/$name")
-          if (stale.exists()) {
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) f.listFiles().foreach(rm)
-              f.delete()
-            }
-            rm(stale)
-          }
+          graft.core.GraftSession.rmTree(new java.io.File(s"$outDir/$name"))
         }
       }
     }
@@ -108,5 +109,16 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failures.isEmpty) {
+      val failed = failures.toArray(Array.empty[(String, Throwable)]).sortBy(_._1)
+      Files.writeString(Paths.get(s"$outDir/failures.json"), failed.map { case (name, e) =>
+        val frames = e.getStackTrace.take(8).map(f => q(f.toString)).mkString("[", ",", "]")
+        s"""${q(name)}: {"exception": ${q(e.getClass.getName)}, """ +
+          s""""message": ${q(String.valueOf(e.getMessage))}, "frames": $frames}"""
+      }.mkString("{", ",\n", "}"))
+      System.err.println(s"[verify] ${failed.length} gates failed: " +
+        failed.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
   }
 }

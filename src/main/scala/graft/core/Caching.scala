@@ -141,7 +141,7 @@ object Caching {
     * (plans cached via `persist()`); a local checkpoint persists the
     * UNDERLYING RDD, which `unpersist` silently misses — the blocks
     * then live until the ContextCleaner happens to GC the RDD object
-    * (r17: caught by Round17OptSpec / DedupSpec leak asserts). The
+    * (r17: caught by the DedupSpec leak asserts). The
     * frame must not be evaluated again after release: its lineage is
     * truncated, so the blocks are the only copy. */
   def releaseCheckpoint(df: DataFrame): Unit =

@@ -139,7 +139,8 @@ object GraftSession {
     * blockmgr/spark-* dirs). */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private def rmTree(f: java.io.File): Unit = {
+  /** Delete `f` and everything under it; a missing `f` is a no-op. */
+  def rmTree(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(rmTree)
     f.delete(): Unit

@@ -73,22 +73,15 @@ object PrivacyLedger {
   def releaseScratchLedger(root: String): Unit = {
     val f = new java.io.File(root)
     scratchRoots.remove(f)
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-    }
-    rm(f)
+    graft.core.GraftSession.rmTree(f)
   }
 
   private val scratchRoots =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
 
   private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      scratchRoots.forEach(rm(_))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchRoots.forEach(graft.core.GraftSession.rmTree(_))))
 
   /** Append `releases` to the ledger at `root` as ONE commit,
     * returning the committed version. Every call is a NEW spend —

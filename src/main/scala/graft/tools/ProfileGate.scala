@@ -1,19 +1,22 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.core.GateMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time attribution for registry gates (dev tool): runs
-  * each gate through the SAME timed action the bench uses while a
-  * listener records every Spark job's duration and callsite, so a slow
-  * gate is attributed to the exact source line that launched the work
-  * instead of guessed at from the plan.
+  * each gate through the SAME timed action the bench uses while
+  * [[GateMetrics.measure]] records every Spark job's duration and call
+  * site, so a slow gate is attributed to the exact source line that
+  * launched the work instead of guessed at from the plan.
   *
   *   SPARK_GRAFT_CPUS=32 tools/run_main.sh graft.tools.ProfileGate gate[,gate...] [reps]
   *
-  * Per gate, prints one line per job (dur, callSite.short) for the
-  * FINAL rep (earlier reps warm fixture scratch + JIT exactly as the
-  * bench's best-of-N does), then a by-callsite rollup. Ends with one
+  * Per gate, prints one `[job]` line per job of the FINAL rep (earlier
+  * reps warm fixture scratch + JIT exactly as the bench's best-of-N
+  * does): its duration, the gap since the previous job ended, and its
+  * call site. A job still running when the rep returned reads
+  * `unended`. Then one `[site]` line per call site (summed duration,
+  * job count). Ends with one
   * `[gate] <name> jobs <n> wall <s>` line per gate, the final rep's
   * job count and wall.
   */
@@ -34,47 +37,30 @@ object ProfileGate {
     graft.core.GraftSession.tune(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    final case class J(id: Int, site: String, var start: Long, var end: Long)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    @volatile var record = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
-        val site = e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n'))
-          .getOrElse("?")
-        jobs.put(e.jobId, J(e.jobId, site, e.time, -1L))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId); if (j != null) j.end = e.time
-      }
-    })
-
     val summary = gates.map { gate =>
       val defn = graft.SparkEntry.queries(gate)
-      var wall = 0.0
-      (1 to reps).foreach { rep =>
-        jobs.clear()
+      def rep(i: Int): Double = {
         spark.catalog.clearCache()
-        record = rep == reps
         val t0 = System.nanoTime()
-        val df = defn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        wall = (System.nanoTime() - t0) / 1e9
-        record = false
-        println(f"[prof] rep$rep $gate%-28s $wall%8.3f s")
+        defn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        println(f"[prof] rep$i $gate%-28s $wall%8.3f s")
+        wall
       }
-      Thread.sleep(300)
-      import scala.jdk.CollectionConverters._
-      val done = jobs.values.asScala.toSeq.filter(_.end > 0).sortBy(_.start)
+      (1 until reps).foreach(rep)
+      var wall = 0.0
+      val jobs = GateMetrics.measure(spark) { wall = rep(reps) }
+      def dur(j: GateMetrics.Job): Double = if (j.endMs < 0) 0.0 else (j.endMs - j.startMs) / 1e3
       println(s"--- $gate jobs (final rep) ---")
-      var prevEnd = done.headOption.map(_.start).getOrElse(0L)
-      done.foreach { j =>
-        val gap = (j.start - prevEnd) / 1e3
-        prevEnd = math.max(prevEnd, j.end)
-        println(f"[job] ${(j.end - j.start) / 1e3}%8.3f s  (gap $gap%6.3f s)  ${j.site}")
+      var prevEnd = jobs.headOption.fold(0L)(_.startMs)
+      jobs.foreach { j =>
+        val gap = (j.startMs - prevEnd) / 1e3
+        prevEnd = math.max(prevEnd, j.endMs)
+        val took = if (j.endMs < 0) "   unended" else f"${dur(j)}%8.3f s"
+        println(f"[job] $took  (gap $gap%6.3f s)  ${j.site}")
       }
       println(s"--- $gate by callsite ---")
-      done.groupBy(_.site).view.mapValues(js =>
-          (js.map(j => j.end - j.start).sum / 1e3, js.size)).toSeq
+      jobs.groupBy(_.site).view.mapValues(js => (js.map(dur).sum, js.size)).toSeq
         .sortBy(-_._2._1)
         .foreach { case (s, (t, n)) => println(f"[site] $t%8.3f s  n=$n%-3d $s") }
       f"[gate] $gate jobs ${jobs.size} wall $wall%.3f"

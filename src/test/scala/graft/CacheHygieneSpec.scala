@@ -21,7 +21,7 @@ class CacheHygieneSpec extends SparkSpecBase {
   private def assertNoNewBlocks(api: String)(body: => Unit): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     body
-    val leaked = spark.sparkContext.getPersistentRDDs -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.toMap -- before
     assert(leaked.isEmpty,
       s"$api leaked ${leaked.size} persisted RDD(s): " +
         leaked.values.map(_.toString).mkString("; "))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import graft.core.GateMetrics
 import graft.dedup.Clusters
 
 /** Pins the per-round cost shape of connected-components label
@@ -48,23 +49,6 @@ class ClustersPlanSpec extends SparkSpecBase {
     // are AQE-stage-dependent, so assert relatively: a round with the
     // observation attached fires exactly as many jobs as a bare
     // materialization of the same step — the metric is free.
-    def jobsOf(body: => Unit): Int = {
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
-      try {
-        body
-        // listener delivery is async; poll until the count stabilizes
-        var last = -1; var n = counter.jobs.get()
-        while (n != last) { last = n; Thread.sleep(200); n = counter.jobs.get() }
-        n
-      } finally spark.sparkContext.removeSparkListener(counter)
-    }
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
@@ -74,20 +58,20 @@ class ClustersPlanSpec extends SparkSpecBase {
       .agg(least(min(col("dst")), first(col("src"))).as("cluster")).persist()
     labels.count()
     try {
-      val bare = jobsOf {
+      val bare = GateMetrics.measure(spark) {
         val step = Clusters.propagateStep(edges, labels).persist()
-        step.count(); step.unpersist(blocking = true); ()
-      }
+        step.count(); step.unpersist(blocking = true)
+      }.size
       val obs = org.apache.spark.sql.Observation("cc_spec")
       var changed = -1L
-      val folded = jobsOf {
+      val folded = GateMetrics.measure(spark) {
         val step = Clusters.propagateStep(edges, labels)
           .observe(obs, count(when(col("cluster") =!= col("old"), 1)).as("n"))
           .persist()
         step.count()
         changed = obs.get("n").asInstanceOf[Long]
-        step.unpersist(blocking = true); ()
-      }
+        step.unpersist(blocking = true)
+      }.size
       assert(changed >= 1, "first round of a chain must change labels")
       assert(folded == bare,
         s"observation added jobs: bare=$bare folded=$folded")

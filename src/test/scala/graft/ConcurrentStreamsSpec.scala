@@ -40,7 +40,7 @@ class ConcurrentStreamsSpec extends SparkSpecBase {
       val widths = q.recentProgress.flatMap(_.stateOperators)
         .map(_.numShufflePartitions.toInt).distinct
       assert(widths.length == 1, s"mixed state widths: ${widths.toSeq}")
-      val total = s.table(name).agg(sum("cnt")).head.getLong(0)
+      val total = s.table(name).agg(sum("cnt")).head().getLong(0)
       assert(total == Tables.events(spark, sfDir).count(),
         "stream must drain every event")
       widths.head

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import graft.dedup._
 
 class DedupSpec extends SparkSpecBase {
@@ -109,7 +110,7 @@ class DedupSpec extends SparkSpecBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
     Clusters.connectedComponents(pairs).collect()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
@@ -124,5 +125,46 @@ class DedupSpec extends SparkSpecBase {
       .select($"doc_id", size($"sh").as("n")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(sh(5L) == 0) // 2 tokens < 30
+  }
+
+  /** dedupKeepFirst's semi-join is keyed on dedup_key alone (winner
+    * identity as a non-equi residual), so the shuffled plan reuses the
+    * winners aggregation's exchange: ≤2 shuffle exchanges end-to-end
+    * where the (key, id)-keyed spelling planned 3. */
+  test("dedupKeepFirst shares the winners exchange under SMJ") {
+    val docs = (1L to 40L).map(i => (i, s"t${i % 7}")).toDF("doc_id", "text")
+    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val out = graft.dedup.ExactDedup.dedupKeepFirst(docs, "doc_id", "text")
+      out.collect() // finalize the adaptive plan
+      val exchanges = out.queryExecution.executedPlan.collectWithSubqueries {
+        case s: ShuffleExchangeLike => s
+      }
+      assert(exchanges.size <= 2,
+        s"keep-first plans ${exchanges.size} shuffle exchanges:\n" +
+          out.queryExecution.executedPlan)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
+  }
+
+  /** The non-equi winner residuals must select EXACTLY the old rows:
+    * keep-first = min id per text, keep-best = max (priority, -id). */
+  test("keep-first / keep-best winners unchanged by the residual rewrite") {
+    val rnd = new scala.util.Random(1707)
+    val rows = (1 to 300).map { i =>
+      (i.toLong, s"t${rnd.nextInt(40)}", rnd.nextInt(5).toDouble)
+    }
+    val docs = rows.toDF("doc_id", "text", "pri")
+    val first = graft.dedup.ExactDedup
+      .dedupKeepFirst(docs, "doc_id", "text")
+      .select("doc_id").as[Long].collect().toSet
+    val expFirst = rows.groupBy(_._2).values.map(_.map(_._1).min).toSet
+    assert(first == expFirst, "keep-first winner set drifted")
+    val best = graft.dedup.ExactDedup
+      .dedupKeepBest(docs, "doc_id", "text", "pri")
+      .select("doc_id").as[Long].collect().toSet
+    val expBest = rows.groupBy(_._2).values
+      .map(g => g.maxBy(r => (r._3, -r._1))._1).toSet
+    assert(best == expBest, "keep-best winner set drifted")
   }
 }

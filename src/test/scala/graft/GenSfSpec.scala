@@ -47,7 +47,7 @@ class GenSfSpec extends SparkSpecBase {
     val docs = spark.read.parquet(s"$out1/documents.parquet")
     assert(docs.count() == 5000L)
     assert(spark.read.parquet(s"$out1/lineitem.parquet")
-      .groupBy("l_orderkey").count().agg(avg("count")).head.getDouble(0)
+      .groupBy("l_orderkey").count().agg(avg("count")).head().getDouble(0)
       > 3.5, "lineitems per order should average ~4")
     val dupTexts = docs.count() - docs.select("text").distinct().count()
     assert(dupTexts >= 8, s"exact-dup planting missing ($dupTexts)")
@@ -55,7 +55,7 @@ class GenSfSpec extends SparkSpecBase {
     val nrm = spark.read.parquet(s"$out1/embeddings.parquet")
       .select(sqrt(aggregate(col("embedding"), lit(0.0),
         (a, x) => a + x.cast("double") * x.cast("double"))).as("n"))
-      .agg(min("n"), max("n")).head
+      .agg(min("n"), max("n")).head()
     assert(math.abs(nrm.getDouble(0) - 1.0) < 1e-4 &&
       math.abs(nrm.getDouble(1) - 1.0) < 1e-4, s"non-unit embeddings: $nrm")
   }
@@ -66,10 +66,10 @@ class GenSfSpec extends SparkSpecBase {
     Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
       val h1 = spark.read.parquet(s"$out1/$t.parquet")
         .select(xxhash64(to_json(struct(col("*")))).as("h"))
-        .agg(sum("h")).head.getLong(0)
+        .agg(sum("h")).head().getLong(0)
       val h2 = spark.read.parquet(s"$dir2/$t.parquet")
         .select(xxhash64(to_json(struct(col("*")))).as("h"))
-        .agg(sum("h")).head.getLong(0)
+        .agg(sum("h")).head().getLong(0)
       assert(h1 == h2, s"$t not deterministic across runs")
     }
   }

@@ -32,7 +32,7 @@ class LoopLifecycleSpec extends SparkSpecBase {
     val out = run
     check(out)
     if (clearsCache) spark.catalog.clearCache()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- blocks0
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- blocks0
     assert(leaked.isEmpty, s"$op leaked cached RDDs: $leaked")
     assert(Caching.liveSpillCount == spills0 + spills,
       s"$op: ${Caching.liveSpillCount} live spills, expected " +

@@ -2,11 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-16 optimization pins: every optimization that changed an
-  * operator's INTERNALS gets a behavioral test proving the rewrite is
-  * output-identical to the shape it replaced.
-  */
-class Round16OptSpec extends SparkSpecBase {
+class LouvainSpec extends SparkSpecBase {
   import spark.implicits._
 
   /** Modularity read off a CONTRACTED graph must equal modularity
@@ -66,28 +62,5 @@ class Round16OptSpec extends SparkSpecBase {
     val (n2c, q2c) = fromContracted(sup2)
     assert(n2c == n2o, s"level-2 community count $n2c != $n2o")
     assert(q2c == q2o, s"level-2 modularity $q2c != $q2o (must be exact)")
-  }
-
-  /** The synthetic payload generators repartition the id list to core
-    * count before the encode map (single-row-group testdata otherwise
-    * serializes the codec work on one task). The repartition must not
-    * change WHAT is generated — same (doc_id, payload) set — and must
-    * actually widen the stage. */
-  test("payload generators parallelize without changing content") {
-    val ids = spark.range(0, 40).select(col("id").as("doc_id"))
-      .coalesce(1)
-    val out = graft.multimodal.SyntheticImages.withPngPayload(ids)
-    assert(out.rdd.getNumPartitions > 1,
-      "payload generation still single-partition")
-    val got = out.collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(got.keySet == (0L until 40L).toSet)
-    // content identical to a direct single-threaded encode
-    (0L until 40L).foreach { id =>
-      val direct = graft.multimodal.SyntheticImages.withPngPayload(
-        spark.range(id, id + 1).select(col("id").as("doc_id")))
-        .collect()(0).getAs[Array[Byte]](1).toSeq
-      assert(got(id) == direct, s"payload for id $id differs")
-    }
   }
 }

@@ -49,7 +49,7 @@ class OpsSpec extends SparkSpecBase {
     // union of batches = input multiset. Perturb the layout four ways.
     val df = Tables.lineitemDf.select("l_returnflag", "l_orderkey")
     val expectTotal = df.count()
-    val expectSum = df.agg(sum($"l_orderkey")).head.getLong(0)
+    val expectSum = df.agg(sum($"l_orderkey")).head().getLong(0)
     val layouts = Seq(
       "single" -> df.coalesce(1),
       "hash13" -> df.repartition(13, xxhash64($"l_orderkey")),
@@ -63,7 +63,7 @@ class OpsSpec extends SparkSpecBase {
         max(abs($"batch_size" - size($"items"))).as("szdiff"),
         sum($"batch_size").cast("long").as("total"),
         sum(expr("aggregate(items, 0L, (a, x) -> a + x)")).as("isum")
-      ).head
+      ).head()
       assert(stats.getInt(0) <= 50, s"$label: cap violated")
       assert(stats.getInt(1) >= 1, s"$label: empty batch")
       assert(stats.getInt(2) == 0, s"$label: batch_size != |items|")

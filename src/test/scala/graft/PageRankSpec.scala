@@ -40,7 +40,7 @@ class PageRankSpec extends SparkSpecBase {
     val edges = (half ++ half.map { case (a, b, w) => (b, a, w) })
       .toDF("src", "dst", "w")
     val total = PageRank.run(edges, iters = 4)
-      .agg(sum("rank")).head.getDouble(0)
+      .agg(sum("rank")).head().getDouble(0)
     assert(math.abs(total - 5.0) < 1e-9, s"mass leaked: $total")
   }
 

@@ -24,7 +24,7 @@ class RelationalSpec extends SparkSpecBase {
   test("o3 yields exactly one row per user") {
     val df = Relational.o3LatestEventPerUser(spark, sfDir)
     val n = df.count()
-    assert(n == df.select("user_id").distinct.count())
+    assert(n == df.select("user_id").distinct().count())
   }
 
   test("u1 union fold equals direct filter") {

@@ -11,12 +11,12 @@ class RetentionSpec extends SparkSpecBase {
     val dir = GraftSession.scratch("spec-retention")
     val ev = Tables.events(spark, sfDir).withColumn("dt", col("ts").cast("date"))
     ev.write.mode("overwrite").partitionBy("dt").parquet(dir)
-    val allDts = ev.select("dt").distinct.orderBy("dt")
+    val allDts = ev.select("dt").distinct().orderBy("dt")
       .collect().map(_.getDate(0).toString)
     val cutoff = allDts(allDts.length / 2)
     val dropped = Retention.expirePartitions(spark, dir, "dt", cutoff)
     assert(dropped == allDts.filter(_ < cutoff).toSeq)
-    val remaining = spark.read.parquet(dir).select("dt").distinct
+    val remaining = spark.read.parquet(dir).select("dt").distinct()
       .collect().map(_.getDate(0).toString).sorted
     assert(remaining.toSeq == allDts.filter(_ >= cutoff).toSeq)
   }

@@ -6,7 +6,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import graft.core.GraftSession
+import graft.core.{GateMetrics, GraftSession}
 
 /** `GraftSession.shared` builds each fixture once per key: callers of
   * one key wait for its single build, callers of other keys never wait
@@ -88,7 +88,7 @@ class SharedFixtureSpec extends SparkSpecBase {
     GraftSession.tune(spark)
     SparkEntry.queries("text_bpe_train")(spark, sfDir)
     Seq("text_bpe_train", "text_bpe_apply").foreach { gate =>
-      assert(jobsOf(SparkEntry.queries(gate)(spark, sfDir)) == 0, gate)
+      assert(GateMetrics.measure(spark)(SparkEntry.queries(gate)(spark, sfDir)).isEmpty, gate)
     }
   }
 }

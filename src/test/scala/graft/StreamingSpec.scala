@@ -31,10 +31,10 @@ class StreamingSpec extends SparkSpecBase {
     val staged = spark.read.parquet(s"$base/stage")
     val expected = Tables.events(spark, sfDir).where(col("user_id") < 50).count()
     assert(staged.count() == expected)
-    assert(staged.select("route").distinct.collect().map(_.getString(0)).toSeq == Seq("route_a"))
+    assert(staged.select("route").distinct().collect().map(_.getString(0)).toSeq == Seq("route_a"))
     val ctl = spark.read.parquet(s"$base/control")
-    assert(ctl.agg(sum("n_rows")).head.getLong(0) == expected)
-    assert(ctl.select("status").distinct.head.getString(0) == Status.Loaded)
+    assert(ctl.agg(sum("n_rows")).head().getLong(0) == expected)
+    assert(ctl.select("status").distinct().head().getString(0) == Status.Loaded)
     val idx = spark.read.json(s"$base/index")
     assert(idx.count() == ctl.count())
     assert(idx.columns.contains("doc_id"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{BinaryType, StringType}
-import graft.core.{GraftSession, Tables}
+import graft.core.{GateMetrics, GraftSession, Tables}
 
 /** `Tables` memoizes each table's inferred schema per file snapshot and
   * session conf, so a repeated read launches no Spark job, while a
@@ -16,10 +16,10 @@ class TablesSpec extends SparkSpecBase {
 
   test("a repeated read of a table runs no Spark job") {
     GraftSession.tune(spark)
-    assert(jobsOf(inferred(s"$sfDir/nation.parquet")) >= 1,
+    assert(GateMetrics.measure(spark)(inferred(s"$sfDir/nation.parquet")).nonEmpty,
       "a bare read should pay an inference job, or the count below is vacuous")
     Tables.nation(spark, sfDir)
-    assert(jobsOf(Tables.nation(spark, sfDir)) == 0)
+    assert(GateMetrics.measure(spark)(Tables.nation(spark, sfDir)).isEmpty)
   }
 
   test("the memoized schema equals the inferred one for every table") {
@@ -27,7 +27,7 @@ class TablesSpec extends SparkSpecBase {
     Tables.All.foreach { name =>
       Tables(spark, sfDir, name)
       var memo: DataFrame = null
-      assert(jobsOf { memo = Tables(spark, sfDir, name) } == 0, name)
+      assert(GateMetrics.measure(spark) { memo = Tables(spark, sfDir, name) }.isEmpty, name)
       assert(memo.schema == inferred(s"$sfDir/$name.parquet").schema, name)
     }
   }
@@ -35,7 +35,8 @@ class TablesSpec extends SparkSpecBase {
   test("a streaming read in a stateScoped session reuses the batch schema") {
     GraftSession.tune(spark)
     Tables.events(spark, sfDir)
-    assert(jobsOf(GraftSession.stateScoped(spark, 3)(Tables.eventsStream(_, sfDir))) == 0)
+    assert(GateMetrics.measure(spark)(
+      GraftSession.stateScoped(spark, 3)(Tables.eventsStream(_, sfDir))).isEmpty)
   }
 
   test("overwriting a table with a different schema returns the new schema") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.GraftSession
+import graft.core.{GateMetrics, GraftSession}
 import graft.etl.VersionedTable
 
 /** Delta-style versioned table: commits, time travel, tombstones,
@@ -253,43 +253,15 @@ class VersionedTableSpec extends SparkSpecBase {
     (0 until 9).foreach { i =>
       VersionedTable.commitUpsert(spark, root, Seq((i.toLong, i * 1.0)).toDF("k", "v"))
     }
-    // Count job starts with a listener instead of polling the status
-    // tracker on a fixed sleep (r3 ADVICE: the poll+200ms-straggler
-    // shape can flake on a loaded machine). The listener bus is FIFO,
-    // so after running a MARKER job post-collect, observing the
-    // marker's own start event proves every earlier start was
-    // delivered — no timing assumption.
-    val group = s"hist-${System.nanoTime()}"
-    val marker = s"marker-${System.nanoTime()}"
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) counts.merge(group, 1, (a, b) => a + b)
-        if (g == marker) markerSeen.countDown()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "history job count", false)
-      val h = try VersionedTable.history(spark, root).collect()
-        finally spark.sparkContext.clearJobGroup()
-      assert(h.length == 10)
-      spark.sparkContext.setJobGroup(marker, "listener drain marker", false)
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus failed to deliver the marker job event")
-      val jobs = Option(counts.get(group)).fold(0)(_.intValue)
-      // r7: every fresh manifest carries #rows per file, so history
-      // resolves entirely from driver-side metadata — ZERO jobs (the
-      // pre-r7 shape was one shared count scan; pre-r3, one per
-      // version). The scan fallback path is covered by the pre-#rows
-      // manifest test in VersionedTableStatsSpec.
-      assert(jobs == 0, s"history launched $jobs jobs; expected pure metadata")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // r7: every fresh manifest carries #rows per file, so history
+    // resolves entirely from driver-side metadata — ZERO jobs (the
+    // pre-r7 shape was one shared count scan; pre-r3, one per
+    // version). The scan fallback path is covered by the pre-#rows
+    // manifest test in VersionedTableStatsSpec.
+    var h: Array[org.apache.spark.sql.Row] = null
+    val jobs = GateMetrics.measure(spark) { h = VersionedTable.history(spark, root).collect() }
+    assert(h.length == 10)
+    assert(jobs.isEmpty, s"history launched ${jobs.size} jobs; expected pure metadata")
   }
 
   test("reads after a snapshot ignore older commits (pruned lineage)") {
@@ -464,11 +436,11 @@ class VersionedTableSpec extends SparkSpecBase {
     VersionedTable.commitUpsert(spark, root, Seq((1L, 3.0)).toDF("k", "v"))
     assert(VersionedTable.tags(spark, root) == Map("release" -> 1L))
     assert(VersionedTable.readAsOfTag(spark, root, Seq("k"), "release")
-      .head.getDouble(1) == 2.0)
+      .head().getDouble(1) == 2.0)
     // re-tagging moves the name; unknown tags and uncommitted versions fail
     VersionedTable.tagVersion(spark, root, "release", 2L)
     assert(VersionedTable.readAsOfTag(spark, root, Seq("k"), "release")
-      .head.getDouble(1) == 3.0)
+      .head().getDouble(1) == 3.0)
     intercept[IllegalArgumentException] {
       VersionedTable.readAsOfTag(spark, root, Seq("k"), "nope")
     }
@@ -500,7 +472,7 @@ class VersionedTableSpec extends SparkSpecBase {
     // history emits v1/v2's changes but NOTHING for v3 (same contract
     // as compaction — a rewrite is not a change)
     val feed = VersionedTable.readChangesBetween(spark, root, 0L, 3L)
-    assert(feed.agg(max(col("__commit"))).head.getLong(0) == 2L)
+    assert(feed.agg(max(col("__commit"))).head().getLong(0) == 2L)
     // and new commits continue from the restored state
     VersionedTable.commitUpsert(spark, root, Seq((5L, 5.0)).toDF("k", "v"))
     assert(state(root, 4L) ==

@@ -8,6 +8,10 @@ query in DuckDB over the same parquet tables and compares values
 
 Usage: python3 tools/check.py [sfdir] [--skip-verify] [--json OUT.json] [name ...]
 
+A gate that threw in Verify (listed in its failures.json) reports as
+FAIL with the exception's class, message and top frames; the check
+still compares every other gate and exits 1.
+
 --json OUT.json writes the per-query result in the DRIVER'S
 CORRECTNESS_r*.json schema ({name: {rows_match, schema_match,
 hash_match, spark_rows, oracle_rows, err}}), so an empty driver
@@ -58,7 +62,10 @@ def run_verify(sf, out, only=None):
     sys.stdout.write(r.stdout[-4000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-4000:])
-        sys.exit(1)
+        # failed gates are listed in failures.json and reported by
+        # compare(); any other non-zero exit is a crash of Verify itself
+        if not os.path.exists(f"{out}/failures.json"):
+            sys.exit(1)
 
 def compare(sf, out, only=None, json_out=None):
     import duckdb
@@ -69,6 +76,8 @@ def compare(sf, out, only=None, json_out=None):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     names = sorted(oracle) if not only else [n for n in sorted(oracle) if n in only]
+    fpath = f"{out}/failures.json"
+    thrown = json.load(open(fpath)) if os.path.exists(fpath) else {}
     n_pass = n_fail = 0
     failures = []
     oracle_secs = {}  # per-query DuckDB replay time (drives trim work)
@@ -79,6 +88,15 @@ def compare(sf, out, only=None, json_out=None):
                          "hash_match": hash_m, "spark_rows": sr,
                          "oracle_rows": orr, "err": err}
     for name in names:
+        if name in thrown:
+            t = thrown[name]
+            reason = f"{t['exception']}: {t['message']}"
+            print(f"FAIL {name}: Verify threw {reason}")
+            for fr in t["frames"][:3]:
+                print(f"    at {fr}")
+            n_fail += 1; failures.append(name)
+            record(name, False, False, False, 0, 0, reason[:500])
+            continue
         sql = oracle[name]
         pdir = f"{out}/{name}"
         files = glob.glob(f"{pdir}/*.parquet")
