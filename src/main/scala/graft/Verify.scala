@@ -41,6 +41,16 @@ object Verify {
     // per gate), so oversubscribing the task slots is the right trade
     val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt
       .max(1)
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }
+    // one declared pool per gate at Spark's on-demand defaults, so the
+    // scheduling is unchanged and Spark does not warn once per gate
+    // about an unconfigured pool
+    val pools = Paths.get(graft.core.GraftSession.scratch("verify"), "pools.xml")
+    Files.writeString(pools, selected.map { case (name, _) =>
+      s"""  <pool name="$name"><schedulingMode>FIFO</schedulingMode>""" +
+        "<weight>1</weight><minShare>0</minShare></pool>"
+    }.mkString("<allocations>\n", "\n", "\n</allocations>\n"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -49,13 +59,12 @@ object Verify {
       // FAIR so the pool-per-gate jobs round-robin the task slots
       // instead of convoying behind whichever gate submitted first
       .config("spark.scheduler.mode", "FAIR")
+      .config("spark.scheduler.allocation.file", pools.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     Files.deleteIfExists(Paths.get(s"$outDir/failures.json"))
 
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
     val pool = Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val t0 = System.nanoTime()

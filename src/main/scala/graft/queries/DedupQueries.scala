@@ -224,20 +224,20 @@ object DedupQueries extends graft.QueryModule {
       |FROM cand WHERE bit_count(xor(sga, sgb)) <= 8
       |ORDER BY a, b""".stripMargin
 
-  /** Embedding near-dup pairs at cosine ≥ 0.46 through the bucketed
-    * RHP-LSH path (signature → banded candidates → exact-cosine
-    * verify), graded against the exact all-pairs oracle — so the gate
-    * scores recall AND precision, not just shape.
+  /** Embedding near-dup pairs at cosine ≥ 0.46 through
+    * `RhpLsh.nearDupPairs`, graded against the exact all-pairs oracle —
+    * so the gate scores recall AND precision, not just shape.
     *
-    * Banding math for this data: the qualifying pairs sit at cosine
-    * 0.46–0.52 (θ≈62°, per-bit collision p≈0.65 — an audit regime; real
-    * embedding near-dups at τ≥0.85 have p≥0.94 and prune to near-linear
-    * with 4–8-bit bands). At p≈0.65 only narrow bands retain recall:
-    * 32 bands × 2 bits over a 64-bit signature give per-pair miss
-    * ≤ (1−0.65²)³² ≈ 2e-8 — deterministic-green for the seeded planes,
-    * while the plan stays the bucketed shape (no cartesian node).
-    * `Similarity.nearDupPairs` remains the exact baseline; SimSpec
-    * asserts this path reproduces it. */
+    * Geometry: the qualifying pairs sit at cosine 0.46–0.52 (θ≈62°,
+    * per-bit collision p≈0.65 — an audit regime; real embedding
+    * near-dups at τ≥0.85 have p≥0.94 and prune to near-linear with
+    * 4–8-bit bands). At p≈0.65 only narrow bands keep recall, and 32
+    * bands × 2 bits make a random pair share 32/2² = 8 bands on
+    * average: banding cannot prune there (`RhpLsh.bandingPrunes`), so
+    * the call runs the exact blocked all-pairs kernel
+    * (`Similarity.nearDupPairsBlocked`), whose output is the
+    * `Similarity.nearDupPairs` baseline's exactly; SimSpec and
+    * BlockCosineSpec assert both. */
   def dedupEmbedding(spark: SparkSession, sfDir: String): DataFrame =
     graft.sim.RhpLsh.nearDupPairs(
       Tables.embeddings(spark, sfDir), "vec_id", "embedding",

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Random-hyperplane (sign-projection) LSH for cosine similarity — the
@@ -21,6 +21,15 @@ import org.apache.spark.sql.functions._
   * self-join runs on (band, bandValue) buckets whose size tracks true
   * duplicate density, never O(n²). Embedding payloads move once into
   * the signature pass and once per verified candidate.
+  *
+  * Banding pays only when it removes more pairs than it adds rows: at
+  * nBands ≥ 2^bandBits a random pair is expected to share a band, so
+  * [[nearDupPairs]] checks the geometry driver-side ([[bandingPrunes]])
+  * and runs the exact blocked all-pairs kernel instead
+  * ([[Similarity.nearDupPairsBlocked]]) — the low-threshold audit
+  * geometry of `dedup_embedding` (32 bands × 2 bits, 8 shared bands
+  * per random pair) takes that path; the production geometries (8
+  * bands of 16 or 32 bits) keep banding.
   */
 object RhpLsh {
 
@@ -79,23 +88,6 @@ object RhpLsh {
     }
   }
 
-  /** Index (0-based) of the first band on which two signatures agree —
-    * pure int64 bit arithmetic: collapse each bandBits-wide group of
-    * the xor into its low bit, invert, isolate the lowest set group
-    * bit, count the bits below it. Defined only for signature pairs
-    * that DO share a band (true of every bucket-joined row, since the
-    * band value IS the band's bits, not a hash of them). */
-  private def firstMatchBand(sa: Column, sb: Column, bandBits: Int): Column = {
-    val x = sa.bitwiseXOR(sb)
-    val collapsed = (0 until bandBits)
-      .map(k => shiftrightunsigned(x, k)).reduce(_.bitwiseOR(_))
-    var mask = 0L
-    var j = 0
-    while (j * bandBits < 64) { mask |= 1L << (j * bandBits); j += 1 }
-    val z = bitwise_not(collapsed).bitwiseAND(lit(mask))
-    (call_function("bit_count", z.bitwiseAND(-z) - 1) / bandBits).cast("int")
-  }
-
   /** All-pairs within at-cap buckets, star-links within over-cap ones.
     *
     * A bucket larger than `maxBucketSize` is, by the banding math, a
@@ -130,44 +122,28 @@ object RhpLsh {
   }
 
   /** Candidate pairs from banded buckets: band b = bits
-    * [b·bandBits, (b+1)·bandBits); equal band value → candidate.
-    *
-    * Uncapped path (`maxBucketSize == Int.MaxValue`): a pair matching
-    * k bands would surface k times, and the distinct() that collapses
-    * them re-shuffles the whole joined stream — at low thresholds
-    * (tiny bands, candidates ≈ pairs) that distinct dominates the
-    * query (measured 6.3 s of dedup_embedding's 7.6 s at sf0.1).
-    * Instead each pair is emitted ONLY at its first matching band
-    * ([[firstMatchBand]] on the signatures both sides already carry),
-    * which is exact and needs no dedup pass. With a bucket cap the
-    * trick is unsafe — the first matching band may have been capped
-    * away while a later one survived — so the capped path keeps
-    * distinct(), and over-cap buckets degrade to star-links
-    * ([[bucketJoin]]) instead of being dropped. */
+    * [b·bandBits, (b+1)·bandBits); equal band value → candidate. A pair
+    * matching k bands surfaces k times and one distinct() collapses
+    * them; over-cap buckets degrade to star-links ([[bucketJoin]])
+    * instead of being dropped, and an uncapped call (`maxBucketSize =
+    * Int.MaxValue`) has no over-cap bucket, so it returns every pair
+    * that shares a band. */
   def candidatePairs(sigs: DataFrame, nBits: Int, bandBits: Int,
                      maxBucketSize: Int = 1000): DataFrame = {
     val nBands = nBits / bandBits
     val banded = sigs.select(col("id"), col("sig"),
         posexplode(sequence(lit(0), lit(nBands - 1))).as(Seq("pos", "band")))
-      .select(col("id"), col("sig"), col("band"),
+      .select(col("id"), col("band"),
         expr(s"shiftrightunsigned(sig, band * $bandBits)")
           .bitwiseAND(lit((1L << bandBits) - 1)).as("bval"))
-    if (maxBucketSize == Int.MaxValue) {
-      val l = banded.select(col("band"), col("bval"), col("id").as("a"), col("sig").as("siga"))
-      val r = banded.select(col("band"), col("bval"), col("id").as("b"), col("sig").as("sigb"))
-      l.join(r, Seq("band", "bval"))
-        .where(col("a") < col("b"))
-        .where(col("band") === firstMatchBand(col("siga"), col("sigb"), bandBits))
-        .select("a", "b")
-    } else bucketJoin(banded.drop("sig"), maxBucketSize)
+    bucketJoin(banded, maxBucketSize)
   }
 
   /** [[candidatePairs]] over wide (array-of-words) signatures:
     * `bandBits` must divide 64 so no band spans a word boundary; band
-    * b reads bits [b·bandBits, …) of word b·bandBits/64. Keeps the
-    * capped+distinct shape (the first-match trick is specific to
-    * single-word xor arithmetic); over-cap buckets degrade to
-    * star-links ([[bucketJoin]]). */
+    * b reads bits [b·bandBits, …) of word b·bandBits/64. Same
+    * capped+distinct shape; over-cap buckets degrade to star-links
+    * ([[bucketJoin]]). */
   def candidatePairsWide(sigs: DataFrame, nBits: Int, bandBits: Int,
                          maxBucketSize: Int = 1000): DataFrame = {
     require(64 % bandBits == 0, s"bandBits must divide 64, got $bandBits")
@@ -199,14 +175,29 @@ object RhpLsh {
     (8 * bandBits, bandBits)
   }
 
-  /** End-to-end near-duplicate pairs at/above `threshold`: signature →
-    * banded candidates → exact-cosine verification (so precision is 1
-    * by construction; recall is the banding probability, asserted
-    * against the exact baseline in SimSpec). */
+  /** Whether banding can prune at this geometry: a random pair agrees
+    * on a band with probability 2^-bandBits, so it is expected to share
+    * nBands / 2^bandBits bands. From 1 up (e.g. 32 bands of 2 bits: 8
+    * per pair) nearly every pair becomes a candidate, and the banded
+    * stage costs more than the exact all-pairs pass it must reproduce.
+    * Decided driver-side from the geometry alone, like
+    * [[chooseProdGeometry]]. */
+  def bandingPrunes(nBits: Int, bandBits: Int): Boolean =
+    bandBits >= 31 || nBits / bandBits < (1 << bandBits)
+
+  /** End-to-end near-duplicate pairs at/above `threshold`. Where
+    * banding can prune ([[bandingPrunes]]): signature → banded
+    * candidates → exact-cosine verification, so precision is 1 by
+    * construction and recall is the banding probability, asserted
+    * against the exact baseline in SimSpec. Where it cannot, the exact
+    * blocked all-pairs pass ([[Similarity.nearDupPairsBlocked]]), whose
+    * output is the baseline's exactly. */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, nBits: Int = 16, bandBits: Int = 4,
                    seed: Long = 42, roundTo: Int = 4,
                    maxBucketSize: Int = 1000): DataFrame = {
+    if (!bandingPrunes(nBits, bandBits))
+      return Similarity.nearDupPairsBlocked(corpus, idCol, vecCol, threshold, roundTo)
     val sigs = signatures(corpus, idCol, vecCol, nBits, seed)
     // persisted (a,b) pairs give AQE real stats for the verify joins;
     // the estimate otherwise forces a SortMergeJoin that shuffles the

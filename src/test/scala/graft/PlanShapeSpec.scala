@@ -16,10 +16,17 @@ class PlanShapeSpec extends SparkSpecBase {
     df.queryExecution.executedPlan.toString
   }
 
-  test("dedup_embedding (RHP-LSH path) has no cartesian/nested-loop join") {
+  /** Its 32×2-bit geometry cannot prune (RhpLsh.bandingPrunes), so the
+    * gate is exact all-pairs by design: the one nested-loop join pairs
+    * each vector with id-range blocks (the collect_list aggregate) and
+    * the kernel scores a whole block per joined row. The banded path's
+    * no-NLJ guard lives on in the dedup_embedding_prod test. */
+  test("dedup_embedding (exact blocked path) joins vectors to blocks, not vectors") {
     val p = planOf("dedup_embedding")
     assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop in:\n$p")
+    assert(p.split("BroadcastNestedLoopJoin").length == 2, s"one nested loop expected:\n$p")
+    assert(p.contains("collect_list") && p.contains("block_cosine"), s"no block join in:\n$p")
+    assert(!p.contains("posexplode"), s"band stage in:\n$p")
   }
 
   test("dedup_embedding_prod (production τ=0.9 geometry) has no cartesian/nested-loop join") {

@@ -110,6 +110,11 @@ class SimSpec extends SparkSpecBase {
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(want.nonEmpty)
     assert(got == want, s"recall/precision break: missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+    // uncapped, no bucket is over the cap: the same pairs
+    val uncapped = RhpLsh.nearDupPairs(corpus, "vec_id", "embedding",
+        threshold = 0.9, nBits = 64, bandBits = 8, maxBucketSize = Int.MaxValue)
+      .select("a", "b").as[(Long, Long)].collect().toSet
+    assert(uncapped == got)
 
     val nCands = RhpLsh.candidatePairs(
       RhpLsh.signatures(corpus, "vec_id", "embedding", nBits = 64),
@@ -158,13 +163,27 @@ class SimSpec extends SparkSpecBase {
   test("low-threshold RHP banding (dedup_embedding params) reproduces the exact baseline") {
     import graft.sim.RhpLsh
     val emb = Tables.embeddings(spark, sfDir)
-    val got = RhpLsh.nearDupPairs(emb, "vec_id", "embedding", threshold = 0.46,
+    val pairs = RhpLsh.nearDupPairs(emb, "vec_id", "embedding", threshold = 0.46,
         nBits = 64, bandBits = 2, maxBucketSize = Int.MaxValue)
-      .select("a", "b").as[(Long, Long)].collect().toSet
+    val got = pairs.select("a", "b").as[(Long, Long)].collect().toSet
     val want = Similarity.nearDupPairs(emb, "vec_id", "embedding", threshold = 0.46)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(got == want,
       s"missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+    // 32 bands of 2 bits cannot prune: the exact path, no band stage
+    assert(!pairs.queryExecution.executedPlan.toString.contains("posexplode"),
+      pairs.queryExecution.executedPlan.toString)
+  }
+
+  test("dedup_embedding leaves no persisted RDDs and no cache entries") {
+    import org.apache.spark.sql.CacheEntries
+    val blocks0 = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val entries0 = CacheEntries(spark)
+    assert(graft.queries.DedupQueries.dedupEmbedding(spark, sfDir).count() > 0)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- blocks0
+    assert(leaked.isEmpty, s"dedup_embedding leaked cached RDDs: $leaked")
+    assert(CacheEntries(spark) == entries0,
+      s"dedup_embedding left ${CacheEntries(spark) - entries0} cache entries")
   }
 
   test("native RhpSig kernel is bit-exact with the declarative signature path") {
