@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Iterated k-core peeling — the standard dense-subgraph filter (link
   * spam and scraper-ring detection on crawl graphs: low-core nodes are
@@ -16,14 +17,17 @@ import org.apache.spark.sql.functions._
   * PageRank fixed-iteration lesson), and on heavy-tailed graphs the
   * first few rounds remove nearly everything the fixpoint would.
   *
-  * Shape per round: one degree aggregation + two semi-joins of the
-  * edge list against the surviving-node set — all keyed shuffles on
-  * node ids, edge-set-sized, shrinking monotonically. Each round's
-  * edge frame is EAGERLY local-checkpointed so every level
-  * materializes exactly once AND the logical plan stays constant-depth
-  * across rounds (a persist caches data but not plans — the round-r
-  * action otherwise re-optimizes the whole chain below it, which
-  * ProfileGate measured as ~40% of the gate's wall at sf0.1).
+  * The survivor sets are NESTED (K_r ⊆ K_{r-1}: a node's degree can
+  * only fall as rounds remove edges), so round r's edge set is
+  * E_r = E_0 ∩ (K_r × K_r) and the loop carries node sets only. E_0
+  * is the one edge-sized materialization; each round is ONE action —
+  * E_0 semi-joined on both endpoints against K_{r-1}, one degree
+  * aggregation, the `d >= k` filter, and an eager local checkpoint of
+  * the V-sized K_r, which also keeps every round's logical plan at
+  * constant depth (a persist caches data but not plans; ProfileGate
+  * once measured plan re-optimization at ~40% of this gate's sf0.1
+  * wall). The round's statistics ride that action as `observe`
+  * metrics instead of separate count jobs.
   */
 object KCore {
 
@@ -44,64 +48,58 @@ object KCore {
   def peelRounds(pairs: DataFrame, k: Int, rounds: Int,
                  broadcastCap: Long = BroadcastNodeCap): DataFrame = {
     val spark = pairs.sparkSession
-    // localCheckpoint (eager) instead of persist: the blocks are the
-    // same MEMORY_AND_DISK cache, but the LOGICAL plan is truncated to
-    // the materialized RDD — r16 ProfileGate measured ~40% of this
-    // gate's sf0.1 wall in between-job driver gaps, i.e. Catalyst
-    // re-analyzing a lineage that grew by two joins + an aggregation
-    // PER ROUND (persist caches data, not plans). With the truncation
-    // every round plans against a constant-depth tree. Stats are
-    // collected eagerly per round (the blocks are already materialized,
-    // so the counts are block-metadata scans) and the result is rebuilt
-    // from literals — which also lets every intermediate be released
-    // the moment its round ends instead of at the final collect.
-    var edges = pairs
+    val e0 = pairs
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint()
-    val stats = (1 to rounds).map { r =>
-      val deg = edges.select(col("a").as("id"))
-        .unionAll(edges.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-      // keep feeds THREE consumers (both semi-joins + the n_nodes
-      // stat); the eager checkpoint materializes the E-row degree
-      // aggregation exactly once (r16: ~0.3 s × 2 extra × rounds when
-      // un-persisted).
-      val keep = deg.where(col("d") >= k).select("id").localCheckpoint()
-      // n_nodes is needed as output anyway; the EXACT count picks the
-      // semi-join strategy. Broadcasting the V-row survivor set turns
-      // BOTH per-round semi-joins from E-sized shuffles into map-side
-      // hash probes — the degree aggregation becomes the only exchange
-      // per round (3 exchanges/round -> 1).
-      val nNodes = keep.count()
-      val keepJ = if (nNodes <= broadcastCap) broadcast(keep) else keep
-      val next = edges
-        .join(keepJ.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keepJ.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint()
-      val nEdges = next.count()
-      // this round's inputs are fully consumed (next is materialized);
-      // release them now — the lineage is truncated, so nothing can
-      // ever recompute through these frames again. releaseCheckpoint,
-      // NOT Dataset.unpersist: checkpoint blocks live on the RDD, which
-      // unpersist misses (Caching.releaseCheckpoint doc).
-      graft.core.Caching.releaseCheckpoint(edges)
-      graft.core.Caching.releaseCheckpoint(keep)
-      edges = next
-      (r, nNodes, nEdges)
+    // E_0 restricted to both endpoints in `keep` (None: every node, the
+    // survivor set before round 1). Broadcasting the survivor set makes
+    // both semi-joins map-side hash probes, leaving the degree
+    // aggregation the only exchange per round.
+    def within(keep: Option[(DataFrame, Long)]): DataFrame = keep.fold(e0) {
+      case (ids, n) =>
+        val j = if (n <= broadcastCap) broadcast(ids) else ids
+        e0.join(j.select(col("id").as("a")), Seq("a"), "left_semi")
+          .join(j.select(col("id").as("b")), Seq("b"), "left_semi")
     }
-    graft.core.Caching.releaseCheckpoint(edges)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
+    // unnamed Observations get unique names: concurrent calls on one
+    // session (Verify's FAIR pools) never read each other's metrics.
+    // A subtree that AQE proves empty (a semi-join against an empty
+    // survivor set) never runs and reports no metric: zero rows.
+    def rows(o: Observation): Long = o.get.getOrElse("n", 0L).asInstanceOf[Long]
+    var keep = Option.empty[(DataFrame, Long)]
+    val counts = (1 to rounds).map { _ =>
+      val edgeObs = Observation()
+      val nodeObs = Observation()
+      val next = within(keep)
+        .observe(edgeObs, count(lit(1)).as("n"))
+        .select(explode(array(col("a"), col("b"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("d"))
+        .where(col("d") >= k).select("id")
+        .observe(nodeObs, count(lit(1)).as("n"))
+        .localCheckpoint()
+      // E_{r-1}'s edge count is the rows the round's semi-joins kept
+      val prevEdges = rows(edgeObs)
+      val nNodes = rows(nodeObs)
+      // releaseCheckpoint, NOT Dataset.unpersist: checkpoint blocks
+      // live on the RDD, which unpersist misses
+      keep.foreach(p => graft.core.Caching.releaseCheckpoint(p._1))
+      keep = Some((next, nNodes))
+      (prevEdges, nNodes)
+    }
+    val lastEdges = if (rounds > 0) Seq(within(keep).count()) else Nil
+    keep.foreach(p => graft.core.Caching.releaseCheckpoint(p._1))
+    graft.core.Caching.releaseCheckpoint(e0)
+    val nEdges = counts.drop(1).map(_._1) ++ lastEdges
     val schema = StructType(Seq(
       StructField("round", IntegerType, nullable = false),
       StructField("n_nodes", LongType, nullable = false),
       StructField("n_edges", LongType, nullable = false)))
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      stats.map { case (r, n, e) => Row(r, n, e) }.asJava, schema)
+    spark.createDataFrame(counts.map(_._2).zip(nEdges).zipWithIndex.map {
+      case ((n, e), i) => Row(i + 1, n, e)
+    }.asJava, schema)
   }
 }

@@ -297,9 +297,12 @@ object GraphQueries extends graft.QueryModule {
     * (graph.KCore): per-round surviving node/edge counts. The oracle
     * unrolls the identical peel — degree, threshold, both-endpoint
     * edge filter — three times; a drifted threshold or a
-    * single-endpoint filter bug breaks the counts immediately. */
+    * single-endpoint filter bug breaks the counts immediately. The
+    * `src < dst` half of the symmetric fixture is already the
+    * undirected edge list, so half the rows reach the peel's distinct. */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame =
     graft.graph.KCore.peelRounds(coEdges(spark, sfDir)
+      .where(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b")), k = 3, rounds = 3)
   private def kcoreRound(n: Int, prev: String): String =
     s"""d$n AS (

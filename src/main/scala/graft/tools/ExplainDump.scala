@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   * tool builds each frame exactly once and never evaluates it beyond
   * what plan construction itself forces. Caveat (r16 ADVICE): gates
   * whose operators run EAGER actions at definition time — graph_kcore
-  * (per-round survivor counts pick the join strategy), the louvain
+  * (one checkpointing action per peel round; its observed survivor
+  * count picks the next round's join strategy), the louvain
   * gates and dedup_clusters (eager reaps / checkpoint rounds, r17) —
   * execute their full computation here too, and their dump is only
   * the tail LocalTableScan/file-read; plan evidence for those lives

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Containment
-import graft.graph.{KCore, Triangles}
 import graft.sim.SparseCosine
 
 /** Brute-force cross-checks on seeded random inputs for the r9
-  * lexical-similarity and graph operators — the oracle gates pin one
-  * corpus; these pin the ALGEBRA (any corpus, any graph), so a
-  * refactor that survives the fixed dataset by luck still fails here. */
+  * lexical-similarity operators — the oracle gates pin one corpus;
+  * these pin the ALGEBRA (any corpus), so a refactor that survives the
+  * fixed dataset by luck still fails here. The graph operators' twins
+  * live in TrianglesSpec and KCoreSpec. */
 class LexicalSimSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -93,53 +93,5 @@ class LexicalSimSpec extends SparkSpecBase {
       c <- cos(a, b)
     } yield (a, b, c)).sortBy { case (a, b, c) => (-c, a, b) }.take(5)
     assert(got.toSeq == expected, s"got=${got.toSeq}\nexpected=$expected")
-  }
-
-  test("triangle stats match brute-force triple enumeration") {
-    val rnd = new scala.util.Random(13)
-    val nodes = 0L until 25L
-    val edges = (for {
-      a <- nodes; b <- nodes if a < b && rnd.nextInt(5) == 0
-    } yield (a, b)).toSeq
-    val df = edges.toDF("a", "b")
-    val es = edges.toSet
-    def linked(x: Long, y: Long) =
-      es.contains((math.min(x, y), math.max(x, y)))
-    val tris = (for {
-      x <- nodes; y <- nodes if x < y; z <- nodes if y < z
-      if linked(x, y) && linked(x, z) && linked(y, z)
-    } yield 1).size
-    val deg = edges.flatMap(e => Seq(e._1, e._2))
-      .groupBy(identity).view.mapValues(_.size)
-    val wedges = deg.values.map(d => d.toLong * (d - 1) / 2).sum
-    val row = Triangles.stats(df).head()
-    assert(row.getLong(0) == tris, s"triangles ${row.getLong(0)} != $tris")
-    assert(row.getLong(1) == wedges)
-  }
-
-  test("k-core peel rounds match brute-force iteration") {
-    val rnd = new scala.util.Random(29)
-    val nodes = 0L until 30L
-    var edges = (for {
-      a <- nodes; b <- nodes if a < b && rnd.nextInt(4) == 0
-    } yield (a, b)).toSet
-    val df = edges.toSeq.toDF("a", "b")
-    val got = KCore.peelRounds(df, k = 3, rounds = 3)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val expected = (1 to 3).map { r =>
-      val deg = edges.toSeq.flatMap(e => Seq(e._1, e._2))
-        .groupBy(identity).view.mapValues(_.size)
-      val keep = deg.collect { case (id, d) if d >= 3 => id }.toSet
-      edges = edges.filter(e => keep(e._1) && keep(e._2))
-      (r, keep.size.toLong, edges.size.toLong)
-    }
-    assert(got.toSeq == expected, s"got=${got.toSeq} expected=$expected")
-
-    // the shuffled-semi-join fallback (survivor set above the broadcast
-    // cap) must produce the identical rounds table
-    val noBcast = KCore.peelRounds(df, k = 3, rounds = 3, broadcastCap = 0L)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    assert(noBcast.toSeq == expected,
-      s"fallback path diverged: ${noBcast.toSeq} != $expected")
   }
 }
