@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Caching
@@ -71,36 +71,114 @@ object VersionedTable {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One committed version: id, absolute data dir, snapshot flag. */
-  /** `external` marks a data dir BORROWED from another table (shallow
-    * clone): readable like any commit, but never deleted by this
-    * table's retention — the source owns the files. */
-  private final case class Commit(v: Long, dir: String, snapshot: Boolean,
-                                  external: Boolean = false)
-
   private def manifestPath(root: String, v: Long) =
     new Path(s"$root/_commits/$v.manifest")
 
-  /** Cache key for a manifest: the FULLY-QUALIFIED URI, so two
-    * spellings of the same location (`/t` vs `file:/t`, trailing
-    * slash) hit the same entry instead of silently forking the cache
-    * (and escaping [[invalidateCache]]'s prefix match). */
+  private def readSmall(spark: SparkSession, p: Path): String = {
+    val in = fs(spark, p.toString).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  private def b64(x: String): String =
+    java.util.Base64.getEncoder.encodeToString(x.getBytes("UTF-8"))
+  private def unb64(x: String): String =
+    new String(java.util.Base64.getDecoder.decode(x), "UTF-8")
+
+  /** Footer [min, max] of one column of one data file (type tags in
+    * the stats section below). */
+  private final case class ColStats(t: String, min: String, max: String)
+
+  private type Sketches =
+    Map[(String, String), org.apache.spark.util.sketch.BloomFilter]
+
+  /** One committed version as its manifest records it: id, absolute
+    * data dir, snapshot flag, data file names, and the per-file
+    * `#stats` column bounds and `#rows` counts. `external` marks a
+    * data dir BORROWED from another table (shallow clone): readable
+    * like any commit, but never deleted by this table's retention —
+    * the source owns the files. */
+  private final case class Manifest(
+      v: Long, dir: String, snapshot: Boolean, external: Boolean,
+      files: Seq[String], stats: Map[String, Map[String, ColStats]],
+      rows: Map[String, Long], hasBlooms: Boolean) {
+
+    private var sketches: Sketches = _
+
+    /** Per-(file, column) Bloom sketches. They are the one part of a
+      * manifest whose size grows with the data, so the parse only
+      * notes that they exist; they are decoded from one more read of
+      * the manifest on the first point lookup, and only snapshots
+      * that are probed hold sketch bytes. */
+    def blooms(spark: SparkSession, root: String): Sketches =
+      if (!hasBlooms) Map.empty
+      else synchronized {
+        if (sketches == null)
+          sketches = readSmall(spark, manifestPath(root, v)).linesIterator
+            .filter(_.startsWith("#bloom\t"))
+            .map(_.split("\t", -1))
+            .collect { case Array(_, f, c, b) =>
+              (f, c) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+                new java.io.ByteArrayInputStream(
+                  java.util.Base64.getDecoder.decode(b)))
+            }.toMap
+        sketches
+      }
+  }
+
+  private object Manifest {
+    /** The manifest body: the data dir (`data/v=N-<uuid>` under the
+      * root, or `ext:<absolute dir>` when borrowed), the snapshot
+      * flag, one line per data file, then the `#rows`, `#stats` and
+      * `#bloom` metadata lines. */
+    def render(dirLine: String, snapshot: Boolean, files: Seq[String],
+               meta: Seq[String]): String =
+      (Seq(dirLine, s"snapshot=$snapshot") ++ files ++ meta).mkString("\n")
+
+    def parse(root: String, v: Long, body: String): Manifest = {
+      val lines = body.linesIterator.toSeq
+      val external = lines.head.startsWith("ext:")
+      val stats = lines.filter(_.startsWith("#stats\t"))
+        .map(_.split("\t", -1))
+        .collect { case Array(_, f, c, t, mn, mx) =>
+          (f, c, ColStats(t, unb64(mn), unb64(mx)))
+        }
+        .groupBy(_._1)
+        .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap }
+      val rows = lines.filter(_.startsWith("#rows\t"))
+        .map(_.split("\t", -1))
+        .collect { case Array(_, f, n) => f -> n.toLong }.toMap
+      Manifest(v,
+        if (external) lines.head.stripPrefix("ext:") else s"$root/${lines.head}",
+        lines(1) == "snapshot=true", external,
+        lines.drop(2).filterNot(_.startsWith("#")).filter(_.nonEmpty),
+        stats, rows, lines.exists(_.startsWith("#bloom\t")))
+    }
+  }
+
+  /** Parsed manifests, keyed by the FULLY-QUALIFIED manifest URI, so
+    * two spellings of one location (`/t` vs `file:/t`, trailing slash)
+    * hit the same entry instead of forking the cache and escaping
+    * [[invalidateCache]]'s prefix match. A manifest is IMMUTABLE once
+    * its rename lands (the commit point), so an entry stays valid for
+    * the life of the JVM — the only rewrite path is a SINGLE-WRITER
+    * [[releaseClaim]] + re-publish of the same version number, and
+    * both maintain the cache. Multi-writer tables never rewrite a
+    * manifest (claims stay burned), so cross-process staleness cannot
+    * arise. At object-store scale this turns snapshot resolution from
+    * O(commits) GETs into one GET per manifest per JVM (none for the
+    * writer, which caches what [[putManifest]] wrote), plus one on the
+    * first point lookup against a snapshot that carries Bloom
+    * sketches — Delta caches parsed snapshots for the same reason.
+    * [[expire]] evicts what it deletes. */
+  private val manifests =
+    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+
   private def cacheKey(spark: SparkSession, root: String, v: Long): String =
     fs(spark, root).makeQualified(manifestPath(root, v)).toUri.toString
 
-  /** Parsed manifests, keyed by absolute manifest path. A manifest is
-    * IMMUTABLE once its rename lands (the commit point), so a parsed
-    * entry stays valid for the life of the JVM — the only rewrite path
-    * is a SINGLE-WRITER [[releaseClaim]] + re-publish of the same
-    * version number, and both publish and releaseClaim maintain the
-    * cache. Multi-writer tables never rewrite a manifest (claims stay
-    * burned), so cross-process staleness cannot arise. At object-store
-    * scale this turns snapshot resolution from O(commits) GETs into
-    * one GET per manifest EVER (Delta caches parsed snapshots for the
-    * same reason); entries are three short lines each, and [[expire]]
-    * evicts what it deletes. */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Commit]()
+  private def evict(spark: SparkSession, root: String, v: Long): Unit =
+    manifests.remove(cacheKey(spark, root, v))
 
   /** Evict every cached manifest under `root` — required only if a
     * table is dropped out-of-band and re-created AT THE SAME PATH
@@ -115,59 +193,55 @@ object VersionedTable {
   def invalidateCache(spark: SparkSession, root: String): Unit = {
     val prefix = fs(spark, root)
       .makeQualified(new Path(s"$root/_commits")).toUri.toString + "/"
-    manifestCache.keySet.removeIf(_.startsWith(prefix))
-    detailCache.keySet.removeIf(_.startsWith(prefix))
-    bloomCache.keySet.removeIf(_.startsWith(prefix))
+    manifests.keySet.removeIf(_.startsWith(prefix))
   }
 
-  private def readSmall(spark: SparkSession, p: Path): String = {
-    val in = fs(spark, p.toString).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+  private def manifest(spark: SparkSession, root: String, v: Long): Manifest =
+    manifests.computeIfAbsent(cacheKey(spark, root, v), _ =>
+      Manifest.parse(root, v, readSmall(spark, manifestPath(root, v))))
+
+  /** The commit point: write `body` sideways and rename it to
+    * `_commits/N.manifest` — a SINGLE-OBJECT rename (atomic on
+    * HDFS/local; an all-or-nothing object copy on S3) — then cache its
+    * parse, so the writer's own next read costs no GET. */
+  private def putManifest(spark: SparkSession, root: String, v: Long,
+                          body: String): Unit = {
+    val f = fs(spark, root)
+    val tmp = new Path(s"$root/_commits/.$v.manifest.tmp")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!f.rename(tmp, manifestPath(root, v))) {
+      f.delete(tmp, false)
+      throw new IllegalStateException(
+        s"failed to publish manifest for version $v of $root")
+    }
+    manifests.put(cacheKey(spark, root, v), Manifest.parse(root, v, body))
   }
 
-  private def parseManifest(spark: SparkSession, root: String, v: Long): Commit =
-    manifestCache.computeIfAbsent(cacheKey(spark, root, v), { _ =>
-      val lines = readSmall(spark, manifestPath(root, v)).linesIterator.toSeq
-      if (lines.head.startsWith("ext:"))
-        Commit(v, lines.head.stripPrefix("ext:"),
-          lines(1) == "snapshot=true", external = true)
-      else Commit(v, s"$root/${lines.head}", lines(1) == "snapshot=true")
-    })
-
-  /** All committed versions, ascending — ONE listing, then cached
-    * parses (a tiny read only for manifests this JVM has never seen),
-    * all driver-side. */
-  private def commits(spark: SparkSession, root: String): Seq[Commit] = {
+  /** ONE listing of `_commits`: the committed version ids (manifest
+    * landed) and the CLAIMED ones (committed, in flight, or crashed
+    * mid-publish — a superset; next-version numbering must skip claims
+    * so a crashed claim can never be re-targeted), both ascending and
+    * empty if the table is uninitialized. */
+  private def listVersions(spark: SparkSession,
+                           root: String): (Seq[Long], Seq[Long]) = {
     val dir = new Path(s"$root/_commits")
     val f = fs(spark, root)
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".manifest"))
-      .map(_.stripSuffix(".manifest").toLong).sorted
-      .map(v => parseManifest(spark, root, v))
+    if (!f.exists(dir)) return (Nil, Nil)
+    val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
+    def ids(suffix: String) =
+      names.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong).sorted
+    (ids(".manifest"), ids(".commit"))
   }
 
-  private def commitOf(spark: SparkSession, root: String, v: Long): Commit =
-    parseManifest(spark, root, v)
+  /** All committed versions, ascending — one listing, then cached
+    * parses, all driver-side. */
+  private def commits(spark: SparkSession, root: String): Seq[Manifest] =
+    versions(spark, root).map(manifest(spark, root, _))
 
   /** Committed version ids, ascending (empty if uninitialized). */
   def versions(spark: SparkSession, root: String): Seq[Long] =
-    commits(spark, root).map(_.v)
-
-  /** Version ids ever CLAIMED (committed or in flight / crashed
-    * mid-publish). Superset of [[versions]]; next-version numbering
-    * must skip claims so a crashed claim can never be re-targeted. */
-  private def claimed(spark: SparkSession, root: String): Seq[Long] = {
-    val dir = new Path(s"$root/_commits")
-    val f = fs(spark, root)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit").toLong).sorted
-  }
+    listVersions(spark, root)._1
 
   /** Release the claim (and any manifest) on `version`, making the
     * number targetable again. ONLY safe for a caller that owns the
@@ -181,15 +255,13 @@ object VersionedTable {
     f.delete(manifestPath(root, version), false)
     f.delete(new Path(s"$root/_commits/$version.commit"), false)
     // the released number may be re-published with a different data dir
-    manifestCache.remove(cacheKey(spark, root, version))
-    detailCache.remove(cacheKey(spark, root, version))
-    bloomCache.remove(cacheKey(spark, root, version))
+    evict(spark, root, version)
   }
 
   /** Absolute data directory of committed version `v` (CDC tagging
     * needs the physical path). */
   private[graft] def dataDir(spark: SparkSession, root: String, v: Long): String =
-    commitOf(spark, root, v).dir
+    manifest(spark, root, v).dir
 
   /** Version ids whose claim exists but whose manifest does not: a
     * writer crashed between claim and manifest (number burned), or a
@@ -197,8 +269,8 @@ object VersionedTable {
     * deletion. Multi-writer tables must leave these burned; a
     * single-writer owner may [[releaseClaim]] them. */
   private[graft] def unpublishedClaims(spark: SparkSession, root: String): Seq[Long] = {
-    val done = versions(spark, root).toSet
-    claimed(spark, root).filterNot(done)
+    val (done, claims) = listVersions(spark, root)
+    claims.filterNot(done.toSet)
   }
 
   /** Reference-counted scoped pin of
@@ -241,23 +313,25 @@ object VersionedTable {
     *     manifest appears, so a losing or crashed writer's files are
     *     invisible, never interleaved;
     *  2. the version is claimed by exclusive-create of
-    *     `_commits/N.commit` — `FileSystem.create(overwrite=false)`
-    *     is the filesystem's atomic test-and-set (the primitive
-    *     Delta's HDFS LogStore commits through; conditional PUT on
-    *     S3); the loser gets [[ConcurrentCommitException]], its
-    *     staging removed, table untouched;
+    *     `_commits/N.commit` ([[createExclusive]]) — the filesystem's
+    *     atomic test-and-set (the primitive Delta's HDFS LogStore
+    *     commits through; conditional PUT on S3); the loser gets
+    *     [[ConcurrentCommitException]], its staging removed, table
+    *     untouched;
     *  3. the claim holder writes the manifest sideways and renames it
-    *     to `_commits/N.manifest` — a SINGLE-OBJECT rename (atomic on
-    *     HDFS/local; an all-or-nothing object copy on S3), the commit
-    *     point. No directory ever moves.
+    *     to `_commits/N.manifest` ([[putManifest]]) — a SINGLE-OBJECT
+    *     rename (atomic on HDFS/local; an all-or-nothing object copy on
+    *     S3), the commit point. No directory ever moves.
     * A writer crashing between 2 and 3 leaves an orphan claim: that
     * version number is burned (numbering skips it) and readers — who
     * resolve manifests, never data listings — never see a torn
     * commit. Orphan data dirs from crashes are reclaimed by
-    * [[vacuumOrphans]]. */
+    * [[vacuumOrphans]]. `bloomBudget` caps the commit's Bloom sketch
+    * bytes ([[MaxBloomBytesPerCommit]]; specs pass a small one). */
   private[graft] def publish(spark: SparkSession, root: String, df: DataFrame,
                              snapshot: Boolean, version: Long,
-                             bloomCols: Seq[String] = Nil): Long = {
+                             bloomCols: Seq[String] = Nil,
+                             bloomBudget: Long = MaxBloomBytesPerCommit): Long = {
     val f = fs(spark, root)
     val rel = s"data/v=$version-${java.util.UUID.randomUUID}"
     val staging = new Path(s"$root/$rel")
@@ -282,9 +356,8 @@ object VersionedTable {
     // network) must propagate — reporting it as ConcurrentCommitException
     // would send the caller into a retry loop against a persistent error.
     val won =
-      try { f.create(claim, false).close(); true }
+      try createExclusive(f, claim)
       catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
         case _: java.io.IOException if f.exists(claim) => false
         case e: java.io.IOException => f.delete(staging, true); throw e
       }
@@ -303,28 +376,34 @@ object VersionedTable {
         fileStatsLines(spark, new Path(staging, name), name))
       .collect(java.util.stream.Collectors.toList[Seq[String]])
       .asScala.toSeq.flatten
-    val bloomLines = fileBloomLines(spark, staging.toString, bloomCols)
-    val body =
-      (Seq(rel, s"snapshot=$snapshot") ++ files ++ statsLines ++ bloomLines)
-        .mkString("\n")
-    val tmp = new Path(s"$root/_commits/.$version.manifest.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, manifestPath(root, version))) {
-      f.delete(tmp, false)
-      throw new IllegalStateException(
-        s"failed to publish manifest for version $version of $root")
-    }
-    // the writer already knows the parse — its next read needs no GET
-    manifestCache.put(cacheKey(spark, root, version),
-      Commit(version, s"$root/$rel", snapshot))
+    val bloomLines =
+      fileBloomLines(spark, staging.toString, bloomCols, bloomBudget)
+    putManifest(spark, root, version, Manifest.render(
+      rel, snapshot, files.toSeq, statsLines ++ bloomLines))
     version
   }
 
+  /** Create the empty file `p` iff it does not exist: true when this
+    * call created it, false when it already existed. On HDFS
+    * `create(overwrite = false)` is that atomic test-and-set; Hadoop's
+    * local filesystem checks `exists` and then opens, so two racing
+    * writers can both pass the check and both believe they hold the
+    * claim. Local paths therefore go through `O_CREAT | O_EXCL`. */
+  private def createExclusive(f: FileSystem, p: Path): Boolean =
+    if (f.getUri.getScheme == "file")
+      try {
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(f.makeQualified(p).toUri))
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    else
+      try { f.create(p, false).close(); true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+
   private def write(spark: SparkSession, root: String, df: DataFrame,
                     snapshot: Boolean, bloomCols: Seq[String] = Nil): Long = {
-    val next = (versions(spark, root) ++ claimed(spark, root))
-      .maxOption.fold(0L)(_ + 1)
+    val (done, claims) = listVersions(spark, root)
+    val next = (done ++ claims).maxOption.fold(0L)(_ + 1)
     publish(spark, root, df, snapshot, next, bloomCols)
   }
 
@@ -345,13 +424,6 @@ object VersionedTable {
   // that hold the range. Unknown columns and stat-less files (older
   // manifests) are conservatively kept.
   // ------------------------------------------------------------------
-
-  private def b64(x: String): String =
-    java.util.Base64.getEncoder.encodeToString(x.getBytes("UTF-8"))
-  private def unb64(x: String): String =
-    new String(java.util.Base64.getDecoder.decode(x), "UTF-8")
-
-  private final case class ColStats(t: String, min: String, max: String)
 
   /** Footer-derived stats lines for one data file (driver-side, one
     * footer read — no data pages touched). Unsupported physical /
@@ -427,42 +499,14 @@ object VersionedTable {
     } finally reader.close()
   }
 
-  /** Parsed (files, per-file column stats) of one manifest. Cached
-    * like [[manifestCache]] — manifests are immutable after publish. */
-  private val detailCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Map[String, Map[String, ColStats]], Map[String, Long])]()
-
-  private def manifestDetail(spark: SparkSession, root: String, v: Long)
-      : (Seq[String], Map[String, Map[String, ColStats]]) = {
-    val d = manifestDetailFull(spark, root, v); (d._1, d._2)
-  }
-
-  private def manifestDetailFull(spark: SparkSession, root: String, v: Long)
-      : (Seq[String], Map[String, Map[String, ColStats]], Map[String, Long]) =
-    detailCache.computeIfAbsent(cacheKey(spark, root, v), { _ =>
-      val lines = readSmall(spark, manifestPath(root, v)).linesIterator.toSeq
-      val files = lines.drop(2).filterNot(_.startsWith("#"))
-        .filter(_.nonEmpty)
-      val stats = lines.filter(_.startsWith("#stats\t"))
-        .map(_.split("\t", -1))
-        .collect { case Array(_, f, c, t, mn, mx) =>
-          (f, c, ColStats(t, unb64(mn), unb64(mx)))
-        }
-        .groupBy(_._1)
-        .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap }
-      val rows = lines.filter(_.startsWith("#rows\t"))
-        .map(_.split("\t", -1))
-        .collect { case Array(_, f, n) => f -> n.toLong }.toMap
-      (files, stats, rows)
-    })
-
   /** Exact row count of version `v`'s commit from manifest metadata
     * alone — Some iff every data file carries a `#rows` line (always
     * true for r7+ writes; None for older manifests → caller scans). */
   private[graft] def rowCountOf(spark: SparkSession, root: String,
                                 v: Long): Option[Long] = {
-    val (files, _, rows) = manifestDetailFull(spark, root, v)
-    if (files.forall(rows.contains)) Some(files.map(rows).sum) else None
+    val m = manifest(spark, root, v)
+    if (m.files.forall(m.rows.contains)) Some(m.files.map(m.rows).sum)
+    else None
   }
 
   /** Can any row of a file with `st` stats fall inside [lo, hi]?
@@ -489,6 +533,47 @@ object VersionedTable {
     case other => BigDecimal(other.toString)
   }
 
+  /** Snapshot resolution + merge-on-read, the one path behind every
+    * reader: only versions in (last snapshot ≤ asOf, asOf] are
+    * resolved or read, unioned by name — later commits may add
+    * columns, and earlier rows read them as null (Delta's
+    * mergeSchema-on-read) — and the newest live row per key wins.
+    * `keepFile` prunes the BASE snapshot's files by name (deltas are
+    * always read: they shadow); `columns` projects before the merge.
+    * Returns (state, kept base files, total base files). */
+  private def resolve(spark: SparkSession, root: String,
+                      keyCols: Seq[String], asOf: Long,
+                      keepFile: Option[Manifest => String => Boolean] = None,
+                      columns: Option[Seq[String]] = None)
+      : (DataFrame, Int, Int) = {
+    val cs = commits(spark, root).filter(_.v <= asOf)
+    require(cs.nonEmpty, "no committed version" +
+      (if (asOf == Latest) "" else s" ≤ $asOf") + s" under $root")
+    val base = cs.reverse.find(_.snapshot).getOrElse(cs.head)
+    val kept = keepFile.fold(base.files)(k => base.files.filter(k(base)))
+    val baseDf =
+      if (keepFile.isDefined && kept.isEmpty)
+        spark.read.parquet(base.dir).where(lit(false))
+      else if (kept.size == base.files.size) spark.read.parquet(base.dir)
+      else spark.read.parquet(kept.map(n => s"${base.dir}/$n"): _*)
+    val merged = ((base.v -> baseDf) +: cs.filter(_.v > base.v)
+        .map(c => c.v -> spark.read.parquet(c.dir)))
+      .map { case (v, df) => df.withColumn("__commit", lit(v)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val carried = columns.fold(merged)(cols => merged.select(
+      ((keyCols ++ cols).distinct :+ Deleted :+ "__commit").map(col): _*))
+    (newestLive(carried, keyCols), kept.size, base.files.size)
+  }
+
+  /** `asOf` that resolves the newest committed version. */
+  private val Latest = Long.MaxValue
+
+  /** The newest row per key of `__commit`-tagged rows, tombstones
+    * dropped. */
+  private def newestLive(merged: DataFrame, keyCols: Seq[String]): DataFrame =
+    Upsert.dedupeLatest(merged, keyCols, "__commit")
+      .where(!col(Deleted)).drop(Deleted, "__commit")
+
   /** Range-pruned snapshot read: [[readAsOf]] semantics with the
     * closed-interval predicate `column BETWEEN lo AND hi`, where the
     * BASE SNAPSHOT opens only files whose footer stats intersect the
@@ -513,26 +598,10 @@ object VersionedTable {
   private[graft] def readAsOfRangePruned(
       spark: SparkSession, root: String, keyCols: Seq[String], asOf: Long,
       column: String, lo: Any, hi: Any): (DataFrame, Int, Int) = {
-    val cs = commits(spark, root).filter(_.v <= asOf)
-    require(cs.nonEmpty, s"no committed version <= $asOf under $root")
-    val base = cs.reverse.find(_.snapshot).getOrElse(cs.head)
-    val live = cs.filter(_.v >= base.v)
-    val (baseFiles, stats) = manifestDetail(spark, root, base.v)
-    val kept = baseFiles.filter(f =>
-      mayMatch(stats.get(f).flatMap(_.get(column)), lo, hi))
-    val baseDf =
-      if (kept.isEmpty)
-        spark.read.parquet(base.dir).where(lit(false))
-      else if (kept.size == baseFiles.size) spark.read.parquet(base.dir)
-      else spark.read.parquet(kept.map(n => s"${base.dir}/$n"): _*)
-    val merged = (baseDf.withColumn("__commit", lit(base.v)) +:
-      live.filter(_.v != base.v).map { c =>
-        spark.read.parquet(c.dir).withColumn("__commit", lit(c.v))
-      }).reduce(_.unionByName(_, allowMissingColumns = true))
-    val df = Upsert.dedupeLatest(merged, keyCols, "__commit")
-      .where(!col(Deleted)).drop(Deleted, "__commit")
-      .where(col(column).between(lit(lo), lit(hi)))
-    (df, kept.size, baseFiles.size)
+    val (df, kept, total) = resolve(spark, root, keyCols, asOf,
+      keepFile = Some(base => f =>
+        mayMatch(base.stats.get(f).flatMap(_.get(column)), lo, hi)))
+    (df.where(col(column).between(lit(lo), lit(hi))), kept, total)
   }
 
 
@@ -549,19 +618,15 @@ object VersionedTable {
   // ------------------------------------------------------------------
 
   /** Hard ceiling on Bloom sketch bytes held on the driver (and
-    * written to one manifest) per commit: 64 MB by default,
-    * overridable via the session conf key
-    * `graft.versionedTable.maxBloomBytesPerCommit`. A wide
-    * compaction — thousands of files × several indexed columns —
-    * would otherwise materialize an unbounded `collect()` on the
-    * driver. When the ideal per-file sizing would exceed the budget,
-    * the bits per sketch are SHRUNK to fit (fpp rises, pruning
-    * weakens, reads stay correct — a Bloom has no false negatives at
-    * any size); below a floor of 64 bytes/sketch the index is omitted
-    * for the commit, which is the always-safe "never prune"
-    * fallback. */
-  private val MaxBloomBytesKey = "graft.versionedTable.maxBloomBytesPerCommit"
-  private val MaxBloomBytesDefault = 64L * 1024 * 1024
+    * written to one manifest) per commit. A wide compaction —
+    * thousands of files × several indexed columns — would otherwise
+    * materialize an unbounded `collect()` on the driver. When the
+    * ideal per-file sizing would exceed the budget, the bits per
+    * sketch are SHRUNK to fit (fpp rises, pruning weakens, reads stay
+    * correct — a Bloom has no false negatives at any size); below a
+    * floor of 64 bytes/sketch the index is omitted for the commit,
+    * which is the always-safe "never prune" fallback. */
+  private val MaxBloomBytesPerCommit = 64L * 1024 * 1024
   private val MinBloomBitsPerFile = 64L * 8
 
   /** Per-(file, column) Bloom lines for a freshly-written snapshot
@@ -572,7 +637,8 @@ object VersionedTable {
     * not the whole commit's sketch set at once) after the bit budget
     * is capped. */
   private def fileBloomLines(spark: SparkSession, staging: String,
-                             bloomCols: Seq[String]): Seq[String] = {
+                             bloomCols: Seq[String],
+                             budget: Long): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.GraftColumnBridge
     if (bloomCols.isEmpty) return Nil
@@ -589,8 +655,6 @@ object VersionedTable {
     val idealBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(perFile, 0.01)
     // cap: nFiles sketches × present.size columns must fit the budget
-    val budget = spark.conf.getOption(MaxBloomBytesKey)
-      .map(_.toLong).getOrElse(MaxBloomBytesDefault)
     val budgetBits = budget * 8L / math.max(nFiles.toLong * present.size, 1L)
     val numBits = math.min(idealBits, budgetBits)
     if (numBits < MinBloomBitsPerFile) return Nil // useless at this width
@@ -621,24 +685,6 @@ object VersionedTable {
 
   private def b64bytes(x: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(x)
-
-  /** Parsed Bloom sketches of one manifest, keyed (file, col). Same
-    * immutability/caching contract as [[manifestDetail]]. */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[(String, String), org.apache.spark.util.sketch.BloomFilter]]()
-
-  private def manifestBlooms(spark: SparkSession, root: String, v: Long)
-      : Map[(String, String), org.apache.spark.util.sketch.BloomFilter] =
-    bloomCache.computeIfAbsent(cacheKey(spark, root, v), { _ =>
-      readSmall(spark, manifestPath(root, v)).linesIterator
-        .filter(_.startsWith("#bloom\t"))
-        .map(_.split("\t", -1))
-        .collect { case Array(_, f, c, b) =>
-          (f, c) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              java.util.Base64.getDecoder.decode(b)))
-        }.toMap
-    })
 
   /** xxhash64 of a lookup value, matching `xxhash64(col)` over the
     * column's native type (seed 42) — the probe side of the per-file
@@ -681,39 +727,24 @@ object VersionedTable {
   private[graft] def readAsOfEqPruned(
       spark: SparkSession, root: String, keyCols: Seq[String], asOf: Long,
       column: String, value: Any): (DataFrame, Int, Int) = {
-    val cs = commits(spark, root).filter(_.v <= asOf)
-    require(cs.nonEmpty, s"no committed version <= $asOf under $root")
-    val base = cs.reverse.find(_.snapshot).getOrElse(cs.head)
-    val live = cs.filter(_.v >= base.v)
-    val (baseFiles, stats) = manifestDetail(spark, root, base.v)
-    val blooms = manifestBlooms(spark, root, base.v)
-    // resolve the column's DECLARED type from the base snapshot (one
-    // driver-side footer probe) — the Bloom hashes native values of
-    // that type, not of whatever runtime class the caller passed
-    lazy val h = {
-      val colType = spark.read.parquet(base.dir).schema
-        .find(_.name == column)
-        .getOrElse(throw new IllegalArgumentException(
-          s"readAsOfEq: column $column not in the base snapshot of $root"))
-        .dataType
-      probeHash(value, colType)
-    }
-    val kept = baseFiles.filter { f =>
-      mayMatch(stats.get(f).flatMap(_.get(column)), value, value) &&
-        blooms.get((f, column)).forall(_.mightContainLong(h))
-    }
-    val baseDf =
-      if (kept.isEmpty) spark.read.parquet(base.dir).where(lit(false))
-      else if (kept.size == baseFiles.size) spark.read.parquet(base.dir)
-      else spark.read.parquet(kept.map(n => s"${base.dir}/$n"): _*)
-    val merged = (baseDf.withColumn("__commit", lit(base.v)) +:
-      live.filter(_.v != base.v).map { c =>
-        spark.read.parquet(c.dir).withColumn("__commit", lit(c.v))
-      }).reduce(_.unionByName(_, allowMissingColumns = true))
-    val df = Upsert.dedupeLatest(merged, keyCols, "__commit")
-      .where(!col(Deleted)).drop(Deleted, "__commit")
-      .where(col(column) === lit(value))
-    (df, kept.size, baseFiles.size)
+    val (df, kept, total) = resolve(spark, root, keyCols, asOf,
+      keepFile = Some { base =>
+        val blooms = base.blooms(spark, root)
+        // resolve the column's DECLARED type from the base snapshot (one
+        // driver-side footer probe) — the Bloom hashes native values of
+        // that type, not of whatever runtime class the caller passed
+        lazy val h = {
+          val colType = spark.read.parquet(base.dir).schema
+            .find(_.name == column)
+            .getOrElse(throw new IllegalArgumentException(
+              s"readAsOfEq: column $column not in the base snapshot of $root"))
+            .dataType
+          probeHash(value, colType)
+        }
+        f => mayMatch(base.stats.get(f).flatMap(_.get(column)), value, value) &&
+          blooms.get((f, column)).forall(_.mightContainLong(h))
+      })
+    (df.where(col(column) === lit(value)), kept, total)
   }
 
   /** Run a commit thunk, retrying on [[ConcurrentCommitException]] up
@@ -884,14 +915,21 @@ object VersionedTable {
     * columns are null-filled to keep one schema per table. */
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame): Long = {
     // borrow the newest commit's schema (v=0 may have been expired)
-    val latest = commits(spark, root).last
-    val schema = spark.read.parquet(latest.dir).drop(Deleted).schema
-    val tomb = schema.fields.foldLeft(keys) { (df, f) =>
+    val latest = versions(spark, root).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no committed version under $root"))
+    val schema = spark.read.parquet(dataDir(spark, root, latest))
+      .drop(Deleted).schema
+    write(spark, root, tombstones(keys, schema), snapshot = false)
+  }
+
+  /** Tombstone rows for `keys` (key columns only): every other column
+    * of `schema` null-filled, so a table keeps one schema. */
+  private def tombstones(keys: DataFrame,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    schema.fields.foldLeft(keys) { (df, f) =>
       if (keys.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
     }.select(schema.fieldNames.toSeq.map(col): _*).withColumn(Deleted, lit(true))
-    write(spark, root, tomb, snapshot = false)
-  }
 
   /** Full-sync MERGE (`WHEN MATCHED UPDATE / NOT MATCHED INSERT /
     * NOT MATCHED BY SOURCE DELETE`): ONE delta commit that makes the
@@ -913,13 +951,9 @@ object VersionedTable {
       val gone = readLatest(spark, root, keyCols)
         .select(keyCols.map(col): _*)
         .join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val tomb = src.schema.fields.foldLeft(gone) { (df, f) =>
-          if (keyCols.contains(f.name)) df
-          else df.withColumn(f.name, lit(null).cast(f.dataType))
-        }.select(src.schema.fieldNames.toSeq.map(col): _*)
-        .withColumn(Deleted, lit(true))
       write(spark, root,
-        src.withColumn(Deleted, lit(false)).unionByName(tomb),
+        src.withColumn(Deleted, lit(false))
+          .unionByName(tombstones(gone, src.schema)),
         snapshot = false)
     }
   }
@@ -956,17 +990,12 @@ object VersionedTable {
         .where(!coalesce(col(column).between(lit(lo), lit(hi)), lit(false)))
         .isEmpty,
         s"replacement rows fall outside (or NULL in) $column in [$lo, $hi]")
-      val affected = readAsOfRange(spark, root, keyCols,
-        versions(spark, root).last, column, lo, hi)
-      val gone = affected.select(keyCols.map(col): _*)
+      val gone = readAsOfRange(spark, root, keyCols, Latest, column, lo, hi)
+        .select(keyCols.map(col): _*)
         .join(repl.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val tomb = repl.schema.fields.foldLeft(gone) { (df, f) =>
-          if (keyCols.contains(f.name)) df
-          else df.withColumn(f.name, lit(null).cast(f.dataType))
-        }.select(repl.schema.fieldNames.toSeq.map(col): _*)
-        .withColumn(Deleted, lit(true))
       write(spark, root,
-        repl.withColumn(Deleted, lit(false)).unionByName(tomb),
+        repl.withColumn(Deleted, lit(false))
+          .unionByName(tombstones(gone, repl.schema)),
         snapshot = false)
     }
   }
@@ -975,19 +1004,8 @@ object VersionedTable {
     * tombstones drop). Only versions in (last snapshot ≤ asOf, asOf]
     * are resolved or read. */
   def readAsOf(spark: SparkSession, root: String, keyCols: Seq[String],
-               asOf: Long): DataFrame = {
-    val cs = commits(spark, root).filter(_.v <= asOf)
-    require(cs.nonEmpty, s"no committed version ≤ $asOf under $root")
-    val base = cs.reverse.find(_.snapshot).getOrElse(cs.head)
-    val live = cs.filter(_.v >= base.v)
-    val merged = live.map { c =>
-        spark.read.parquet(c.dir).withColumn("__commit", lit(c.v))
-      // schema evolution: later commits may add columns; earlier rows
-      // read them as null (Delta's mergeSchema-on-read behavior)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-    Upsert.dedupeLatest(merged, keyCols, "__commit")
-      .where(!col(Deleted)).drop(Deleted, "__commit")
-  }
+               asOf: Long): DataFrame =
+    resolve(spark, root, keyCols, asOf)._1
 
   /** [[readAsOf]] restricted to `columns` — the reader's COLUMN
     * PRUNING lever. The merge's latest-per-key aggregate packs every
@@ -1005,23 +1023,12 @@ object VersionedTable {
     * writers) are unaffected. */
   def readAsOfColumns(spark: SparkSession, root: String,
                       keyCols: Seq[String], asOf: Long,
-                      columns: Seq[String]): DataFrame = {
-    val cs = commits(spark, root).filter(_.v <= asOf)
-    require(cs.nonEmpty, s"no committed version ≤ $asOf under $root")
-    val base = cs.reverse.find(_.snapshot).getOrElse(cs.head)
-    val live = cs.filter(_.v >= base.v)
-    val keep = (keyCols ++ columns).distinct
-    val merged = live.map { c =>
-        spark.read.parquet(c.dir).withColumn("__commit", lit(c.v))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      .select((keep :+ Deleted :+ "__commit").map(col): _*)
-    Upsert.dedupeLatest(merged, keyCols, "__commit")
-      .where(!col(Deleted)).drop(Deleted, "__commit")
-  }
+                      columns: Seq[String]): DataFrame =
+    resolve(spark, root, keyCols, asOf, columns = Some(columns))._1
 
   /** Latest state. */
   def readLatest(spark: SparkSession, root: String, keyCols: Seq[String]): DataFrame =
-    readAsOf(spark, root, keyCols, versions(spark, root).last)
+    resolve(spark, root, keyCols, Latest)._1
 
   /** Fold the live chain into a new snapshot commit; readers of newer
     * versions then touch one directory. Old versions stay for time
@@ -1167,8 +1174,8 @@ object VersionedTable {
     * column extremes (gated in vt_stats_view). */
   def fileStats(spark: SparkSession, root: String, v: Long): DataFrame = {
     import spark.implicits._
-    val (files, stats, _) = manifestDetailFull(spark, root, v)
-    files.flatMap(f => stats.getOrElse(f, Map.empty).map { case (c, st) =>
+    val m = manifest(spark, root, v)
+    m.files.flatMap(f => m.stats.getOrElse(f, Map.empty).map { case (c, st) =>
         (f, c, st.t, st.min, st.max)
       }).toDF("file", "column", "stat_type", "min", "max")
   }
@@ -1194,7 +1201,7 @@ object VersionedTable {
                    dstRoot: String): Seq[Long] = {
     val srcFs = fs(spark, srcRoot)
     val f = fs(spark, dstRoot)
-    require(commits(spark, dstRoot).isEmpty && claimed(spark, dstRoot).isEmpty,
+    require(listVersions(spark, dstRoot) == ((Nil, Nil)),
       s"cloneShallow: destination $dstRoot is not empty")
     val vs = commits(spark, srcRoot)
     f.mkdirs(new Path(s"$dstRoot/_commits"))
@@ -1205,12 +1212,7 @@ object VersionedTable {
       // same claim-then-manifest order as publish: a reader listing
       // mid-clone sees a prefix of the history, never a torn manifest
       f.create(new Path(s"$dstRoot/_commits/${c.v}.commit"), false).close()
-      val tmp = new Path(s"$dstRoot/_commits/.${c.v}.manifest.tmp")
-      val out = f.create(tmp, true)
-      try out.write(rewritten.getBytes("UTF-8")) finally out.close()
-      if (!f.rename(tmp, manifestPath(dstRoot, c.v)))
-        throw new IllegalStateException(
-          s"cloneShallow: failed to publish manifest v=${c.v} at $dstRoot")
+      putManifest(spark, dstRoot, c.v, rewritten)
     }
     vs.map(_.v)
   }
@@ -1225,7 +1227,7 @@ object VersionedTable {
     * clone). History does not carry over; the clone starts at v0. */
   def cloneDeep(spark: SparkSession, srcRoot: String, dstRoot: String,
                 keyCols: Seq[String]): Long = {
-    require(commits(spark, dstRoot).isEmpty && claimed(spark, dstRoot).isEmpty,
+    require(listVersions(spark, dstRoot) == ((Nil, Nil)),
       s"cloneDeep: destination $dstRoot is not empty")
     init(spark, dstRoot, readLatest(spark, srcRoot, keyCols))
   }
@@ -1244,6 +1246,16 @@ object VersionedTable {
       readAsOf(spark, root, keyCols, toVersion).withColumn(Deleted, lit(false)),
       snapshot = true, bloomCols = bloomCols)
 
+  /** The change commits in (`fromV`, `toV`]: every delta, plus v=0
+    * when the range includes it (see [[readChangesBetween]]). */
+  private def changeCommits(spark: SparkSession, root: String,
+                            fromV: Long, toV: Long): Seq[Manifest] = {
+    val cs = commits(spark, root)
+      .filter(c => c.v > fromV && c.v <= toV && (c.v == 0L || !c.snapshot))
+    require(cs.nonEmpty, s"no change commits in ($fromV, $toV] under $root")
+    cs
+  }
+
   /** Row-level changes committed in (`fromV`, `toV`]: the CDC-out
     * feed. Each row carries its commit id and op ('U'/'D') — exactly
     * what a downstream `CdcIngest` consumer replays. Only the
@@ -1256,17 +1268,12 @@ object VersionedTable {
     * includes it (callers asking from before the table existed want
     * the initial state as inserts). */
   def readChangesBetween(spark: SparkSession, root: String,
-                         fromV: Long, toV: Long): DataFrame = {
-    val cs = commits(spark, root)
-      .filter(c => c.v > fromV && c.v <= toV)
-      .filter(c => c.v == 0L || !c.snapshot)
-    require(cs.nonEmpty, s"no change commits in ($fromV, $toV] under $root")
-    cs.map { c =>
+                         fromV: Long, toV: Long): DataFrame =
+    changeCommits(spark, root, fromV, toV).map { c =>
         spark.read.parquet(c.dir).withColumn("__commit", lit(c.v))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       .withColumn("__op", when(col(Deleted), lit("D")).otherwise(lit("U")))
       .drop(Deleted)
-  }
 
   /** Change feed WITH row images (Delta CDF parity): for every change
     * commit `c` in (`fromV`, `toV`], emits
@@ -1311,14 +1318,11 @@ object VersionedTable {
   def readChangesWithImages(spark: SparkSession, root: String,
                             keyCols: Seq[String],
                             fromV: Long, toV: Long): DataFrame = {
-    val cs = commits(spark, root)
-      .filter(c => c.v > fromV && c.v <= toV)
-      .filter(c => c.v == 0L || !c.snapshot)
-    require(cs.nonEmpty, s"no change commits in ($fromV, $toV] under $root")
+    val cs = changeCommits(spark, root, fromV, toV)
     val key = keyCols.map(col)
 
     /** Images of one change commit against its prior live snapshot. */
-    def imagesOf(c: Commit, delta: DataFrame, prior: DataFrame): DataFrame = {
+    def imagesOf(c: Manifest, delta: DataFrame, prior: DataFrame): DataFrame = {
       val preImgs = prior.join(
         delta.select(key: _*).distinct(), keyCols, "left_semi")
       val delKeys = delta.where(col(Deleted)).select(key: _*)
@@ -1347,7 +1351,7 @@ object VersionedTable {
         .withColumn("__commit", lit(c.v))
     }
 
-    def insertsOf(c: Commit, delta: DataFrame): DataFrame =
+    def insertsOf(c: Manifest, delta: DataFrame): DataFrame =
       delta.where(!col(Deleted)).drop(Deleted)
         .withColumn("__commit", lit(c.v)).withColumn("__op", lit("I"))
 
@@ -1356,9 +1360,7 @@ object VersionedTable {
       val pr = prior.withColumn(Deleted, lit(false))
         .withColumn("__commit", lit(0L))
       val dl = delta.withColumn("__commit", lit(1L))
-      Upsert.dedupeLatest(
-          pr.unionByName(dl, allowMissingColumns = true), keyCols, "__commit")
-        .where(!col(Deleted)).drop(Deleted, "__commit")
+      newestLive(pr.unionByName(dl, allowMissingColumns = true), keyCols)
     }
 
     cs match {
@@ -1412,16 +1414,14 @@ object VersionedTable {
   def expire(spark: SparkSession, root: String, keepFrom: Long): Seq[Long] = {
     val cs = commits(spark, root)
     val anchor = cs.filter(_.v <= keepFrom).reverse.find(_.snapshot)
-    val removable = anchor.fold(Seq.empty[Commit])(a => cs.filter(_.v < a.v))
+    val removable = anchor.fold(Seq.empty[Manifest])(a => cs.filter(_.v < a.v))
     val f = fs(spark, root)
     removable.foreach { c =>
       f.delete(manifestPath(root, c.v), false)
       // a shallow clone BORROWS its data dirs — the source table owns
       // those files; expiring the clone drops only its manifests
       if (!c.external) f.delete(new Path(c.dir), true)
-      manifestCache.remove(cacheKey(spark, root, c.v))
-      detailCache.remove(cacheKey(spark, root, c.v))
-      bloomCache.remove(cacheKey(spark, root, c.v))
+      evict(spark, root, c.v)
     }
     removable.map(_.v)
   }

@@ -1873,7 +1873,7 @@ object SimQueries extends graft.QueryModule {
     * with full vectors; the output is the same recall curve, directly
     * comparable against the brute-force gate's. With nprobe = k the
     * probe is exhaustive and the shortlist is EXACTLY the brute-force
-    * prefix shortlist (Round16Spec pins that identity). The oracle
+    * prefix shortlist (SimSpec pins that identity). The oracle
     * replays Lloyd-on-prefixes, assign, probe, prefix ranking and
     * full-dim rerank end-to-end. */
   def simMatryoshkaIvf(spark: SparkSession, sfDir: String): DataFrame =

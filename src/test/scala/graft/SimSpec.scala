@@ -285,4 +285,39 @@ class SimSpec extends SparkSpecBase {
       assert(got(id) == (nf + 4) / 5, s"doc $id: nf=$nf got=${got(id)}")
     }
   }
+
+  // ---- Matryoshka × IVF ----
+
+  test("matryoshka IVF with exhaustive probe equals the brute-force " +
+      "prefix curve") {
+    // nprobe = k probes every bucket, so the IVF stage-1 shortlist is
+    // EXACTLY the brute-force prefix top-20 (same rounded score, same
+    // id tie-break) and the recall curve must be identical
+    val ivf = graft.queries.SimQueries
+      .matryoshkaIvfRecall(spark, sfDir, prefixDims = 16, nprobe = 16)
+      .collect().map(r => (r.getInt(0), r.getLong(2), r.getDouble(3)))
+    val brute = graft.queries.SimQueries
+      .matryoshkaRecall(spark, sfDir, prefixDims = 16)
+      .collect().map(r => (r.getInt(0), r.getLong(2), r.getDouble(3)))
+    assert(ivf.toSeq == brute.toSeq,
+      s"ivf ${ivf.mkString(",")} != brute ${brute.mkString(",")}")
+  }
+
+  test("matryoshka IVF recall is sane and monotone at nprobe = 4") {
+    val rows = graft.queries.SimQueries
+      .matryoshkaIvfRecall(spark, sfDir, prefixDims = 16, nprobe = 4)
+      .collect()
+    val recalls = rows.sortBy(_.getInt(0)).map(_.getDouble(3))
+    assert(rows.forall(r => r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0))
+    assert(recalls.sliding(2).forall(w => w(1) >= w(0) - 1e-12),
+      s"recall not monotone in shortlist: ${recalls.mkString(",")}")
+    rows.foreach(r => assert(r.getAs[Long]("n_queries") == 10L))
+  }
+
+  test("matryoshka IVF plan has no cartesian product") {
+    val df = graft.queries.SimQueries
+      .matryoshkaIvfRecall(spark, sfDir, prefixDims = 16, nprobe = 4)
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("CartesianProduct"), s"cartesian in:\n$p")
+  }
 }

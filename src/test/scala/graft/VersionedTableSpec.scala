@@ -70,6 +70,19 @@ class VersionedTableSpec extends SparkSpecBase {
     try out.write("data/v=1-GARBAGE\nsnapshot=maybe".getBytes("UTF-8"))
     finally out.close()
     assert(state(root, 1L) == Map(1L -> 1.0, 2L -> 20.0))
+    // ONE parse serves every view of a manifest: row counts, history,
+    // file stats and the pruned read of v=1 answer from the entry the
+    // writer cached, not from a second read of the corrupted file
+    assert(VersionedTable.rowCountOf(spark, root, 1L) == Some(1L))
+    assert(VersionedTable.history(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap == Map(0L -> 2L, 1L -> 1L))
+    assert(VersionedTable.fileStats(spark, root, 1L)
+      .select("column").collect().map(_.getString(0)).toSet == Set("k", "v"))
+    val (pruned, kept, total) = VersionedTable.readAsOfRangePruned(
+      spark, root, Seq("k"), 1L, "v", 0.0, 100.0)
+    assert(kept == total)
+    assert(pruned.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(1L -> 1.0, 2L -> 20.0))
     // eviction forces re-resolution: the corrupted dir pointer now
     // surfaces (reads resolve to a data dir that does not exist)
     // evict via a DIFFERENT spelling of the same root (qualified URI
@@ -78,6 +91,28 @@ class VersionedTableSpec extends SparkSpecBase {
       new org.apache.hadoop.fs.Path(root)).toUri.toString)
     assert(VersionedTable.versions(spark, root) == Seq(0L, 1L))
     intercept[Exception] { state(root, 1L) }
+  }
+
+  test("an uninitialized root fails with a reason that names it") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val batch = Seq((1L, 1.0)).toDF("k", "v")
+    def namesRoot(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(root), e.getMessage)
+    }
+    namesRoot(VersionedTable.readAsOf(spark, root, Seq("k"), 0L))
+    namesRoot(VersionedTable.readLatest(spark, root, Seq("k")))
+    namesRoot(VersionedTable.commitDelete(spark, root, Seq(1L).toDF("k")))
+    namesRoot(VersionedTable.commitReplaceWhere(spark, root, Seq("k"), "v",
+      0.0, 2.0, batch))
+    namesRoot(VersionedTable.commitUpsertIfNewer(spark, root, batch,
+      Seq("k"), "v"))
+    namesRoot(VersionedTable.commitScd2(spark, root,
+      Seq((1L, "a", 10L)).toDF("k", "attr", "ord"), Seq("k"), Seq("attr"), "ord"))
+    assert(VersionedTable.versions(spark, root).isEmpty,
+      "a failed commit against an empty root must not create a version")
   }
 
   test("two writers racing the same version: exactly one wins, loser fails atomically") {

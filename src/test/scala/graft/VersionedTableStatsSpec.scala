@@ -245,39 +245,39 @@ class VersionedTableStatsSpec extends SparkSpecBase {
   test("many-file commit: bloom bytes bounded by the per-commit budget") {
     // 32 files × 1 column under a 4 KB budget → the ideal sizing must
     // SHRINK to fit; point lookups stay correct (weaker pruning only)
+    // (the budget reaches publish directly; init always passes the
+    // 64 MB MaxBloomBytesPerCommit)
+    def initCapped(root: String, budget: Long): Long =
+      VersionedTable.publish(spark, root,
+        ev.repartition(32, col("value")).withColumn("__deleted", lit(false)),
+        snapshot = true, version = 0L, bloomCols = Seq("event_id"),
+        bloomBudget = budget)
     val root = freshRoot("vtbloomcap")
-    val key = "graft.versionedTable.maxBloomBytesPerCommit"
-    spark.conf.set(key, (4 * 1024).toString)
-    try {
-      VersionedTable.init(spark, root,
-        ev.repartition(32, col("value")), bloomCols = Seq("event_id"))
-      val manifest = scala.io.Source.fromFile(
-        s"$root/_commits/0.manifest", "UTF-8").getLines().toSeq
-      val bloomLines = manifest.filter(_.startsWith("#bloom\t"))
-      assert(bloomLines.nonEmpty, "capped commit must still carry blooms")
-      val bloomBytes = bloomLines.map(l =>
-        java.util.Base64.getDecoder.decode(l.split("\t", -1)(3)).length.toLong).sum
-      // b64-decoded sketch payload obeys the budget (+ small codec
-      // framing per sketch)
-      assert(bloomBytes <= 4 * 1024 + 32 * 64,
-        s"bloom payload $bloomBytes exceeds the 4 KB budget")
-      val k = ev.select("event_id").head().getLong(0)
-      val hit = VersionedTable.readAsOfEq(
-        spark, root, Seq("event_id"), 0L, "event_id", k)
-      assert(hit.count() == 1, "capped bloom must stay correct")
-      // and a budget too small for even the floor omits the index
-      val root2 = freshRoot("vtbloomcap2")
-      spark.conf.set(key, "64") // 64 bytes across 32 files → below floor
-      VersionedTable.init(spark, root2,
-        ev.repartition(32, col("value")), bloomCols = Seq("event_id"))
-      val manifest2 = scala.io.Source.fromFile(
-        s"$root2/_commits/0.manifest", "UTF-8").getLines().toSeq
-      assert(!manifest2.exists(_.startsWith("#bloom\t")),
-        "sub-floor budget must omit the bloom index entirely")
-      val hit2 = VersionedTable.readAsOfEq(
-        spark, root2, Seq("event_id"), 0L, "event_id", k)
-      assert(hit2.count() == 1, "bloom-less table must still read correctly")
-    } finally spark.conf.unset(key)
+    initCapped(root, 4 * 1024)
+    val manifest = scala.io.Source.fromFile(
+      s"$root/_commits/0.manifest", "UTF-8").getLines().toSeq
+    val bloomLines = manifest.filter(_.startsWith("#bloom\t"))
+    assert(bloomLines.nonEmpty, "capped commit must still carry blooms")
+    val bloomBytes = bloomLines.map(l =>
+      java.util.Base64.getDecoder.decode(l.split("\t", -1)(3)).length.toLong).sum
+    // b64-decoded sketch payload obeys the budget (+ small codec
+    // framing per sketch)
+    assert(bloomBytes <= 4 * 1024 + 32 * 64,
+      s"bloom payload $bloomBytes exceeds the 4 KB budget")
+    val k = ev.select("event_id").head().getLong(0)
+    val hit = VersionedTable.readAsOfEq(
+      spark, root, Seq("event_id"), 0L, "event_id", k)
+    assert(hit.count() == 1, "capped bloom must stay correct")
+    // and a budget too small for even the floor omits the index
+    val root2 = freshRoot("vtbloomcap2")
+    initCapped(root2, 64) // 64 bytes across 32 files → below floor
+    val manifest2 = scala.io.Source.fromFile(
+      s"$root2/_commits/0.manifest", "UTF-8").getLines().toSeq
+    assert(!manifest2.exists(_.startsWith("#bloom\t")),
+      "sub-floor budget must omit the bloom index entirely")
+    val hit2 = VersionedTable.readAsOfEq(
+      spark, root2, Seq("event_id"), 0L, "event_id", k)
+    assert(hit2.count() == 1, "bloom-less table must still read correctly")
   }
 
   test("compactClustered re-layout makes both z-order dimensions prunable") {
@@ -335,5 +335,79 @@ class VersionedTableStatsSpec extends SparkSpecBase {
         spark, root, Seq("event_id"), 1L, Seq("value"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(a == b)
+  }
+
+  test("seeded sweep: pruned and projected reads agree with readAsOf at every version") {
+    // one chain through every commit kind — snapshot with blooms,
+    // upsert, delete, a column-adding upsert, a clustered compaction,
+    // then more deltas — and at each version the range, point and
+    // projected readers must equal readAsOf plus the same predicate or
+    // select (the schema-evolved versions included)
+    val rnd = new scala.util.Random(20261019L)
+    val root = freshRoot("vtsweep")
+    val keyCols = Seq("event_id")
+    val byValue = ev.select("event_id", "value").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._2)
+    val (lo, hi) = (byValue(byValue.length / 3)._2, byValue(byValue.length / 2)._2)
+    def pickWhere(p: Double => Boolean, not: Set[Long]): Long = {
+      val c = byValue.filter { case (id, v) => p(v) && !not(id) }
+      c(rnd.nextInt(c.length))._1
+    }
+    val updated = pickWhere(_ > hi, Set.empty)
+    val deleted = pickWhere(v => v >= lo && v <= hi, Set.empty)
+    val present = pickWhere(v => v >= lo && v <= hi, Set(deleted))
+    val deleted2 = pickWhere(v => v >= lo && v <= hi, Set(deleted, present))
+    val tagged = Seq(present, updated) ++
+      Seq.fill(3)(byValue(rnd.nextInt(byValue.length))._1)
+    val absent = -1L
+
+    VersionedTable.init(spark, root,
+      ev.repartitionByRange(4, col("value")), bloomCols = keyCols)      // v0
+    VersionedTable.commitUpsert(spark, root, ev                         // v1
+      .where(col("event_id") === updated).withColumn("value", lit((lo + hi) / 2)))
+    VersionedTable.commitDelete(spark, root,                            // v2
+      spark.range(1).select(lit(deleted).as("event_id")))
+    VersionedTable.commitUpsert(spark, root, ev                         // v3
+      .where(col("event_id").isin(tagged: _*))
+      .withColumn("tag", concat(lit("t"), col("event_id").cast("string"))))
+    VersionedTable.compactClustered(spark, root, keyCols,               // v4
+      Seq("value"), nFiles = 4, bloomCols = keyCols)
+    VersionedTable.commitUpsert(spark, root, ev                         // v5
+      .where(col("event_id") === updated).withColumn("value", lit(lo)))
+    VersionedTable.commitDelete(spark, root,                            // v6
+      spark.range(1).select(lit(deleted2).as("event_id")))
+    assert(VersionedTable.versions(spark, root) == (0L to 6L))
+
+    def bag(rows: Seq[Seq[Any]]) = rows.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toSeq)
+    (0L to 6L).foreach { v =>
+      val full = VersionedTable.readAsOf(spark, root, keyCols, v)
+      val cols = full.columns.toSeq
+      assert(cols.contains("tag") == (v >= 3), s"v=$v columns $cols")
+      val all = rowsOf(full)
+      val idAt = cols.indexOf("event_id")
+
+      val (range, keptR, totalR) = VersionedTable.readAsOfRangePruned(
+        spark, root, keyCols, v, "value", lo, hi)
+      assert(range.columns.toSeq == cols, s"v=$v range columns")
+      assert(bag(rowsOf(range)) ==
+        bag(rowsOf(full.where(col("value").between(lo, hi)))), s"v=$v range")
+      assert(keptR < totalR, s"v=$v range pruned nothing ($keptR/$totalR)")
+
+      Seq(present, updated, deleted, absent).foreach { k =>
+        val (eq, keptE, totalE) = VersionedTable.readAsOfEqPruned(
+          spark, root, keyCols, v, "event_id", k)
+        assert(eq.columns.toSeq == cols, s"v=$v key $k columns")
+        assert(bag(rowsOf(eq)) == bag(all.filter(_(idAt) == k)), s"v=$v key $k")
+        assert(keptE < totalE, s"v=$v key $k pruned nothing ($keptE/$totalE)")
+      }
+
+      val wanted = Seq("value") ++ (if (v >= 3) Seq("tag") else Nil)
+      val projected = VersionedTable.readAsOfColumns(spark, root, keyCols, v, wanted)
+      val keep = keyCols ++ wanted
+      assert(projected.columns.toSeq == keep, s"v=$v projected columns")
+      assert(bag(rowsOf(projected)) ==
+        bag(all.map(r => keep.map(c => r(cols.indexOf(c))))), s"v=$v projected")
+    }
   }
 }
