@@ -155,8 +155,11 @@ object CatalogFixtures {
     y.unionByName(m)
   }
 
-  /** The relational fixtures of one sf dir, each built on first use,
-    * so a gate reads only the tables behind the entities it touches. */
+  /** The relational fixtures of one sf dir and the forward entities
+    * over them, each built on first use, so a gate reads only the
+    * tables behind the entities it touches. The `*WithSkew`/`WithSd`
+    * flavour is the one the reverse migration consumes: every SD
+    * carries a full skewedInfo struct and every partition its own SD. */
   class Bundle(spark: SparkSession, sfDir: String) {
     lazy val dbs: DataFrame = CatalogFixtures.dbs(spark, sfDir)
     lazy val dbParams: DataFrame = CatalogFixtures.dbParams(spark, sfDir)
@@ -171,6 +174,21 @@ object CatalogFixtures {
     lazy val partitionsRel: DataFrame = CatalogFixtures.partitions(spark, sfDir)
     lazy val partKeyVals: DataFrame = CatalogFixtures.partitionKeyVals(spark, sfDir)
     lazy val partKeys: DataFrame = CatalogFixtures.partitionKeys(spark, sfDir)
+
+    lazy val databasesT: DataFrame = MetastoreTransformer.databases(dbs, dbParams)
+    lazy val sdsT: DataFrame =
+      MetastoreTransformer.storageDescriptors(sds, serdes, columnsV2, skewed)
+    lazy val tablesT: DataFrame =
+      MetastoreTransformer.tables(databasesT, tbls, tblParams, sdsT, partKeys)
+    lazy val partitionsT: DataFrame =
+      MetastoreTransformer.partitions(partitionsRel, partKeyVals, tablesT)
+
+    lazy val sdsWithSkewT: DataFrame = MetastoreTransformer.storageDescriptorsWithSkew(
+      sds, serdes, columnsV2, skewed, skewedVals, skewedLocMap)
+    lazy val tablesWithSkewT: DataFrame =
+      MetastoreTransformer.tables(databasesT, tbls, tblParams, sdsWithSkewT, partKeys)
+    lazy val partitionsWithSdT: DataFrame = MetastoreTransformer.partitionsWithSd(
+      partitionsRel, partKeyVals, tablesWithSkewT, sdsWithSkewT)
   }
 
   /** The equivalent DuckDB CTE block, kept in lock-step with the Scala

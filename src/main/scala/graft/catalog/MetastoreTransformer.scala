@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.{AggOps, ColumnOps, JoinOps}
 import graft.functions.{StringFns, TimeFns}
@@ -64,23 +64,27 @@ object MetastoreTransformer {
         ColumnOps.fillEmptyArray(col("skewedColumnNames"), "string").as("skewedColumnNames"))
   }
 
-  /** J4/A4 fidelity: skewed values + location map joined through
-    * STRING_LIST_ID (reference `transform_skewed_values_and_loc_map`
+  /** [[storageDescriptors]] with its skewed names moved into a full
+    * skewedInfo struct, plus the J4/A4 skewed values and location map
+    * joined through STRING_LIST_ID (reference
+    * `transform_skewed_values_and_loc_map`
     * hive_metastore_migration.py:568-617). Per SD:
     *  - skewedColumnValues = the SD's value lists flattened in
     *    STRING_LIST_ID order (the reference's aggregateByKey
     *    append/extend);
     *  - skewedColumnValueLocationMaps = encoded-list-string → LOCATION.
+    * Each field is filled on its own (F13): an SD without loc-map rows
+    * gets `[]`/an empty map, whatever its names.
     * The encoded key uses the Glue storage format `<n>%['a', 'b']` that
     * F6 (`udf_string_list_str_to_list`) decodes — the reference's F5
     * per-element encoding and its F6 decoder are mutually inconsistent
     * (both are kept faithfully as functions; see Codecs.scala), so the
     * roundtrippable form is the one the decoder accepts. */
-  def skewedInfo(skewedColNames: DataFrame, skewedStringListValues: DataFrame,
-                 skewedColValueLocMap: DataFrame): DataFrame = {
-    val names = AggOps.collectSortedByIdx(
-      skewedColNames, "SD_ID", "INTEGER_IDX", col("SKEWED_COL_NAME"),
-      "skewedColumnNames")
+  def storageDescriptorsWithSkew(sds: DataFrame, serdes: DataFrame,
+                                 columnsV2: DataFrame, skewedColNames: DataFrame,
+                                 skewedStringListValues: DataFrame,
+                                 skewedColValueLocMap: DataFrame): DataFrame = {
+    val base = storageDescriptors(sds, serdes, columnsV2, skewedColNames)
     val lists = AggOps.collectSortedByIdx(
       skewedStringListValues, "STRING_LIST_ID", "INTEGER_IDX",
       col("STRING_LIST_VALUE"), "vals")
@@ -88,34 +92,23 @@ object MetastoreTransformer {
       concat(size(col("vals")).cast("string"), lit("%["),
         array_join(transform(col("vals"), v => concat(lit("'"), v, lit("'"))), ", "),
         lit("]")).as("encodedStr"))
-    val withLoc = skewedColValueLocMap.join(encoded,
-      col("STRING_LIST_ID_KID") === col("STRING_LIST_ID"), "inner")
-    val perSd = withLoc.groupBy("SD_ID").agg(
-      map_from_entries(array_sort(
-        collect_list(struct(col("encodedStr"), col("LOCATION")))))
-        .as("skewedColumnValueLocationMaps"),
-      flatten(array_sort(
-        collect_list(struct(col("STRING_LIST_ID"), col("vals"))))
-        .getField("vals")).as("skewedColumnValues"))
-    names.join(perSd, Seq("SD_ID"), "outer")
-  }
-
-  /** [[storageDescriptors]] plus a full skewedInfo struct per SD (empty
-    * arrays/map where the SD has no skew rows — F13 fills). */
-  def storageDescriptorsWithSkew(sds: DataFrame, serdes: DataFrame,
-                                 columnsV2: DataFrame, skewedColNames: DataFrame,
-                                 skewedStringListValues: DataFrame,
-                                 skewedColValueLocMap: DataFrame): DataFrame = {
-    val base = storageDescriptors(sds, serdes, columnsV2, skewedColNames)
-    val skew = skewedInfo(skewedColNames, skewedStringListValues, skewedColValueLocMap)
-      .select(col("SD_ID"), struct(
-        col("skewedColumnNames"), col("skewedColumnValues"),
-        col("skewedColumnValueLocationMaps")).as("skewedInfo"))
-    base.join(skew, Seq("SD_ID"), "left_outer")
-      .withColumn("skewedInfo", coalesce(col("skewedInfo"), struct(
-        array().cast("array<string>").as("skewedColumnNames"),
-        array().cast("array<string>").as("skewedColumnValues"),
-        map().cast("map<string,string>").as("skewedColumnValueLocationMaps"))))
+    val perSd = skewedColValueLocMap
+      .join(encoded, col("STRING_LIST_ID_KID") === col("STRING_LIST_ID"), "inner")
+      .groupBy("SD_ID").agg(
+        map_from_entries(array_sort(
+          collect_list(struct(col("encodedStr"), col("LOCATION")))))
+          .as("skewedColumnValueLocationMaps"),
+        flatten(array_sort(
+          collect_list(struct(col("STRING_LIST_ID"), col("vals"))))
+          .getField("vals")).as("skewedColumnValues"))
+    base.join(perSd, Seq("SD_ID"), "left_outer")
+      .select(base.columns.filter(_ != "skewedColumnNames").map(col).toSeq :+
+        struct(col("skewedColumnNames"),
+          ColumnOps.fillEmptyArray(col("skewedColumnValues"), "string")
+            .as("skewedColumnValues"),
+          coalesce(col("skewedColumnValueLocationMaps"),
+            map().cast("map<string,string>")).as("skewedColumnValueLocationMaps"))
+          .as("skewedInfo"): _*)
   }
 
   /** Tables: dbs⋈tbls (J1), params (A2), SD as one struct column (J3),
@@ -156,10 +149,26 @@ object MetastoreTransformer {
       struct(sdsTransformed.columns.toSeq.filter(_ != "SD_ID").map(col): _*)
         .as("storageDescriptor"))
 
-  /** Partitions: idx-sorted values (A3), SD struct (J3), db/table names
-    * (J8), Gson timestamps. Reference :708-751. */
+  /** Partitions: idx-sorted values (A3), db/table names (J8), Gson
+    * timestamps. Reference :708-751. */
   def partitions(partitionsRel: DataFrame, partitionKeyVals: DataFrame,
-                 tablesTransformed: DataFrame, sdsForPartitions: DataFrame): DataFrame = {
+                 tablesTransformed: DataFrame): DataFrame =
+    assemblePartitions(partitionsRel, partitionKeyVals, tablesTransformed)
+
+  /** [[partitions]] plus each partition's own SD packed as a struct
+    * (J3; the metastore model gives every partition an SDS row;
+    * reference extract_sds :1010-1024 relies on it for the reverse
+    * path). */
+  def partitionsWithSd(partitionsRel: DataFrame, partitionKeyVals: DataFrame,
+                       tablesTransformed: DataFrame,
+                       sdsTransformed: DataFrame): DataFrame =
+    assemblePartitions(partitionsRel, partitionKeyVals, tablesTransformed,
+        col("SD_ID"))
+      .join(sdStruct(sdsTransformed), col("SD_ID") === col("__sd_id"), "left_outer")
+      .drop("SD_ID", "__sd_id")
+
+  private def assemblePartitions(partitionsRel: DataFrame, partitionKeyVals: DataFrame,
+                                 tablesTransformed: DataFrame, keep: Column*): DataFrame = {
     val vals = AggOps.collectSortedByIdx(
       partitionKeyVals, "PART_ID", "INTEGER_IDX", col("PART_KEY_VAL"), "values")
     val tblNames = tablesTransformed.select(col("TBL_ID"),
@@ -167,26 +176,12 @@ object MetastoreTransformer {
     partitionsRel
       .join(vals, Seq("PART_ID"), "left_outer")
       .join(tblNames, Seq("TBL_ID"), "inner")
-      .select(
+      .select(Seq(
         col("PART_ID"),
         col("database"), col("table"),
         ColumnOps.fillEmptyArray(col("values"), "string").as("values"),
         TimeFns.utcSecondsToIso8601(col("CREATE_TIME")).as("creationTime"),
         StringFns.partitionName(col("partitionKeys"), col("values")).as("partitionName"),
-        lit("partition").as("type"))
-  }
-
-  /** [[partitions]] plus each partition's own SD packed as a struct
-    * (the metastore model gives every partition an SDS row; reference
-    * extract_sds :1010-1024 relies on it for the reverse path). */
-  def partitionsWithSd(partitionsRel: DataFrame, partitionKeyVals: DataFrame,
-                       tablesTransformed: DataFrame,
-                       sdsTransformed: DataFrame): DataFrame = {
-    val base = partitions(partitionsRel, partitionKeyVals, tablesTransformed,
-      sdsTransformed)
-    base
-      .join(partitionsRel.select(col("PART_ID"), col("SD_ID")), Seq("PART_ID"), "left_outer")
-      .join(sdStruct(sdsTransformed), col("SD_ID") === col("__sd_id"), "left_outer")
-      .drop("SD_ID", "__sd_id")
+        lit("partition").as("type")) ++ keep: _*)
   }
 }

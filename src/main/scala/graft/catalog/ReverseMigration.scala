@@ -1,8 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.IdOps
+import graft.ops.{AggOps, IdOps}
 import graft.functions.{Codecs, TimeFns}
 
 /** The full reverse catalog migration ("to-metastore"): nested entity
@@ -15,9 +15,13 @@ import graft.functions.{Codecs, TimeFns}
   * Composition of the already-gated pieces: A7 start ids (max+1 per id
   * column), A8 consecutive id generation (IdOps.generateConsecutiveIds
   * over a DETERMINISTIC sort, so an external oracle can replay ids as
-  * row_number arithmetic), F10/F11/F20 decompositions
-  * (posexplode/map-explode), J9-J12 back-joins, U2 SD union, F6 skewed
-  * string-list decode, and the W5 FK-ordered JDBC load.
+  * row_number arithmetic), the F10/F11/F20 decompositions below
+  * (posexplode/map-explode: posexplode replaces the reference's
+  * array→index-map UDF + explode emulation `udf_array_to_map`/
+  * `generate_idx_for_df` :803-870, keeping ordinal positions without a
+  * UDF round trip and inside whole-stage codegen), J9-J12 back-joins,
+  * U2 SD union, F6 skewed string-list decode, and the W5 FK-ordered
+  * JDBC load.
   *
   * Determinism contract (stronger than the reference, whose zipWithIndex
   * order is partition-incidental): ids are assigned in sorted entity
@@ -69,14 +73,45 @@ object ReverseMigration {
     "PARTITION_KEY_VALS" -> Seq("PARTITIONS"))
 
   /** A7 (`get_start_id_for_id_name` :1205-1225): max(id)+1 per id
-    * column of the existing metastore, 0 for absent/empty tables. */
-  def startId(existing: Option[DataFrame], idCol: String): Long =
-    existing match {
-      case None => 0L
-      case Some(df) =>
-        val r = df.agg(max(col(idCol))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0) + 1L
-    }
+    * column of the existing metastore, 0 for an empty table. Each
+    * source table is read once: SDS's three id columns come from one
+    * aggregate, so the seven start ids cost five driver actions.
+    * Keys are the [[transform]] `startIds` keys. */
+  def startIds(existing: CatalogFixtures.Bundle): Map[String, Long] =
+    Seq(existing.dbs -> Seq("DB_ID"), existing.tbls -> Seq("TBL_ID"),
+        existing.sds -> Seq("SD_ID", "CD_ID", "SERDE_ID"),
+        existing.partitionsRel -> Seq("PART_ID"),
+        existing.skewedLocMap -> Seq("STRING_LIST_ID_KID"))
+      .flatMap { case (df, ids) =>
+        val r = df.agg(max(col(ids.head)), ids.tail.map(c => max(col(c))): _*).head()
+        ids.indices.map(i => ids(i) -> (if (r.isNullAt(i)) 0L else r.getLong(i) + 1L))
+      }.toMap
+
+  /** Decompose storage-descriptor owners' column arrays → COLUMNS_V2
+    * rows (reference extract_from_sds_columns :1081-1100 via
+    * generate_idx_for_df), keyed by `idCol`. */
+  def columnsFromTables(tables: DataFrame, idCol: String = "TBL_ID"): DataFrame =
+    tables.select(col(idCol),
+        posexplode(col("storageDescriptor.columns")).as(Seq("INTEGER_IDX", "c")))
+      .select(col(idCol), col("INTEGER_IDX"),
+        col("c.name").as("COLUMN_NAME"), col("c.type").as("TYPE_NAME"))
+
+  /** Decompose parameters maps → (id, PARAM_KEY, PARAM_VALUE) rows
+    * (reference params_to_df :881-884). */
+  def paramsFromEntities(entities: DataFrame, idCol: String): DataFrame =
+    AggOps.mapToRows(entities, idCol, "parameters", "PARAM_KEY", "PARAM_VALUE")
+
+  /** Decompose partition entities → PARTITION_KEY_VALS rows. */
+  def partitionKeyVals(partitions: DataFrame): DataFrame =
+    partitions.select(col("PART_ID"),
+        posexplode(col("values")).as(Seq("INTEGER_IDX", "PART_KEY_VAL")))
+
+  /** Decompose partitionKeys arrays → PARTITION_KEYS rows. */
+  def partitionKeysFromTables(tables: DataFrame): DataFrame =
+    tables.select(col("TBL_ID"),
+        posexplode(col("partitionKeys")).as(Seq("INTEGER_IDX", "k")))
+      .select(col("TBL_ID"), col("INTEGER_IDX"),
+        col("k.name").as("PKEY_NAME"), col("k.type").as("PKEY_TYPE"))
 
   /** Entities → 19 relational tables (reference `transform`
     * :1227-1247 + the extract_from_* decompositions :1064-1177).
@@ -86,7 +121,7 @@ object ReverseMigration {
     *                   parameters, partitionKeys, storageDescriptor)
     * @param partitionsE (database, table, values, creationTime,
     *                   storageDescriptor); partitionName is recomputed
-    * @param startIds   per-id start values (see [[startId]]); keys
+    * @param startIds   per-id start values (see [[startIds]]); keys
     *                   DB_ID, TBL_ID, SD_ID, CD_ID, SERDE_ID, PART_ID,
     *                   STRING_LIST_ID_KID
     */
@@ -117,8 +152,7 @@ object ReverseMigration {
     val dbsOut = msDbs.select(col("DB_ID"), col("name").as("NAME"),
       coalesce(col("locationUri"), lit("")).as("DB_LOCATION_URI"),
       col("description").as("DESC"))
-    val dbParamsOut = msDbs.select(col("DB_ID"),
-      explode(col("parameters")).as(Seq("PARAM_KEY", "PARAM_VALUE")))
+    val dbParamsOut = paramsFromEntities(msDbs, "DB_ID")
 
     // --- TBLS (extract_tbls :938-946): FK to DB_ID, gen TBL_ID ---
     val tblsKeyed = tablesE
@@ -189,10 +223,7 @@ object ReverseMigration {
         lit("").as("COLUMN_NAME"), lit(0).as("ORDER"))
 
     // --- COLUMNS_V2 (extract_from_sds_columns :1081-1100) ---
-    val columnsOut = sdsIdd.select(col("CD_ID"),
-        posexplode(sd.getField("columns")).as(Seq("INTEGER_IDX", "c")))
-      .select(col("CD_ID"), col("INTEGER_IDX"),
-        col("c.name").as("COLUMN_NAME"), col("c.type").as("TYPE_NAME"))
+    val columnsOut = columnsFromTables(sdsIdd, "CD_ID")
 
     // --- skewed family (extract_from_sds_skewed_info :1126-1177):
     // names explode; loc-map explode + STRING_LIST_ID_KID gen; encoded
@@ -219,12 +250,8 @@ object ReverseMigration {
       col("name").as("TBL_NAME"), col("SD_ID"),
       TimeFns.iso8601ToUtcSeconds(col("createTime")).as("CREATE_TIME"),
       col("owner").as("OWNER"), col("tableType").as("TBL_TYPE"))
-    val tblParamsOut = msTblsSd.select(col("TBL_ID"),
-      explode(col("parameters")).as(Seq("PARAM_KEY", "PARAM_VALUE")))
-    val partitionKeysOut = msTblsSd.select(col("TBL_ID"),
-        posexplode(col("partitionKeys")).as(Seq("INTEGER_IDX", "k")))
-      .select(col("TBL_ID"), col("INTEGER_IDX"),
-        col("k.name").as("PKEY_NAME"), col("k.type").as("PKEY_TYPE"))
+    val tblParamsOut = paramsFromEntities(msTblsSd, "TBL_ID")
+    val partitionKeysOut = partitionKeysFromTables(msTblsSd)
 
     // --- PARTITIONS + children (extract_from_partitions :1139-1155) ---
     val partsWithTbl = msPartsSd.join(
@@ -238,8 +265,7 @@ object ReverseMigration {
       col("partitionName").as("PART_NAME"))
     val partParamsOut = partitionsOut.where(lit(false))
       .select(col("PART_ID"), lit("").as("PARAM_KEY"), lit("").as("PARAM_VALUE"))
-    val partKeyValsOut = msPartsSd.select(col("PART_ID"),
-      posexplode(col("values")).as(Seq("INTEGER_IDX", "PART_KEY_VAL")))
+    val partKeyValsOut = partitionKeyVals(msPartsSd)
 
     Map(
       "DBS" -> dbsOut, "DATABASE_PARAMS" -> dbParamsOut,

@@ -130,10 +130,16 @@ object VersionedTable {
     /** The manifest body: the data dir (`data/v=N-<uuid>` under the
       * root, or `ext:<absolute dir>` when borrowed), the snapshot
       * flag, one line per data file, then the `#rows`, `#stats` and
-      * `#bloom` metadata lines. */
+      * `#bloom` metadata lines. Files and each metadata section are
+      * sorted, so one commit renders the same bytes whatever order the
+      * listing and the bloom aggregation return; [[parse]] reads
+      * lines in any order. */
     def render(dirLine: String, snapshot: Boolean, files: Seq[String],
-               meta: Seq[String]): String =
-      (Seq(dirLine, s"snapshot=$snapshot") ++ files ++ meta).mkString("\n")
+               meta: Seq[String]): String = {
+      val sections = Seq("#rows\t", "#stats\t", "#bloom\t")
+      (Seq(dirLine, s"snapshot=$snapshot") ++ files.sorted ++
+        meta.sortBy(l => (sections.indexWhere(l.startsWith), l))).mkString("\n")
+    }
 
     def parse(root: String, v: Long, body: String): Manifest = {
       val lines = body.linesIterator.toSeq

@@ -13,21 +13,10 @@ import graft.ops.AggOps
   * hash-matches field-for-field. */
 object CatalogQueries extends graft.QueryModule {
 
-  /** The forward entities over the lazily built fixtures: a gate
-    * builds only the entities it reads and the fixtures behind them. */
-  private final class Fx(spark: SparkSession, sfDir: String)
-      extends CatalogFixtures.Bundle(spark, sfDir) {
-    lazy val databasesT = MetastoreTransformer.databases(dbs, dbParams)
-    lazy val sdsT = MetastoreTransformer.storageDescriptors(sds, serdes, columnsV2, skewed)
-    lazy val tablesT = MetastoreTransformer.tables(databasesT, tbls, tblParams, sdsT, partKeys)
-    lazy val partitionsT = MetastoreTransformer.partitions(
-      partitionsRel, partKeyVals, tablesT, sdsT)
-  }
-
-  /** Forward assembly of table entities, canonicalized. */
-  def catTablesAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
-    f.tablesT.select(
+  /** Table entities canonicalized to scalar CSV columns — the one
+    * form `catTablesSql` rebuilds. */
+  private def canonicalTables(tables: DataFrame): DataFrame =
+    tables.select(
       col("name"), col("database"), col("owner"), col("createTime"),
       col("storageDescriptor.location").as("location"),
       col("storageDescriptor.serdeInfo.serializationLibrary").as("serde_lib"),
@@ -38,7 +27,10 @@ object CatalogQueries extends graft.QueryModule {
       array_join(transform(col("partitionKeys"),
         k => concat(k.getField("name"), lit("("), k.getField("type"), lit(")"))), ",").as("partkeys_csv"))
       .orderBy("name")
-  }
+
+  /** Forward assembly of table entities, canonicalized. */
+  def catTablesAssemble(spark: SparkSession, sfDir: String): DataFrame =
+    canonicalTables(new CatalogFixtures.Bundle(spark, sfDir).tablesT)
   val catTablesSql: String = CatalogFixtures.duckCtes +
     """SELECT t.tbl_name AS name, d.name AS database, t.owner,
       |  strftime(make_timestamp(CAST(t.create_time AS BIGINT) * 1000000),
@@ -69,7 +61,7 @@ object CatalogQueries extends graft.QueryModule {
   /** Forward assembly of database entities (params map, fills, s3
     * normalization). */
   def catDatabasesAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
     f.databasesT.select(
       col("name"), col("description"), col("locationUri"),
       AggOps.mapToCanonicalString(col("parameters")).as("params_csv"))
@@ -87,7 +79,7 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Forward assembly of partition entities with F12 partition names. */
   def catPartitionsAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
     f.partitionsT.select(
       col("PART_ID").as("part_id"), col("database"), col("table"),
       array_join(col("values"), ",").as("vals_csv"),
@@ -116,29 +108,17 @@ object CatalogQueries extends graft.QueryModule {
     * direct assembly, proving empty-array/empty-map/nested-struct
     * roundtrip fidelity. */
   def catEntitiesJsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
     val dir = graft.core.GraftSession.scratch("cat-json")
-    val entities = f.tablesT
+    val entities = new CatalogFixtures.Bundle(spark, sfDir).tablesT
     graft.sources.Sinks.jsonOverwrite(entities, dir)
-    val back = graft.sources.Sinks.readJson(spark, entities.schema, dir)
-    back.select(
-      col("name"), col("database"), col("owner"), col("createTime"),
-      col("storageDescriptor.location").as("location"),
-      col("storageDescriptor.serdeInfo.serializationLibrary").as("serde_lib"),
-      array_join(transform(col("storageDescriptor.columns"),
-        c => concat(c.getField("name"), lit(":"), c.getField("type"))), ",").as("cols_csv"),
-      array_join(col("storageDescriptor.skewedColumnNames"), ",").as("skewed_csv"),
-      AggOps.mapToCanonicalString(col("parameters")).as("params_csv"),
-      array_join(transform(col("partitionKeys"),
-        k => concat(k.getField("name"), lit("("), k.getField("type"), lit(")"))), ",").as("partkeys_csv"))
-      .orderBy("name")
+    canonicalTables(graft.sources.Sinks.readJson(spark, entities.schema, dir))
   }
 
   /** Reverse: decompose assembled tables back into COLUMNS_V2 rows —
     * must reproduce the relational source exactly. */
   def catDecomposeColumns(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
-    DataCatalogTransformer.columnsFromTables(f.tablesT)
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
+    ReverseMigration.columnsFromTables(f.tablesT)
       .orderBy("TBL_ID", "INTEGER_IDX")
   }
   val catDecomposeColumnsSql: String = CatalogFixtures.duckCtes +
@@ -150,8 +130,8 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Reverse: decompose parameters maps back into param rows. */
   def catDecomposeParams(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
-    DataCatalogTransformer.paramsFromEntities(f.tablesT, "TBL_ID")
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
+    ReverseMigration.paramsFromEntities(f.tablesT, "TBL_ID")
       .orderBy("TBL_ID", "PARAM_KEY")
   }
   val catDecomposeParamsSql: String = CatalogFixtures.duckCtes +
@@ -160,8 +140,8 @@ object CatalogQueries extends graft.QueryModule {
 
   /** Reverse: partition values back to idx'd rows (posexplode ~ F11). */
   def catDecomposeKeyVals(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
-    DataCatalogTransformer.partitionKeyVals(f.partitionsT)
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
+    ReverseMigration.partitionKeyVals(f.partitionsT)
       .orderBy("PART_ID", "INTEGER_IDX")
   }
   val catDecomposeKeyValsSql: String = CatalogFixtures.duckCtes +

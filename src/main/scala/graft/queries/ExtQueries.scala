@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
 import graft.core.{GraftSession, Tables}
-import graft.catalog.{CatalogFixtures, CatalogIndex, MetastoreTransformer}
+import graft.catalog.{CatalogFixtures, CatalogIndex}
 import graft.ops.Upsert
 import graft.streaming.Sessionize
 
@@ -13,17 +13,9 @@ import graft.streaming.Sessionize
 object ExtQueries extends graft.QueryModule {
 
   /** W7/§7.1-7: table entities → search documents. */
-  def catIndexDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val dbsT = MetastoreTransformer.databases(
-      CatalogFixtures.dbs(spark, sfDir), CatalogFixtures.dbParams(spark, sfDir))
-    val sdsT = MetastoreTransformer.storageDescriptors(
-      CatalogFixtures.sds(spark, sfDir), CatalogFixtures.serdes(spark, sfDir),
-      CatalogFixtures.columnsV2(spark, sfDir), CatalogFixtures.skewedColNames(spark, sfDir))
-    val tablesT = MetastoreTransformer.tables(dbsT,
-      CatalogFixtures.tbls(spark, sfDir), CatalogFixtures.tblParams(spark, sfDir),
-      sdsT, CatalogFixtures.partitionKeys(spark, sfDir))
-    CatalogIndex.tableDocs(tablesT).orderBy("table")
-  }
+  def catIndexDocs(spark: SparkSession, sfDir: String): DataFrame =
+    CatalogIndex.tableDocs(new CatalogFixtures.Bundle(spark, sfDir).tablesT)
+      .orderBy("table")
   val catIndexSql: String = CatalogFixtures.duckCtes +
     """SELECT md5(d.name || '.' || t.tbl_name) AS doc_id,
       |  d.name AS database, t.tbl_name AS "table",

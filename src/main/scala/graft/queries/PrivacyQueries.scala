@@ -285,7 +285,7 @@ object PrivacyQueries extends graft.QueryModule {
     // the rung table feeds TWO consumers (the best-rung argmin and the
     // final release join); reaping the bounded QI base to a checkpoint
     // keeps the fact pass at exactly one scan instead of one per
-    // consumer (Round14Spec pins the scan count)
+    // consumer (PrivacyReleaseSpec pins the scan count)
     val base = graft.core.Caching.reap(
       Tables.customer(spark, sfDir)
         .groupBy(col("c_nationkey"), col("c_mktsegment"),

@@ -23,25 +23,11 @@ import graft.ops.AggOps
   */
 object ReverseQueries extends graft.QueryModule {
 
-  /** The forward entities, skew-aware, over the lazily built
-    * fixtures: a gate builds only what it reads. */
-  private final class Fx(spark: SparkSession, sfDir: String)
-      extends CatalogFixtures.Bundle(spark, sfDir) {
-    lazy val sdsT = MetastoreTransformer.storageDescriptorsWithSkew(
-      sds, serdes, columnsV2, skewed, skewedVals, skewedLocMap)
-    lazy val databasesT = MetastoreTransformer.databases(dbs, dbParams)
-    lazy val tablesT = MetastoreTransformer.tables(
-      databasesT, tbls, tblParams, sdsT, partKeys)
-    lazy val partitionsT = MetastoreTransformer.partitionsWithSd(
-      partitionsRel, partKeyVals, tablesT, sdsT)
-  }
-
   /** J4/A4: skewed SDs flattened to scalars — one row per loc-map
     * entry, with the names CSV, the STRING_LIST_ID-ordered flattened
     * values CSV, and the codec-encoded map key. */
   def catSdSkewedAssemble(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
-    f.sdsT
+    new CatalogFixtures.Bundle(spark, sfDir).sdsWithSkewT
       .where(size(col("skewedInfo.skewedColumnNames")) > 0)
       .select(col("SD_ID"),
         array_join(col("skewedInfo.skewedColumnNames"), ",").as("names_csv"),
@@ -77,10 +63,11 @@ object ReverseQueries extends graft.QueryModule {
     * attributes reachable through its FKs (table, db, its own SD +
     * serde, the owning table's skew family, column counts, key vals). */
   def catReverseE2e(spark: SparkSession, sfDir: String): DataFrame = {
-    val f = new Fx(spark, sfDir)
+    val f = new CatalogFixtures.Bundle(spark, sfDir)
     // The forward assembly is consumed through SEVERAL downstream
-    // lineages: sdsT feeds tablesT AND partitionsT directly, tablesT
-    // feeds partitionsT again, and transform() evaluates each entity
+    // lineages: sdsWithSkewT feeds tablesWithSkewT AND
+    // partitionsWithSdT directly, tablesWithSkewT feeds
+    // partitionsWithSdT again, and transform() evaluates each entity
     // input once more when filling its own id-pass caches. Un-persisted,
     // the skew-heavy SD assembly ran 3x inside one gate (r16 measured;
     // plans/r16/cat_reverse_e2e_before.txt repeats the same scan+agg
@@ -89,22 +76,13 @@ object ReverseQueries extends graft.QueryModule {
     // between queries scopes the blocks.
     locally {
       val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      Seq(f.databasesT, f.sdsT, f.tablesT).foreach(_.persist(disk))
+      Seq(f.databasesT, f.sdsWithSkewT, f.tablesWithSkewT).foreach(_.persist(disk))
     }
-    val starts = Map(
-      "DB_ID" -> ReverseMigration.startId(Some(f.dbs), "DB_ID"),
-      "TBL_ID" -> ReverseMigration.startId(Some(f.tbls), "TBL_ID"),
-      "SD_ID" -> ReverseMigration.startId(Some(f.sds), "SD_ID"),
-      "CD_ID" -> ReverseMigration.startId(Some(f.sds), "CD_ID"),
-      "SERDE_ID" -> ReverseMigration.startId(Some(f.sds), "SERDE_ID"),
-      "PART_ID" -> ReverseMigration.startId(Some(f.partitionsRel), "PART_ID"),
-      "STRING_LIST_ID_KID" ->
-        ReverseMigration.startId(Some(f.skewedLocMap), "STRING_LIST_ID_KID"))
     val rel = ReverseMigration.transform(
       f.databasesT.drop("DB_ID"),
-      f.tablesT.drop("TBL_ID"),
-      f.partitionsT.drop("PART_ID"),
-      starts)
+      f.tablesWithSkewT.drop("TBL_ID"),
+      f.partitionsWithSdT.drop("PART_ID"),
+      ReverseMigration.startIds(f))
     val url = s"jdbc:derby:memory:graftrev${System.nanoTime()};create=true"
     ReverseMigration.exportToMetastore(rel, url)
 

@@ -112,9 +112,10 @@ object SourceQueries extends graft.QueryModule {
     * then a range-partitioned parallel JDBC read back and join. */
   def s6JdbcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val url = s"jdbc:derby:memory:graft${System.nanoTime()};create=true"
-    JdbcIO.writeOrdered(url, Seq(
-      "REGION" -> Tables.region(spark, sfDir),
-      "NATION" -> Tables.nation(spark, sfDir)), SaveMode.Overwrite)
+    JdbcIO.writeLeveled(url, Seq(
+        "REGION" -> Tables.region(spark, sfDir),
+        "NATION" -> Tables.nation(spark, sfDir)),
+      Map("NATION" -> Seq("REGION")), SaveMode.Overwrite)
     val nation = JdbcIO.readPartitioned(spark, url, "NATION",
       "n_nationkey", 0, 25, 4)
     val region = JdbcIO.read(spark, url, "REGION")

@@ -52,23 +52,6 @@ object JdbcIO {
     w.save()
   }
 
-  /** W5: FK-ordered multi-table load — parents before children, each
-    * load its own parallel Spark job (reference `:1312-1336`). */
-  def writeOrdered(url: String, tables: Seq[(String, DataFrame)],
-                   mode: SaveMode = SaveMode.Append): Unit =
-    tables.foreach { case (name, df) => write(df, url, name, mode) }
-
-  /** W5 at scale: FK-LEVEL-parallel load. The FK constraint only
-    * orders parents before children — tables in the same dependency
-    * level are independent and their writes can run CONCURRENTLY as
-    * separate Spark jobs (Spark's scheduler interleaves their tasks;
-    * with fair pools each level saturates the cluster instead of
-    * paying 19 serial job setups + stragglers). Barrier per level.
-    *
-    * `deps`: table → direct FK parents. Tables absent from `deps`
-    * have no parents. Levels are computed topologically; a cycle is
-    * a caller error and throws.
-    */
   /** Dependency level per table: 0 for parentless, else
     * 1 + max(parent levels). Throws on a cycle. */
   def fkLevels(names: Seq[String],
@@ -83,6 +66,18 @@ object JdbcIO {
     level.toMap
   }
 
+  /** W5: FK-LEVEL-parallel multi-table load (reference `:1312-1336`
+    * writes serially in FK order). The FK constraint only orders
+    * parents before children — tables in the same dependency level
+    * are independent and their writes can run CONCURRENTLY as
+    * separate Spark jobs (Spark's scheduler interleaves their tasks;
+    * with fair pools each level saturates the cluster instead of
+    * paying 19 serial job setups + stragglers). Barrier per level.
+    *
+    * `deps`: table → direct FK parents. Tables absent from `deps`
+    * have no parents. Levels are computed topologically; a cycle is
+    * a caller error and throws.
+    */
   def writeLeveled(url: String, tables: Seq[(String, DataFrame)],
                    deps: Map[String, Seq[String]],
                    mode: SaveMode = SaveMode.Append): Unit = {

@@ -3,61 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
 
-/** Round-14 wave pins: the DuckDB gates prove both engines run the
-  * same formula; these re-derive each new operator from first
-  * principles in plain Scala (hand-cut excision on a planted corpus,
-  * a sequential k-anonymity ladder, the exact clipped-sum noise
-  * arithmetic) and pin the distributed implementations against them,
-  * plus plan-shape invariants for the new gates. */
-class Round14Spec extends SparkSpecBase {
-  import spark.implicits._
-
-  // ---- SpanDedup.excise ----
-
-  test("excise equals the hand-computed cut on a planted corpus") {
-    val w = 3
-    // docs 1 and 2 share the exact 5-token run "p q r s t"; doc 3
-    // repeats a window only WITHIN itself (cross-doc test must not
-    // cut it); doc 4 is shorter than one window (survives whole)
-    val docs = Seq(
-      (1L, "a b c p q r s t u v"),
-      (2L, "x y p q r s t z"),
-      (3L, "m n o m n o m n o"),
-      (4L, "s t")).toDF("doc_id", "text")
-    val got = graft.dedup.SpanDedup.excise(docs, "doc_id", "text", w)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    def md5(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    // doc 1: duplicated windows at positions 3..5 -> cut tokens 3..7
-    // ("p q r s t"), keep "a b c u v"
-    // doc 2: windows 2..4 -> cut tokens 2..6, keep "x y z"
-    assert(got.toSeq == Seq(
-      (1L, 10L, 5L, md5("a b c u v")),
-      (2L, 8L, 3L, md5("x y z")),
-      (3L, 9L, 9L, md5("m n o m n o m n o")),
-      (4L, 2L, 2L, md5("s t"))), got.mkString("; "))
-  }
-
-  test("excise conserves tokens against maximalDupSpans' cut geometry") {
-    val docs = graft.core.Tables.documents(spark, sfDir)
-      .select("doc_id", "text").where(col("doc_id") < 300)
-    val cuts = graft.dedup.SpanDedup
-      .maximalDupSpans(docs, "doc_id", "text", 8)
-      .groupBy("doc_id").agg(sum("cut_tokens").as("cut"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ex = graft.dedup.SpanDedup.excise(docs, "doc_id", "text", 8)
-      .collect()
-    assert(ex.nonEmpty)
-    ex.foreach { r =>
-      val (id, n, kept) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      assert(n - kept == cuts.getOrElse(id, 0L),
-        s"doc $id: n=$n kept=$kept cut=${cuts.getOrElse(id, 0L)}")
-    }
-  }
-
-  // ---- PrivacyQueries.privKRelease ----
+/** The privacy release gates against plain-Scala recomputations: the
+  * k-anonymous release equals the sequential generalization ladder,
+  * the DP sum equals the clipped sum plus its pseudo-noise, and both
+  * plans stay keyed. */
+class PrivacyReleaseSpec extends SparkSpecBase {
 
   test("priv_k_release equals the sequential generalization ladder") {
     val K = 5
@@ -85,8 +35,6 @@ class Round14Spec extends SparkSpecBase {
     // the release is k-anonymous by construction
     assert(got.forall(_._5 >= K))
   }
-
-  // ---- PrivacyQueries.privDpSum ----
 
   test("priv_dp_sum equals the clipped-sum + pseudo-noise recompute") {
     val perCust = graft.core.Tables.orders(spark, sfDir)
@@ -125,18 +73,10 @@ class Round14Spec extends SparkSpecBase {
     }
   }
 
-  // ---- plan shapes of the round's new gates ----
-
   private def planOf(name: String): String = {
     GraftSession.tune(spark)
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
-  }
-
-  test("dedup_substring_excise joins cut intervals on the doc key, never all-pairs") {
-    val p = planOf("dedup_substring_excise")
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), s"non-keyed join in:\n$p")
   }
 
   test("priv_dp_sum / priv_k_release stay keyed (bounded NLJ only)") {

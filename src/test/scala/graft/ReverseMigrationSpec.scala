@@ -9,43 +9,13 @@ import graft.catalog._
   * codec roundtrip. */
 class ReverseMigrationSpec extends SparkSpecBase {
 
-  private lazy val f = new {
-    val dbs = CatalogFixtures.dbs(spark, sfDir)
-    val dbParams = CatalogFixtures.dbParams(spark, sfDir)
-    val tbls = CatalogFixtures.tbls(spark, sfDir)
-    val tblParams = CatalogFixtures.tblParams(spark, sfDir)
-    val sds = CatalogFixtures.sds(spark, sfDir)
-    val serdes = CatalogFixtures.serdes(spark, sfDir)
-    val columnsV2 = CatalogFixtures.columnsV2(spark, sfDir)
-    val skewed = CatalogFixtures.skewedColNames(spark, sfDir)
-    val skewedVals = CatalogFixtures.skewedStringListValues(spark, sfDir)
-    val skewedLocMap = CatalogFixtures.skewedColValueLocMap(spark, sfDir)
-    val partitionsRel = CatalogFixtures.partitions(spark, sfDir)
-    val partKeyVals = CatalogFixtures.partitionKeyVals(spark, sfDir)
-    val partKeys = CatalogFixtures.partitionKeys(spark, sfDir)
-  }
+  private lazy val f = new CatalogFixtures.Bundle(spark, sfDir)
+  private lazy val starts = ReverseMigration.startIds(f)
 
-  private lazy val rel: Map[String, org.apache.spark.sql.DataFrame] = {
-    val sdsT = MetastoreTransformer.storageDescriptorsWithSkew(
-      f.sds, f.serdes, f.columnsV2, f.skewed, f.skewedVals, f.skewedLocMap)
-    val databasesT = MetastoreTransformer.databases(f.dbs, f.dbParams)
-    val tablesT = MetastoreTransformer.tables(
-      databasesT, f.tbls, f.tblParams, sdsT, f.partKeys)
-    val partitionsT = MetastoreTransformer.partitionsWithSd(
-      f.partitionsRel, f.partKeyVals, tablesT, sdsT)
+  private lazy val rel: Map[String, org.apache.spark.sql.DataFrame] =
     ReverseMigration.transform(
-      databasesT.drop("DB_ID"), tablesT.drop("TBL_ID"),
-      partitionsT.drop("PART_ID"),
-      Map(
-        "DB_ID" -> ReverseMigration.startId(Some(f.dbs), "DB_ID"),
-        "TBL_ID" -> ReverseMigration.startId(Some(f.tbls), "TBL_ID"),
-        "SD_ID" -> ReverseMigration.startId(Some(f.sds), "SD_ID"),
-        "CD_ID" -> ReverseMigration.startId(Some(f.sds), "CD_ID"),
-        "SERDE_ID" -> ReverseMigration.startId(Some(f.sds), "SERDE_ID"),
-        "PART_ID" -> ReverseMigration.startId(Some(f.partitionsRel), "PART_ID"),
-        "STRING_LIST_ID_KID" ->
-          ReverseMigration.startId(Some(f.skewedLocMap), "STRING_LIST_ID_KID")))
-  }
+      f.databasesT.drop("DB_ID"), f.tablesWithSkewT.drop("TBL_ID"),
+      f.partitionsWithSdT.drop("PART_ID"), starts)
 
   test("all 19 metastore tables are produced in FK write order") {
     assert(ReverseMigration.writeOrder.size == 19)
@@ -76,17 +46,36 @@ class ReverseMigrationSpec extends SparkSpecBase {
     def ids(t: String, c: String): Seq[Long] =
       rel(t).select(col(c).cast("long")).collect().map(_.getLong(0)).toSeq.sorted
     val dbIds = ids("DBS", "DB_ID")
-    val dbStart = ReverseMigration.startId(Some(f.dbs), "DB_ID")
+    val dbStart = starts("DB_ID")
     assert(dbIds == (dbStart until dbStart + dbIds.size))
     val tblIds = ids("TBLS", "TBL_ID")
-    val tblStart = ReverseMigration.startId(Some(f.tbls), "TBL_ID")
+    val tblStart = starts("TBL_ID")
     assert(tblIds == (tblStart until tblStart + tblIds.size))
     val sdIds = ids("SDS", "SD_ID")
-    val sdStart = ReverseMigration.startId(Some(f.sds), "SD_ID")
+    val sdStart = starts("SD_ID")
     assert(sdIds == (sdStart until sdStart + sdIds.size))
     val partIds = ids("PARTITIONS", "PART_ID")
-    val partStart = ReverseMigration.startId(Some(f.partitionsRel), "PART_ID")
+    val partStart = starts("PART_ID")
     assert(partIds == (partStart until partStart + partIds.size))
+  }
+
+  test("startIds continue above each existing id column; an empty table starts at 0") {
+    def next(df: org.apache.spark.sql.DataFrame, c: String): Long =
+      df.agg(max(col(c))).head().getLong(0) + 1L
+    assert(starts == Map(
+      "DB_ID" -> next(f.dbs, "DB_ID"), "TBL_ID" -> next(f.tbls, "TBL_ID"),
+      "SD_ID" -> next(f.sds, "SD_ID"), "CD_ID" -> next(f.sds, "CD_ID"),
+      "SERDE_ID" -> next(f.sds, "SERDE_ID"),
+      "PART_ID" -> next(f.partitionsRel, "PART_ID"),
+      "STRING_LIST_ID_KID" -> next(f.skewedLocMap, "STRING_LIST_ID_KID")))
+    val full = f
+    val noSds = new CatalogFixtures.Bundle(spark, sfDir) {
+      override lazy val sds = full.sds.limit(0)
+    }
+    val fresh = ReverseMigration.startIds(noSds)
+    assert(Seq("SD_ID", "CD_ID", "SERDE_ID").map(fresh) == Seq(0L, 0L, 0L))
+    assert(fresh - "SD_ID" - "CD_ID" - "SERDE_ID" ==
+      starts - "SD_ID" - "CD_ID" - "SERDE_ID")
   }
 
   test("FK closure: every child id resolves to a parent row") {

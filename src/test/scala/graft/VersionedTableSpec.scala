@@ -93,6 +93,49 @@ class VersionedTableSpec extends SparkSpecBase {
     intercept[Exception] { state(root, 1L) }
   }
 
+  test("two identical publishes render equal manifests; any line order still reads") {
+    val s = spark
+    import s.implicits._
+    val df = (1L to 400L).map(i => (i, i * 0.5)).toDF("k", "v")
+      .repartition(8, col("v"))
+    val roots = Seq(freshRoot(), freshRoot())
+    roots.foreach(r => VersionedTable.init(spark, r, df, bloomCols = Seq("k")))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def path(root: String) = new org.apache.hadoop.fs.Path(s"$root/_commits/0.manifest")
+    def lines(root: String): Seq[String] = {
+      val in = path(root).getFileSystem(conf).open(path(root))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+      finally in.close()
+    }
+    // the data dir and its part files carry the write's UUID
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def masked(root: String): Seq[String] = lines(root).map(_.replaceAll(uuid, "<uuid>"))
+    assert(masked(roots(0)) == masked(roots(1)))
+    val body = lines(roots(0)).drop(2)
+    for (section <- Seq[String => Boolean](!_.startsWith("#"), _.startsWith("#rows\t"),
+        _.startsWith("#stats\t"), _.startsWith("#bloom\t"))) {
+      val part = body.filter(section)
+      assert(part.nonEmpty && part == part.sorted, part.mkString("\n"))
+    }
+    // manifests written before the sort list files in listing order
+    // and interleave the metadata: readers parse any line order
+    val root = roots(0)
+    def views = {
+      val (hit, kept, total) = VersionedTable.readAsOfEqPruned(
+        spark, root, Seq("k"), 0L, "k", 200L)
+      (state(root, 0L), VersionedTable.rowCountOf(spark, root, 0L),
+        hit.collect().toSeq, kept, total)
+    }
+    val sorted = views
+    assert(sorted._2 == Some(400L) && sorted._3.size == 1 && sorted._4 < sorted._5)
+    val legacy = (lines(root).take(2) ++ body.reverse).mkString("\n")
+    val out = path(root).getFileSystem(conf).create(path(root), true)
+    try out.write(legacy.getBytes("UTF-8"))
+    finally out.close()
+    VersionedTable.invalidateCache(spark, root)
+    assert(views == sorted)
+  }
+
   test("an uninitialized root fails with a reason that names it") {
     val s = spark
     import s.implicits._
