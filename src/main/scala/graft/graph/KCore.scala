@@ -40,19 +40,36 @@ object KCore {
     * simply takes the shuffle path. */
   val BroadcastNodeCap: Long = 4000000L
 
+  /** The canonical undirected edge list of arbitrary (a, b) pairs:
+    * direction and duplicates ignored, self-loops and null endpoints
+    * dropped. This is the input [[peelRounds]] requires, for callers
+    * whose pairs lack that guarantee; it costs one shuffle (the
+    * `distinct`). */
+  def undirected(pairs: DataFrame): DataFrame = pairs
+    .select(least(col("a"), col("b")).as("a"),
+      greatest(col("a"), col("b")).as("b"))
+    .where(col("a") =!= col("b"))
+    .distinct()
+
   /** Per-round survival statistics for `rounds` peels at threshold
-    * `k` over an edge list given as (a, b) pairs (direction/dups
-    * ignored, self-loops dropped). Output: (round, n_nodes, n_edges)
-    * where n_nodes counts nodes meeting the threshold that round and
-    * n_edges the edges with both endpoints surviving. */
+    * `k` over an undirected edge list of CANONICAL (a, b) pairs: `a < b`,
+    * no null endpoint, no pair twice ([[undirected]] makes any pair list
+    * so). E_0 is the input as given, checkpointed by one job with no
+    * exchange; that job also counts the rows with `a >= b` or a null
+    * endpoint, and any such row throws `IllegalArgumentException`.
+    * Duplicates are the caller's to remove: seeing them takes a
+    * shuffle. Output: (round, n_nodes, n_edges) where n_nodes counts
+    * nodes meeting the threshold that round and n_edges the edges with
+    * both endpoints surviving. */
   def peelRounds(pairs: DataFrame, k: Int, rounds: Int,
                  broadcastCap: Long = BroadcastNodeCap): DataFrame = {
     val spark = pairs.sparkSession
-    val e0 = pairs
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
+    // checkpointed even when `pairs` is a parquet scan: re-reading it
+    // every round read 4x the bytes and was slower (graph_kcore, sf0.1)
+    val badObs = Observation()
+    val e0 = pairs.select("a", "b")
+      .observe(badObs, count(when(col("a").isNull || col("b").isNull ||
+        col("a") >= col("b"), 1)).as("n"))
       .localCheckpoint()
     // E_0 restricted to both endpoints in `keep` (None: every node, the
     // survivor set before round 1). Broadcasting the survivor set makes
@@ -69,6 +86,12 @@ object KCore {
     // A subtree that AQE proves empty (a semi-join against an empty
     // survivor set) never runs and reports no metric: zero rows.
     def rows(o: Observation): Long = o.get.getOrElse("n", 0L).asInstanceOf[Long]
+    val bad = rows(badObs)
+    if (bad > 0) {
+      graft.core.Caching.releaseCheckpoint(e0)
+      throw new IllegalArgumentException(s"peelRounds needs canonical pairs " +
+        s"(a < b, no null endpoint): $bad rows are not; see KCore.undirected")
+    }
     var keep = Option.empty[(DataFrame, Long)]
     val counts = (1 to rounds).map { _ =>
       val edgeObs = Observation()

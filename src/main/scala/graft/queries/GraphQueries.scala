@@ -22,9 +22,8 @@ object GraphQueries extends graft.QueryModule {
     * bench run; the scratch materialization pays the expansion once
     * and the three other gates read a parquet a fraction of
     * lineitem's size. Derivations: PageRank uses (src,dst,w) as-is;
-    * the undirected forms (`src < dst` or least/greatest+distinct)
-    * are exact because the list is symmetric and already unique per
-    * direction.
+    * the undirected edge list is its `src < dst` half
+    * ([[undirectedEdges]]).
     *
     * Co-occurrence itself is built via per-order BASKETS, not a
     * fact-table self-join: one shuffle to the basket (collect_list),
@@ -52,6 +51,18 @@ object GraphQueries extends graft.QueryModule {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** The undirected co-purchase edge list (a, b): the `src < dst` half
+    * of the symmetric [[coEdges]] fixture. Its pairs are canonical
+    * (`a < b`), distinct and non-null with no self-loops, since the
+    * fixture holds one row per (src, dst) after a `src =!= dst` filter
+    * and `<` drops nulls. `undDeg` counts rows as degree on that
+    * guarantee, and `KCore.peelRounds` takes the list as it is, with
+    * no canonicalizing shuffle. */
+  private def undirectedEdges(spark: SparkSession, sfDir: String): DataFrame =
+    coEdges(spark, sfDir)
+      .where(col("src") < col("dst"))
+      .select(col("src").as("a"), col("dst").as("b"))
+
   /** SHARED closed-triangle fixture: the (u, x, y, du, dx, dy) stream
     * of every triangle in the co-purchase graph — u the lowest-
     * (degree, id) corner, (x, y) its degree-ordered legs, d* the plain
@@ -68,9 +79,7 @@ object GraphQueries extends graft.QueryModule {
     * dataset you materialize once and serve many audits from. */
   private def triStream(spark: SparkSession, sfDir: String): DataFrame = {
     val (path, schema) = GraftSession.shared(s"graph_tri#$sfDir") { p =>
-      val und = coEdges(spark, sfDir)
-        .where(col("src") < col("dst"))
-        .select(col("src").as("a"), col("dst").as("b"))
+      val und = undirectedEdges(spark, sfDir)
       val deg = und.select(col("a").as("id"))
         .unionAll(und.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
@@ -107,9 +116,7 @@ object GraphQueries extends graft.QueryModule {
   /** Plain degrees of the undirected co-purchase graph (id, d) —
     * small helper shared by the triangle-family consumers. */
   private def undDeg(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = coEdges(spark, sfDir)
-      .where(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
+    val und = undirectedEdges(spark, sfDir)
     und.select(col("a").as("id"))
       .unionAll(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -260,11 +267,7 @@ object GraphQueries extends graft.QueryModule {
     * hubs). Everything is keyed aggregation; the regression runs over
     * the DISTINCT-degree table, which is at most √(2E) rows. */
   def graphDegreeStats(spark: SparkSession, sfDir: String): DataFrame = {
-    // the symmetric weighted list has each undirected edge exactly
-    // twice (both directions); src < dst keeps each once
-    val und = coEdges(spark, sfDir)
-      .where(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
+    val und = undirectedEdges(spark, sfDir)
     val deg = und.select(col("a").as("id"))
       .unionAll(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -298,12 +301,11 @@ object GraphQueries extends graft.QueryModule {
     * unrolls the identical peel — degree, threshold, both-endpoint
     * edge filter — three times; a drifted threshold or a
     * single-endpoint filter bug breaks the counts immediately. The
-    * `src < dst` half of the symmetric fixture is already the
-    * undirected edge list, so half the rows reach the peel's distinct. */
+    * peel takes [[undirectedEdges]] as it is: already canonical, so no
+    * edge-sized shuffle runs before round 1. */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame =
-    graft.graph.KCore.peelRounds(coEdges(spark, sfDir)
-      .where(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b")), k = 3, rounds = 3)
+    graft.graph.KCore.peelRounds(undirectedEdges(spark, sfDir), k = 3,
+      rounds = 3)
   private def kcoreRound(n: Int, prev: String): String =
     s"""d$n AS (
        |  SELECT id, count(*) AS d FROM (
@@ -383,9 +385,7 @@ object GraphQueries extends graft.QueryModule {
     * cross-engine round-half drift), which checks every edge's score
     * without E output rows. */
   def graphEdgeJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = coEdges(spark, sfDir)
-      .where(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
+    val und = undirectedEdges(spark, sfDir)
     val deg = undDeg(spark, sfDir)
     // per-edge triangle counts from the SHARED materialized triangle
     // stream (the wedge-closure join is paid once per sf, not per gate)

@@ -1,19 +1,23 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.core.GateMetrics
 import graft.graph.KCore
 
 /** `graph.KCore.peelRounds` against a Scala reference peel that
   * recomputes every round from the edge set, as the `graph_kcore`
   * oracle does — so the operator's nested-survivor-set shortcut is
-  * checked, not assumed — plus its job structure and the isolation of
-  * its per-round statistics. */
-class KCoreSpec extends SparkSpecBase {
+  * checked, not assumed — plus its canonical-input check, its job
+  * structure and the isolation of its per-round statistics. */
+class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  /** Reference peel under the operator's contract: direction and
-    * duplicates ignored, self-loops dropped. */
+  /** Reference peel of `peelRounds(KCore.undirected(pairs), …)`:
+    * direction and duplicates ignored, self-loops dropped. */
   private def refPeel(pairs: Seq[(Long, Long)], k: Int,
                       rounds: Int): Seq[(Int, Long, Long)] = {
     var edges = pairs.collect { case (a, b) if a != b =>
@@ -50,7 +54,7 @@ class KCoreSpec extends SparkSpecBase {
     var edges = (for {
       a <- nodes; b <- nodes if a < b && rnd.nextInt(4) == 0
     } yield (a, b)).toSet
-    val df = edges.toSeq.toDF("a", "b")
+    val df = KCore.undirected(edges.toSeq.toDF("a", "b"))
     val got = KCore.peelRounds(df, k = 3, rounds = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val expected = (1 to 3).map { r =>
@@ -83,7 +87,7 @@ class KCoreSpec extends SparkSpecBase {
       "messy" -> messy, "self-loops only" -> Seq((1L, 1L), (2L, 2L)))
     for {
       (name, pairs) <- graphs
-      df = pairs.toDF("a", "b")
+      df = KCore.undirected(pairs.toDF("a", "b"))
       k <- Seq(1, 2, 3, 5)
       rounds <- Seq(0, 1, 3, 6)
     } {
@@ -98,6 +102,47 @@ class KCoreSpec extends SparkSpecBase {
     assert(refPeel(sparse, 2, 6).map(_._2).distinct == Seq(34L, 33L))
     val shrinking = refPeel(sparse, 3, 6).map(_._2)
     assert(shrinking.zip(shrinking.tail).forall { case (a, b) => a > b })
+  }
+
+  test("pairs that are not canonical throw; KCore.undirected canonicalizes them") {
+    val triangle = Seq((1L, 2L), (2L, 3L), (1L, 3L))
+    val blocks0 = spark.sparkContext.getPersistentRDDs.keySet
+    for ((name, extra) <- Seq("a reversed pair" -> (3L, 1L), "a self-loop" -> (2L, 2L))) {
+      val pairs = triangle :+ extra
+      val e = intercept[IllegalArgumentException](peel(pairs.toDF("a", "b"), 2, 2))
+      assert(e.getMessage.contains(": 1 rows"), s"$name: ${e.getMessage}")
+      assert(peel(KCore.undirected(pairs.toDF("a", "b")), 2, 2) == refPeel(pairs, 2, 2),
+        name)
+    }
+    val withNull = (triangle.map { case (a, b) => (Option(a), Option(b)) } :+
+      (Some(4L), None)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](peel(withNull, 2, 2))
+    assert(e.getMessage.contains(": 1 rows"), s"a null endpoint: ${e.getMessage}")
+    assert(peel(KCore.undirected(withNull), 2, 2) == refPeel(triangle, 2, 2))
+    // a rejected input releases its checkpoint
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == blocks0.toSet)
+  }
+
+  test("canonical input is checkpointed by one job with no shuffle") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val df = sparse.toDF("a", "b")
+    GateMetrics.measure(spark)(()) // earlier tests' executions have all arrived
+    spark.listenerManager.register(listener)
+    val jobs = try GateMetrics.measure(spark)(KCore.peelRounds(df, 3, 0))
+      finally spark.listenerManager.unregister(listener)
+    assert(jobs.size == 1, jobs)
+    // the bus delivered the checkpoint's execution end before the
+    // measuring barrier's start
+    assert(plans.size == 1)
+    plans.forEach { p =>
+      val shuffles = collectWithSubqueries(p) { case s: ShuffleExchangeLike => s }
+      assert(shuffles.isEmpty, s"E_0 is built by a shuffle:\n$p")
+    }
   }
 
   test("each further round costs at most three jobs") {

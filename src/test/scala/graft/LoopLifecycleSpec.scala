@@ -107,7 +107,8 @@ class LoopLifecycleSpec extends SparkSpecBase {
       .toDF("a", "b")
     // stats only: the result is rebuilt from literals, no spill backs it
     assertLifecycle("KCore.peelRounds", spills = 0) {
-      graft.graph.KCore.peelRounds(pairs, k = 2, rounds = 2)
+      graft.graph.KCore.peelRounds(graft.graph.KCore.undirected(pairs),
+        k = 2, rounds = 2)
     } { out =>
       val stats = out.collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

@@ -72,6 +72,34 @@ class PrivacyLedgerSpec extends SparkSpecBase {
     assert(now.getAs[Boolean]("over_budget"))
   }
 
+  test("budget audit trips on the release that exceeds the source budget") {
+    import graft.privacy.PrivacyLedger._
+    def spent(n: Int): (Boolean, Double) = {
+      val log = spark.createDataFrame((1 to n).map(i =>
+        Release(s"rel_$i", "customer", "laplace_count", 0.5, 0.0, 1.0)))
+      val r = audit(log, budgets).collect()(0)
+      (r.getAs[Boolean]("over_budget"), r.getAs[Double]("eps_spent"))
+    }
+    assert(spent(1) == (false, 0.5)) // first release: within budget
+    assert(spent(2) == (false, 1.0)) // second: exactly exhausts it
+    val third = spent(3)             // third re-release: composition trips
+    assert(third == (true, 1.5), s"third release did not trip: $third")
+  }
+
+  test("budget audit lists budgeted sources with zero releases") {
+    import graft.privacy.PrivacyLedger._
+    val log = spark.createDataFrame(
+      Seq(Release("r1", "customer", "laplace_sum", 0.25, 0.0, 100.0)))
+    val twoBudgets = spark.createDataFrame(
+      Seq(Budget("customer", 1.0, 1e-6), Budget("events", 0.5, 0.0)))
+    val rows = audit(log, twoBudgets).orderBy("source").collect()
+    assert(rows.length == 2)
+    val ev = rows.find(_.getString(0) == "events").get
+    assert(ev.getLong(1) == 0L && ev.getDouble(2) == 0.0
+      && !ev.getAs[Boolean]("over_budget"))
+    assert(ev.getDouble(5) == 0.5) // eps_remaining = untouched budget
+  }
+
   test("privDpCounts registers one laplace_count spend per call") {
     val root = graft.privacy.PrivacyLedger.newScratchLedger()
     graft.queries.PrivacyQueries.privDpCounts(spark, sfDir, root).count()

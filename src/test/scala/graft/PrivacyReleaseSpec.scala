@@ -5,9 +5,25 @@ import graft.core.GraftSession
 
 /** The privacy release gates against plain-Scala recomputations: the
   * k-anonymous release equals the sequential generalization ladder,
-  * the DP sum equals the clipped sum plus its pseudo-noise, and both
+  * the DP sum equals the clipped sum plus its pseudo-noise, the DP
+  * mean's denominator floor engages on a planted tiny group, and both
   * plans stay keyed. */
 class PrivacyReleaseSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  /** Replicates Sketches.hash60 for a salt: the first 15 hex chars of
+    * md5(salt + key) as a long, mapped into (0, 1). */
+  private def u(salt: String, nk: Int): Double = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest((salt + nk).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.substring(0, 15)
+    (java.lang.Long.parseLong(hex, 16).toDouble + 1.0) / 1.152921504606846976e18
+  }
+  /** The pseudo-noise Lap(b) draw the release adds for key `nk`. */
+  private def lap(salt: String, b: Double, nk: Int): Double = {
+    val uu = u(salt, nk)
+    -b * math.signum(uu - 0.5) * math.log(1.0 - 2.0 * math.abs(uu - 0.5))
+  }
 
   test("priv_k_release equals the sequential generalization ladder") {
     val K = 5
@@ -49,16 +65,6 @@ class PrivacyReleaseSpec extends SparkSpecBase {
       nat.get(ck).map(n => n -> math.min(cents, 10000000L))
     }.groupBy(_._1).view
       .mapValues(v => (v.map(_._2).sum, v.size)).toMap
-    def u(salt: String, nk: Int): Double = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest((salt + nk).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 15)
-      (java.lang.Long.parseLong(hex, 16).toDouble + 1.0) / 1.152921504606846976e18
-    }
-    def lap(salt: String, b: Double, nk: Int): Double = {
-      val uu = u(salt, nk)
-      -b * math.signum(uu - 0.5) * math.log(1.0 - 2.0 * math.abs(uu - 0.5))
-    }
     val got = graft.queries.PrivacyQueries.privDpSum(spark, sfDir)
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
     assert(got.nonEmpty)
@@ -71,6 +77,29 @@ class PrivacyReleaseSpec extends SparkSpecBase {
       assert(math.abs(noisySum - ws) < 1e-4, s"nation $nk sum")
       assert(math.abs(noisyMean - wm) < 1e-4, s"nation $nk mean")
     }
+  }
+
+  test("DP mean floors its noisy denominator at 1 for tiny groups") {
+    // find a key whose Lap(1/eps=2) count-noise is < -1: with n = 2
+    // the noisy count 2 + lap < 1 forces the floor
+    val key = (0 until 200)
+      .find(k => 2.0 + lap("dpn:", 2.0, k) < 1.0)
+      .getOrElse(fail("no key with a deep-negative count draw in 0..200"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-dpfloor-").toString
+    Seq((1L, 500.0), (2L, 700.0)).toDF("o_custkey", "o_totalprice")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    Seq((1L, key), (2L, key)).toDF("c_custkey", "c_nationkey")
+      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    val row = graft.queries.PrivacyQueries
+      .privDpSum(spark, dir).collect()
+    assert(row.length == 1)
+    val (sum, mean) = (row(0).getDouble(1), row(0).getDouble(2))
+    // floored denominator = 1 exactly => released mean == released sum
+    assert(mean == sum,
+      s"floor did not engage: noisy_mean $mean != noisy_sum $sum " +
+        s"(key=$key, lap=${lap("dpn:", 2.0, key)})")
+    assert(!mean.isNaN && !mean.isInfinite)
   }
 
   private def planOf(name: String): String = {

@@ -86,6 +86,10 @@ class SpanDedupSpec extends SparkSpecBase {
 
   // ---- excise ----
 
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   test("excise equals the hand-computed cut on a planted corpus") {
     val w = 3
     // docs 1 and 2 share the exact 5-token run "p q r s t"; doc 3
@@ -99,9 +103,6 @@ class SpanDedupSpec extends SparkSpecBase {
     val got = graft.dedup.SpanDedup.excise(docs, "doc_id", "text", w)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-    def md5(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     // doc 1: duplicated windows at positions 3..5 -> cut tokens 3..7
     // ("p q r s t"), keep "a b c u v"
     // doc 2: windows 2..4 -> cut tokens 2..6, keep "x y z"
@@ -110,6 +111,32 @@ class SpanDedupSpec extends SparkSpecBase {
       (2L, 8L, 3L, md5("x y z")),
       (3L, 9L, 9L, md5("m n o m n o m n o")),
       (4L, 2L, 2L, md5("s t"))), got.mkString("; "))
+  }
+
+  test("excise sweep handles abutting, island-merged, and bridged cuts") {
+    // Three geometries for the merged-interval sweep: doc 1 has two
+    // well-separated cut islands; doc 2's dup-window runs are within
+    // w of each other so maximalDupSpans merges them into ONE island
+    // covering the whole doc (empty survivor); doc 3's islands are
+    // > w apart, leaving exactly the one bridge token between the two
+    // token-disjoint cuts.
+    val w = 3
+    val docs = Seq(
+      (1L, "z1 z2 p q r s z3 z4 u v w x"),
+      (2L, "p q r s u v w x"),
+      (3L, "p q r s k u v w x")
+    ).toDF("doc_id", "text")
+    val got = graft.dedup.SpanDedup.excise(docs, "doc_id", "text", w)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+    // doc 1: cuts cover "p q r s" (2..5) and "u v w x" (8..11)
+    assert(got(0) == (1L, 12L, 4L, md5("z1 z2 z3 z4")), got(0).toString)
+    // doc 2: everything duplicated -> empty survivor
+    assert(got(1) == (2L, 8L, 0L, md5("")), got(1).toString)
+    // doc 3: both 4-gram runs duplicated, "k" between them is NOT
+    // part of any duplicated window pair across docs... the k-window
+    // bridge windows contain k and are unique to doc 3, so k survives
+    assert(got(2) == (3L, 9L, 1L, md5("k")), got(2).toString)
   }
 
   test("excise conserves tokens against maximalDupSpans' cut geometry") {
