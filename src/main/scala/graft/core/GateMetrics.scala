@@ -1,12 +1,14 @@
 package graft.core
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** The engine's one Spark job collector: [[measure]] lists every job
-  * that starts while a body runs, for the profiler and the specs.
+  * that starts while a body runs, for the profiler and the specs;
+  * [[compiles]] counts generated-code compiles.
   *
   * The window closes with a marked barrier job. The listener bus
   * delivers events in the order they were posted, so once the
@@ -26,6 +28,12 @@ object GateMetrics {
   final case class Job(id: Int, site: String, startMs: Long, endMs: Long)
 
   private val BarrierKey = "graft.metrics.barrier"
+
+  /** Generated classes compiled in this JVM so far, by any thread. The
+    * codegen cache updates this histogram inside its loader, so it
+    * counts Janino compiles (cache misses), not cache lookups; the
+    * difference across a body is what that body compiled. */
+  def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The jobs started while `body` runs, in start order. If `body`
     * throws, the exception propagates and nothing is returned. */

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Arrival-driven ingestion (SURVEY.md §2.9 T1-T5) re-expressed as
   * Structured Streaming.
@@ -24,8 +26,9 @@ import org.apache.spark.sql.types.StructType
   *    analog).
   *
   * Scale: the file source lists incrementally (maxFilesPerTrigger
-  * bounds batch size); routing/stage-write is a narrow map; only the
-  * control-row aggregation shuffles, on (file, route) — tiny.
+  * bounds batch size); routing/stage-write is a narrow map; the
+  * control rows are counted per task and summed on the driver (one row
+  * per file and route — tiny), so no step shuffles.
   */
 object IngestionPipeline {
 
@@ -78,6 +81,32 @@ object IngestionPipeline {
       header: Boolean = true,
       maxFilesPerTrigger: Option[Int] = None)
 
+  /** Columns of a control row. */
+  private val controlSchema = StructType(Seq(
+    StructField("object_key", StringType, nullable = false),
+    StructField("route", StringType, nullable = false),
+    StructField("n_rows", LongType, nullable = false),
+    StructField("batch_id", LongType, nullable = false),
+    StructField("status", StringType, nullable = false)))
+
+  /** Rows per (src_file, route) of one micro-batch, in key order. Each
+    * task counts its own rows and the driver sums the counts: a batch
+    * holds few files, so this is one job with no shuffle, and the
+    * control and index writes both read its result instead of each
+    * aggregating the batch again. */
+  private def fileCounts(routed: DataFrame): Seq[((String, String), Long)] = {
+    val s = routed.sparkSession
+    import s.implicits._
+    routed.select(col("src_file"), col("route")).as[(String, String)]
+      .mapPartitions { rows =>
+        val n = mutable.HashMap.empty[(String, String), Long]
+        rows.foreach(k => n(k) = n.getOrElse(k, 0L) + 1L)
+        n.iterator
+      }
+      .collect().toSeq
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+  }
+
   /** Run the ingestion pipeline over all currently-available files
     * (Trigger.AvailableNow — the batch-drain mode; omit the trigger for
     * continuous operation). Writes:
@@ -110,11 +139,10 @@ object IngestionPipeline {
           routed.drop("src_file")
             .write.mode("append").partitionBy("route").parquet(stageDir)
           // control rows (T2): idempotent on (object_key, batch_id)
-          val ctl = routed.groupBy("src_file", "route")
-            .agg(count(lit(1)).as("n_rows"))
-            .select(col("src_file").as("object_key"), col("route"),
-              col("n_rows"), lit(batchId).as("batch_id"),
-              lit(Status.Loaded).as("status"))
+          val ctl = batch.sparkSession.createDataFrame(
+            fileCounts(routed).map { case ((file, route), n) =>
+              Row(file, route, n, batchId, Status.Loaded)
+            }.asJava, controlSchema).coalesce(1)
           ctl.write.mode("append").parquet(controlDir)
           // index fan-out (T4)
           ctl.select(md5(col("object_key")).as("doc_id"), col("object_key"),

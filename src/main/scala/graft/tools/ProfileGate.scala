@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * call site. A job still running when the rep returned reads
   * `unended`. Then one `[site]` line per call site (summed duration,
   * job count). Ends with one
-  * `[gate] <name> jobs <n> wall <s>` line per gate, the final rep's
-  * job count and wall.
+  * `[gate] <name> jobs <n> compiles <c> wall <s>` line per gate: the
+  * final rep's job count, generated classes compiled
+  * ([[GateMetrics.compiles]]) and wall.
   */
 object ProfileGate {
   def main(args: Array[String]): Unit = {
@@ -49,7 +50,12 @@ object ProfileGate {
       }
       (1 until reps).foreach(rep)
       var wall = 0.0
-      val jobs = GateMetrics.measure(spark) { wall = rep(reps) }
+      var compiles = 0L
+      val jobs = GateMetrics.measure(spark) {
+        val c0 = GateMetrics.compiles
+        wall = rep(reps)
+        compiles = GateMetrics.compiles - c0
+      }
       def dur(j: GateMetrics.Job): Double = if (j.endMs < 0) 0.0 else (j.endMs - j.startMs) / 1e3
       println(s"--- $gate jobs (final rep) ---")
       var prevEnd = jobs.headOption.fold(0L)(_.startMs)
@@ -63,7 +69,7 @@ object ProfileGate {
       jobs.groupBy(_.site).view.mapValues(js => (js.map(dur).sum, js.size)).toSeq
         .sortBy(-_._2._1)
         .foreach { case (s, (t, n)) => println(f"[site] $t%8.3f s  n=$n%-3d $s") }
-      f"[gate] $gate jobs ${jobs.size} wall $wall%.3f"
+      f"[gate] $gate jobs ${jobs.size} compiles $compiles wall $wall%.3f"
     }
     summary.foreach(println)
     spark.stop()

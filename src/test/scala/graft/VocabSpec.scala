@@ -87,4 +87,51 @@ class VocabSpec extends SparkSpecBase {
     // lower-probability tokens -> lower score
     assert(out(2L) < out(1L))
   }
+
+  test("Kneser–Ney matches the independent reimplementation on random corpora") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(4242)
+    val vocab = Vector("a", "b", "c", "dd", "ee", "ff", "gg")
+    for (trial <- 1 to 5) {
+      val docs = (1L to (3 + rnd.nextInt(5))).map { id =>
+        val n = 2 + rnd.nextInt(12)
+        (id, Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      }
+      val D = 0.75
+      val bigrams = docs.flatMap { case (id, t) =>
+        val w = t.split("\\s+").filter(_.nonEmpty)
+        w.zip(w.tail).map(p => (id, p))
+      }
+      val cab = bigrams.groupBy(_._2).map { case (p, xs) => p -> xs.size }
+      val ctxa = cab.groupBy(_._1._1).map { case (a, m) => a -> m.values.sum }
+      val n1f = cab.groupBy(_._1._1).map { case (a, m) => a -> m.size }
+      val n1b = cab.groupBy(_._1._2).map { case (b, m) => b -> m.size }
+      val bb = cab.size.toDouble
+      def p(a: String, b: String): Double =
+        (cab((a, b)) - D) / ctxa(a) +
+          ((D * n1f(a)) / ctxa(a)) * (n1b(b) / bb)
+      val expected = docs.flatMap { case (id, t) =>
+        val w = t.split("\\s+").filter(_.nonEmpty)
+        val bs = w.zip(w.tail)
+        if (bs.isEmpty) None
+        else Some(id -> bs.map { case (a, b) => math.log(p(a, b)) }.sum / bs.size)
+      }.toMap
+      val got = graft.text.Vocab
+        .kneserNeyLogProb(docs.toDF("doc_id", "text"), "doc_id", "text")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == expected.keySet, s"trial $trial keys")
+      got.foreach { case (id, v) =>
+        assert(math.abs(v - expected(id)) < 1e-5,
+          s"trial $trial doc $id: got $v expected ${expected(id)}")
+      }
+      // every context's probability mass must close to 1
+      ctxa.keys.foreach { a =>
+        val seen = cab.collect { case ((x, b), _) if x == a => p(a, b) }.sum
+        val unseen = n1b.keys.toSeq.filterNot(b => cab.contains((a, b)))
+          .map(b => ((D * n1f(a)) / ctxa(a)) * (n1b(b) / bb)).sum
+        assert(math.abs(seen + unseen - 1.0) < 1e-9, s"trial $trial ctx $a")
+      }
+    }
+  }
 }
