@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY
 import scala.collection.mutable
 
 /** The engine's one Spark job collector: [[measure]] lists every job
@@ -24,8 +25,12 @@ import scala.collection.mutable
 object GateMetrics {
 
   /** One Spark job. `site` is the first line of its call site; `endMs`
-    * is -1 when the job had not ended by the closing barrier. */
-  final case class Job(id: Int, site: String, startMs: Long, endMs: Long)
+    * is -1 when the job had not ended by the closing barrier.
+    * `executionId` is the job's `spark.sql.execution.id` local property:
+    * the SQL query it ran for, shared by an adaptive query's stage jobs
+    * and its result job; None for a job outside any SQL execution. */
+  final case class Job(id: Int, site: String, startMs: Long, endMs: Long,
+                       executionId: Option[Long])
 
   private val BarrierKey = "graft.metrics.barrier"
 
@@ -45,13 +50,16 @@ object GateMetrics {
     // its writes to the caller
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (barrier.getCount > 0)
-        Option(e.properties).map(_.getProperty(BarrierKey)).orNull match {
-          case null => jobs(e.jobId) = Job(e.jobId,
-            e.stageInfos.lastOption.fold("?")(_.name.takeWhile(_ != '\n')), e.time, -1L)
-          case `token` => barrier.countDown()
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (barrier.getCount > 0) {
+        def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+        prop(BarrierKey) match {
+          case None => jobs(e.jobId) = Job(e.jobId,
+            e.stageInfos.lastOption.fold("?")(_.name.takeWhile(_ != '\n')), e.time, -1L,
+            prop(EXECUTION_ID_KEY).map(_.toLong))
+          case Some(`token`) => barrier.countDown()
           case _ => // another call's barrier
         }
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (barrier.getCount > 0)
           jobs.get(e.jobId).foreach(j => jobs(e.jobId) = j.copy(endMs = e.time))

@@ -40,23 +40,12 @@ object KCore {
     * simply takes the shuffle path. */
   val BroadcastNodeCap: Long = 4000000L
 
-  /** The canonical undirected edge list of arbitrary (a, b) pairs:
-    * direction and duplicates ignored, self-loops and null endpoints
-    * dropped. This is the input [[peelRounds]] requires, for callers
-    * whose pairs lack that guarantee; it costs one shuffle (the
-    * `distinct`). */
-  def undirected(pairs: DataFrame): DataFrame = pairs
-    .select(least(col("a"), col("b")).as("a"),
-      greatest(col("a"), col("b")).as("b"))
-    .where(col("a") =!= col("b"))
-    .distinct()
-
   /** Per-round survival statistics for `rounds` peels at threshold
     * `k` over an undirected edge list of CANONICAL (a, b) pairs: `a < b`,
-    * no null endpoint, no pair twice ([[undirected]] makes any pair list
-    * so). E_0 is the input as given, checkpointed by one job with no
-    * exchange; that job also counts the rows with `a >= b` or a null
-    * endpoint, and any such row throws `IllegalArgumentException`.
+    * no null endpoint, no pair twice ([[Undirected.canonical]] makes any
+    * pair list so). E_0 is the input as given, checkpointed by one job
+    * with no exchange; that job also counts the rows with `a >= b` or a
+    * null endpoint, and any such row throws `IllegalArgumentException`.
     * Duplicates are the caller's to remove: seeing them takes a
     * shuffle. Output: (round, n_nodes, n_edges) where n_nodes counts
     * nodes meeting the threshold that round and n_edges the edges with
@@ -90,7 +79,8 @@ object KCore {
     if (bad > 0) {
       graft.core.Caching.releaseCheckpoint(e0)
       throw new IllegalArgumentException(s"peelRounds needs canonical pairs " +
-        s"(a < b, no null endpoint): $bad rows are not; see KCore.undirected")
+        s"(a < b, no null endpoint): $bad rows are not; see " +
+        "Undirected.canonical")
     }
     var keep = Option.empty[(DataFrame, Long)]
     val counts = (1 to rounds).map { _ =>

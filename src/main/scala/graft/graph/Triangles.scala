@@ -3,9 +3,9 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Triangle counting + global clustering coefficient — the standard
-  * graph-cohesion statistics (spam/link-farm detection over crawl
-  * graphs, community density for corpus-source QA).
+/** Triangle counting + global and local clustering coefficients — the
+  * standard graph-cohesion statistics (spam/link-farm detection over
+  * crawl graphs, community density for corpus-source QA).
   *
   * Degree-ordered orientation: every undirected edge {a,b} is directed
   * from its lower-(degree, id) endpoint to the higher one, turning the
@@ -20,46 +20,59 @@ import org.apache.spark.sql.functions._
   * steps are plain keyed shuffles (degree agg, wedge join on the
   * common source, closure join on the (y,z) pair); nothing is
   * collected, no windows over the full graph.
+  *
+  * [[closed]] is the one enumeration; [[stats]] and [[perNode]] read
+  * its rows, so callers that want several statistics can materialize
+  * the closed triangles once and serve them all.
   */
 object Triangles {
 
-  /** One-row stats for an edge list given as (a, b) pairs: direction
-    * and duplicates are ignored, self-loops dropped. Returns
-    * (n_triangles, n_wedges, clustering) where n_wedges = Σ d(d−1)/2
-    * over plain degrees and clustering = 3·triangles / wedges (the
-    * transitivity ratio; 0 when the graph has no wedges). */
-  def stats(pairs: DataFrame): DataFrame = {
-    val und = pairs
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val deg = und.select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    // orient each edge toward the higher (degree, id); carry the
-    // out-endpoint's degree so the wedge join can order its two legs
-    // without a global rank (a row_number over all nodes would funnel
-    // V rows through one partition)
-    val withDeg = und
-      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") ||
+  /** Every closed triangle of a canonical edge list `und` (see
+    * [[Undirected]]) with degrees `deg` = `Undirected.degrees(und)`,
+    * once each, as (u, x, y, du, dx, dy): u the lowest-(degree, id)
+    * corner, (x, y) its two legs in (degree, id) order, d* the plain
+    * degrees. The corner degrees ride along for degree-weighted
+    * consumers (Adamic-Adar credits 1/ln(deg)). */
+  def closed(und: DataFrame, deg: DataFrame): DataFrame = {
+    // orient each edge toward the higher (degree, id); carry both
+    // endpoint degrees so the wedge join can order its two legs without
+    // a global rank (a row_number over all nodes would funnel V rows
+    // through one partition)
+    val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-    // wedges at the lowest-ranked corner, legs ordered by (deg, id)
-    val e1 = oriented.select(col("u"), col("v").as("x"), col("dv").as("dx"))
-    val e2 = oriented.select(col("u"), col("v").as("y"), col("dv").as("dy"))
-    val wedges = e1.join(e2, Seq("u"))
+    val o = und
+      .join(deg.withColumnRenamed("id", "a")
+        .withColumnRenamed("d", "da"), "a")
+      .join(deg.withColumnRenamed("id", "b")
+        .withColumnRenamed("d", "db"), "b")
+      .select(
+        when(fwd, col("a")).otherwise(col("b")).as("u"),
+        when(fwd, col("b")).otherwise(col("a")).as("v"),
+        when(fwd, col("da")).otherwise(col("db")).as("du"),
+        when(fwd, col("db")).otherwise(col("da")).as("dv"))
+    val o1 = o.select(col("u"), col("du"),
+      col("v").as("x"), col("dv").as("dx"))
+    val o2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
+    // wedges at the lowest-ranked corner, legs ordered by (deg, id);
+    // narrow BEFORE the closure join: the wedge stream is the big
+    // intermediate, so only the columns the output needs ride the
+    // (x, y) exchange
+    o1.join(o2, "u")
       .where(col("dx") < col("dy") ||
         (col("dx") === col("dy") && col("x") < col("y")))
-      .select(col("x"), col("y"))
-    val tri = wedges
-      .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-      .agg(count(lit(1)).as("n_triangles"))
+      .select("u", "du", "x", "dx", "y", "dy")
+      .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+      .select("u", "x", "y", "du", "dx", "dy")
+  }
+
+  /** One-row global stats from [[closed]]'s rows and the degrees they
+    * came from: (n_triangles, n_wedges, clustering) where n_wedges =
+    * Σ d(d−1)/2 over plain degrees and clustering = 3·triangles /
+    * wedges (the transitivity ratio; 0 when the graph has no wedges).
+    * On a graph with no edge at all the wedge sum is over no rows, so
+    * n_wedges and clustering are null, as SQL's `sum` gives. */
+  def stats(closed: DataFrame, deg: DataFrame): DataFrame = {
+    val tri = closed.agg(count(lit(1)).as("n_triangles"))
     // per-node wedge count stays integral (d(d−1) is even; integer
     // halving per term, then a long sum — no float accumulation)
     val wedgeTotal = deg
@@ -72,41 +85,15 @@ object Triangles {
           .as("clustering"))
   }
 
-  /** LOCAL clustering coefficient per node: (id, degree, n_triangles,
-    * coeff = 2·t / (d·(d−1))) for every node with degree ≥ 2 (the
-    * coefficient is undefined below). Same degree-ordered O(E^1.5)
-    * enumeration as [[stats]] — each triangle found once, then its
-    * THREE corners exploded map-side and counted per node, so the
-    * per-node redistribution adds one keyed aggregate over 3T rows,
-    * never a second wedge pass. Nodes in no triangle get coeff 0 via
-    * the left join (absence of evidence is a 0 coefficient, not a
-    * dropped row). */
-  def perNode(pairs: DataFrame): DataFrame = {
-    val und = pairs
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val deg = und.select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-    val withDeg = und
-      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val oriented = withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-    val e1 = oriented.select(col("u"), col("v").as("x"), col("dv").as("dx"))
-    val e2 = oriented.select(col("u"), col("v").as("y"), col("dv").as("dy"))
-    val wedges = e1.join(e2, Seq("u"))
-      .where(col("dx") < col("dy") ||
-        (col("dx") === col("dy") && col("x") < col("y")))
-      .select(col("u"), col("x"), col("y"))
-    val triCorners = wedges
-      .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+  /** LOCAL clustering coefficient per node from [[closed]]'s rows and
+    * their degrees: (id, degree, n_triangles, coeff = 2·t / (d·(d−1)))
+    * for every node with degree ≥ 2 (the coefficient is undefined
+    * below). Each triangle's THREE corners explode map-side into one
+    * keyed count over 3T rows — never a second wedge pass. Nodes in no
+    * triangle get coeff 0 via the left join (absence of evidence is a
+    * 0 coefficient, not a dropped row). */
+  def perNode(closed: DataFrame, deg: DataFrame): DataFrame = {
+    val triCorners = closed
       .select(explode(array(col("u"), col("x"), col("y"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_triangles"))
     deg.where(col("d") >= 2)

@@ -136,7 +136,7 @@ object AnalyticsQueries extends graft.QueryModule {
     * 2^{k−1} coalitions. The characteristic function is monotone by
     * construction — v(S) = conversions among users whose exposure set
     * ⊆ S — which buys the conservation law Σφ_c = v(full) − v(∅) that
-    * Round15cSpec pins. Shape: ONE keyed pass folds each user to a
+    * ShapleyAttributionSpec pins. Shape: ONE keyed pass folds each user to a
     * 4-bit exposure mask + converted flag; EVERYTHING afterwards lives
     * on the 16-row mask table (subset-sum join, coalition enumeration,
     * factorial weights as a popcount CASE) — exact Shapley is 2^k and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gate
 import graft.core.{GraftSession, Tables}
-import graft.graph.PageRank
+import graft.graph.{PageRank, Triangles, Undirected}
 
 /** Oracle-checked graph analytics. The DuckDB oracles replay the same
   * iterations UNROLLED (one CTE per round), so the Spark loop's
@@ -51,6 +51,17 @@ object GraphQueries extends graft.QueryModule {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** The oracle spelling of [[coEdges]], opening a WITH list: CTE `el`
+    * (src, dst, w), the symmetric weighted co-purchase edge list. */
+  private val coEdgesSql: String =
+    """WITH el AS (
+      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
+      |    CAST(count(*) AS DOUBLE) AS w
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+      |  GROUP BY 1, 2),
+      |""".stripMargin
+
   /** The undirected co-purchase edge list (a, b): the `src < dst` half
     * of the symmetric [[coEdges]] fixture. Its pairs are canonical
     * (`a < b`), distinct and non-null with no self-loops, since the
@@ -63,64 +74,58 @@ object GraphQueries extends graft.QueryModule {
       .where(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
 
-  /** SHARED closed-triangle fixture: the (u, x, y, du, dx, dy) stream
-    * of every triangle in the co-purchase graph — u the lowest-
-    * (degree, id) corner, (x, y) its degree-ordered legs, d* the plain
-    * degrees — materialized to scratch parquet ONCE per sf dir. The
-    * degree-ordered wedge-closure join is the O(E^1.5) step that
-    * dominates all four triangle-family gates (triangles, edge
-    * Jaccard, Adamic-Adar, local clustering); before this fixture each
-    * gate re-ran the same enumeration (~7 s × 4 at sf0.1, ~45 s × 4 at
-    * sf1 — adamic's r10/r11 watch item was mostly this repeated work).
-    * Carrying the three corner degrees makes the stream wide enough
-    * for the degree-weighted consumers (Adamic-Adar credits
-    * 1/ln(deg)); the others just project it down. At 100 TB the same
-    * move applies: the triangle stream is the expensive derived
-    * dataset you materialize once and serve many audits from. */
+  /** SHARED closed-triangle fixture: [[Triangles.closed]] over the
+    * co-purchase graph — every triangle once as (u, x, y, du, dx, dy) —
+    * materialized to scratch parquet ONCE per sf dir. The degree-ordered
+    * wedge-closure join is the O(E^1.5) step that dominates all four
+    * triangle-family gates (triangles, edge Jaccard, Adamic-Adar, local
+    * clustering); before this fixture each gate re-ran the same
+    * enumeration (~7 s × 4 at sf0.1, ~45 s × 4 at sf1 — adamic's r10/r11
+    * watch item was mostly this repeated work). At 100 TB the same move
+    * applies: the triangle stream is the expensive derived dataset you
+    * materialize once and serve many audits from. */
   private def triStream(spark: SparkSession, sfDir: String): DataFrame = {
     val (path, schema) = GraftSession.shared(s"graph_tri#$sfDir") { p =>
       val und = undirectedEdges(spark, sfDir)
-      val deg = und.select(col("a").as("id"))
-        .unionAll(und.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-      val fwd = col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b"))
-      val o = und
-        .join(deg.withColumnRenamed("id", "a")
-          .withColumnRenamed("d", "da"), "a")
-        .join(deg.withColumnRenamed("id", "b")
-          .withColumnRenamed("d", "db"), "b")
-        .select(
-          when(fwd, col("a")).otherwise(col("b")).as("u"),
-          when(fwd, col("b")).otherwise(col("a")).as("v"),
-          when(fwd, col("da")).otherwise(col("db")).as("du"),
-          when(fwd, col("db")).otherwise(col("da")).as("dv"))
-      val o1 = o.select(col("u"), col("du"),
-        col("v").as("x"), col("dv").as("dx"))
-      val o2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
-      // narrow BEFORE the closure join: the wedge stream is the big
-      // intermediate; only the columns any consumer needs ride the
-      // (x, y) exchange
-      val tri = o1.join(o2, "u")
-        .where(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")))
-        .select("u", "du", "x", "dx", "y", "dy")
-        .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-        .select("u", "x", "y", "du", "dx", "dy")
+      val tri = Triangles.closed(und, Undirected.degrees(und))
       tri.write.mode("overwrite").parquet(p)
       (p, tri.schema)
     }
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Plain degrees of the undirected co-purchase graph (id, d) —
-    * small helper shared by the triangle-family consumers. */
-  private def undDeg(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = undirectedEdges(spark, sfDir)
-    und.select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-  }
+  /** Plain degrees (id, d) of the undirected co-purchase graph. */
+  private def undDeg(spark: SparkSession, sfDir: String): DataFrame =
+    Undirected.degrees(undirectedEdges(spark, sfDir))
+
+  /** The oracle spelling of [[undirectedEdges]] and [[undDeg]], opening
+    * a WITH list: CTEs `li`, `und` (canonical pairs) and `deg` (id, d). */
+  private val undDegSql: String =
+    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
+      |und AS (
+      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
+      |    greatest(x.l_partkey, y.l_partkey) AS b
+      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
+      |    AND x.l_partkey <> y.l_partkey),
+      |deg AS (
+      |  SELECT id, count(*) AS d FROM (
+      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
+      |  GROUP BY id),
+      |""".stripMargin
+
+  /** CTE `o`: [[Triangles.closed]]'s orientation of `und` over `deg`, each
+    * edge as (u, v, dv) from its lower-(degree, id) endpoint u. */
+  private val orientSql: String =
+    """o AS (
+      |  SELECT
+      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
+      |      THEN u.a ELSE u.b END AS u,
+      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
+      |      THEN u.b ELSE u.a END AS v,
+      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
+      |      THEN db.d ELSE da.d END AS dv
+      |  FROM und u JOIN deg da ON u.a = da.id JOIN deg db ON u.b = db.id),
+      |""".stripMargin
 
   /** Weighted PageRank (5 rounds, d=0.85) over the part co-purchase
     * graph: parts are linked when they appear in the same order, edge
@@ -142,13 +147,8 @@ object GraphQueries extends graft.QueryModule {
        |    GROUP BY e.dst) s ON n.node = s.node)""".stripMargin
 
   val graphPagerankSql: String =
-    """WITH el AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
-      |outw AS (SELECT src, sum(w) AS tw FROM el GROUP BY 1),
+    coEdgesSql +
+    """outw AS (SELECT src, sum(w) AS tw FROM el GROUP BY 1),
       |e AS (SELECT el.src, el.dst, el.w / o.tw AS p
       |      FROM el JOIN outw o ON el.src = o.src),
       |nodes AS (SELECT src AS node FROM el UNION SELECT dst FROM el),
@@ -183,13 +183,8 @@ object GraphQueries extends graft.QueryModule {
        |    FROM e JOIN r${k - 1} ON e.src = r${k - 1}.node
        |    GROUP BY e.dst) s ON n.node = s.node)""".stripMargin
   val graphPprSql: String =
-    """WITH el AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
-      |outw AS (SELECT src, sum(w) AS tw FROM el GROUP BY 1),
+    coEdgesSql +
+    """outw AS (SELECT src, sum(w) AS tw FROM el GROUP BY 1),
       |e AS (SELECT el.src, el.dst, el.w / o.tw AS p
       |      FROM el JOIN outw o ON el.src = o.src),
       |nodes AS (SELECT src AS node FROM el UNION SELECT dst FROM el),
@@ -212,41 +207,11 @@ object GraphQueries extends graft.QueryModule {
     * (degree, id) tie-break, so an off-by-one in the orientation (the
     * classic double/zero-count bug) breaks the value, not just the
     * plan. Same bounded basket expansion as graph_pagerank. */
-  def graphTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    // composed from the shared triStream fixture (same enumeration as
-    // graph.Triangles.stats, which TopKSpec/PlanShapeSpec still pin
-    // directly); n_wedges = Σ d(d−1)/2 over plain degrees
-    val tri = triStream(spark, sfDir).agg(count(lit(1)).as("n_triangles"))
-    val wedgeTotal = undDeg(spark, sfDir)
-      .agg(sum(((col("d") * (col("d") - 1)) / lit(2)).cast("long"))
-        .as("n_wedges"))
-    tri.crossJoin(broadcast(wedgeTotal))
-      .select(col("n_triangles"), col("n_wedges"),
-        when(col("n_wedges") === 0, lit(0.0))
-          .otherwise(round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6))
-          .as("clustering"))
-  }
+  def graphTriangles(spark: SparkSession, sfDir: String): DataFrame =
+    Triangles.stats(triStream(spark, sfDir), undDeg(spark, sfDir))
   val graphTrianglesSql: String =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |und AS (
-      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-      |    greatest(x.l_partkey, y.l_partkey) AS b
-      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
-      |    AND x.l_partkey <> y.l_partkey),
-      |deg AS (
-      |  SELECT id, count(*) AS d FROM (
-      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-      |  GROUP BY id),
-      |o AS (
-      |  SELECT
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.a ELSE u.b END AS u,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.b ELSE u.a END AS v,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN db.d ELSE da.d END AS dv
-      |  FROM und u JOIN deg da ON u.a = da.id JOIN deg db ON u.b = db.id),
-      |wedge AS (
+    undDegSql + orientSql +
+    """wedge AS (
       |  SELECT e1.v AS x, e2.v AS y
       |  FROM o e1 JOIN o e2 ON e1.u = e2.u
       |  WHERE e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v)),
@@ -268,9 +233,7 @@ object GraphQueries extends graft.QueryModule {
     * the DISTINCT-degree table, which is at most √(2E) rows. */
   def graphDegreeStats(spark: SparkSession, sfDir: String): DataFrame = {
     val und = undirectedEdges(spark, sfDir)
-    val deg = und.select(col("a").as("id"))
-      .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = Undirected.degrees(und)
     val nEdges = und.agg(count(lit(1)).as("n_edges"))
     val slope = deg.groupBy("d").agg(count(lit(1)).as("f"))
       .agg(graft.functions.ScoreFns.scoreRound(
@@ -358,13 +321,8 @@ object GraphQueries extends graft.QueryModule {
        |      GROUP BY e.dst, l.label))
        |  WHERE rn = 1)""".stripMargin
   val graphLabelPropSql: String =
-    """WITH el AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
-      |l0 AS (SELECT DISTINCT src AS node, src AS label FROM el),
+    coEdgesSql +
+    """l0 AS (SELECT DISTINCT src AS node, src AS label FROM el),
       |""".stripMargin +
       (1 to 3).map(lpRound).mkString(",\n") + "\n" +
       """SELECT label AS community, count(*) AS n_nodes,
@@ -417,26 +375,8 @@ object GraphQueries extends graft.QueryModule {
       .orderBy("jac_pct")
   }
   val graphEdgeJaccardSql: String =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |und AS (
-      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-      |    greatest(x.l_partkey, y.l_partkey) AS b
-      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
-      |    AND x.l_partkey <> y.l_partkey),
-      |deg AS (
-      |  SELECT id, count(*) AS d FROM (
-      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-      |  GROUP BY id),
-      |o AS (
-      |  SELECT
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.a ELSE u.b END AS u,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.b ELSE u.a END AS v,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN db.d ELSE da.d END AS dv
-      |  FROM und u JOIN deg da ON u.a = da.id JOIN deg db ON u.b = db.id),
-      |wedge AS (
+    undDegSql + orientSql +
+    """wedge AS (
       |  SELECT e1.u AS u, e1.v AS x, e2.v AS y
       |  FROM o e1 JOIN o e2 ON e1.u = e2.u
       |  WHERE e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v)),
@@ -488,17 +428,8 @@ object GraphQueries extends graft.QueryModule {
     credits.orderBy(col("aa").desc, col("a"), col("b")).limit(20)
   }
   val graphAdamicAdarSql: String =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |und AS (
-      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-      |    greatest(x.l_partkey, y.l_partkey) AS b
-      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
-      |    AND x.l_partkey <> y.l_partkey),
-      |deg AS (
-      |  SELECT id, count(*) AS d FROM (
-      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-      |  GROUP BY id),
-      |o AS (
+    undDegSql +
+    """o AS (
       |  SELECT
       |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
       |      THEN u.a ELSE u.b END AS u,
@@ -537,10 +468,7 @@ object GraphQueries extends graft.QueryModule {
     * leaves (typical for co-purchase graphs). */
   def graphAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
     val e = coEdges(spark, sfDir).select("src", "dst")
-    val und = e.where(col("src") < col("dst"))
-    val deg = und.select(col("src").as("id"))
-      .unionAll(und.select(col("dst").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = undDeg(spark, sfDir)
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
     e.join(deg.withColumnRenamed("id", "src").withColumnRenamed("d", "dx"),
         "src")
@@ -559,17 +487,8 @@ object GraphQueries extends graft.QueryModule {
           .as("assortativity"))
   }
   val graphAssortativitySql: String =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |und AS (
-      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-      |    greatest(x.l_partkey, y.l_partkey) AS b
-      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
-      |    AND x.l_partkey <> y.l_partkey),
-      |deg AS (
-      |  SELECT id, count(*) AS d FROM (
-      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-      |  GROUP BY id),
-      |sym AS (
+    undDegSql +
+    """sym AS (
       |  SELECT a AS src, b AS dst FROM und
       |  UNION ALL SELECT b, a FROM und),
       |m AS (
@@ -593,43 +512,13 @@ object GraphQueries extends graft.QueryModule {
     * of each triangle explode map-side into one keyed count — no
     * second wedge pass. Output: top 20 by (coeff, degree, id) —
     * deterministic under the 6dp rounding. */
-  def graphClusteringCoeff(spark: SparkSession, sfDir: String): DataFrame = {
-    // composed from the shared triStream fixture (the standalone
-    // library form is graph.Triangles.perNode, spec-pinned); corners
-    // explode map-side into one keyed count
-    val triCorners = triStream(spark, sfDir)
-      .select(explode(array(col("u"), col("x"), col("y"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("n_triangles"))
-    undDeg(spark, sfDir).where(col("d") >= 2)
-      .join(triCorners, Seq("id"), "left")
-      .select(col("id"), col("d").as("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-        round(lit(2.0) * coalesce(col("n_triangles"), lit(0L))
-          / (col("d") * (col("d") - 1)), 6).as("coeff"))
+  def graphClusteringCoeff(spark: SparkSession, sfDir: String): DataFrame =
+    Triangles.perNode(triStream(spark, sfDir), undDeg(spark, sfDir))
       .orderBy(col("coeff").desc, col("degree").desc, col("id"))
       .limit(20)
-  }
   val graphClusteringCoeffSql: String =
-    """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
-      |und AS (
-      |  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-      |    greatest(x.l_partkey, y.l_partkey) AS b
-      |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey
-      |    AND x.l_partkey <> y.l_partkey),
-      |deg AS (
-      |  SELECT id, count(*) AS d FROM (
-      |    SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-      |  GROUP BY id),
-      |o AS (
-      |  SELECT
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.a ELSE u.b END AS u,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN u.b ELSE u.a END AS v,
-      |    CASE WHEN da.d < db.d OR (da.d = db.d AND u.a < u.b)
-      |      THEN db.d ELSE da.d END AS dv
-      |  FROM und u JOIN deg da ON u.a = da.id JOIN deg db ON u.b = db.id),
-      |wedge AS (
+    undDegSql + orientSql +
+    """wedge AS (
       |  SELECT e1.u AS u, e1.v AS x, e2.v AS y
       |  FROM o e1 JOIN o e2 ON e1.u = e2.u
       |  WHERE e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v)),
@@ -810,13 +699,8 @@ object GraphQueries extends graft.QueryModule {
       |  FROM adopta a JOIN adopta b ON b.node = a.adopt),""".stripMargin
 
   val graphLouvainSql: String =
-    s"""WITH el AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
-      |deg AS (SELECT src AS node, sum(w) AS k FROM el GROUP BY 1),
+    coEdgesSql +
+    s"""deg AS (SELECT src AS node, sum(w) AS k FROM el GROUP BY 1),
       |mm AS (SELECT sum(k) / 2.0 AS m FROM deg),
       |$louvainSweepSql
       |mm2 AS (SELECT sum(k) AS m2 FROM deg),
@@ -929,13 +813,8 @@ object GraphQueries extends graft.QueryModule {
   }
 
   val graphLouvainMultilevelSql: String =
-    s"""WITH el AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst,
-      |    CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      |  GROUP BY 1, 2),
-      |deg AS (SELECT src AS node, sum(w) AS k FROM el GROUP BY 1),
+    coEdgesSql +
+    s"""deg AS (SELECT src AS node, sum(w) AS k FROM el GROUP BY 1),
       |mm AS (SELECT sum(k) / 2.0 AS m FROM deg),
       |$louvainSweepSql
       |mm2 AS (SELECT sum(k) AS m2 FROM deg),

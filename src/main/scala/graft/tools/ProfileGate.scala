@@ -13,15 +13,32 @@ import org.apache.spark.sql.SparkSession
   *
   * Per gate, prints one `[job]` line per job of the FINAL rep (earlier
   * reps warm fixture scratch + JIT exactly as the bench's best-of-N
-  * does): its duration, the gap since the previous job ended, and its
-  * call site. A job still running when the rep returned reads
-  * `unended`. Then one `[site]` line per call site (summed duration,
-  * job count). Ends with one
+  * does): its duration, the gap since the previous job ended, its SQL
+  * execution id (`-` outside one) and its call site. A job still
+  * running when the rep returned reads `unended`. Then one `[site]`
+  * line per call site (summed duration, job count), each job filed by
+  * [[operatorSites]]. Ends with one
   * `[gate] <name> jobs <n> compiles <c> wall <s>` line per gate: the
   * final rep's job count, generated classes compiled
   * ([[GateMetrics.compiles]]) and wall.
   */
 object ProfileGate {
+
+  /** The site the `[site]` table files each of `jobs` under. An adaptive
+    * query runs its stage jobs from a thread pool, so their own call
+    * site is `$anonfun$withThreadLocalCaptured… at CompletableFuture…`,
+    * not the operator's line; such a job is filed under the site of a
+    * job of the same SQL execution that has an operator site (the
+    * result job of a write or a checkpoint), when the window holds one.
+    * A `collect` or `count` runs its result stage from the pool too, so
+    * its jobs keep their own site. */
+  def operatorSites(jobs: Seq[GateMetrics.Job]): Seq[String] = {
+    def pooled(j: GateMetrics.Job) = j.site.startsWith("$anonfun$withThreadLocalCaptured")
+    val byExec = jobs.filterNot(pooled)
+      .flatMap(j => j.executionId.map(_ -> j.site)).distinctBy(_._1).toMap
+    jobs.map(j => j.executionId.filter(_ => pooled(j)).flatMap(byExec.get).getOrElse(j.site))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileGate <gate>[,<gate>...] [reps=2]")
     val gates = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -63,10 +80,12 @@ object ProfileGate {
         val gap = (j.startMs - prevEnd) / 1e3
         prevEnd = math.max(prevEnd, j.endMs)
         val took = if (j.endMs < 0) "   unended" else f"${dur(j)}%8.3f s"
-        println(f"[job] $took  (gap $gap%6.3f s)  ${j.site}")
+        val exec = j.executionId.fold("-")(_.toString)
+        println(f"[job] $took  (gap $gap%6.3f s)  exec $exec%-5s ${j.site}")
       }
       println(s"--- $gate by callsite ---")
-      jobs.groupBy(_.site).view.mapValues(js => (js.map(dur).sum, js.size)).toSeq
+      jobs.zip(operatorSites(jobs)).groupBy(_._2).view
+        .mapValues(js => (js.map(j => dur(j._1)).sum, js.size)).toSeq
         .sortBy(-_._2._1)
         .foreach { case (s, (t, n)) => println(f"[site] $t%8.3f s  n=$n%-3d $s") }
       f"[gate] $gate jobs ${jobs.size} compiles $compiles wall $wall%.3f"

@@ -65,6 +65,28 @@ class GateMetricsSpec extends SparkSpecBase {
     assert(jobs.head.endMs == -1L)
   }
 
+  test("an AQE-shuffled aggregate's stage jobs share the execution id of its result job") {
+    val df = spark.range(0, 10000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count()
+    // the write ProfileGate times: its result job runs on this thread
+    val jobs = GateMetrics.measure(spark)(df.write.format("noop").mode("overwrite").save())
+    val (result, stages) = jobs.partition(_.site.startsWith("save at GateMetricsSpec.scala"))
+    assert(result.size == 1 && stages.nonEmpty, jobs)
+    assert(result.head.executionId.isDefined, jobs)
+    assert(jobs.forall(_.executionId == result.head.executionId), jobs)
+    // the stage jobs run from AQE's pool, so their own site names no
+    // operator; ProfileGate files them under the result job's site
+    assert(stages.forall(_.site.startsWith("$anonfun$withThreadLocalCaptured")), jobs)
+    assert(graft.tools.ProfileGate.operatorSites(jobs) == jobs.map(_ => result.head.site))
+    // a collect runs its result stage from the pool as well: one
+    // execution id, no operator site to file under
+    val collected = GateMetrics.measure(spark)(df.collect())
+    assert(collected.size >= 2 && collected.map(_.executionId).distinct.size == 1, collected)
+    assert(collected.head.executionId.isDefined && collected.head.executionId != result.head.executionId)
+    assert(graft.tools.ProfileGate.operatorSites(collected) == collected.map(_.site))
+    // an RDD action runs in no SQL execution
+    assert(GateMetrics.measure(spark)(tiny()).map(_.executionId) == Seq(None))
+  }
+
   test("a body that throws propagates, detaches the listener, and the next call is exact") {
     val before = listeners
     val e = intercept[IllegalStateException] {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.core.GateMetrics
-import graft.graph.KCore
+import graft.graph.{KCore, Undirected}
 
 /** `graph.KCore.peelRounds` against a Scala reference peel that
   * recomputes every round from the edge set, as the `graph_kcore`
@@ -16,7 +16,7 @@ import graft.graph.KCore
 class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  /** Reference peel of `peelRounds(KCore.undirected(pairs), …)`:
+  /** Reference peel of `peelRounds(Undirected.canonical(pairs), …)`:
     * direction and duplicates ignored, self-loops dropped. */
   private def refPeel(pairs: Seq[(Long, Long)], k: Int,
                       rounds: Int): Seq[(Int, Long, Long)] = {
@@ -54,7 +54,7 @@ class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     var edges = (for {
       a <- nodes; b <- nodes if a < b && rnd.nextInt(4) == 0
     } yield (a, b)).toSet
-    val df = KCore.undirected(edges.toSeq.toDF("a", "b"))
+    val df = Undirected.canonical(edges.toSeq.toDF("a", "b"))
     val got = KCore.peelRounds(df, k = 3, rounds = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val expected = (1 to 3).map { r =>
@@ -87,7 +87,7 @@ class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "messy" -> messy, "self-loops only" -> Seq((1L, 1L), (2L, 2L)))
     for {
       (name, pairs) <- graphs
-      df = KCore.undirected(pairs.toDF("a", "b"))
+      df = Undirected.canonical(pairs.toDF("a", "b"))
       k <- Seq(1, 2, 3, 5)
       rounds <- Seq(0, 1, 3, 6)
     } {
@@ -104,6 +104,7 @@ class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(shrinking.zip(shrinking.tail).forall { case (a, b) => a > b })
   }
 
+  // the canonicalizer is `Undirected.canonical`
   test("pairs that are not canonical throw; KCore.undirected canonicalizes them") {
     val triangle = Seq((1L, 2L), (2L, 3L), (1L, 3L))
     val blocks0 = spark.sparkContext.getPersistentRDDs.keySet
@@ -111,14 +112,14 @@ class KCoreSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       val pairs = triangle :+ extra
       val e = intercept[IllegalArgumentException](peel(pairs.toDF("a", "b"), 2, 2))
       assert(e.getMessage.contains(": 1 rows"), s"$name: ${e.getMessage}")
-      assert(peel(KCore.undirected(pairs.toDF("a", "b")), 2, 2) == refPeel(pairs, 2, 2),
+      assert(peel(Undirected.canonical(pairs.toDF("a", "b")), 2, 2) == refPeel(pairs, 2, 2),
         name)
     }
     val withNull = (triangle.map { case (a, b) => (Option(a), Option(b)) } :+
       (Some(4L), None)).toDF("a", "b")
     val e = intercept[IllegalArgumentException](peel(withNull, 2, 2))
     assert(e.getMessage.contains(": 1 rows"), s"a null endpoint: ${e.getMessage}")
-    assert(peel(KCore.undirected(withNull), 2, 2) == refPeel(triangle, 2, 2))
+    assert(peel(Undirected.canonical(withNull), 2, 2) == refPeel(triangle, 2, 2))
     // a rejected input releases its checkpoint
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == blocks0.toSet)
   }

@@ -107,7 +107,7 @@ class LoopLifecycleSpec extends SparkSpecBase {
       .toDF("a", "b")
     // stats only: the result is rebuilt from literals, no spill backs it
     assertLifecycle("KCore.peelRounds", spills = 0) {
-      graft.graph.KCore.peelRounds(graft.graph.KCore.undirected(pairs),
+      graft.graph.KCore.peelRounds(graft.graph.Undirected.canonical(pairs),
         k = 2, rounds = 2)
     } { out =>
       val stats = out.collect()

@@ -5,6 +5,17 @@ import org.apache.spark.sql.functions._
 class LouvainSpec extends SparkSpecBase {
   import spark.implicits._
 
+  // two 4-cliques bridged by one edge; unit weights, symmetric list
+  private val cliqueA = Seq(1L, 2L, 3L, 4L)
+  private val cliqueB = Seq(11L, 12L, 13L, 14L)
+  private lazy val plantedCliques = {
+    def clique(ns: Seq[Long]) =
+      for { a <- ns; b <- ns if a != b } yield (a, b, 1.0)
+    (clique(cliqueA) ++ clique(cliqueB) ++
+      Seq((4L, 11L, 1.0), (11L, 4L, 1.0)))
+      .toDF("src", "dst", "w")
+  }
+
   /** Modularity read off a CONTRACTED graph must equal modularity
     * computed on the original edges — the identity the r16
     * graphLouvainMultilevel rewrite leans on (contraction preserves
@@ -12,13 +23,7 @@ class LouvainSpec extends SparkSpecBase {
     * make the double sums exact). Checked on the planted-clique
     * fixture for BOTH levels. */
   test("contracted-graph modularity equals original-edge modularity") {
-    val cliqueA = Seq(1L, 2L, 3L, 4L)
-    val cliqueB = Seq(11L, 12L, 13L, 14L)
-    def clique(ns: Seq[Long]) =
-      for { a <- ns; b <- ns if a != b } yield (a, b, 1.0)
-    val edges = (clique(cliqueA) ++ clique(cliqueB) ++
-      Seq((4L, 11L, 1.0), (11L, 4L, 1.0)))
-      .toDF("src", "dst", "w")
+    val edges = plantedCliques
 
     import graft.graph.Louvain
     val a1 = Louvain.sweep(edges)
@@ -62,6 +67,23 @@ class LouvainSpec extends SparkSpecBase {
     val (n2c, q2c) = fromContracted(sup2)
     assert(n2c == n2o, s"level-2 community count $n2c != $n2o")
     assert(q2c == q2o, s"level-2 modularity $q2c != $q2o (must be exact)")
+  }
+
+  test("Louvain sweep merges planted cliques and beats the singleton modularity") {
+    val edges = plantedCliques
+    val assign = graft.graph.Louvain.sweep(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every node adopts a neighbor from ITS OWN clique (the bridge
+    // gain is strictly smaller than any intra-clique gain)
+    cliqueA.foreach(n => assert(cliqueA.contains(assign(n)),
+      s"node $n -> ${assign(n)}"))
+    cliqueB.foreach(n => assert(cliqueB.contains(assign(n)),
+      s"node $n -> ${assign(n)}"))
+    val q = graft.graph.Louvain
+      .modularity(edges, graft.graph.Louvain.sweep(edges))
+      .agg(sum("q_term")).collect()(0).getDouble(0)
+    // singleton partition: Q = −Σ(k/2m)² < 0; the sweep must beat it
+    assert(q > 0.0, s"modularity $q not positive")
   }
 
   // ---- multi-level Louvain: sweep resolution and contraction ----

@@ -78,6 +78,21 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(nlj <= 1, s"$nlj nested-loop joins (only the 1x1 stats cross is allowed):\n$p")
   }
 
+  /** The gate above reads the materialized closed-triangle fixture, so
+    * its plan holds no wedge or closure join; this pins them where they
+    * run, on the enumeration's executed plan. */
+  test("Triangles.closed closes wedges with equi-joins, never all-pairs") {
+    import spark.implicits._
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+      .toDF("a", "b")
+    val closed = graft.graph.Triangles.closed(und, graft.graph.Undirected.degrees(und))
+    assert(closed.collect().length == 2)
+    val p = closed.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true") && p.contains("HashJoin"), p)
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"triangle enumeration degenerated to all-pairs:\n$p")
+  }
+
   test("x_range_join_binned matches points to intervals via the month-bucket equi-join, never a nested-loop BETWEEN") {
     val p = planOf("x_range_join_binned")
     // the whole point of the binned decomposition: the BETWEEN lands as

@@ -211,30 +211,6 @@ class Round15bSpec extends SparkSpecBase {
     pfx.foreach(r => assert(r.getAs[Long]("n_queries") == 10L))
   }
 
-  test("Louvain sweep merges planted cliques and beats the singleton modularity") {
-    // two 4-cliques bridged by one edge; unit weights, symmetric list
-    val cliqueA = Seq(1L, 2L, 3L, 4L)
-    val cliqueB = Seq(11L, 12L, 13L, 14L)
-    def clique(ns: Seq[Long]) =
-      for { a <- ns; b <- ns if a != b } yield (a, b, 1.0)
-    val edges = (clique(cliqueA) ++ clique(cliqueB) ++
-      Seq((4L, 11L, 1.0), (11L, 4L, 1.0)))
-      .toDF("src", "dst", "w")
-    val assign = graft.graph.Louvain.sweep(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // every node adopts a neighbor from ITS OWN clique (the bridge
-    // gain is strictly smaller than any intra-clique gain)
-    cliqueA.foreach(n => assert(cliqueA.contains(assign(n)),
-      s"node $n -> ${assign(n)}"))
-    cliqueB.foreach(n => assert(cliqueB.contains(assign(n)),
-      s"node $n -> ${assign(n)}"))
-    val q = graft.graph.Louvain
-      .modularity(edges, graft.graph.Louvain.sweep(edges))
-      .agg(sum("q_term")).collect()(0).getDouble(0)
-    // singleton partition: Q = −Σ(k/2m)² < 0; the sweep must beat it
-    assert(q > 0.0, s"modularity $q not positive")
-  }
-
   test("CMH test sees through Simpson's paradox that fools the pooled table") {
     // within each stratum exposure⊥outcome exactly (OR = 1), but the
     // exposure RATE flips across strata while the outcome base rate
